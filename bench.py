@@ -201,12 +201,8 @@ def run_transcript_pipeline(spark, path: str) -> dict:
 
     pred_spec = predict_constraint_spec(path)
     pw = ValidationPrewarm(spark, path, spec=pred_spec)
-    res, integ_fut, vcounts = infer_and_integrity_parquet(
-        spark,
-        path,
-        rg_per_task=rg_per_task,
-        integrity="background",
-        violation_spec=pred_spec,
+    res, integ, vcounts = infer_and_integrity_parquet(
+        spark, path, rg_per_task=rg_per_task, violation_spec=pred_spec
     )
     real_spec = V.constraint_spec(
         res.schema, state=res.state, temporal_cols=V.temporal_columns(df)
@@ -220,7 +216,6 @@ def run_transcript_pipeline(spark, path: str) -> dict:
                 r.constraint: r.violation_count
                 for r in V.violation_counts(vdf, cons).collect()
             }
-    integ = integ_fut.result()
     secs = time.time() - t0
     rows = res.total_rows
     return {

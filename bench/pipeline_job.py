@@ -31,7 +31,7 @@ import time
 #         Miss/unsupported falls back to the rev-5 flow.
 # rev 7 = incremental spill watcher: the background integrity reduce's
 #         parquet decode is prepaid DURING the scan by a driver tail
-#         thread (validate.IncrementalSpillWatcher) — rev 6 removed the
+#         thread (the spill watcher, deleted in rev 10) — rev 6 removed the
 #         stages the reduce used to hide behind, exposing 1.6-8 s of
 #         integrity_wait at both parallelism levels in paired rounds.
 # rev 8 = watcher's incremental ch-merge replaced by ONE finalize radix
@@ -47,7 +47,10 @@ import time
 #         copies chunks into a growing pre-faulted buffer DURING the
 #         scan and finalize runs one in-place introsort (~0.07-0.35 s
 #         in every host state).
-ENGINE_REV = 9
+# rev 10 = one eager integrity reduce: the watcher thread and the
+#         background reduce are gone; the spill reduce runs inside the
+#         fused call.
+ENGINE_REV = 10
 
 
 def main():
@@ -112,17 +115,10 @@ def main():
     # fused one-pass scan: inference fold + per-conv integrity partials +
     # predicted-spec violation counts, all off the same native pyarrow
     # row-group read (rev 2 removed the second integrity pass; rev 6
-    # removes the third violations pass on a spec hit).
-    # integrity="background" overlaps the driver-side partials reduce with
-    # whatever follows: on a real cluster the driver is separate hardware,
-    # so serializing that reduce before the next Spark job was a pure
-    # Amdahl term.
-    res, integ_fut, vcounts = infer_and_integrity_parquet(
-        spark,
-        args.data,
-        rg_per_task=rg_per_task,
-        integrity="background",
-        violation_spec=pred_spec,
+    # removes the third violations pass on a spec hit), with the integrity
+    # spill reduced before the call returns.
+    res, integ, vcounts = infer_and_integrity_parquet(
+        spark, args.data, rg_per_task=rg_per_task, violation_spec=pred_spec
     )
     t_fused = time.time() - t0
     t = time.time()
@@ -146,17 +142,6 @@ def main():
                 for r in V.violation_counts(vdf, cons).collect()
             }
     t_viol = time.time() - t
-    t = time.time()
-    integ = integ_fut.result()
-    t_integ_wait = time.time() - t
-    w = getattr(integ_fut, "watcher", None)
-    integ_stats = None
-    if w is not None:
-        integ_stats = {
-            k: (round(v, 3) if isinstance(v, float) else v)
-            for k, v in w.stats.items()
-        }
-        integ_stats["aborted"] = bool(w._aborted)
     n_dup = integ["dup_rows_excess"]
     n_ord = integ["ordering_violations"]
     secs = time.time() - t0
@@ -176,12 +161,7 @@ def main():
             "infer+integrity": round(t_fused, 2),
             "compile": round(t_compile, 2),
             "violations": round(t_viol, 2),
-            # residual wait for the backgrounded integrity reduce after
-            # the violations pass returned (0.0 = fully hidden)
-            "integrity_wait": round(t_integ_wait, 2),
         },
-        # watcher decomposition of the wait (None on the cold path)
-        "integ_stats": integ_stats,
     }
     with open(args.out, "w") as f:
         json.dump(out, f)

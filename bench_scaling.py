@@ -177,9 +177,9 @@ def main():
     data = ensure_bench_transcripts(n_convs)
     os.makedirs(os.path.join(REPO, ".cache"), exist_ok=True)
     # Evidence lives in a GIT-TRACKED file: the first 70 rounds were kept
-    # only in .cache/ and a workspace reset wiped them (recovered by
-    # bench/reconstruct_evidence.py from the rendered report). Paired
-    # rounds are expensive host-window samples — they must survive resets.
+    # only in .cache/ and a workspace reset wiped them (they were recovered
+    # from the rendered report). Paired rounds are expensive host-window
+    # samples — they must survive resets.
     evid_path = os.path.join(REPO, "BENCH", "scale_evidence.json")
     legacy_path = os.path.join(REPO, ".cache", "scale_results.json")
     cached = None

@@ -75,6 +75,25 @@ def _atomic_write(path: str, payload: str) -> None:
     os.replace(tmp, path)  # idempotent under task retries
 
 
+def _open_manifest(checkpoint_dir: str, identity: dict) -> str:
+    """Refuse a checkpoint written for another input, config or task
+    layout; on a fresh one, record ``identity`` BEFORE any task runs, so a
+    run killed mid-scan still leaves behind which layout its state files
+    and spills belong to. Returns the manifest path."""
+    mpath = os.path.join(checkpoint_dir, MANIFEST)
+    if os.path.exists(mpath):
+        with open(mpath) as f:
+            prev = json.load(f)
+        if any(prev.get(k) != v for k, v in identity.items()):
+            raise ValueError(
+                "checkpoint manifest does not match this input/config; "
+                "use a fresh checkpoint_dir"
+            )
+    else:
+        _atomic_write(mpath, json.dumps({**identity, "complete": False}, indent=2))
+    return mpath
+
+
 def infer_with_checkpoint(
     df,
     checkpoint_dir: str,
@@ -100,17 +119,14 @@ def infer_with_checkpoint(
     fp = config_fingerprint(config, mode, json_column, order_cols)
     input_files = sorted(df.inputFiles())
     n_parts = df.rdd.getNumPartitions()
-
-    mpath = os.path.join(checkpoint_dir, MANIFEST)
-    prev = None
-    if os.path.exists(mpath):
-        with open(mpath) as f:
-            prev = json.load(f)
-        if prev["config_fingerprint"] != fp or prev["input_files"] != input_files:
-            raise ValueError(
-                "checkpoint manifest does not match this input/config; "
-                "use a fresh checkpoint_dir"
-            )
+    mpath = _open_manifest(
+        checkpoint_dir,
+        {
+            "config_fingerprint": fp,
+            "input_files": input_files,
+            "num_partitions": n_parts,
+        },
+    )
 
     skip = set(_skip_partitions or ())
     ckpt = checkpoint_dir
@@ -201,7 +217,6 @@ def fused_with_checkpoint(
     conv_col: str = "conv_id",
     idx_col: str = "turn_idx",
     rg_per_task: int = 4,
-    distinct_strategy: str = "auto",
     _skip_tasks=None,  # test hook: simulate tasks that never finish
 ):
     """Checkpointed, resumable form of the FUSED benchmark pipeline
@@ -212,12 +227,13 @@ def fused_with_checkpoint(
     run skips tasks whose marker exists WITHOUT re-reading their bytes;
     the driver merges whatever states exist and reduces the spilled
     integrity partials, so a partial manifest is still a valid partial
-    result (associative merges on both sides).
+    result (associative merges on both sides). The spill must hold
+    exactly one part file per completed task, or the run is refused.
 
     Returns (InferResult | None, integrity dict | None, manifest) —
     the results are None only when no task has completed yet."""
     from .operators.infer_spark import _list_rg_tasks, list_parquet_files
-    from .operators.pipeline import _fused_task
+    from .operators.pipeline import _check_spill_parts, _fused_task
     from .operators.validate import reduce_spilled_partials
 
     config = config or default_config()
@@ -241,15 +257,9 @@ def fused_with_checkpoint(
     os.makedirs(states_dir, exist_ok=True)
     os.makedirs(spill_dir, exist_ok=True)
 
-    mpath = os.path.join(checkpoint_dir, MANIFEST)
-    if os.path.exists(mpath):
-        with open(mpath) as f:
-            prev = json.load(f)
-        if prev["config_fingerprint"] != fp or prev["input_files"] != sorted(files):
-            raise ValueError(
-                "checkpoint manifest does not match this input/config; "
-                "use a fresh checkpoint_dir"
-            )
+    mpath = _open_manifest(
+        checkpoint_dir, {"config_fingerprint": fp, "input_files": sorted(files)}
+    )
 
     skip = set(_skip_tasks or ())
     ckpt = checkpoint_dir
@@ -306,6 +316,7 @@ def fused_with_checkpoint(
             }
         )
 
+    _check_spill_parts(spill_dir, [p[0] for p in partitions])
     result = integ = None
     if states:
         merged = merge_states(states)
@@ -319,7 +330,7 @@ def fused_with_checkpoint(
             partitions=partitions,
             wall_secs=time.time() - t0,
         )
-        integ = reduce_spilled_partials(spark, spill_dir, distinct_strategy)
+        integ = reduce_spilled_partials(spark, spill_dir)
 
     manifest = {
         "config_fingerprint": fp,

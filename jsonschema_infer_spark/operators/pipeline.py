@@ -4,10 +4,10 @@ a SINGLE native parquet scan.
 The north_rule pipeline is infer -> compile -> validate. Composed from the
 standalone operators it scans the table twice before validation: once for
 the inference fold (`infer_parquet`) and once for the integrity fold
-(`transcript_integrity_native`). Both folds are per-partition
+(`validate.transcript_integrity_summary`). Both folds are per-partition
 pre-aggregations over the same rows — the classic multi-aggregate fusion a
-100 TB job cannot afford to skip, since the second scan is the same IO (and
-on this single-disk sandbox, the same wall-clock) all over again.
+100 TB job cannot afford to skip, since the second scan is the same IO all
+over again.
 
 Here each (file, row-group-range) task iterates its Arrow batches ONCE:
 
@@ -17,13 +17,13 @@ Here each (file, row-group-range) task iterates its Arrow batches ONCE:
     inference partial  -> returned, merged via the associative combOp
                           (collect+reduce, or treeReduce for large P)
     integrity partials -> spilled to parquet (a few % of input bytes),
-                          reduced by validate.reduce_spilled_partials
-                          (driver merge or distributed, picked at runtime
-                          from the measured spill size)
+                          one part file per task, reduced by
+                          validate.reduce_spilled_partials (driver merge or
+                          distributed, picked from the measured spill size)
 
-Results are identical to running `infer_parquet` and
-`transcript_integrity_native` separately — the folds and reduces are the
-same code; tests assert equality on clean and violated tables.
+Results equal `infer_parquet` and `transcript_integrity_summary` on the
+same table — the folds are the same code; tests assert equality on clean,
+violated and NULL-key tables.
 
 Reference anchor: the sequential equivalent is AddSample folding each
 document once (`/root/reference/jsonschema.go:57-92`); validation is the
@@ -48,7 +48,11 @@ from .infer_spark import (
     list_parquet_files,
     merge_states,
 )
-from .validate import _integrity_fold, reduce_spilled_partials
+from .validate import (
+    _integrity_fold,
+    _partial_schema,
+    reduce_spilled_partials,
+)
 from ..plans.render import render_schema
 
 
@@ -112,22 +116,22 @@ def _fused_task(
             yield b
 
     st, rows = fold_batches_columnar(tee(batches), config, order_cols)
-    out = list(integrity_fold(iter(kept)))
-    if out:
-        # write-then-rename: the IncrementalSpillWatcher tails this
-        # directory DURING the scan, so a part file must become visible
-        # under its final name only when complete (rename is atomic; the
-        # pid suffix keeps concurrent attempts from sharing a temp file)
-        # the leading dot keeps a torn tmp (writer killed mid-write)
-        # invisible to every reader: pyarrow dataset discovery and Spark
-        # both ignore dot-files, and the watcher/cold globs match only
-        # the final name
-        final = os.path.join(out_dir, f"part-{i:05d}.parquet")
-        tmp = os.path.join(
-            out_dir, f".part-{i:05d}.parquet.inprogress-{os.getpid()}"
-        )
-        pq.write_table(pa.Table.from_batches(out), tmp)
-        os.replace(tmp, final)
+    # every task writes its part file, an empty one too, so the driver
+    # can check the spill holds exactly one file per task
+    # (_check_spill_parts). Write-then-rename: a part file appears under
+    # its final name only when complete; the leading dot keeps a torn tmp
+    # (writer killed mid-write) invisible to the part-* glob, pyarrow
+    # dataset discovery and Spark, and the pid suffix keeps concurrent
+    # attempts from sharing a temp file
+    final = os.path.join(out_dir, f"part-{i:05d}.parquet")
+    tmp = os.path.join(out_dir, f".part-{i:05d}.parquet.inprogress-{os.getpid()}")
+    pq.write_table(
+        pa.Table.from_batches(
+            list(integrity_fold(iter(kept))), schema=_partial_schema()
+        ),
+        tmp,
+    )
+    os.replace(tmp, final)
     if violation_spec is not None:
         import numpy as np
 
@@ -135,6 +139,29 @@ def _fused_task(
             vcounts = np.zeros(len(vnames), dtype=np.int64)
         return st, rows, vcounts
     return st, rows
+
+
+def _check_spill_parts(out_dir: str, task_ids) -> None:
+    """Raise unless ``out_dir`` holds exactly one ``part-<i>`` file per
+    task in ``task_ids``. A lost part file would silently drop that
+    task's conversations from the integrity counts; a stale one (a reused
+    spill directory, or a resumed run with another task layout) would
+    silently add rows the scan never read."""
+    import glob
+    import os
+
+    got = {
+        os.path.basename(p)
+        for p in glob.glob(os.path.join(out_dir, "part-*.parquet"))
+    }
+    want = {f"part-{i:05d}.parquet" for i in task_ids}
+    if got != want:
+        raise ValueError(
+            f"integrity spill {out_dir!r} does not match the run's tasks: "
+            f"missing {sorted(want - got)[:5]}, "
+            f"unexpected {sorted(got - want)[:5]}; "
+            "use a fresh spill/checkpoint directory"
+        )
 
 
 def infer_and_integrity_parquet(
@@ -146,15 +173,12 @@ def infer_and_integrity_parquet(
     rg_per_task: int = 4,
     order_cols: list | None = None,
     spill_dir: str | None = None,
-    distinct_strategy: str = "auto",
-    local_merge_max_bytes: int = 256 << 20,
-    integrity: str = "eager",
     violation_spec: list | None = None,
 ) -> tuple:
     """Fused scan: returns ``(InferResult, integrity_dict)`` where the
     InferResult equals ``infer_parquet(spark, path, config, ...)`` and the
-    dict equals ``transcript_integrity_native(spark, path, ...)`` — one
-    data pass instead of two.
+    dict equals ``transcript_integrity_summary`` over the same rows — one
+    data pass for both.
 
     ``violation_spec`` (a validate.constraint_spec plan, typically the
     prewarm's PREDICTION from row-group 0) adds row-violation counting to
@@ -168,26 +192,19 @@ def infer_and_integrity_parquet(
     to the classic violations pass on a mismatch (see bench/pipeline_job
     for the canonical hit/miss flow).
 
-    ``integrity="background"`` returns ``(InferResult, Future)`` instead:
-    the spilled-partials reduce — a driver-side cost that needs nothing
-    from the caller — runs on a worker thread while the caller proceeds
-    (typically compiling constraints and launching the violations pass,
-    which only need the InferResult). ``Future.result()`` yields the same
-    dict as the eager form. On a real cluster the driver is its own
-    machine, so this overlap is free hardware; serializing the reduce
-    before downstream Spark jobs was a pure Amdahl term.
+    ``spill_dir`` must be empty or hold only this run's part files: the
+    integrity reduce refuses a spill whose part files are not exactly one
+    per task (see _check_spill_parts).
 
     ``max_samples`` is not supported here (a row budget caps inference but
     integrity must still see every row — the two folds would need
-    different scans, defeating the fusion); use the standalone operators
-    for that configuration."""
-    if integrity not in ("eager", "background"):
-        raise ValueError(f"integrity must be 'eager' or 'background', got {integrity!r}")
+    different scans, defeating the fusion); use infer_parquet and
+    transcript_integrity_summary for that configuration."""
     config = config or default_config()
     if config.max_samples > 0:
         raise ValueError(
             "max_samples caps the inference scan but integrity must see "
-            "every row; run infer_parquet + transcript_integrity_native "
+            "every row; run infer_parquet + transcript_integrity_summary "
             "separately for capped inference"
         )
     if config.examples and not order_cols:
@@ -222,31 +239,6 @@ def infer_and_integrity_parquet(
             violation_spec,
         )
 
-    # Overlap the spill reduce with the scan itself: a driver-side tail
-    # thread decodes each part file as soon as its task lands it, so the
-    # post-scan reduce only runs the in-memory merge kernel (the rev-6
-    # one-scan pipeline removed the stages that used to hide this cost —
-    # see IncrementalSpillWatcher). Only for 'auto', whose small-spill
-    # branch the watcher reproduces bit-identically; explicit distributed
-    # strategies skip it.
-    watcher = None
-    if distinct_strategy == "auto":
-        from .validate import IncrementalSpillWatcher
-
-        watcher = IncrementalSpillWatcher(
-            out_dir, max_bytes=local_merge_max_bytes
-        )
-
-    def _reduce_spills():
-        if watcher is not None:
-            got = watcher.finalize()
-            if got is not None:
-                return got
-        return reduce_spilled_partials(
-            spark, out_dir, distinct_strategy, local_merge_max_bytes
-        )
-
-    cleanup_owned_by_future = False
     try:
         rdd = spark.sparkContext.parallelize(
             list(enumerate(tasks)), max(len(tasks), 1)
@@ -283,33 +275,13 @@ def infer_and_integrity_parquet(
             partitions=[(i, 0, 0.0) for i in range(len(tasks))],
             wall_secs=time.time() - t0,
         )
-        if integrity == "background":
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = ThreadPoolExecutor(1)
-
-            def _reduce_then_cleanup():
-                try:
-                    return _reduce_spills()
-                finally:
-                    if spill_dir is None:
-                        shutil.rmtree(out_dir, ignore_errors=True)
-
-            fut = pool.submit(_reduce_then_cleanup)
-            pool.shutdown(wait=False)  # thread finishes; submit no more
-            fut.watcher = watcher  # expose stats/abort state to callers
-            cleanup_owned_by_future = True
-            if violation_spec is not None:
-                return res, fut, dict(zip(vnames, (int(v) for v in vtotals)))
-            return res, fut
-        integ = _reduce_spills()
+        _check_spill_parts(out_dir, range(len(tasks)))
+        integ = reduce_spilled_partials(spark, out_dir)
         if violation_spec is not None:
             return res, integ, dict(zip(vnames, (int(v) for v in vtotals)))
         return res, integ
     finally:
-        if watcher is not None:
-            watcher._stop.set()  # idempotent; stops the poller on errors
-        if spill_dir is None and not cleanup_owned_by_future:
+        if spill_dir is None:
             shutil.rmtree(out_dir, ignore_errors=True)
 
 

@@ -16,6 +16,11 @@ Check taxonomy (SURVEY.md §2.5):
   (min/max/count/count_distinct — no window, no skew problem), plus ts
   monotonicity via a per-conv window (bounded group: a conversation's
   length is bounded, so the window never sees a pathological partition);
+- integrity counts (uniqueness + dense order as two totals): one reduce
+  per input kind over the same per-conv partials (`_integrity_fold`) —
+  parquet input spills them from the fused scan and
+  `reduce_spilled_partials` merges the spill; a DataFrame goes through
+  `transcript_integrity_summary`;
 - per-partition verdicts over a deterministic bucket of conv_id (stable
   lineage for the checkpoint manifest).
 """
@@ -24,11 +29,11 @@ from __future__ import annotations
 
 import re
 import threading
-import time
 from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
 
 # --- format name -> Spark-side regex (JVM rlike; approximations are exact on
@@ -565,10 +570,10 @@ def validation_scan(
     module lock, and on exit each conf is restored only if its CURRENT
     value is still the one this block set (another thread that set its own
     value in between keeps it). Note any OTHER Spark job launched while a
-    scan is open (e.g. the background integrity reduce) runs with these
-    confs pinned — correctness is unaffected (AQE off / split size only
-    change plan shape), but schedule long concurrent jobs outside the
-    block when latency matters.
+    scan is open (e.g. from a prewarm thread) runs with these confs
+    pinned — correctness is unaffected (AQE off / split size only change
+    plan shape), but schedule long concurrent jobs outside the block when
+    latency matters.
 
     Two session knobs are pinned for the duration (and restored on exit —
     they are read at ACTION time, so the collect must happen inside the
@@ -646,7 +651,14 @@ def violation_counts(df: DataFrame, constraints: list) -> DataFrame:
 def duplicate_keys(df: DataFrame, keys: list) -> DataFrame:
     """Keys appearing more than once. groupBy = map-side partial agg; at
     10^12 rows this shuffles only (key, count) pairs. AQE splits skewed
-    reducers; the heavy-hitter keys themselves are exactly what we report."""
+    reducers; the heavy-hitter keys themselves are exactly what we report.
+
+    NULLs are grouped like any other key value (plain groupBy semantics),
+    so two rows sharing ``(c, NULL)`` ARE reported here. The integrity
+    counts (`transcript_integrity_summary`, the fused scan,
+    `turn_ordering_violations`) instead treat the key as an embedded
+    uniqueness constraint that only binds rows with no NULL key column —
+    this row-level explain API deliberately differs from them there."""
     return (
         df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("dup_count"))
@@ -749,11 +761,32 @@ def turn_ordering_violations(
     )
 
 
+def _partial_schema():
+    """Arrow schema of the per-conv integrity partials: what
+    `_integrity_fold` yields and what `pipeline._fused_task` spills (an
+    empty task spills an empty table of this schema)."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            ("conv", pa.string()),
+            ("ch", pa.int64()),
+            ("n", pa.int64()),
+            ("mn", pa.int32()),
+            ("mx", pa.int32()),
+            ("ndl", pa.int64()),
+            ("turns", pa.list_(pa.int32())),
+        ]
+    )
+
+
+
 def _integrity_fold(conv_col: str, idx_col: str):
-    """Per-partition pandas pre-aggregation for transcript_integrity_summary:
-    one output row per (conv, partition) with local count/min/max and the
-    local UNIQUE turn list — exact cross-partition merge material at a
-    fraction of the raw rows."""
+    """Per-partition pre-aggregation of (conv, turn) batches: one output
+    row per (conv, partition) with local count/min/max and the local
+    UNIQUE turn list — exact cross-partition merge material at a fraction
+    of the raw rows. Rows with a NULL conv or turn are dropped (the
+    embedded-uniqueness semantics; see transcript_integrity_summary)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -788,19 +821,20 @@ def _integrity_fold(conv_col: str, idx_col: str):
         ch = _pd.util.hash_array(
             conv_str.to_numpy(zero_copy_only=False).astype(object)
         ).view("int64")  # same bits; Spark's Arrow bridge lacks uint64
-        out = pa.table(
-            {
-                "conv": conv_str,
-                "ch": pa.array(ch, type=pa.int64()),
-                "n": g[f"{idx_col}_count"].cast(pa.int64()),
-                "mn": g[f"{idx_col}_min"].cast(pa.int32()),
-                "mx": g[f"{idx_col}_max"].cast(pa.int32()),
-                # local distinct count as its own column: the reduce's main
-                # path then never decodes the list column (parquet column
-                # pruning skips it entirely on the spill scan)
-                "ndl": pc.list_value_length(turns).cast(pa.int64()),
-                "turns": turns,
-            }
+        out = pa.Table.from_arrays(
+            [
+                conv_str,
+                pa.array(ch, type=pa.int64()),
+                g[f"{idx_col}_count"].cast(pa.int64()),
+                g[f"{idx_col}_min"].cast(pa.int32()),
+                g[f"{idx_col}_max"].cast(pa.int32()),
+                # local distinct count (``ndl``) as its own column: the
+                # reduce's main path then never decodes the list column
+                # (parquet column pruning skips it on the spill scan)
+                pc.list_value_length(turns).cast(pa.int64()),
+                turns,
+            ],
+            schema=_partial_schema(),
         )
         yield from out.to_batches()
 
@@ -811,20 +845,21 @@ def transcript_integrity_summary(
     df: DataFrame,
     conv_col: str = "conv_id",
     idx_col: str = "turn_idx",
-    distinct_strategy: str = "collect",
 ) -> dict:
     """Uniqueness of (conv, turn) AND dense-ordering per conv in ONE
-    SHUFFLE-LIGHT pass.
+    SHUFFLE-LIGHT pass over a DataFrame (parquet input goes through the
+    fused scan, `pipeline.infer_and_integrity_parquet`, instead).
 
     duplicate_keys and turn_ordering_violations each shuffle every raw
-    (conv, turn) pair; at 100 TB that shuffle is the pipeline's largest
-    cost. Here each partition pre-aggregates to one row per conversation —
-    count, min, max, unique-turn list — in a vectorized pandas fold (the
-    rows of a conversation are clustered by ingest/bucket layout, so almost
-    every conv collapses to a single partial), and only the per-conv
-    partials shuffle. The merge is exact: n_distinct is the size of the
-    distinct union of the partials' unique-turn arrays (JVM array
-    functions, no explode). Null keys are excluded.
+    (conv, turn) pair. Here each partition pre-aggregates to one row per
+    conversation — count, min, max, unique-turn list — in a vectorized
+    arrow fold, and only the per-conv partials shuffle. The merge is
+    exact: n_distinct is the size of the distinct union of the partials'
+    unique-turn arrays (JVM array functions, no explode).
+
+    NULL keys: the check is an EMBEDDED uniqueness constraint — it holds
+    on the rows whose conv AND turn are both non-null; rows with a NULL
+    in either are left to the required-column row constraints.
 
     Returns {'dup_rows_excess': total rows beyond one per (conv, turn) key,
     'ordering_violations': #convs whose turn_idx is not dense 0..n-1} —
@@ -833,49 +868,9 @@ def transcript_integrity_summary(
         F.col(conv_col).cast("string").alias(conv_col),
         F.col(idx_col).cast("int").alias(idx_col),
     ).mapInArrow(
-        _integrity_fold(conv_col, idx_col),
-        "conv string, ch long, n long, mn int, mx int, ndl long, turns array<int>",
+        _integrity_fold(conv_col, idx_col), from_arrow_schema(_partial_schema())
     )
-    return _integrity_reduce(partials, strategy=distinct_strategy)
-
-
-def _integrity_reduce(
-    partials: DataFrame, strategy: str = "collect", reuse: str = "persist"
-) -> dict:
-    """Distributed merge of per-conv partials. Two strategies, identical
-    results (fuzz-tested equality):
-
-    - ``collect`` (default): one groupBy(conv) whose distinct union is
-      size(array_distinct(flatten(collect_list(turns)))). One shuffle,
-      one job. With short conversations (transcripts average a handful of
-      turns) the conv-id strings dominate shuffle bytes anyway, so the
-      arrays add little — measured fastest at every parallelism level on
-      the bench table.
-    - ``split``: the long-conversation scale path. A conv whose rows all
-      landed in ONE map task (the clustered-layout majority) needs no
-      cross-task union — its local distinct count (the ``ndl`` column) is
-      exact, so the main aggregation carries five longs per conv and
-      never touches the arrays (reading a parquet spill, column pruning
-      skips the list column entirely); only convs split across tasks
-      (task-boundary stragglers, hot convs) pay the exact array union,
-      via a join AQE turns into a broadcast. Choose this when turn lists
-      dominate partial bytes (avg turns/conv in the hundreds+) — there
-      the collect form shuffles the whole turn universe, this one only
-      the split convs'.
-
-    ``reuse='persist'`` caches the partials for the split strategy's
-    second reference — required when they come from a mapInArrow fold
-    that would otherwise re-run; the native path passes ``'rescan'``
-    because its partials are a parquet spill that re-scans pruned."""
-    if strategy == "collect":
-        return _integrity_reduce_collect(partials)
-    if reuse == "persist":
-        partials = partials.persist()
-    try:
-        return _integrity_reduce_split(partials)
-    finally:
-        if reuse == "persist":
-            partials.unpersist()
+    return _integrity_reduce_collect(partials)
 
 
 def _integrity_finalize(g: DataFrame) -> dict:
@@ -895,6 +890,11 @@ def _integrity_finalize(g: DataFrame) -> dict:
 
 
 def _integrity_reduce_collect(partials: DataFrame) -> dict:
+    """One groupBy(conv) whose distinct union is
+    size(array_distinct(flatten(collect_list(turns)))): one shuffle, one
+    job — the fastest distributed form when partials come from a
+    mapInArrow fold (short conversations: conv-id strings dominate the
+    shuffle bytes, the arrays add little)."""
     g = partials.groupBy("conv").agg(
         F.sum("n").alias("n_turns"),
         F.min("mn").alias("min_idx"),
@@ -907,12 +907,14 @@ def _integrity_reduce_collect(partials: DataFrame) -> dict:
 
 
 def _integrity_reduce_split(partials: DataFrame) -> dict:
-    base = (
-        partials
-        if "ndl" in partials.columns
-        else partials.withColumn("ndl", F.size("turns"))
-    )
-    g1 = base.select("conv", "n", "mn", "mx", "ndl").groupBy("conv").agg(
+    """The distributed reduce for spills too large to merge on the driver.
+    A conv whose rows all landed in ONE map task (the clustered-layout
+    majority) needs no cross-task union — its local distinct count
+    (``ndl``) is exact — so the main aggregation carries five longs per
+    conv and never touches the arrays (parquet column pruning skips the
+    list column); only convs split across tasks pay the exact array
+    union, via a join AQE turns into a broadcast."""
+    g1 = partials.select("conv", "n", "mn", "mx", "ndl").groupBy("conv").agg(
         F.sum("n").alias("n_turns"),
         F.min("mn").alias("min_idx"),
         F.max("mx").alias("max_idx"),
@@ -921,7 +923,7 @@ def _integrity_reduce_split(partials: DataFrame) -> dict:
     )
     multi = g1.filter(F.col("parts") > 1).select("conv")
     exact = (
-        base.select("conv", "turns")
+        partials.select("conv", "turns")
         .join(multi, "conv")
         .groupBy("conv")
         .agg(
@@ -940,7 +942,7 @@ def _merge_partials_local(table) -> dict:
     """Vectorized driver-side merge of per-conv partials: numpy/arrow
     C-paths instead of a 5M-group Spark ObjectHashAggregate. Partials are
     ~2% of input rows, so this is MBs even for 10^8-turn inputs; beyond
-    that, feed the partials into _integrity_reduce instead.
+    that, reduce_spilled_partials uses _integrity_reduce_split instead.
 
     Two-tier: a conv whose partials all came from ONE map task needs no
     grouping at all — its per-row (n, mn, mx, ndl) stats ARE the final
@@ -948,16 +950,12 @@ def _merge_partials_local(table) -> dict:
     Under a conv-clustered layout that is ~99% of the rows (only
     task-boundary stragglers + hot convs straddle tasks); only that
     small remainder pays dictionary encoding and the exact turn-set
-    union. The previous form dictionary-encoded and bincounted ALL
-    partial rows (five 5M-element passes), making this driver merge a
-    ~10 s serial stage that capped measured scaling — Amdahl, not the
-    host (kernel controls never saw it: they time the map side only).
+    union (`_judge_multi_subset`).
     Multi-task detection is keyed on the spilled ``ch`` int64 conv hash
-    when present (one int64 sort + searchsorted, ~0.4 s at 5M partials;
-    hash collisions only route extra rows into the exact path below,
-    which unions by the true conv strings — results are collision-proof).
-    Tables without ``ch`` (older spills, hand-built partials) fall back
-    to two string hash passes (value_counts + is_in, ~3.4 s at 5M). The
+    when present (one hash pass; hash collisions only route extra rows
+    into the exact path, which unions by the true conv strings — results
+    are collision-proof). Tables without ``ch`` (hand-built partials)
+    fall back to two string hash passes (value_counts + is_in). The
     string and list columns are never chunk-combined for the single-task
     majority — only the multi subset is gathered."""
     import numpy as np
@@ -973,17 +971,11 @@ def _merge_partials_local(table) -> dict:
     n = table.column("n").to_numpy(zero_copy_only=False)
     mn_r = table.column("mn").to_numpy(zero_copy_only=False)
     mx_r = table.column("mx").to_numpy(zero_copy_only=False)
-    if "ndl" in table.schema.names:
-        ndl = table.column("ndl").to_numpy(zero_copy_only=False)
-    else:
-        ndl = np.diff(
-            table.column("turns").combine_chunks().offsets.to_numpy()
-        )
+    ndl = table.column("ndl").to_numpy(zero_copy_only=False)
 
-    # ch fast path only when the column is null-free: a resumed checkpoint
-    # mixing pre-ch part files with new ones unifies to a ch column with
-    # nulls, whose to_numpy gives float64 NaNs — and pandas duplicated()
-    # treats all NaNs as duplicates, silently routing every legacy row
+    # ch fast path only when the column is null-free: a ch column with
+    # nulls gives float64 NaNs from to_numpy, and pandas duplicated()
+    # treats all NaNs as duplicates, silently routing every such row
     # through the slow exact-multi path. null_count is a metadata read.
     if "ch" in table.schema.names and table.column("ch").null_count == 0:
         import pandas as _pd
@@ -1035,9 +1027,7 @@ def _judge_multi_subset(sub) -> tuple:
     """Exact per-conv judgment of partial rows whose conv may span map
     tasks (arrow table with conv/n/mn/mx/turns): groups by the TRUE conv
     string, unions the turn sets via one composite-key unique, and returns
-    this subset's (dup_rows_excess, ordering_violations) contribution.
-    Shared by `_merge_partials_local` (its multi branch) and
-    `IncrementalSpillWatcher._resolve` — one kernel, one set of tests."""
+    this subset's (dup_rows_excess, ordering_violations) contribution."""
     import numpy as np
 
     import pyarrow as pa
@@ -1078,639 +1068,38 @@ def _judge_multi_subset(sub) -> tuple:
     return dup_excess, bad
 
 
-def transcript_integrity_parquet(
-    spark,
-    path: str,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    rg_per_task: int = 4,
-) -> dict:
-    """transcript_integrity_summary via the native-reader pattern: tasks
-    read ONLY (conv, turn) from parquet row groups with pyarrow (skipping
-    Spark's columnar->row->arrow conversion), pre-aggregate per conv with
-    C++ hash_distinct, and merge the collected partials on the driver.
-    Identical result to transcript_integrity_summary on the same data.
-
-    Trade: fastest wall-clock at LOW parallelism (47s vs 75s at 1 core on
-    30M rows) because the map side skips Spark's row pipeline, but the
-    driver merge is serial — at high core counts the fully-distributed
-    transcript_integrity_summary wins and scales (its reduce
-    parallelizes). Pick summary for clusters, this for small boxes."""
-    import io
-
-    import pyarrow as pa
-
-    from .infer_spark import _list_rg_tasks, list_parquet_files
-
-    tasks = _list_rg_tasks(list_parquet_files(path), rg_per_task)
-    fold = _integrity_fold(conv_col, idx_col)
-
-    def run(spec):
-        import pyarrow.parquet as pq
-
-        f, lo, hi = spec
-        pf = pq.ParquetFile(f)
-        batches = pf.iter_batches(
-            batch_size=65536,
-            row_groups=list(range(lo, hi)),
-            columns=[conv_col, idx_col],
-        )
-
-        def plain(bs):
-            for b in bs:
-                cols = [
-                    c.cast(c.type.value_type)
-                    if pa.types.is_dictionary(c.type)
-                    else c
-                    for c in b.columns
-                ]
-                yield pa.RecordBatch.from_arrays(cols, names=b.schema.names)
-
-        out = list(fold(plain(batches)))
-        sink = io.BytesIO()
-        if out:
-            with pa.ipc.new_stream(sink, out[0].schema) as w:
-                for b in out:
-                    w.write_batch(b)
-        return sink.getvalue()
-
-    blobs = spark.sparkContext.parallelize(tasks, max(len(tasks), 1)).map(run).collect()
-    tables = [pa.ipc.open_stream(b).read_all() for b in blobs if b]
-    if not tables:
-        return {"dup_rows_excess": 0, "ordering_violations": 0}
-    return _merge_partials_local(pa.concat_tables(tables))
+# Spills up to this many bytes are merged on the driver; larger ones go
+# through the distributed _integrity_reduce_split.
+_DRIVER_MERGE_MAX_BYTES = 256 << 20
 
 
-def transcript_integrity_native(
-    spark,
-    path: str,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    rg_per_task: int = 4,
-    spill_dir: str | None = None,
-    distinct_strategy: str = "auto",
-    local_merge_max_bytes: int = 256 << 20,
-) -> dict:
-    """transcript_integrity_summary with a native-reader MAP side and a
-    runtime-picked reduce — the form that scales on both axes.
-
-    ``distinct_strategy='auto'`` (default) decides the reduce from the
-    measured spill size, the way AQE re-plans from shuffle statistics:
-    partials under ``local_merge_max_bytes`` go through the vectorized
-    driver merge (`_merge_partials_local` — arrow dictionary codes +
-    numpy bincount, no shuffle, sub-second at bench scale), larger spills
-    go through the distributed ``split`` reduce whose main aggregation
-    carries five longs per conversation (arrays only for convs split
-    across tasks). 'collect'/'split' force the distributed reduce;
-    equality of every path is asserted in tests.
-
-    The summary's map side pays Spark's columnar->row->arrow conversion on
-    every raw row, which caps it CPU-side regardless of cores (measured on
-    a 30.5M-turn table: integrity stage 12.0s @ local[8] -> 12.6s @
-    local[32], flat, while native-reader inference scaled 31.9s -> 2.7s);
-    transcript_integrity_parquet reads natively but merges partials
-    serially on the driver (fast at 1 core, serial-capped). Here tasks
-    read ONLY (conv, turn) off parquet row groups with pyarrow,
-    pre-aggregate per conversation with C++ hash aggregation, spill the
-    per-conv partials to parquet (a few % of the input bytes), and the
-    partials feed the distributed _integrity_reduce.
-
-    The spill is the same pattern a 1000-executor job uses at 100 TB:
-    map partials land in shared storage (here the local FS both the
-    driver and local-mode executors see; pass ``spill_dir`` on a real
-    cluster to point at distributed storage), and the reduce is a plain
-    map-side-combined aggregation AQE sizes freely. Result is identical
-    to transcript_integrity_summary on the same data (tests assert)."""
-    import os
-    import shutil
-    import tempfile
-
-    from .infer_spark import _list_rg_tasks, list_parquet_files
-
-    tasks = _list_rg_tasks(list_parquet_files(path), rg_per_task)
-    fold = _integrity_fold(conv_col, idx_col)
-    out_dir = spill_dir or tempfile.mkdtemp(prefix="jis_integrity_")
-    os.makedirs(out_dir, exist_ok=True)
-
-    def run(item):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        i, (f, lo, hi) = item
-        pf = pq.ParquetFile(f)
-        batches = pf.iter_batches(
-            batch_size=65536,
-            row_groups=list(range(lo, hi)),
-            columns=[conv_col, idx_col],
-        )
-
-        def plain(bs):
-            for b in bs:
-                cols = [
-                    c.cast(c.type.value_type)
-                    if pa.types.is_dictionary(c.type)
-                    else c
-                    for c in b.columns
-                ]
-                yield pa.RecordBatch.from_arrays(cols, names=b.schema.names)
-
-        out = list(fold(plain(batches)))
-        if out:
-            pq.write_table(
-                pa.Table.from_batches(out),
-                os.path.join(out_dir, f"part-{i:05d}.parquet"),
-            )
-        return i
-
-    try:
-        spark.sparkContext.parallelize(
-            list(enumerate(tasks)), max(len(tasks), 1)
-        ).map(run).collect()
-        return reduce_spilled_partials(
-            spark, out_dir, distinct_strategy, local_merge_max_bytes
-        )
-    finally:
-        if spill_dir is None:
-            shutil.rmtree(out_dir, ignore_errors=True)
-
-
-def reduce_spilled_partials(
-    spark,
-    out_dir: str,
-    distinct_strategy: str = "auto",
-    local_merge_max_bytes: int = 256 << 20,
-) -> dict:
+def reduce_spilled_partials(spark, out_dir: str) -> dict:
     """Merge a directory of spilled per-conv integrity partials (the
-    parquet files written by `_integrity_fold` map tasks) into the final
+    ``part-*.parquet`` files `pipeline._fused_task` writes) into the final
     {dup_rows_excess, ordering_violations} dict.
 
-    ``'auto'`` picks the reduce from the measured spill size, AQE-style:
-    the spill size is now a known statistic. Small partials -> the
-    vectorized driver merge (no shuffle at all, sub-second, and immune to
-    the ObjectHashAggregate variance a 10^6-group array agg shows); large
-    partials (10^9+ conversations) -> the distributed ``split`` reduce,
-    whose main agg carries five longs per conv."""
-    import glob as _glob
+    The reduce is picked from the measured spill size, the way AQE
+    re-plans from shuffle statistics: up to ``_DRIVER_MERGE_MAX_BYTES``
+    the vectorized driver merge (`_merge_partials_local` — no shuffle,
+    sub-second at bench scale), above it the distributed
+    `_integrity_reduce_split`, whose main aggregation carries five longs
+    per conv. Only the final ``part-*`` names are read: a torn
+    ``.part-*.inprogress-<pid>`` file from a killed writer never reaches
+    either reader."""
+    import glob
     import os
 
-    spilled = _glob.glob(os.path.join(out_dir, "part-*.parquet"))
+    spilled = sorted(glob.glob(os.path.join(out_dir, "part-*.parquet")))
     if not spilled:
         return {"dup_rows_excess": 0, "ordering_violations": 0}
-    strategy = distinct_strategy
-    if strategy == "auto":
-        if sum(os.path.getsize(p) for p in spilled) <= local_merge_max_bytes:
-            import pyarrow as _pa
-            import pyarrow.parquet as _pq
-
-            # read the globbed part files, not the directory: a torn
-            # tmp file from a killed writer must never reach the reader
-            return _merge_partials_local(
-                _pa.concat_tables(
-                    [_pq.read_table(p) for p in sorted(spilled)]
-                )
-            )
-        strategy = "split"
-    if strategy == "tree":
-        return _integrity_reduce_tree(spark, sorted(spilled))
-    return _integrity_reduce(
-        spark.read.parquet(out_dir), strategy=strategy, reuse="rescan"
-    )
-
-
-class IncrementalSpillWatcher:
-    """Consume completed integrity spill files WHILE the fused scan is
-    still running, so the post-scan integrity reduce stops being a serial
-    tail. Rev 6 made this the engine's largest remaining Amdahl term: the
-    one-scan pipeline removed the compile + violations stages the
-    background reduce used to hide behind, and paired rounds immediately
-    showed 1.6-3.4 s of ``integrity_wait`` at BOTH parallelism levels —
-    ~15-20% of the whole local[4] job, a direct efficiency cap.
-
-    Everything except the cross-file duplicate resolution is additive
-    per file, so it is ALL prepaid as each file lands (measured at the
-    5M-conv bench spill: parquet decode ~2.8 s, single-part row
-    judgment ~1.7 s cold — together most of the 3-4.4 s cold wait):
-
-    - read + decode the part file;
-    - the single-part judgment sums ``(n - ndl).sum()`` and the dense
-      0..n-1 predicate count — exactly `_merge_partials_local`'s
-      all-rows totals, which are per-row and hence per-file additive;
-    - the file's ``ch`` hashes are argsorted once (the sorted copy and
-      the row order are both reused by finalize's dup resolution) and
-      copied into one growing pre-faulted buffer (see __init__).
-
-    finalize() then: sorts the buffer's filled prefix IN PLACE — one
-    allocation-free introsort, ~0.07-0.35 s at 5M hashes regardless of
-    the host's fault-servicing state (rev 7's incremental
-    insertion-merge spent 5-7 s of prepaid memory-bus traffic during
-    the scan plus a 1.75 s serial tail fold, an O(n²/batch)
-    pessimization; rev 8's finalize-time concat+radix was 0.2 s on a
-    healthy host but 5-10 s inside degraded fault windows), flags
-    duplicate ch VALUES with one equal-neighbor scan (~10 ms), gathers
-    the ~1% of rows whose conv may span files, subtracts their prepaid
-    single-part contributions, and judges them exactly via the same
-    `_judge_multi_subset` kernel `_merge_partials_local` uses (union of
-    true per-conv turn sets — ch collisions only route extra rows here,
-    results are collision-proof). Measured finalize: ~0.3-0.5 s versus
-    the 3-4.4 s cold reduce.
-
-    The watcher aborts (finalize -> None) and the caller falls back to
-    `reduce_spilled_partials` when: a file lacks the current spill
-    schema (``ch``/``ndl`` present, ``ch`` null-free), accumulated bytes
-    exceed ``max_bytes`` (the same cap that routes the cold path to the
-    distributed ``split`` reduce), or the thread hit any exception.
-    Spill files are only read, never deleted — the fallback and the
-    caller's cleanup see the directory untouched.
-
-    Safe-by-construction file visibility: `pipeline._fused_task` writes
-    ``part-*.parquet.inprogress-<pid>`` and `os.replace`s to the final
-    name, so the ``part-*.parquet`` glob only ever matches complete
-    files; a task retry re-replacing a consumed file swaps in
-    byte-identical content (the fold is deterministic) and an open
-    handle keeps reading the old inode. On a real cluster this thread
-    is free driver hardware, exactly like the background reduce it
-    feeds."""
-
-    def __init__(
-        self,
-        out_dir: str,
-        poll_secs: float = 0.2,
-        max_bytes: int = 256 << 20,
-    ):
-        import glob as _glob
-        import os as _os
-
-        self._dir = out_dir
-        self._glob = lambda: _glob.glob(_os.path.join(out_dir, "part-*.parquet"))
-        self._getsize = _os.path.getsize
-        self._poll = poll_secs
-        self._max_bytes = max_bytes
-        self._seen: set = set()
-        # (table, n, mn, mx, ndl, ch_sorted, argsort_order) per file;
-        # each file's hashes are ALSO copied into one geometrically-grown
-        # preallocated buffer as the file lands, so every page the global
-        # duplicate scan touches is faulted DURING the scan — finalize
-        # then sorts the filled prefix in place (allocation-free). On
-        # this host page-fault servicing intermittently degrades ~100x
-        # while raw bandwidth stays healthy, so a finalize-time 40 MB
-        # concat+radix measured 0.2 s or 7 s depending on the moment;
-        # the in-place introsort on pre-faulted pages measures ~0.07 s
-        # in BOTH states. A real cluster's driver prefers this shape
-        # too: the fault cost overlaps the scan instead of serializing
-        # after it.
-        self._files: list = []
-        self._buf = None  # int64 buffer; filled prefix = self._len
-        self._len = 0
-        self._dup_sum = 0  # prepaid single-part totals (additive)
-        self._bad_sum = 0
-        self._bytes = 0
-        # cheap wall-time accounting: where the prepay/finalize seconds go
-        # (read by bench diagnostics; a handful of time.time() calls)
-        self.stats: dict = {
-            "files_total": 0,
-            "files_finalize": 0,  # consumed inside finalize (tail wave)
-            "decode_secs": 0.0,
-            "prep_secs": 0.0,  # numpy post-decode (sums, argsort)
-            "resolve_secs": 0.0,
-            "finalize_consume_secs": 0.0,
-            "join_wait_secs": 0.0,
-            "dup_vals": 0,
-            "matched_rows": 0,
-        }
-        self._in_finalize = False
-        self._aborted = False
-        self._error: BaseException | None = None
-        self._stop = threading.Event()
-        self._thread = threading.Thread(
-            target=self._run, name="jis-spill-watcher", daemon=True
-        )
-        self._thread.start()
-
-    def _consume_ready(self) -> None:
-        import numpy as np
-
-        import pyarrow.parquet as _pq
-
-        for p in sorted(self._glob()):
-            if p in self._seen or self._aborted:
-                continue
-            self._seen.add(p)
-            self._bytes += self._getsize(p)
-            if self._bytes > self._max_bytes:
-                # same size rule that sends the cold path distributed;
-                # drop decoded state, keep files for the fallback
-                self._abort()
-                return
-            _t0 = time.time()
-            t = _pq.read_table(p)
-            self.stats["decode_secs"] += time.time() - _t0
-            self.stats["files_total"] += 1
-            if self._in_finalize:
-                self.stats["files_finalize"] += 1
-            names = t.schema.names
-            if (
-                "ch" not in names
-                or "ndl" not in names
-                or t.column("ch").null_count != 0
-                or (self._files and t.schema != self._files[0][0].schema)
-            ):
-                self._abort()
-                return
-            _t0 = time.time()
-            ch = t.column("ch").to_numpy(zero_copy_only=False)
-            n = t.column("n").to_numpy(zero_copy_only=False)
-            mn = t.column("mn").to_numpy(zero_copy_only=False)
-            mx = t.column("mx").to_numpy(zero_copy_only=False)
-            ndl = t.column("ndl").to_numpy(zero_copy_only=False)
-            # prepay the single-part judgment: per-row, hence additive
-            self._dup_sum += int((n - ndl).sum())
-            self._bad_sum += int(
-                ((mn != 0) | (mx != ndl - 1) | (ndl != n)).sum()
-            )
-            # one argsort gives both the file's sorted hashes (reused by
-            # the global dup-value detection's final radix sort and the
-            # per-file matched-row search) and the original-row order (so
-            # finalize can map matched sorted positions back to rows
-            # without a per-row membership pass)
-            order = np.argsort(ch, kind="stable")
-            srt = ch[order]
-            # copy into the growing pre-faulted buffer (see __init__)
-            need = self._len + srt.size
-            if self._buf is None or need > self._buf.size:
-                cap = max(need, 1 << 20)
-                if self._buf is not None:
-                    cap = max(need, self._buf.size * 2)
-                nb = np.empty(cap, dtype=np.int64)
-                if self._len:
-                    nb[: self._len] = self._buf[: self._len]
-                self._buf = nb
-            self._buf[self._len : need] = srt
-            self._len = need
-            self.stats["prep_secs"] += time.time() - _t0
-            self._files.append((t, n, mn, mx, ndl, srt, order))
-
-    def _abort(self) -> None:
-        self._aborted = True
-        self._files = []
-        self._buf = None
-        self._len = 0
-
-    def _run(self) -> None:
-        try:
-            while not self._stop.wait(self._poll):
-                self._consume_ready()
-                if self._aborted:
-                    return
-        except BaseException as e:  # surfaced via finalize -> fallback
-            self._error = e
-            self._abort()
-
-    def finalize(self) -> dict | None:
-        """Join the poller, consume any files it hadn't seen, resolve the
-        cross-file duplicates, and return the final counts — or None when
-        the incremental path bailed (the caller must fall back to
-        `reduce_spilled_partials`)."""
-        _t0 = time.time()
-        self._stop.set()
-        self._thread.join()
-        self.stats["join_wait_secs"] = time.time() - _t0
-        if not self._aborted:
-            try:
-                _t0 = time.time()
-                self._in_finalize = True
-                self._consume_ready()
-                self.stats["finalize_consume_secs"] = time.time() - _t0
-            except BaseException as e:
-                self._error = e
-                self._abort()
-        if self._aborted:
-            if self._error is not None:
-                import warnings
-
-                warnings.warn(
-                    "IncrementalSpillWatcher failed; falling back to the "
-                    f"cold spill reduce: {self._error!r}",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-            return None
-        if not self._files:
-            return {"dup_rows_excess": 0, "ordering_violations": 0}
-        try:
-            _t0 = time.time()
-            out = self._resolve()
-            self.stats["resolve_secs"] = time.time() - _t0
-            return out
-        except BaseException as e:
-            self._error = e
-            import warnings
-
-            warnings.warn(
-                "IncrementalSpillWatcher finalize failed; falling back to "
-                f"the cold spill reduce: {e!r}",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            return None
-
-    def _resolve(self) -> dict:
-        import numpy as np
-
-        import pyarrow as pa
-
-        # ONE in-place introsort of the pre-faulted buffer — zero
-        # allocation at finalize (kind='stable' radix would allocate a
-        # fresh workspace, which this host's degraded fault windows turn
-        # into seconds); ~0.07-0.35 s at 5M hashes in EVERY host state
-        _t0 = time.time()
-        s = self._buf[: self._len]
-        s.sort(kind="quicksort")
-        self.stats["resolve_sort_secs"] = time.time() - _t0
-        # duplicate ch VALUES = equal neighbors in the sorted array; a
-        # value repeated within ONE file is included too (same semantics
-        # as _merge_partials_local's duplicated(keep=False) mask)
-        dup_excess, bad = self._dup_sum, self._bad_sum
-        dup_vals = np.unique(s[1:][s[1:] == s[:-1]])
-        self.stats["dup_vals"] = int(dup_vals.size)
-        if dup_vals.size:
-            # inverted membership: search the (few) duplicate values into
-            # each file's sorted hashes — O(dups x log rows) + matched,
-            # instead of a per-row pass over 5M hashes whose fresh 40 MB
-            # allocations are exactly what this host's degraded windows
-            # punish. Matched sorted positions map back to original rows
-            # through the prepaid argsort.
-            subs = []
-            _tscan = time.time()
-            for t, n, mn, mx, ndl, srt, order in self._files:
-                lo = np.searchsorted(srt, dup_vals, side="left")
-                hi = np.searchsorted(srt, dup_vals, side="right")
-                cnt = hi - lo
-                nz = cnt > 0
-                total = int(cnt[nz].sum())
-                if not total:
-                    continue
-                starts = lo[nz]
-                lens = cnt[nz]
-                ends = np.cumsum(lens)
-                # concatenated ranges [starts_k, starts_k + lens_k)
-                idx_sorted = (
-                    np.arange(total)
-                    - np.repeat(ends - lens, lens)
-                    + np.repeat(starts, lens)
-                )
-                rows = np.sort(order[idx_sorted])
-                # un-prepay the single-part judgment of spanning rows
-                dup_excess -= int((n - ndl)[rows].sum())
-                bad -= int(
-                    ((mn != 0) | (mx != ndl - 1) | (ndl != n))[rows].sum()
-                )
-                self.stats["matched_rows"] += total
-                subs.append(
-                    t.select(["conv", "n", "mn", "mx", "turns"]).take(
-                        pa.array(rows)
-                    )
-                )
-            _tj = time.time()
-            self.stats["resolve_scan_secs"] = _tj - _tscan
-            d2, b2 = _judge_multi_subset(pa.concat_tables(subs))
-            self.stats["resolve_judge_secs"] = time.time() - _tj
-            dup_excess += d2
-            bad += b2
-        return {"dup_rows_excess": dup_excess, "ordering_violations": bad}
-
-
-def _consolidate_partials(table):
-    """Merge per-conv partial rows sharing a conv into ONE row each — the
-    associative combine step of the tree reduce (same schema out, minus
-    ``ch``: a consolidated table has one row per conv, so the multi-task
-    detection hash buys nothing downstream). Same numpy kernel family as
-    _merge_partials_local: dictionary codes + bincount/min/max.at + one
-    composite-key unique for the exact per-conv turn union."""
-    import numpy as np
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    cols = ["conv", "n", "mn", "mx", "ndl", "turns"]
-    if table.num_rows == 0:
-        return table.select([c for c in cols if c in table.schema.names])
-    conv = table.column("conv")
-    if isinstance(conv, pa.ChunkedArray):
-        conv = conv.combine_chunks()
-    enc = pc.dictionary_encode(conv)
-    codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    uconv = enc.dictionary
-    G = len(uconv)
-    n = table.column("n").to_numpy(zero_copy_only=False)
-    mn_r = table.column("mn").to_numpy(zero_copy_only=False)
-    mx_r = table.column("mx").to_numpy(zero_copy_only=False)
-    n2 = np.bincount(codes, weights=n, minlength=G).astype(np.int64)
-    mn2 = np.full(G, np.iinfo(np.int32).max, dtype=np.int64)
-    np.minimum.at(mn2, codes, mn_r)
-    mx2 = np.full(G, np.iinfo(np.int32).min, dtype=np.int64)
-    np.maximum.at(mx2, codes, mx_r)
-    turns = table.column("turns")
-    if isinstance(turns, pa.ChunkedArray):
-        turns = turns.combine_chunks()
-    lens = np.diff(turns.offsets.to_numpy())
-    flat = turns.flatten().to_numpy(zero_copy_only=False)
-    rep = np.repeat(codes, lens)
-    # +2^31 bias: exact code recovery for negative int32 turn values
-    key = rep * np.int64(1 << 32) + (
-        flat.astype(np.int64, copy=False) + np.int64(1 << 31)
-    )
-    ukey = np.unique(key)
-    ndl2 = np.bincount(ukey >> np.int64(32), minlength=G).astype(np.int64)
-    uturn = (
-        (ukey & np.int64(0xFFFFFFFF)) - np.int64(1 << 31)
-    ).astype(np.int32)
-    # np.unique sorts by composite key = (code, turn): offsets by cumsum
-    offsets = np.zeros(G + 1, dtype=np.int32)
-    np.cumsum(ndl2, out=offsets[1:])
-    turns2 = pa.ListArray.from_arrays(
-        pa.array(offsets, type=pa.int32()), pa.array(uturn, type=pa.int32())
-    )
-    return pa.table(
-        {
-            "conv": uconv,
-            "n": pa.array(n2, type=pa.int64()),
-            "mn": pa.array(mn2.astype(np.int32), type=pa.int32()),
-            "mx": pa.array(mx2.astype(np.int32), type=pa.int32()),
-            "ndl": pa.array(ndl2, type=pa.int64()),
-            "turns": turns2,
-        }
-    )
-
-
-def _ipc_ser(table) -> bytes:
-    import pyarrow as pa
-
-    sink = pa.BufferOutputStream()
-    with pa.ipc.new_stream(sink, table.schema) as w:
-        w.write_table(table)
-    return sink.getvalue().to_pybytes()
-
-
-def _ipc_deser(buf: bytes):
-    import pyarrow as pa
-
-    return pa.ipc.open_stream(pa.py_buffer(buf)).read_all()
-
-
-def _integrity_reduce_tree(spark, spilled: list, depth: int = 2) -> dict:
-    """Tree-reduce escape hatch for huge partial spills: executors
-    consolidate per-conv partials pairwise (treeReduce(depth)), so the
-    driver merges ONE already-consolidated table instead of every partial
-    row — its work drops from O(partial rows) to O(final convs in the
-    root merge), and the per-level combine is the same associative numpy
-    kernel the local merge uses. Compared to the ``split`` SQL reduce this
-    keeps everything in arrow IPC buffers (no SQL job, no shuffle files) —
-    the right shape when a long chain of map tasks produced many small
-    spill files and the cluster is otherwise busy with SQL stages.
-    Results are bit-identical to every other strategy (tests assert).
-
-    Measured at 5M single-conv partials (avg 3 turns): the one-shot
-    driver merge (_merge_partials_local) takes ~4.8 s serial; the
-    consolidate kernel is ~10.5 s on the FULL table single-threaded but
-    tree execution runs it on per-partition subsets in parallel
-    (64 partitions -> ~78k rows -> ~0.2 s each) plus log-depth combines,
-    and the driver's root merge of the consolidated table is ~2.9 s.
-    The win is not wall-clock at 5M — it is that driver memory and time
-    stop scaling with partial-row count (the Amdahl S-term r3 measured)."""
-
-    def load(paths):
-        import numpy as np
-
+    if sum(os.path.getsize(p) for p in spilled) <= _DRIVER_MERGE_MAX_BYTES:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        tables = []
-        for p in paths:
-            t = pq.read_table(p)
-            if "ndl" not in t.schema.names:  # legacy spills: derive it
-                turns = t.column("turns")
-                if isinstance(turns, pa.ChunkedArray):
-                    turns = turns.combine_chunks()
-                ndl = np.diff(turns.offsets.to_numpy()).astype(np.int64)
-                t = t.append_column("ndl", pa.array(ndl, type=pa.int64()))
-            tables.append(t.select(["conv", "n", "mn", "mx", "ndl", "turns"]))
-        if not tables:
-            return []
-        return [_ipc_ser(_consolidate_partials(pa.concat_tables(tables)))]
-
-    def combine(a: bytes, b: bytes) -> bytes:
-        import pyarrow as pa
-
-        return _ipc_ser(
-            _consolidate_partials(
-                pa.concat_tables([_ipc_deser(a), _ipc_deser(b)])
-            )
+        return _merge_partials_local(
+            pa.concat_tables([pq.read_table(p) for p in spilled])
         )
-
-    n_parts = max(1, min(len(spilled), 64))
-    rdd = spark.sparkContext.parallelize(spilled, n_parts).mapPartitions(load)
-    merged = rdd.treeReduce(combine, depth=depth)
-    return _merge_partials_local(_ipc_deser(merged))
+    return _integrity_reduce_split(spark.read.parquet(*spilled))
 
 
 def ts_regressions(

@@ -1,9 +1,10 @@
 """Fused one-pass pipeline == the standalone operators, value-identical.
 
 The fused scan (pipeline.infer_and_integrity_parquet) must return exactly
-the InferResult of infer_parquet AND the integrity dict of
-transcript_integrity_native on the same files — the folds are shared code,
-so any divergence is a wiring bug in the tee."""
+the InferResult of infer_parquet AND the integrity counts of
+transcript_integrity_summary / duplicate_keys / turn_ordering_violations
+on the same files — the folds are shared code, so any divergence is a
+wiring bug in the tee or the spill reduce."""
 
 import pytest
 
@@ -13,20 +14,29 @@ from jsonschema_infer_spark.operators.infer_spark import infer_parquet
 from jsonschema_infer_spark.operators.pipeline import infer_and_integrity_parquet
 
 
+def _operator_counts(df) -> dict:
+    """Integrity counts derived from the row-level explain APIs."""
+    excess = sum(
+        r.dup_count - 1
+        for r in V.duplicate_keys(df, ["conv_id", "turn_idx"]).collect()
+    )
+    return {
+        "dup_rows_excess": excess,
+        "ordering_violations": V.turn_ordering_violations(df).count(),
+    }
+
+
 def test_fused_matches_standalone_on_violated(spark, tx_paths):
     want_infer = infer_parquet(spark, tx_paths["viol"], rg_per_task=1)
-    want_integ = V.transcript_integrity_native(
-        spark, tx_paths["viol"], rg_per_task=1
-    )
     res, integ = infer_and_integrity_parquet(
         spark, tx_paths["viol"], rg_per_task=1
     )
     assert res.schema_json == want_infer.schema_json
     assert res.total_rows == want_infer.total_rows
-    assert integ == want_integ
-    # and against the mapInArrow summary form, the third implementation
     viol = spark.read.parquet(tx_paths["viol"])
     assert integ == V.transcript_integrity_summary(viol)
+    assert integ == _operator_counts(viol)
+    assert integ["dup_rows_excess"] > 0 and integ["ordering_violations"] > 0
 
 
 def test_fused_matches_standalone_on_clean(spark, tx_paths):
@@ -39,32 +49,15 @@ def test_fused_matches_standalone_on_clean(spark, tx_paths):
     assert integ == {"dup_rows_excess": 0, "ordering_violations": 0}
 
 
-def test_fused_background_integrity_matches_eager(spark, tx_paths):
-    """integrity='background' returns (res, Future); the resolved dict and
-    the InferResult are value-identical to the eager form, the spill dir
-    is cleaned up after resolution, and a bad mode is refused."""
-    want_res, want_integ = infer_and_integrity_parquet(
+def test_fused_distributed_reduce_matches(spark, tx_paths, monkeypatch):
+    # force the distributed split reduce (zero driver-merge budget)
+    monkeypatch.setattr(V, "_DRIVER_MERGE_MAX_BYTES", 0)
+    _, integ = infer_and_integrity_parquet(
         spark, tx_paths["viol"], rg_per_task=1
     )
-    res, fut = infer_and_integrity_parquet(
-        spark, tx_paths["viol"], rg_per_task=1, integrity="background"
+    assert integ == V.transcript_integrity_summary(
+        spark.read.parquet(tx_paths["viol"])
     )
-    assert res.schema_json == want_res.schema_json
-    assert res.total_rows == want_res.total_rows
-    assert fut.result(timeout=120) == want_integ
-    with pytest.raises(ValueError):
-        infer_and_integrity_parquet(
-            spark, tx_paths["viol"], integrity="later"
-        )
-
-
-def test_fused_distributed_reduce_matches(spark, tx_paths):
-    # force the distributed split reduce (zero local-merge budget): same dict
-    want = V.transcript_integrity_native(spark, tx_paths["viol"], rg_per_task=1)
-    _, integ = infer_and_integrity_parquet(
-        spark, tx_paths["viol"], rg_per_task=1, local_merge_max_bytes=0
-    )
-    assert integ == want
 
 
 def test_fused_examples_capture_matches(spark, tx_paths):
@@ -93,18 +86,25 @@ def test_fused_rejects_max_samples(spark, tx_paths):
         )
 
 
+def _multi_rg_copy(tx_paths, tmp_path, name="viol_multi_rg.parquet"):
+    """The violated fixture re-written with 7 row groups (7 fused tasks at
+    rg_per_task=1)."""
+    import pyarrow.parquet as pq
+
+    src = pq.read_table(tx_paths["viol"])
+    path = str(tmp_path / name)
+    pq.write_table(src, path, row_group_size=max(src.num_rows // 6, 1))
+    return path
+
+
 def test_fused_checkpoint_resume_and_lineage(spark, tx_paths, tmp_path):
     from jsonschema_infer_spark.checkpoint import fused_with_checkpoint
     from jsonschema_infer_spark.operators.pipeline import (
         infer_and_integrity_parquet,
     )
 
-    import pyarrow.parquet as pq
-
     # re-materialize with small row groups so there are MANY fused tasks
-    src = pq.read_table(tx_paths["viol"])
-    path = str(tmp_path / "viol_multi_rg.parquet")
-    pq.write_table(src, path, row_group_size=max(src.num_rows // 6, 1))
+    path = _multi_rg_copy(tx_paths, tmp_path)
     ckpt = str(tmp_path / "fused_ckpt")
 
     # first run: tasks 0 and 1 "never finish"
@@ -153,6 +153,162 @@ def test_fused_checkpoint_ignores_orphan_tmp_files(spark, tx_paths, tmp_path):
     res2, integ2, man2 = fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
     assert res2.total_rows == res1.total_rows  # no double-count, no crash
     assert integ2 == integ1
+
+
+def test_fused_refuses_stale_spill_parts(spark, tx_paths, tmp_path):
+    """A reused spill_dir holding part files of an earlier run with more
+    tasks must be refused, not double-counted."""
+    path = _multi_rg_copy(tx_paths, tmp_path)
+    spill = str(tmp_path / "spill")
+    _, want = infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, spill_dir=spill
+    )
+    # same task layout: every part file is rewritten, nothing stale
+    _, again = infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, spill_dir=spill
+    )
+    assert again == want
+    # 7 row groups: 4 tasks now, part-00004..6 are the first run's
+    with pytest.raises(ValueError, match=r"unexpected \['part-00004"):
+        infer_and_integrity_parquet(spark, path, rg_per_task=2, spill_dir=spill)
+
+
+def test_fused_checkpoint_refuses_missing_part(spark, tx_paths, tmp_path):
+    """A part file lost between runs (its task's state marker survives, so
+    resume would skip the task) must fail the resume, not silently drop
+    that task's conversations from the integrity counts."""
+    import os
+
+    from jsonschema_infer_spark.checkpoint import fused_with_checkpoint
+
+    path = _multi_rg_copy(tx_paths, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    _, _, man = fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
+    assert man["complete"]
+    os.remove(os.path.join(ckpt, "integrity", "part-00002.parquet"))
+    with pytest.raises(ValueError, match="part-00002"):
+        fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
+
+
+def test_fused_checkpoint_fingerprint_written_before_scan(
+    spark, tx_paths, tmp_path
+):
+    """A run that dies mid-scan (one input file has corrupt data pages)
+    has already recorded its fingerprint, so a resume with another task
+    layout is refused; once the file is repaired, a resume with the
+    original layout completes and equals the unchecked pipeline."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    from jsonschema_infer_spark.checkpoint import (
+        fused_with_checkpoint,
+        infer_with_checkpoint,
+    )
+
+    src = pq.read_table(tx_paths["viol"])
+    data = tmp_path / "data"
+    data.mkdir()
+    third = src.num_rows // 3
+    parts = [src.slice(0, third), src.slice(third, third), src.slice(2 * third)]
+    for k, t in enumerate(parts):
+        pq.write_table(
+            t, str(data / f"f{k}.parquet"), row_group_size=len(t) // 2 + 1,
+            compression="NONE",
+        )
+    bad = str(data / "f1.parquet")
+    with open(bad, "r+b") as f:  # garble the first page header
+        f.seek(4)
+        f.write(b"\xff" * 64)
+
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(Exception):
+        fused_with_checkpoint(spark, str(data), ckpt, rg_per_task=1)
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        assert json.load(f)["complete"] is False
+    with pytest.raises(ValueError, match="does not match"):
+        fused_with_checkpoint(spark, str(data), ckpt, rg_per_task=2)
+    # the Spark-partitioned checkpoint records its fingerprint up front too
+    df = spark.read.parquet(str(data))
+    ckpt2 = str(tmp_path / "ckpt_infer")
+    with pytest.raises(Exception):
+        infer_with_checkpoint(df, ckpt2)
+    with pytest.raises(ValueError, match="does not match"):
+        infer_with_checkpoint(df, ckpt2, order_cols=["conv_id", "turn_idx"])
+
+    pq.write_table(
+        parts[1], bad, row_group_size=len(parts[1]) // 2 + 1,
+        compression="NONE",
+    )
+    res, integ, man = fused_with_checkpoint(
+        spark, str(data), ckpt, rg_per_task=1
+    )
+    assert man["complete"] and man["num_tasks"] == 6
+    res_d, integ_d = infer_and_integrity_parquet(
+        spark, str(data), rg_per_task=1
+    )
+    assert res.schema_json == res_d.schema_json
+    assert res.total_rows == res_d.total_rows == src.num_rows
+    assert integ == integ_d
+
+
+def test_integrity_null_keys_embedded_uniqueness(spark, tmp_path, monkeypatch):
+    """(conv_id, turn_idx) uniqueness + dense order is an EMBEDDED
+    uniqueness constraint: it binds only rows whose conv AND turn are both
+    non-null. Every integrity path agrees with a brute force over that
+    subset; duplicate_keys, a row-level explain API, groups NULLs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    keys = [
+        ("a", 0), ("a", 1), ("a", 2), ("e", 0),
+        ("e", 1), ("b", 0), ("b", 1), ("b", 1),
+        ("c", 1), ("c", 2), ("e", 2), ("e", 2),
+        # row groups of NULL-keyed rows only: their tasks spill empty parts
+        ("a", None), ("b", None), ("b", None), ("d", None),
+        (None, 0), (None, 0), (None, 1), (None, None),
+    ]
+    table = pa.table(
+        {
+            "conv_id": pa.array([k[0] for k in keys], pa.string()),
+            "turn_idx": pa.array([k[1] for k in keys], pa.int32()),
+            "role": pa.array(["user", "assistant"] * (len(keys) // 2)),
+        }
+    )
+    path = str(tmp_path / "null_keys.parquet")
+    pq.write_table(table, path, row_group_size=4)
+
+    convs: dict = {}
+    for c, t in keys:
+        if c is not None and t is not None:
+            convs.setdefault(c, []).append(t)
+    want = {
+        "dup_rows_excess": sum(len(ts) - len(set(ts)) for ts in convs.values()),
+        "ordering_violations": sum(
+            min(ts) != 0 or sorted(set(ts)) != list(range(len(ts)))
+            for ts in convs.values()
+        ),
+    }
+    assert want == {"dup_rows_excess": 2, "ordering_violations": 3}
+
+    df = spark.read.parquet(path)
+    assert V.transcript_integrity_summary(df) == want
+    tov = V.turn_ordering_violations(df).collect()
+    assert len(tov) == want["ordering_violations"]
+    assert sum(r.n_turns - r.n_distinct for r in tov) == want["dup_rows_excess"]
+    _, integ = infer_and_integrity_parquet(spark, path, rg_per_task=1)
+    assert integ == want
+    monkeypatch.setattr(V, "_DRIVER_MERGE_MAX_BYTES", 0)
+    _, integ = infer_and_integrity_parquet(spark, path, rg_per_task=1)
+    assert integ == want
+
+    # the explain API keeps plain groupBy semantics: NULL is a key value
+    dups = {
+        (r.conv_id, r.turn_idx): r.dup_count
+        for r in V.duplicate_keys(df, ["conv_id", "turn_idx"]).collect()
+    }
+    assert dups == {("b", 1): 2, ("e", 2): 2, ("b", None): 2, (None, 0): 2}
 
 
 def test_validation_prewarm_hit_and_miss(spark, tx_paths):
@@ -256,8 +412,8 @@ def test_fused_violation_counts_match_spark(spark, tx_paths):
     # cannot flag the snapshot
     assert all(v == 0 for v in vcounts.values())
     # integrity unchanged by the extra counting
-    assert integ == V.transcript_integrity_native(
-        spark, tx_paths["viol"], rg_per_task=1
+    assert integ == V.transcript_integrity_summary(
+        spark.read.parquet(tx_paths["viol"])
     )
 
     # cross-table spec: clean table's constraints against the violated

@@ -90,72 +90,6 @@ def test_integrity_summary_matches_separate_operators(compiled):
     assert clean_summ == {"dup_rows_excess": 0, "ordering_violations": 0}
 
 
-def test_integrity_parquet_native_matches(spark, tx_paths):
-    viol = spark.read.parquet(tx_paths["viol"])
-    want = V.transcript_integrity_summary(viol)
-    assert V.transcript_integrity_parquet(
-        spark, tx_paths["viol"], rg_per_task=1
-    ) == want
-    # native map side + distributed reduce (the scaling form)
-    assert V.transcript_integrity_native(
-        spark, tx_paths["viol"], rg_per_task=1
-    ) == want
-    # the long-conversation split strategy: identical result
-    assert V.transcript_integrity_native(
-        spark, tx_paths["viol"], rg_per_task=1, distinct_strategy="split"
-    ) == want
-    assert V.transcript_integrity_native(
-        spark, tx_paths["viol"], rg_per_task=1, distinct_strategy="collect"
-    ) == want
-    # auto with a zero threshold must route to the distributed reduce
-    assert V.transcript_integrity_native(
-        spark, tx_paths["viol"], rg_per_task=1, local_merge_max_bytes=0
-    ) == want
-    assert V.transcript_integrity_summary(viol, distinct_strategy="split") == want
-    # tree-reduce escape hatch: executors consolidate pairwise, the driver
-    # merges one consolidated table — identical counts
-    assert V.transcript_integrity_native(
-        spark, tx_paths["viol"], rg_per_task=1, distinct_strategy="tree"
-    ) == want
-    clean = V.transcript_integrity_native(spark, tx_paths["clean"], rg_per_task=1)
-    assert clean == {"dup_rows_excess": 0, "ordering_violations": 0}
-
-
-def test_consolidate_partials_associative_and_equal():
-    """_consolidate_partials (the tree combine) must agree with
-    _merge_partials_local on any split of the same partial rows, including
-    negative turn indices and multi-part convs."""
-    import pyarrow as pa
-
-    data = {
-        "conv": ["a", "b", "c", "c", "d", "d", "d"],
-        "n": pa.array([3, 4, 3, 3, 2, 2, 1], type=pa.int64()),
-        "mn": pa.array([0, 0, 0, 3, -2, 0, 2], type=pa.int32()),
-        "mx": pa.array([2, 2, 2, 5, -1, 1, 2], type=pa.int32()),
-        "ndl": pa.array([3, 3, 3, 3, 2, 2, 1], type=pa.int64()),
-        "turns": pa.array(
-            [[0, 1, 2], [0, 1, 2], [0, 1, 2], [3, 4, 5],
-             [-2, -1], [0, 1], [2]],
-            type=pa.list_(pa.int32()),
-        ),
-    }
-    full = pa.table(data)
-    want = V._merge_partials_local(full)
-    one = V._consolidate_partials(full)
-    # consolidated: one row per conv, and the local merge of it agrees
-    assert one.num_rows == 4
-    assert V._merge_partials_local(one) == want
-    # associativity: consolidate halves, concat, consolidate again
-    left = V._consolidate_partials(full.slice(0, 4))
-    right = V._consolidate_partials(full.slice(4))
-    again = V._consolidate_partials(pa.concat_tables([left, right]))
-    assert V._merge_partials_local(again) == want
-    # IPC round-trip used by treeReduce
-    assert V._ipc_deser(V._ipc_ser(one)).equals(one)
-    # empty table passes through
-    assert V._consolidate_partials(full.slice(0, 0)).num_rows == 0
-
-
 def test_ts_regressions_match_injections(compiled):
     res, cons, clean, viol, log = compiled
     got_convs = {r.conv_id for r in V.ts_regressions(viol).collect()}
@@ -446,41 +380,10 @@ def _spill_tables():
     return t1, t2
 
 
-def test_incremental_spill_watcher_matches_cold(tmp_path):
-    """The watcher's overlapped consume + finalize is bit-identical to the
-    cold reduce_spilled_partials path on the same directory, including
-    files that land AFTER the watcher started."""
-    import time as _time
-
-    import pyarrow.parquet as pq
-
-    t1, t2 = _spill_tables()
-    d = str(tmp_path)
-    pq.write_table(t1, f"{d}/part-00000.parquet")
-    w = V.IncrementalSpillWatcher(d, poll_secs=0.01)
-    deadline = _time.time() + 5
-    while not w._files and _time.time() < deadline:
-        _time.sleep(0.01)
-    assert w._files, "watcher never consumed the first file"
-    pq.write_table(t2, f"{d}/part-00001.parquet")  # late arrival
-    got = w.finalize()
-    want = V._merge_partials_local(pq.read_table(d))
-    assert got == want == {"dup_rows_excess": 1, "ordering_violations": 1}
-    # cold path on the untouched directory agrees (spark unused locally)
-    assert V.reduce_spilled_partials(None, d) == want
-    # the stats surface bench/diag_integrity_wait.py reads: every file
-    # accounted for, the one-shot resolve sort timed, dup values found
-    assert w.stats["files_total"] == 2
-    assert w.stats["dup_vals"] >= 1
-    assert w.stats["matched_rows"] >= 2
-    assert w.stats["resolve_sort_secs"] >= 0.0
-    assert w.stats["decode_secs"] > 0.0
-
-
 def test_incremental_spill_watcher_ignores_inprogress(tmp_path):
     """A torn ``.part-*.inprogress-<pid>`` temp file (writer killed between
-    write and rename) is invisible to the watcher's glob AND to the cold
-    path's reader."""
+    write and rename) never reaches the spill reduce: only final ``part-*``
+    names are read, and each part file that lands joins the result."""
     import pyarrow.parquet as pq
 
     t1, t2 = _spill_tables()
@@ -488,100 +391,87 @@ def test_incremental_spill_watcher_ignores_inprogress(tmp_path):
     pq.write_table(t1, f"{d}/part-00000.parquet")
     with open(f"{d}/.part-00001.parquet.inprogress-42", "wb") as f:
         f.write(b"not a parquet footer")
-    w = V.IncrementalSpillWatcher(d, poll_secs=0.01)
-    got = w.finalize()
-    assert got == V._merge_partials_local(t1)
+    assert V.reduce_spilled_partials(None, d) == V._merge_partials_local(t1)
     pq.write_table(t2, f"{d}/part-00001.parquet")
-    assert V.reduce_spilled_partials(None, d) == V._merge_partials_local(
-        __import__("pyarrow").concat_tables([t1, t2])
-    )
-
-
-def test_incremental_spill_watcher_overflow_and_mismatch_fall_back(tmp_path):
-    """Byte-budget overflow and a schema-mismatched file both abort the
-    incremental path (finalize -> None) with the directory left intact for
-    the cold fallback."""
-    import pyarrow.parquet as pq
-
-    t1, t2 = _spill_tables()
-    d1 = str(tmp_path / "overflow")
-    (tmp_path / "overflow").mkdir()
-    pq.write_table(t1, f"{d1}/part-00000.parquet")
-    w = V.IncrementalSpillWatcher(d1, poll_secs=0.01, max_bytes=1)
-    assert w.finalize() is None
-    assert V.reduce_spilled_partials(None, d1) == V._merge_partials_local(t1)
-
-    d2 = str(tmp_path / "mismatch")
-    (tmp_path / "mismatch").mkdir()
-    pq.write_table(t1, f"{d2}/part-00000.parquet")
-    pq.write_table(t2.drop_columns(["ch"]), f"{d2}/part-00001.parquet")
-    w2 = V.IncrementalSpillWatcher(d2, poll_secs=0.01)
-    assert w2.finalize() is None
+    assert V.reduce_spilled_partials(None, d) == {
+        "dup_rows_excess": 1,
+        "ordering_violations": 1,
+    }
 
 
 def test_incremental_spill_watcher_empty_dir(tmp_path):
-    w = V.IncrementalSpillWatcher(str(tmp_path), poll_secs=0.01)
-    assert w.finalize() == {"dup_rows_excess": 0, "ordering_violations": 0}
+    """A spill directory holding no final part file — empty, or only a torn
+    in-progress file — reduces to clean counts."""
+    clean = {"dup_rows_excess": 0, "ordering_violations": 0}
+    assert V.reduce_spilled_partials(None, str(tmp_path)) == clean
+    with open(tmp_path / ".part-00000.parquet.inprogress-7", "wb") as f:
+        f.write(b"not a parquet footer")
+    assert V.reduce_spilled_partials(None, str(tmp_path)) == clean
 
 
-def test_incremental_spill_watcher_fuzz_vs_cold(tmp_path):
-    """Seeded fuzz: random per-conv partials scattered over random file
-    splits — watcher finalize must equal the cold kernel on every trial,
-    including negative turns, convs spanning many files, duplicate turns
-    across files, and FORCED ch collisions between different convs."""
+def _judge_partials(rows) -> dict:
+    """Pure-Python per-conv judgment of ``(conv, n, turns)`` partial rows:
+    a conv's rows are its n summed, its turn sets unioned."""
+    convs: dict = {}
+    for conv, n, turns in rows:
+        total, seen = convs.get(conv, (0, set()))
+        convs[conv] = (total + n, seen | set(turns))
+    dup = bad = 0
+    for total, seen in convs.values():
+        dup += total - len(seen)
+        bad += (
+            min(seen) != 0 or max(seen) != len(seen) - 1 or len(seen) != total
+        )
+    return {"dup_rows_excess": dup, "ordering_violations": bad}
+
+
+def test_reduce_spilled_partials_fuzz(spark, tmp_path, monkeypatch):
+    """Seeded fuzz of the spill reduce: random per-conv partials scattered
+    over random part files (some empty), with negative turns, convs
+    spanning many files, ``n`` above the turn-list length (duplicates
+    inside one task) and FORCED ``ch`` collisions between different convs.
+    Both reduces — the driver merge under the size cap, and the
+    distributed split with the cap forced to 0 — must equal a pure-Python
+    judgment of the generated rows."""
     import random
 
-    import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     rng = random.Random(20260819)
+    trials = []
     for trial in range(8):
-        n_convs = rng.randint(1, 40)
-        rows = []  # (conv, ch, turns_list)
+        n_convs = rng.randint(0, 40)
+        rows = []  # (conv, ch, n, turns)
         for c in range(n_convs):
-            conv = f"conv{c}"
-            # collide some hashes on purpose: different convs, same ch
+            # odd trials collide hashes on purpose: different convs, same ch
             ch = c % max(1, n_convs // 3) if trial % 2 else c
-            n_parts = rng.choice([1, 1, 1, 2, 3])
-            for _ in range(n_parts):
-                k = rng.randint(1, 5)
+            for _ in range(rng.choice([1, 1, 1, 2, 3, 6])):
                 lo = rng.choice([0, 0, 0, 1, -2])
-                turns = sorted(
-                    rng.sample(range(lo, lo + 8), k)
-                )
-                rows.append((conv, ch, turns))
+                turns = sorted(rng.sample(range(lo, lo + 8), rng.randint(1, 5)))
+                extra = rng.randint(1, 3) if rng.random() < 0.3 else 0
+                rows.append((f"conv{c}", ch, len(turns) + extra, turns))
         rng.shuffle(rows)
-        n_files = rng.randint(1, max(2, len(rows) // 2))
-        splits = [rows[i::n_files] for i in range(n_files)]
+        n_files = rng.randint(1, max(2, len(rows) // 2)) + rng.choice([0, 0, 2])
         d = tmp_path / f"trial{trial}"
         d.mkdir()
-        for i, chunk in enumerate(c for c in splits if c):
-            tbl = pa.table(
-                {
-                    "conv": pa.array([r[0] for r in chunk], type=pa.string()),
-                    "ch": pa.array([r[1] for r in chunk], type=pa.int64()),
-                    "n": pa.array(
-                        [len(r[2]) + (1 if rng.random() < 0.3 else 0)
-                         for r in chunk],
-                        type=pa.int64(),
-                    ),
-                    "mn": pa.array([min(r[2]) for r in chunk], type=pa.int32()),
-                    "mx": pa.array([max(r[2]) for r in chunk], type=pa.int32()),
-                    "ndl": pa.array([len(r[2]) for r in chunk], type=pa.int64()),
-                    "turns": pa.array(
-                        [r[2] for r in chunk], type=pa.list_(pa.int32())
-                    ),
-                }
+        for i in range(n_files):
+            chunk = [
+                {"conv": conv, "ch": ch, "n": n, "mn": t[0], "mx": t[-1],
+                 "ndl": len(t), "turns": t}
+                for conv, ch, n, t in rows[i::n_files]
+            ]
+            pq.write_table(
+                pa.Table.from_pylist(chunk, schema=V._partial_schema()),
+                str(d / f"part-{i:05d}.parquet"),
             )
-            pq.write_table(tbl, str(d / f"part-{i:05d}.parquet"))
-        w = V.IncrementalSpillWatcher(str(d), poll_secs=0.005)
-        got = w.finalize()
-        files = sorted(str(p) for p in d.glob("part-*.parquet"))
-        want = V._merge_partials_local(
-            pa.concat_tables([pq.read_table(p) for p in files])
-        )
-        assert got == want, f"trial {trial}: {got} != {want}"
+        trials.append((str(d), _judge_partials([(r[0], r[2], r[3]) for r in rows])))
+
+    for d, want in trials:
+        assert V.reduce_spilled_partials(spark, d) == want, d
+    monkeypatch.setattr(V, "_DRIVER_MERGE_MAX_BYTES", 0)
+    for d, want in trials:
+        assert V.reduce_spilled_partials(spark, d) == want, d
 
 
 def test_validation_scan_nested_and_concurrent_restore(spark, tx_paths):
@@ -621,8 +511,8 @@ def test_integrity_fold_emits_deterministic_ch(spark, tx_paths):
     src = pq.read_table(tx_paths["viol"]).select(["conv_id", "turn_idx"])
     out1 = pa.Table.from_batches(list(fold(src.to_batches())))
     out2 = pa.Table.from_batches(list(fold(src.to_batches())))
-    assert "ch" in out1.schema.names
-    assert out1.schema.field("ch").type == pa.int64()
+    # the schema every spilled part file has (empty ones included)
+    assert out1.schema == V._partial_schema()
     assert out1.column("ch").to_pylist() == out2.column("ch").to_pylist()
     # hash is a pure function of conv: equal convs share it
     df = out1.select(["conv", "ch"]).to_pandas()
