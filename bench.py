@@ -276,9 +276,28 @@ def run_suite(
     return timings, pipe, {"mid_gbps": mid_g, "mid_burn_s": mid_b}
 
 
+def spark_resources() -> tuple:
+    """(cores, driver memory) for local[N]: $SPARK_GRAFT_CPUS, default the
+    usable CPUs, and $SPARK_GRAFT_MEM, default a quarter of RAM. Exits
+    with a message when asked for more cores than the host has: an
+    oversubscribed local[N] measures the scheduler, not the engine."""
+    have = len(os.sched_getaffinity(0))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", have))
+    if not 1 <= cpus <= have:
+        raise SystemExit(
+            f"SPARK_GRAFT_CPUS={cpus} but this host has {have} usable CPUs; "
+            f"set it to 1..{have} or unset it"
+        )
+    mem = os.environ.get("SPARK_GRAFT_MEM")
+    if mem is None:
+        mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+        mem = f"{mem_mb // 4}m"
+    return cpus, mem
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, mem = spark_resources()
     n_convs = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "300000"))
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_QUERY_REPS", "3"))
     pipe_reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PIPE_REPS", "4")))
@@ -288,9 +307,9 @@ def main() -> None:
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
+        .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 8)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "48g"))
+        .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
         .appName("jsonschema-infer-spark-bench")
         .getOrCreate()
@@ -341,7 +360,7 @@ def main() -> None:
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "turns_per_sec": round(pipe["turns_per_sec"], 1),
                 "bench_rows": pipe["rows"],
-                "cpus": int(cpus),
+                "cpus": cpus,
                 "query_reps": reps,
                 "host_probes": probes,
                 "host_healthy": bool(probes and probes[-1]["post_gbps"] >= 2.0

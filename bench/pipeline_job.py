@@ -50,7 +50,9 @@ import time
 # rev 10 = one eager integrity reduce: the watcher thread and the
 #         background reduce are gone; the spill reduce runs inside the
 #         fused call.
-ENGINE_REV = 10
+# rev 11 = engine tasks drop the worker's cached zip finders on exit, so
+#         PySpark's per-task importlib.invalidate_caches() re-reads no zip.
+ENGINE_REV = 11
 
 
 def main():

@@ -52,6 +52,21 @@ from bench import (  # noqa: E402
 )
 
 
+def round_flag(r: dict, ref_tp1: float) -> str:
+    """The "counts?" cell of a paired round: why it is excluded, if it is.
+    A round whose local[1] side was healthy can still fail the eff <= 1.0
+    plausibility gate; it must not be labelled a slow serial side."""
+    if r["healthy_base"]:
+        return "yes"
+    if r.get("external_load"):
+        return "no (external CPU load overlapped the round)"
+    if r.get("mixed_code"):
+        return "no (code changed between the round's two sides)"
+    if r["eff"] > 1.0 and r["tp1"] >= 0.75 * ref_tp1:
+        return "no (eff > 1.0, implausible)"
+    return "no (slow local[1] side)"
+
+
 def build_pyfiles_zip(path: str) -> str:
     with zipfile.ZipFile(path, "w") as z:
         pkg = os.path.join(REPO, "jsonschema_infer_spark")
@@ -496,17 +511,9 @@ def main():
         "|---|---|---|---|---|---|",
     ]
     for i, r in enumerate(rounds, 1):
-        if r["healthy_base"]:
-            flag = "yes"
-        elif r.get("external_load"):
-            flag = "no (external CPU load overlapped the round)"
-        elif r.get("mixed_code"):
-            flag = "no (code changed between the round's two sides)"
-        else:
-            flag = "no (slow local[1] side)"
         lines.append(
             f"| {i} | {r['tp1']:,} | {r['tp4']:,} | {r['eff']} | "
-            f"{r.get('kernel_eff', '—')} | {flag} |"
+            f"{r.get('kernel_eff', '—')} | {round_flag(r, ref_tp1)} |"
         )
     # claim strictly about the 1 -> 4 pair: the best-of-level 1->4 ratio or
     # the best healthy paired round — never another pair's ratio, which

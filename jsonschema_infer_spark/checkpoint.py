@@ -31,6 +31,7 @@ import time
 
 import pyarrow as pa
 
+from ._worker import release_zip_finders
 from .config import InferConfig, default_config
 from .operators import state as S
 from .operators.infer_spark import (
@@ -134,31 +135,34 @@ def infer_with_checkpoint(
     def fold(batches):
         from pyspark import TaskContext
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        path = _state_path(ckpt, pid)
-        if os.path.exists(path):
-            return  # resume: completed partition, skip without scanning
-        if pid in skip:
-            return  # test hook: pretend this partition never finished
-        t0 = time.time()
-        if mode == "json":
-            st, rows = fold_batches_json(batches, config, json_column, order_cols)
-        else:
-            st, rows = fold_batches_columnar(batches, config, order_cols)
-        _atomic_write(
-            path,
-            json.dumps(
-                {
-                    "pid": pid,
-                    "rows": rows,
-                    "secs": time.time() - t0,
-                    "attempt": ctx.attemptNumber() if ctx is not None else 0,
-                    "state": S.state_to_jsonable(st),
-                }
-            ),
-        )
-        yield pa.RecordBatch.from_pydict({"pid": pa.array([pid], pa.int64())})
+        try:
+            ctx = TaskContext.get()
+            pid = ctx.partitionId() if ctx is not None else 0
+            path = _state_path(ckpt, pid)
+            if os.path.exists(path):
+                return  # resume: completed partition, skip without scanning
+            if pid in skip:
+                return  # test hook: pretend this partition never finished
+            t0 = time.time()
+            if mode == "json":
+                st, rows = fold_batches_json(batches, config, json_column, order_cols)
+            else:
+                st, rows = fold_batches_columnar(batches, config, order_cols)
+            _atomic_write(
+                path,
+                json.dumps(
+                    {
+                        "pid": pid,
+                        "rows": rows,
+                        "secs": time.time() - t0,
+                        "attempt": ctx.attemptNumber() if ctx is not None else 0,
+                        "state": S.state_to_jsonable(st),
+                    }
+                ),
+            )
+            yield pa.RecordBatch.from_pydict({"pid": pa.array([pid], pa.int64())})
+        finally:
+            release_zip_finders()
 
     t0 = time.time()
     folded_now = [

@@ -37,6 +37,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from .._worker import release_zip_finders
 from ..config import InferConfig, default_config
 from ..operators import state as S
 from ..plans.render import render_schema
@@ -647,21 +648,24 @@ def _make_fold(config: InferConfig, mode: str, json_column, order_cols=None):
     def fn(batches):
         from pyspark import TaskContext
 
-        t0 = time.time()
-        if mode == "json":
-            st, rows = fold_batches_json(batches, config, json_column, order_cols)
-        else:
-            st, rows = fold_batches_columnar(batches, config, order_cols)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        yield pa.RecordBatch.from_pydict(
-            {
-                "pid": pa.array([pid], pa.int64()),
-                "rows": pa.array([rows], pa.int64()),
-                "state": pa.array([json.dumps(S.state_to_jsonable(st))]),
-                "secs": pa.array([time.time() - t0], pa.float64()),
-            }
-        )
+        try:
+            t0 = time.time()
+            if mode == "json":
+                st, rows = fold_batches_json(batches, config, json_column, order_cols)
+            else:
+                st, rows = fold_batches_columnar(batches, config, order_cols)
+            ctx = TaskContext.get()
+            pid = ctx.partitionId() if ctx is not None else -1
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "pid": pa.array([pid], pa.int64()),
+                    "rows": pa.array([rows], pa.int64()),
+                    "state": pa.array([json.dumps(S.state_to_jsonable(st))]),
+                    "secs": pa.array([time.time() - t0], pa.float64()),
+                }
+            )
+        finally:
+            release_zip_finders()
 
     return fn
 
@@ -775,11 +779,12 @@ def infer_parquet(
                     yield b
 
             batches = limited(batches)
-        if mode == "json":
-            st, rows = fold_batches_json(batches, config, json_column, order_cols)
-        else:
-            st, rows = fold_batches_columnar(batches, config, order_cols)
-        return st, rows
+        try:
+            if mode == "json":
+                return fold_batches_json(batches, config, json_column, order_cols)
+            return fold_batches_columnar(batches, config, order_cols)
+        finally:
+            release_zip_finders()
 
     rdd = spark.sparkContext.parallelize(tasks, max(len(tasks), 1)).map(fold_task)
     if len(tasks) > _TREE_REDUCE_THRESHOLD:

@@ -38,6 +38,7 @@ import time
 
 import pyarrow as pa
 
+from .._worker import release_zip_finders
 from ..config import InferConfig, default_config
 from ..operators import state as S
 from .infer_spark import (
@@ -137,6 +138,9 @@ def _fused_task(
 
         if vcounts is None:  # zero batches in this task's range
             vcounts = np.zeros(len(vnames), dtype=np.int64)
+    # last step: the worker's next task then re-reads no zip directory
+    release_zip_finders()
+    if violation_spec is not None:
         return st, rows, vcounts
     return st, rows
 
@@ -233,18 +237,25 @@ def infer_and_integrity_parquet(
         )
 
     def run(item):
+        # the task's result and its lineage entry (task, rows, seconds)
         i, (f, lo, hi) = item
-        return _fused_task(
+        t = time.perf_counter()
+        out = _fused_task(
             f, lo, hi, config, conv_col, idx_col, out_dir, i, order_cols,
             violation_spec,
         )
+        return out, (i, out[1], time.perf_counter() - t)
 
     try:
         rdd = spark.sparkContext.parallelize(
             list(enumerate(tasks)), max(len(tasks), 1)
         ).map(run)
         vtotals = None
+        partitions: list = []
         if len(tasks) > _TREE_REDUCE_THRESHOLD:
+            # treeReduce yields only the merged value: no per-task
+            # lineage here, as in infer_dataframe
+            rdd = rdd.map(lambda r: r[0])
             depth = max(2, int(math.ceil(math.log(max(len(tasks), 2), 64))))
             if violation_spec is not None:
                 merged, total_rows, vtotals = rdd.treeReduce(
@@ -259,7 +270,9 @@ def infer_and_integrity_parquet(
                     depth=depth,
                 )
         else:
-            pairs = rdd.collect()
+            got = rdd.collect()
+            pairs = [out for out, _ in got]
+            partitions = [lineage for _, lineage in got]
             merged = merge_states([p[0] for p in pairs])
             total_rows = sum(p[1] for p in pairs)
             if violation_spec is not None:
@@ -272,7 +285,7 @@ def infer_and_integrity_parquet(
             schema=schema,
             schema_json=render_schema(schema, config.indent),
             total_rows=total_rows,
-            partitions=[(i, 0, 0.0) for i in range(len(tasks))],
+            partitions=partitions,
             wall_secs=time.time() - t0,
         )
         _check_spill_parts(out_dir, range(len(tasks)))

@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
 
+from .._worker import release_zip_finders
+
 # --- format name -> Spark-side regex (JVM rlike; approximations are exact on
 # the subsets the corresponding Python detectors accept — property-tested)
 
@@ -791,6 +793,12 @@ def _integrity_fold(conv_col: str, idx_col: str):
     import pyarrow.compute as pc
 
     def fold(batches):
+        try:
+            yield from _fold(batches)
+        finally:
+            release_zip_finders()
+
+    def _fold(batches):
         bs = list(batches)
         if not bs:
             return

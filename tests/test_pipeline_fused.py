@@ -60,6 +60,19 @@ def test_fused_distributed_reduce_matches(spark, tx_paths, monkeypatch):
     )
 
 
+def test_fused_lineage_one_entry_per_task(spark, tx_paths, tmp_path):
+    import pyarrow.parquet as pq
+
+    # five row groups -> five tasks at rg_per_task=1
+    path = str(tmp_path / "viol5.parquet")
+    table = pq.read_table(tx_paths["viol"])
+    pq.write_table(table, path, row_group_size=-(-table.num_rows // 5))
+    res, _ = infer_and_integrity_parquet(spark, path, rg_per_task=1)
+    assert sorted(i for i, _, _ in res.partitions) == list(range(5))
+    assert sum(rows for _, rows, _ in res.partitions) == res.total_rows > 0
+    assert all(secs > 0 for _, _, secs in res.partitions)
+
+
 def test_fused_examples_capture_matches(spark, tx_paths):
     cfg = default_config(examples=True)
     want = infer_parquet(
