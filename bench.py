@@ -6,10 +6,12 @@ and prints ONE JSON line:
    "queries": {name: sec, ...}, "sf": ...,
    "turns_per_sec": ..., "bench_rows": ...}
 
-The flagship measurement is the transcript validation pipeline
-(inference + constraint compile + full validation suite) over a
-deterministic synthetic transcript table (seed-fixed, cached under
-.cache/), reported as turns/sec — the BASELINE.json metric. Scaling
+The flagship measurement is the transcript validation pipeline: a
+violated synthetic transcript table (seed-fixed, cached under .cache/
+next to its clean twin and the injection log) validated against the
+clean table's contract in one fused scan (inference + row violations +
+uniqueness + turn ordering), reported as turns/sec — the BASELINE.json
+metric. Its per-constraint counts must equal the injection log. Scaling
 evidence across parallelism levels comes from bench_scaling.py.
 """
 
@@ -157,74 +159,94 @@ def parallel_memcpy_gbps(procs: int, size_mb: int = 256, reps: int = 3) -> float
     return round(procs * size_mb / 1024.0 / best, 2)
 
 
-def ensure_bench_transcripts(n_convs: int, seed: int = 42) -> str:
-    """Generate-and-cache the bench transcript table (violated variant so the
-    validation pass has real work)."""
-    os.makedirs(CACHE, exist_ok=True)
-    # v2: violated variant + small row groups (scan-parallelism fix)
-    path = os.path.join(CACHE, f"transcripts_bench_v2_{n_convs}_{seed}.parquet")
-    if not os.path.exists(path):
+# the injection log's file name, next to the two snapshots
+INJECTION_LOG = "injections.json"
+
+
+def ensure_bench_transcripts(n_convs: int, seed: int = 42) -> tuple:
+    """Generate-and-cache the bench snapshots: a clean transcript table,
+    the same table with labelled violations injected, and the injection
+    log as JSON. Returns their paths ``(clean, violated, log)``."""
+    d = os.path.join(CACHE, f"transcripts_bench_v3_{n_convs}_{seed}")
+    paths = tuple(
+        os.path.join(d, name)
+        for name in ("clean.parquet", "violated.parquet", INJECTION_LOG)
+    )
+    if not all(map(os.path.exists, paths)):
         from jsonschema_infer_spark.sources.transcripts import (
             generate_transcripts,
             inject_violations,
             write_parquet,
         )
 
-        table = generate_transcripts(n_convs, seed=seed, hot_convs=3, hot_turns=4096)
-        table, _log = inject_violations(table, seed=seed)
-        write_parquet(table, path)
-    return path
+        os.makedirs(d, exist_ok=True)
+        clean = generate_transcripts(n_convs, seed=seed, hot_convs=3, hot_turns=4096)
+        violated, log = inject_violations(clean, seed=seed)
+        write_parquet(clean, paths[0])
+        write_parquet(violated, paths[1])
+        # the log last: its presence marks a complete cache
+        with open(paths[2], "w") as f:
+            json.dump(log, f, default=int)
+    return paths
 
 
-def run_transcript_pipeline(spark, path: str) -> dict:
-    """The headline pipeline: infer schema -> compile constraints ->
-    row validation + uniqueness + turn ordering, one timed end-to-end run."""
-    from jsonschema_infer_spark.operators import validate as V
-    from jsonschema_infer_spark.operators.pipeline import infer_and_integrity_parquet
+def run_transcript_pipeline(spark, snaps: tuple) -> dict:
+    """The headline pipeline: validate the violated snapshot against the
+    clean snapshot's contract. ``snaps`` is ``(clean, violated, log)`` as
+    ensure_bench_transcripts returns them.
 
-    df = spark.read.parquet(path)
-    # task granularity scaled to the cluster (same rule as bench/pipeline_job)
+    The contract is inferred from the clean snapshot once, untimed; it
+    stands in for a stored contract. The timed work is compiling its
+    constraint spec plus ONE fused scan of the violated table: inference,
+    row violations against the spec, uniqueness and turn ordering. Raises
+    when the per-constraint counts disagree with the injection log."""
     import pyarrow.parquet as pq
 
-    cores = spark.sparkContext.defaultParallelism
-    n_rg = pq.ParquetFile(path).num_row_groups
-    rg_per_task = max(1, min(4, n_rg // (cores * 6)))
-    t0 = time.time()
-    # single-pass flow (same as bench/pipeline_job rev 6): predict the
-    # constraint spec from row-group 0, count violations against it inside
-    # the fused scan, confirm the prediction post-hoc; the classic
-    # prewarm+validation_scan path remains as the miss fallback
-    from jsonschema_infer_spark.operators.pipeline import (
-        ValidationPrewarm,
-        predict_constraint_spec,
-    )
+    # the contract benchmark's oracle: constraint -> injection-log list
+    # whose length is its count; every other constraint counts 0
+    from contractbench.snapshots import LOGGED_CONSTRAINTS
+    from jsonschema_infer_spark.operators import validate as V
+    from jsonschema_infer_spark.operators.infer_spark import infer_parquet
+    from jsonschema_infer_spark.operators.pipeline import infer_and_integrity_parquet
 
-    pred_spec = predict_constraint_spec(path)
-    pw = ValidationPrewarm(spark, path, spec=pred_spec)
-    res, integ, vcounts = infer_and_integrity_parquet(
-        spark, path, rg_per_task=rg_per_task, violation_spec=pred_spec
+    clean, violated, log_path = snaps
+    contract = infer_parquet(spark, clean)
+    temporal = V.temporal_columns(spark.read.parquet(violated))
+    # task granularity scaled to the cluster: aim for >=6 waves of fused
+    # scan tasks per core so the last wave can't strand most of the cluster
+    cores = spark.sparkContext.defaultParallelism
+    n_rg = pq.ParquetFile(violated).num_row_groups
+    rg_per_task = max(1, min(4, n_rg // (cores * 6)))
+
+    t0 = time.perf_counter()
+    spec = V.constraint_spec(
+        contract.schema, state=contract.state, temporal_cols=temporal
     )
-    real_spec = V.constraint_spec(
-        res.schema, state=res.state, temporal_cols=V.temporal_columns(df)
+    t1 = time.perf_counter()
+    res, integ, counts = infer_and_integrity_parquet(
+        spark, violated, rg_per_task=rg_per_task, violation_spec=spec
     )
-    if frozenset(real_spec) == frozenset(pred_spec):
-        agg_counts = vcounts
-    else:
-        cons = pw.constraints_for(res.schema, res.state, df)
-        with V.validation_scan(spark, path) as vdf:
-            agg_counts = {
-                r.constraint: r.violation_count
-                for r in V.violation_counts(vdf, cons).collect()
-            }
-    secs = time.time() - t0
-    rows = res.total_rows
+    t2 = time.perf_counter()
+
+    with open(log_path) as f:
+        log = json.load(f)
+    want = dict.fromkeys(counts, 0)
+    want.update({c: len(log[k]) for c, k in LOGGED_CONSTRAINTS.items()})
+    if counts != want:
+        raise RuntimeError(
+            f"violation counts {counts} disagree with the injection log "
+            f"{log_path}: expected {want}"
+        )
+    secs = t2 - t0
     return {
-        "rows": rows,
+        "rows": res.total_rows,
         "secs": secs,
-        "turns_per_sec": rows / secs,
-        "row_violations": int(sum(agg_counts.values())),
+        "turns_per_sec": res.total_rows / secs,
+        "row_violations": sum(counts.values()),
+        "violations": counts,
         "dup_rows_excess": integ["dup_rows_excess"],
         "ordering_violations": integ["ordering_violations"],
+        "stage_secs": {"spec": round(t1 - t0, 3), "fused_scan": round(t2 - t1, 3)},
     }
 
 
@@ -245,17 +267,17 @@ def run_suite(
     returned so the output can label a window that collapsed between the
     pipeline and the query phase."""
     timings: dict = {}
-    tx_path = ensure_bench_transcripts(n_convs)
+    snaps = ensure_bench_transcripts(n_convs)
     # The pipeline's warm-up curve is long (cold page-cache parquet scan,
     # codegen, Python-worker fork: rep0 runs 6-10x slower than steady
     # state, and reps keep improving through ~rep3) — measured 9.9s ->
     # 1.68 -> 1.49 -> 1.41 -> 1.0s on the 1.84M-row table. One untimed
     # warm-up plus best-of-N reports the steady-state rate a long-running
     # cluster sees, matching how the queries below are measured.
-    run_transcript_pipeline(spark, tx_path)  # warm-up, untimed
+    run_transcript_pipeline(spark, snaps)  # warm-up, untimed
     pipe: dict = {}
     for _ in range(pipe_reps):
-        p = run_transcript_pipeline(spark, tx_path)
+        p = run_transcript_pipeline(spark, snaps)
         if not pipe or p["turns_per_sec"] > pipe["turns_per_sec"]:
             pipe = p
     timings["transcript_pipeline"] = round(pipe["secs"], 3)
@@ -360,6 +382,9 @@ def main() -> None:
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "turns_per_sec": round(pipe["turns_per_sec"], 1),
                 "bench_rows": pipe["rows"],
+                "row_violations": pipe["row_violations"],
+                "violations": pipe["violations"],
+                "pipeline_stage_secs": pipe["stage_secs"],
                 "cpus": cpus,
                 "query_reps": reps,
                 "host_probes": probes,

@@ -1,34 +1,40 @@
-#!/usr/bin/env python
-"""spark-submit job: transcript inference+validation pipeline at whatever
---master the launcher chose. Writes a one-line JSON result to --out.
+"""spark-submit job: the transcript pipeline (bench.run_transcript_pipeline:
+the violated snapshot validated against the clean snapshot's contract in
+one fused scan) at whatever --master the launcher chose. Writes a one-line
+JSON result to --out.
 
 Usage:
   spark-submit --master local[8] --py-files jis.zip bench/pipeline_job.py \
-      --data .cache/transcripts_bench_*.parquet --out /tmp/result8.json
+      --data .cache/transcripts_bench_v3_*/violated.parquet \
+      --contract .cache/transcripts_bench_v3_*/clean.parquet --out /tmp/result8.json
+
+The injection log the counts are checked against is read from the
+snapshot directory (bench.INJECTION_LOG next to --data).
 """
 
 import argparse
 import json
+import os
 import sys
-import time
+
+# the repo root holds bench.py, whose run_transcript_pipeline this job runs
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # bumped on every engine/config change that affects timings: bench_scaling
 # stores it per paired-round side, auto-excludes rounds whose two sides ran
 # different revisions, and scopes the current-engine claim to the max rev.
 # rev 2 = fused scan + background integrity reduce overlap.
 # rev 3 = tuned validation scan (right-sized splits + AQE off for the
-#         single-agg violations pass — see validate.validation_scan).
+#         single-agg violations pass; deleted in rev 12).
 # rev 4 = hash-keyed integrity merge (int64 conv hash spilled by map
 #         tasks; driver reduce 6.6s -> ~1s at 5M partials).
-# rev 5 = validation prewarm: constraint build + violations codegen
-#         compiled against a one-row twin on a driver thread DURING the
-#         fused scan; the real violations run starts with hot codegen and
-#         zero py4j on the critical path (spec-match guarded).
+# rev 5 = constraint build + violations codegen compiled against a
+#         one-row twin on a driver thread DURING the fused scan (deleted
+#         in rev 12).
 # rev 6 = single-pass validation: the fused scan also counts row
-#         violations against the PREDICTED spec (arrow twin of the Spark
-#         predicates, equality-tested); on a spec hit the separate
-#         violations scan disappears entirely — one table read total.
-#         Miss/unsupported falls back to the rev-5 flow.
+#         violations against a spec guessed from row-group 0 (arrow twin
+#         of the Spark predicates, equality-tested); a wrong guess fell
+#         back to the rev-5 flow.
 # rev 7 = incremental spill watcher: the background integrity reduce's
 #         parquet decode is prepaid DURING the scan by a driver tail
 #         thread (the spill watcher, deleted in rev 10) — rev 6 removed the
@@ -52,17 +58,24 @@ import time
 #         fused call.
 # rev 11 = engine tasks drop the worker's cached zip finders on exit, so
 #         PySpark's per-task importlib.invalidate_caches() re-reads no zip.
-ENGINE_REV = 11
+# rev 12 = contract-first: the violated snapshot is validated against the
+#         clean snapshot's contract in the one fused scan; the spec guess,
+#         its driver thread and the fallback scan are gone.
+ENGINE_REV = 12
 
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--data", required=True)
+    ap.add_argument("--data", required=True, help="violated snapshot")
+    ap.add_argument("--contract", required=True,
+                    help="clean snapshot the contract is inferred from")
     ap.add_argument("--out", required=True)
     ap.add_argument("--shuffle-partitions", type=int, default=64)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
+
+    import bench
 
     spark = (
         SparkSession.builder.config(
@@ -80,90 +93,22 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     cores = spark.sparkContext.defaultParallelism
 
-    from jsonschema_infer_spark.operators import validate as V
-    from jsonschema_infer_spark.operators.pipeline import infer_and_integrity_parquet
-
-    df = spark.read.parquet(args.data)
-
     # warm-up: one scan (JIT + page cache) and one trivial arrow round-trip
     # so every python worker is forked and has pandas imported before the
     # timed section — worker cold-start is O(cores), not O(data), and would
     # otherwise bias the high-parallelism run
-    df.count()
+    spark.read.parquet(args.data).count()
     warm = spark.range(0, cores * 4, 1, cores * 4)
     warm.mapInArrow(lambda it: it, "id long").count()
 
-    # task granularity scaled to the cluster: aim for >=6 waves of fused
-    # scan tasks per core so the last wave can't strand most of the cluster
-    # (233 row-groups at 4 rg/task = 59 tasks = 1.8 waves at 32 cores)
-    import pyarrow.parquet as pq
-
-    n_rg = pq.ParquetFile(args.data).num_row_groups
-    rg_per_task = max(1, min(4, n_rg // (cores * 6)))
-
-    from jsonschema_infer_spark.operators.pipeline import (
-        ValidationPrewarm,
-        predict_constraint_spec,
-    )
-
-    t0 = time.time()
-    # predict the constraint spec from row-group 0 SYNCHRONOUSLY (pure
-    # pyarrow, ~0.3 s) — the fused scan below counts row violations
-    # against this prediction in the same pass; prewarm then compiles the
-    # Spark constraints + violations codegen on a driver thread purely as
-    # the MISS-path insurance (joined only if the prediction is wrong)
-    pred_spec = predict_constraint_spec(args.data)
-    pw = ValidationPrewarm(spark, args.data, spec=pred_spec)
-    # fused one-pass scan: inference fold + per-conv integrity partials +
-    # predicted-spec violation counts, all off the same native pyarrow
-    # row-group read (rev 2 removed the second integrity pass; rev 6
-    # removes the third violations pass on a spec hit), with the integrity
-    # spill reduced before the call returns.
-    res, integ, vcounts = infer_and_integrity_parquet(
-        spark, args.data, rg_per_task=rg_per_task, violation_spec=pred_spec
-    )
-    t_fused = time.time() - t0
-    t = time.time()
-    real_spec = V.constraint_spec(
-        res.schema, state=res.state, temporal_cols=V.temporal_columns(df)
-    )
-    spec_hit = frozenset(real_spec) == frozenset(pred_spec)
-    t_compile = time.time() - t
-    t = time.time()
-    if spec_hit:
-        # the fused counts ARE the violations result for the real spec —
-        # no second scan at all
-        agg_counts = vcounts
-    else:
-        # miss: classic flow — prewarmed constraints (or fresh build) +
-        # tuned single-pass validation scan
-        cons = pw.constraints_for(res.schema, res.state, df)
-        with V.validation_scan(spark, args.data) as vdf:
-            agg_counts = {
-                r.constraint: r.violation_count
-                for r in V.violation_counts(vdf, cons).collect()
-            }
-    t_viol = time.time() - t
-    n_dup = integ["dup_rows_excess"]
-    n_ord = integ["ordering_violations"]
-    secs = time.time() - t0
-
+    log = os.path.join(os.path.dirname(args.data), bench.INJECTION_LOG)
+    p = bench.run_transcript_pipeline(spark, (args.contract, args.data, log))
     out = {
         "cores": cores,
         "engine_rev": ENGINE_REV,
-        "rows": res.total_rows,
-        "secs": round(secs, 3),
-        "turns_per_sec": round(res.total_rows / secs, 1),
-        "row_violations": int(sum(agg_counts.values())),
-        "dup_rows_excess": n_dup,
-        "ordering_violations": n_ord,
-        "spec_hit": bool(spec_hit),
-        "prewarm_error": repr(pw.error) if pw.error is not None else None,
-        "stage_secs": {
-            "infer+integrity": round(t_fused, 2),
-            "compile": round(t_compile, 2),
-            "violations": round(t_viol, 2),
-        },
+        **p,
+        "secs": round(p["secs"], 3),
+        "turns_per_sec": round(p["turns_per_sec"], 1),
     }
     with open(args.out, "w") as f:
         json.dump(out, f)

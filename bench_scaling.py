@@ -8,8 +8,9 @@ levels on identical input. This script:
 
   1. measures the HOST's parallel capacity with a pure-Python fixed-work
      probe (the ceiling any job can reach on this microVM);
-  2. runs bench/pipeline_job.py (inference + constraint compile + full
-     validation) at local[1,2,4,8,16,32], best of R reps each;
+  2. runs bench/pipeline_job.py (the violated snapshot validated against
+     the clean snapshot's contract in one fused scan) at
+     local[1,2,4,8,16,32], best of R reps each;
   3. reports throughput at every level and the N->4N efficiencies for all
      pairs, next to the host ceiling for the same pair.
 
@@ -48,6 +49,7 @@ from bench import (  # noqa: E402
     memcpy_gbps,  # noqa: F401
     parallel_memcpy_gbps,
     probe_health,
+    spark_resources,
     wait_healthy,
 )
 
@@ -161,7 +163,9 @@ def host_ceiling() -> dict:
     return eff
 
 
-def run(master: str, data: str, out: str, mem: str) -> dict:
+def run(master: str, snaps: tuple, out: str, mem: str) -> dict:
+    """One pipeline_job run; ``snaps`` is ensure_bench_transcripts'
+    (clean, violated, log)."""
     spark_submit = shutil.which("spark-submit") or os.path.join(
         os.path.dirname(shutil.which("pyspark") or "/usr/local/bin/pyspark"),
         "spark-submit",
@@ -173,7 +177,8 @@ def run(master: str, data: str, out: str, mem: str) -> dict:
         "--driver-memory", mem,
         "--py-files", zip_path,
         os.path.join(REPO, "bench", "pipeline_job.py"),
-        "--data", data,
+        "--data", snaps[1],
+        "--contract", snaps[0],
         "--out", out,
         "--shuffle-partitions", "64",
     ]
@@ -185,11 +190,12 @@ def run(master: str, data: str, out: str, mem: str) -> dict:
 
 def main():
     n_convs = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "5000000"))
-    mem = os.environ.get("SPARK_GRAFT_MEM", "48g")
+    _, mem = spark_resources()
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
     from bench import ensure_bench_transcripts
 
-    data = ensure_bench_transcripts(n_convs)
+    snaps = ensure_bench_transcripts(n_convs)
+    data = snaps[1]
     os.makedirs(os.path.join(REPO, ".cache"), exist_ok=True)
     # Evidence lives in a GIT-TRACKED file: the first 70 rounds were kept
     # only in .cache/ and a workspace reset wiped them (they were recovered
@@ -242,7 +248,7 @@ def main():
             # host was healthy on both sides of it (up to `reps` retries)
             pre_gbps, pre_burn = wait_healthy(1800.0)
             out = os.path.join(REPO, ".cache", f"scale{n}.json")
-            r = run(f"local[{n}]", data, out, mem)
+            r = run(f"local[{n}]", snaps, out, mem)
             post_gbps, post_burn, post_ok = probe_health()
             tainted = not post_ok and retries < reps
             print(f"  local[{n}]: {r['turns_per_sec']:,} turns/s "
@@ -281,9 +287,9 @@ def main():
         attempts += 1
         wait_healthy(1800.0)
         out = os.path.join(REPO, ".cache", "paired.json")
-        r1 = run(f"local[{pn}]", data, out, mem)
+        r1 = run(f"local[{pn}]", snaps, out, mem)
         mid_g, mid_b, mid_ok = probe_health()
-        r4 = run(f"local[{pm}]", data, out, mem)
+        r4 = run(f"local[{pm}]", snaps, out, mem)
         post_g, post_b, post_ok = probe_health()
         eff = (r4["turns_per_sec"] / r1["turns_per_sec"]) / (pm / pn)
         tainted = not (mid_ok and post_ok) and attempts < paired_rounds * 2
@@ -442,21 +448,22 @@ def main():
         "# BENCH baseline — transcript pipeline scaling evidence",
         "",
         "The same `spark-submit --py-files` job (`bench/pipeline_job.py`:",
-        "fused one-pass schema inference + uniqueness/turn-ordering",
-        "integrity scan -> constraint compilation -> row validation)",
-        f"over the seed-fixed violated transcript table ({results[32]['rows']:,}",
+        "the seed-fixed violated transcript table validated against the",
+        "clean table's contract in one fused scan — schema inference, row",
+        f"violations, uniqueness and turn ordering — {results[32]['rows']:,}",
         "turns), run at six parallelism levels, best of "
         f"{reps} reps each.",
         "",
-        "| config | wall sec | turns/sec | stage secs (fused infer+integrity / compile / validate) | host mem GB/s |",
+        "| config | wall sec | turns/sec | stage secs | host mem GB/s |",
         "|---|---|---|---|---|",
     ]
     for n in LEVELS:
         r = results[n]
-        s = r["stage_secs"]
+        # labelled per key: results reused from an older engine revision
+        # (paired-only mode) carry that revision's stages
+        stages = " / ".join(f"{k} {v}" for k, v in r["stage_secs"].items())
         lines.append(
-            f"| local[{n}] | {r['secs']} | {r['turns_per_sec']:,} | "
-            f"{s['infer+integrity']} / {s['compile']} / {s['violations']} | "
+            f"| local[{n}] | {r['secs']} | {r['turns_per_sec']:,} | {stages} | "
             f"{r.get('host_gbps', '')} |"
         )
     lines += [
@@ -581,23 +588,23 @@ def main():
         import statistics as _st
 
         stage_lines = []
-        for s in ("infer+integrity", "compile", "violations"):
+        # the newest round's stage keys: each engine revision names its
+        # own stages, so a stage's rows are the rounds that carry it
+        for s in staged[-1]["stages1"]:
+            have = [r for r in staged if s in r["stages1"] and s in r["stages4"]]
             effs = [
                 round((r["stages1"][s] / r["stages4"][s]) / 4.0, 3)
-                for r in staged
-                if r["stages4"].get(s)
+                for r in have
+                if r["stages4"][s]
             ]
-            t1m = _st.median(r["stages1"][s] for r in staged)
+            t1m = _st.median(r["stages1"][s] for r in have)
             if t1m < 0.5:
                 # a near-zero stage's 1->4 ratio is quantization noise
-                # (e.g. compile after the one-scan fusion); report its
-                # (negligible) cost, not a meaningless efficiency — and
-                # say so explicitly for EVERY stage, so the attribution
-                # row always carries all three (VERDICT r4 item 6)
-                if t1m > 0.0:
-                    stage_lines.append(f"{s} negligible (median t1 {round(t1m, 2)}s)")
-                else:
-                    stage_lines.append(f"{s} 0.0s (fused into the one-pass scan)")
+                # (e.g. the spec compile); report its (negligible) cost,
+                # not a meaningless efficiency — and say so explicitly for
+                # EVERY stage, so the attribution row carries them all
+                # (VERDICT r4 item 6)
+                stage_lines.append(f"{s} negligible (median t1 {round(t1m, 2)}s)")
                 continue
             if effs:
                 stage_lines.append(

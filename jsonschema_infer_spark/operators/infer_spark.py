@@ -760,10 +760,12 @@ def infer_parquet(
     else:
         tasks = [(f, lo, hi, None) for f, lo, hi in tasks]
 
-    def fold_task(spec):
+    def fold_task(item):
+        # the task's (state, rows) and its lineage entry (task, rows, secs)
         import pyarrow.parquet as pq
 
-        f, lo, hi, take = spec
+        i, (f, lo, hi, take) = item
+        t = time.perf_counter()
         pf = pq.ParquetFile(f)
         rgs = list(range(lo, hi)) if hi > lo else []
         batches = pf.iter_batches(batch_size=10_000, row_groups=rgs)
@@ -781,21 +783,28 @@ def infer_parquet(
             batches = limited(batches)
         try:
             if mode == "json":
-                return fold_batches_json(batches, config, json_column, order_cols)
-            return fold_batches_columnar(batches, config, order_cols)
+                out = fold_batches_json(batches, config, json_column, order_cols)
+            else:
+                out = fold_batches_columnar(batches, config, order_cols)
         finally:
             release_zip_finders()
+        return out, (i, out[1], time.perf_counter() - t)
 
-    rdd = spark.sparkContext.parallelize(tasks, max(len(tasks), 1)).map(fold_task)
+    rdd = spark.sparkContext.parallelize(
+        list(enumerate(tasks)), max(len(tasks), 1)
+    ).map(fold_task)
+    partitions: list = []
     if len(tasks) > _TREE_REDUCE_THRESHOLD:
+        # treeReduce yields only the merged value: no per-task lineage
         depth = max(2, int(math.ceil(math.log(max(len(tasks), 2), 64))))
-        merged, total_rows = rdd.treeReduce(
+        merged, total_rows = rdd.map(lambda r: r[0]).treeReduce(
             lambda a, b: (S.merge(a[0], b[0]), a[1] + b[1]), depth=depth
         )
     else:
-        pairs = rdd.collect()
-        merged = merge_states([p[0] for p in pairs])
-        total_rows = sum(p[1] for p in pairs)
+        got = rdd.collect()
+        partitions = [lineage for _, lineage in got]
+        merged = merge_states([out[0] for out, _ in got])
+        total_rows = sum(out[1] for out, _ in got)
 
     schema = S.finalize(merged, config)
     return InferResult(
@@ -804,7 +813,7 @@ def infer_parquet(
         schema=schema,
         schema_json=render_schema(schema, config.indent),
         total_rows=total_rows,
-        partitions=[(i, 0, 0.0) for i in range(len(tasks))],
+        partitions=partitions,
         wall_secs=time.time() - t0,
     )
 
@@ -822,7 +831,6 @@ def infer_dataframe(
     mode: str = "columnar",
     json_column: str | None = None,
     num_partitions: int | None = None,
-    sample_rows: int | None = None,
     order_cols: list | None = None,
 ) -> InferResult:
     """Run distributed inference over ``df`` and finalize on the driver.
@@ -845,22 +853,6 @@ def infer_dataframe(
         )
     if mode == "json" and not json_column:
         raise ValueError("json mode requires json_column")
-    if mode in ("adaptive", "auto"):
-        from .infer_adaptive import (
-            _SAMPLE_ROWS,
-            adaptive_applicable,
-            infer_dataframe_adaptive,
-        )
-
-        if adaptive_applicable(df, config):
-            return infer_dataframe_adaptive(
-                df, config, sample_rows=sample_rows or _SAMPLE_ROWS
-            )
-        if mode == "adaptive":
-            raise ValueError(
-                "adaptive inference not applicable to this DataFrame/config"
-            )
-        mode = "columnar"
 
     t0 = time.time()
     if config.max_samples > 0:

@@ -76,7 +76,7 @@ def _fused_task(
     (state, rows), or (state, rows, violation_counts_vector) when
     ``violation_spec`` is given — the same batch stream then ALSO feeds
     the arrow violation counter (validate.arrow_violation_counter), so a
-    predicted constraint spec is validated in this one pass instead of a
+    contract's constraint spec is validated in this one pass instead of a
     second whole-table scan. Shared by the direct and checkpointed
     pipelines (and driven standalone by bench_scaling's kernel control)."""
     import os
@@ -184,17 +184,14 @@ def infer_and_integrity_parquet(
     dict equals ``transcript_integrity_summary`` over the same rows — one
     data pass for both.
 
-    ``violation_spec`` (a validate.constraint_spec plan, typically the
-    prewarm's PREDICTION from row-group 0) adds row-violation counting to
-    the same pass: the return grows a third element, a dict
-    {constraint_name: violation_count} bit-equal to what
-    validation_scan + violation_counts would produce for that spec —
-    three whole-table reads collapsed into one. The counts are only
-    MEANINGFUL if the spec matches the schema actually inferred; callers
-    must compare the predicted spec against the real one
-    (``constraint_spec(res.schema, state=res.state, ...)``) and fall back
-    to the classic violations pass on a mismatch (see bench/pipeline_job
-    for the canonical hit/miss flow).
+    ``violation_spec`` is the constraint spec of a contract known before
+    the scan (``validate.constraint_spec`` of a schema inferred from a
+    reference snapshot, or loaded). It adds row-violation counting to the
+    same pass: the return grows a third element, a dict
+    {constraint_name: violation_count} bit-equal to
+    ``violation_counts(spark.read.parquet(path), build_constraints(spec))``
+    — inference, integrity and validation in one table read. A spec
+    inferred from this same table counts 0 everywhere by construction.
 
     ``spill_dir`` must be empty or hold only this run's part files: the
     integrity reduce refuses a spill whose part files are not exactly one
@@ -296,153 +293,3 @@ def infer_and_integrity_parquet(
     finally:
         if spill_dir is None:
             shutil.rmtree(out_dir, ignore_errors=True)
-
-
-def predict_constraint_spec(
-    path: str, config: InferConfig | None = None, enum_max: int = 16
-) -> list:
-    """Predict the constraint spec from row-group 0 of the first file —
-    the SYNCHRONOUS half of the prewarm (pure pyarrow + Python, no Spark,
-    ~0.3 s on a 128k-row group). The fused single-pass flow needs the
-    prediction BEFORE launching the scan so the scan itself can count
-    violations against it (infer_and_integrity_parquet's
-    ``violation_spec``); pass the result to ValidationPrewarm(spec=...)
-    so the background codegen warm doesn't refold the sample."""
-    import pyarrow.parquet as pq
-    import pyarrow.types as pt
-
-    from . import validate as V
-
-    config = config or default_config()
-    f = list_parquet_files(path)[0]
-    pf = pq.ParquetFile(f)
-    batches = pf.iter_batches(batch_size=10_000, row_groups=[0])
-    st, _ = fold_batches_columnar(batches, config, None)
-    schema = S.finalize(st, config)
-    # mirror validate.temporal_columns exactly: Spark maps only
-    # timestamp/date arrow types to Timestamp/Date columns. pt.is_temporal
-    # also matches time32/time64/duration, which Spark reads as other
-    # types — including them would make the predicted spec structurally
-    # unequal on such tables and the prediction could never hit.
-    temporal = {
-        fld.name
-        for fld in pf.schema_arrow
-        if pt.is_timestamp(fld.type) or pt.is_date(fld.type)
-    }
-    return V.constraint_spec(
-        schema, state=st, temporal_cols=temporal, enum_max=enum_max
-    )
-
-
-class ValidationPrewarm:
-    """Move the violations pass's fixed driver costs OFF the critical path.
-
-    The pipeline's validation stage pays two serial costs that do not
-    shrink with cores: building the constraint Columns (~0.5 s of py4j
-    round trips) and the first-execution whole-stage-codegen compile of
-    the violation_counts plan (janino, ~0.5-1 s). Both depend only on the
-    constraint SPEC — which a one-row-group sample predicts almost surely
-    (enum value sets, required columns and formats stabilize within 128k
-    rows) — so this helper, started JUST BEFORE the fused scan, runs on a
-    driver thread while executors scan:
-
-      1. fold row-group 0 through the same inference fold (pyarrow, C);
-      2. predict the spec (`validate.constraint_spec`, pure Python);
-      3. build the Column predicates (py4j, off-path);
-      4. execute violation_counts against a ONE-ROW parquet twin of the
-         table — same scan schema, same plan shape, so Spark's codegen
-         cache is hot for the real run (generated source is identical:
-         string literals land in the references array, not the source).
-
-    After inference, ``constraints_for(schema, state, df)`` compares the
-    REAL spec with the prediction: on a hit it returns the pre-built
-    constraints (zero py4j, warm codegen); on a miss it builds fresh —
-    correctness never depends on the prediction.
-
-    On a real cluster this is free driver hardware; on the one-bus bench
-    VM its footprint is ~0.3 s of driver CPU against a multi-second scan.
-    """
-
-    def __init__(self, spark, path: str, config: InferConfig | None = None,
-                 enum_max: int = 16, spec: list | None = None):
-        import threading
-
-        self._spark = spark
-        self._path = path
-        self._config = config or default_config()
-        self._enum_max = enum_max
-        self.spec = spec  # precomputed prediction (predict_constraint_spec)
-        self.constraints = None
-        self.error = None
-        self._thread = threading.Thread(target=self._run, daemon=True)
-        self._thread.start()
-
-    def _run(self):
-        import os
-        import shutil
-        import tempfile
-
-        import pyarrow.parquet as pq
-
-        from . import validate as V
-
-        tmp = tempfile.mkdtemp(prefix="jis_prewarm_")
-        try:
-            if self.spec is None:
-                self.spec = predict_constraint_spec(
-                    self._path, self._config, self._enum_max
-                )
-            f = list_parquet_files(self._path)[0]
-            pf = pq.ParquetFile(f)
-            cons = V.build_constraints(self.spec)
-            # one-row twin: same arrow schema -> same Spark scan schema ->
-            # identical generated source for the agg plan
-            one = pf.read_row_group(0).slice(0, 1)
-            twin = os.path.join(tmp, "twin.parquet")
-            pq.write_table(one, twin)
-            with V.validation_scan(self._spark, twin) as vdf:
-                V.violation_counts(vdf, cons).collect()
-            self.constraints = cons
-        except Exception as e:  # pragma: no cover - diagnostics only
-            self.error = e
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-
-    def constraints_for(self, schema: dict, state: dict, df) -> list:
-        """Join the prewarm thread and return constraints for the REAL
-        inference result: the pre-built list when the predicted spec
-        matches, a fresh build otherwise."""
-        from . import validate as V
-
-        self._thread.join()
-        if self.error is not None:
-            # a persistently broken prewarm (bad path, pyarrow change)
-            # would otherwise silently cost the full compile+codegen on
-            # every run while looking like a working optimization
-            import warnings
-
-            warnings.warn(
-                f"ValidationPrewarm failed ({self.error!r}); "
-                "falling back to cold constraint build",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        real = V.constraint_spec(
-            schema, state=state,
-            temporal_cols=V.temporal_columns(df),
-            enum_max=self._enum_max,
-        )
-        # order-insensitive: the distributed merge and the serial sample
-        # fold iterate properties in different dict orders, but the same
-        # SET of constraint entries is the same validation work (entries
-        # are unique per (kind, column), so set equality is exact). The
-        # prewarmed list keeps ITS order — that is the plan whose codegen
-        # is already compiled.
-        self.hit = (
-            self.constraints is not None
-            and self.error is None
-            and frozenset(real) == frozenset(self.spec)
-        )
-        if self.hit:
-            return self.constraints
-        return V.build_constraints(real)

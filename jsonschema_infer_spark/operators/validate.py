@@ -28,8 +28,6 @@ Check taxonomy (SURVEY.md §2.5):
 from __future__ import annotations
 
 import re
-import threading
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -115,11 +113,10 @@ def constraint_spec(
     with_lengths: bool = False,
 ) -> list:
     """PURE-PYTHON constraint plan: what compile_constraints will build,
-    as plain tuples (no py4j, no Spark session). Two uses: (a) the build
-    half (`build_constraints`) turns it into Column predicates; (b) two
-    specs compare with ``==`` — the prewarm path predicts the spec from a
-    one-row-group sample and reuses its already-built (and codegen-warmed)
-    constraints when the full-data spec lands identical.
+    as plain tuples (no py4j, no Spark session). One spec feeds both
+    validators: `build_constraints` turns it into Spark Column predicates,
+    and `arrow_violation_counter` into the arrow counter the fused scan
+    runs when it is given a contract's spec (its ``violation_spec``).
 
     ``temporal_cols``: column names whose Spark/Arrow type is a
     timestamp/date (their date-time format check folds to TRUE — a
@@ -167,7 +164,7 @@ def constraint_spec(
 def build_constraints(spec: list, custom_predicates: dict | None = None) -> list:
     """Build Column predicates from a `constraint_spec` plan (the py4j
     half — each expression node is a JVM round trip, ~0.5 s for a typical
-    table, which is why the prewarm path builds off the critical path)."""
+    table)."""
     out: list = []
     nullsafe = lambda c, p: c.isNull() | p  # noqa: E731
     for entry in spec:
@@ -291,11 +288,11 @@ def arrow_violation_counter(spec: list, arrow_schema):
     per-constraint violation counts, bit-equal to the Spark predicates
     (equality fuzz-tested in tests/test_pipeline_fused.py).
 
-    This is what lets the FUSED scan count violations in the same pass
-    that infers the schema (see pipeline.infer_and_integrity_parquet's
-    ``violation_spec``): when the prewarmed spec prediction matches the
-    real inferred spec, the separate whole-table validation scan is
-    skipped entirely — at 100 TB that is a full second read of the table.
+    This is what lets the FUSED scan count violations against a
+    contract's spec in the same pass that infers the schema (see
+    pipeline.infer_and_integrity_parquet's ``violation_spec``), so no
+    separate whole-table validation scan runs — at 100 TB that is a full
+    second read of the table.
 
     Semantics mirrored exactly:
     - required: violation iff NULL (col.isNotNull());
@@ -487,7 +484,8 @@ def compile_constraints(
     legitimately exceed them; enable explicitly for frozen snapshots.
 
     Thin wrapper over ``constraint_spec`` (pure plan) + ``build_constraints``
-    (py4j expression building) — see those for the prewarm/reuse split.
+    (py4j expression building); the fused scan's arrow counter takes the
+    same plan (``arrow_violation_counter``).
     """
     return build_constraints(
         constraint_spec(
@@ -547,91 +545,6 @@ def violation_examples(
         ex.withColumn("example_rank", F.row_number().over(w))
         .filter(F.col("example_rank") <= k)
     )
-
-
-# validation_scan mutates SESSION-GLOBAL confs; serialize concurrent scans
-# (e.g. ValidationPrewarm's daemon thread vs the main thread) so two
-# save/restore windows can never interleave and leave AQE=false pinned for
-# the rest of the session. RLock: same-thread nesting stays legal and is
-# made safe by the restore-only-if-unchanged logic below.
-_SCAN_CONF_LOCK = threading.RLock()
-
-
-@contextmanager
-def validation_scan(
-    spark,
-    path: str,
-    waves: int = 6,
-    min_mpb: int = 16 << 20,
-    max_mpb: int = 128 << 20,
-):
-    """Context manager yielding a DataFrame over ``path`` tuned for ONE
-    full-table validation pass (``violation_counts`` / ``violating_rows``).
-
-    The two knobs are session-global: concurrent scans are serialized on a
-    module lock, and on exit each conf is restored only if its CURRENT
-    value is still the one this block set (another thread that set its own
-    value in between keeps it). Note any OTHER Spark job launched while a
-    scan is open (e.g. from a prewarm thread) runs with these confs
-    pinned — correctness is unaffected (AQE off / split size only change
-    plan shape), but schedule long concurrent jobs outside the block when
-    latency matters.
-
-    Two session knobs are pinned for the duration (and restored on exit —
-    they are read at ACTION time, so the collect must happen inside the
-    block):
-
-    - ``spark.sql.files.maxPartitionBytes`` sized so the scan yields about
-      ``waves`` tasks per core instead of a fixed small value. Splits far
-      below the parquet row-group size create tasks that decode nothing
-      (a 2.5 GB file with ~11 MB row groups at 8 MiB splits is ~320 tasks,
-      a quarter of them empty) — measured 1.4x slower at local[1] AND
-      local[4] than right-sized splits on the bench table.
-    - ``spark.sql.adaptive.enabled=false``. A whole-table agg has exactly
-      one single-row exchange: AQE has nothing to re-plan, and its final-
-      stage materialization added multi-second driver stalls in ~1/5 of
-      measured runs (steady A/B: 8.3s vs 5.7s at local[1], 2.3s vs 1.7s
-      at local[4], outliers to 10s only ever on the AQE side). Joins and
-      skewed group-bys still want AQE — this pin is scoped to the
-      validation scan only.
-    """
-    import os
-
-    from .infer_spark import list_parquet_files
-
-    files = list_parquet_files(path)
-    # file sizes only (cheap stat, no data read) for the split math
-    total = sum(os.path.getsize(f) for f in files)
-    cores = spark.sparkContext.defaultParallelism
-    mpb = max(min_mpb, min(max_mpb, total // max(cores * waves, 1)))
-    with _SCAN_CONF_LOCK:
-        keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.adaptive.enabled")
-        mine = {
-            "spark.sql.files.maxPartitionBytes": str(int(mpb)),
-            "spark.sql.adaptive.enabled": "false",
-        }
-        old = {}
-        for k in keys:
-            try:
-                old[k] = spark.conf.get(k)
-            except Exception:
-                old[k] = None
-        for k, v in mine.items():
-            spark.conf.set(k, v)
-        try:
-            yield spark.read.parquet(path)
-        finally:
-            for k, v in old.items():
-                try:
-                    current = spark.conf.get(k)
-                except Exception:
-                    current = None
-                if current != mine[k]:
-                    continue  # someone else re-set it; keep their value
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
 
 
 def violation_counts(df: DataFrame, constraints: list) -> DataFrame:

@@ -1,6 +1,8 @@
 """Bench defaults fit the host; the scaling report labels exclusions by
-their cause."""
+their cause; the headline pipeline checks its counts against the
+injection log."""
 
+import json
 import os
 
 import pytest
@@ -51,3 +53,18 @@ def test_spark_resources_refuse_more_cores_than_host(monkeypatch):
 )
 def test_round_flag_names_the_exclusion_cause(round_, label):
     assert bench_scaling.round_flag(round_, ref_tp1=800) == label
+
+
+def test_transcript_pipeline_checks_counts_against_log(spark, tx_paths, tmp_path):
+    log = tmp_path / bench.INJECTION_LOG
+    log.write_text(json.dumps(tx_paths["log"], default=int))
+    snaps = (tx_paths["clean"], tx_paths["viol"], str(log))
+    p = bench.run_transcript_pipeline(spark, snaps)
+    assert p["violations"]["enum:role"] == len(tx_paths["log"]["bad_role_rows"]) > 0
+    assert p["row_violations"] == sum(p["violations"].values())
+    assert set(p["stage_secs"]) == {"spec", "fused_scan"}
+
+    short = dict(tx_paths["log"], bad_role_rows=tx_paths["log"]["bad_role_rows"][1:])
+    log.write_text(json.dumps(short, default=int))
+    with pytest.raises(RuntimeError, match="disagree with the injection log"):
+        bench.run_transcript_pipeline(spark, snaps)

@@ -73,6 +73,28 @@ def test_fused_lineage_one_entry_per_task(spark, tx_paths, tmp_path):
     assert all(secs > 0 for _, _, secs in res.partitions)
 
 
+def test_infer_parquet_lineage_one_entry_per_task(spark, tx_paths, tmp_path):
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "viol5.parquet")
+    table = pq.read_table(tx_paths["viol"])
+    pq.write_table(table, path, row_group_size=-(-table.num_rows // 5))
+    res = infer_parquet(spark, path, rg_per_task=1)
+    assert sorted(i for i, _, _ in res.partitions) == list(range(5))
+    assert sum(rows for _, rows, _ in res.partitions) == res.total_rows > 0
+    assert all(secs > 0 for _, _, secs in res.partitions)
+
+    # a row budget drops the tasks past the cap; the lineage follows it
+    cap = table.num_rows // 3
+    capped = infer_parquet(
+        spark, path, config=default_config(max_samples=cap), rg_per_task=1
+    )
+    assert capped.total_rows == cap
+    assert len(capped.partitions) == 2
+    assert sum(rows for _, rows, _ in capped.partitions) == cap
+    assert all(secs > 0 for _, _, secs in capped.partitions)
+
+
 def test_fused_examples_capture_matches(spark, tx_paths):
     cfg = default_config(examples=True)
     want = infer_parquet(
@@ -324,51 +346,6 @@ def test_integrity_null_keys_embedded_uniqueness(spark, tmp_path, monkeypatch):
     assert dups == {("b", 1): 2, ("e", 2): 2, ("b", None): 2, (None, 0): 2}
 
 
-def test_validation_prewarm_hit_and_miss(spark, tx_paths):
-    """ValidationPrewarm predicts the constraint spec from row-group 0:
-    on the fixture (one row group) the prediction is exact -> the
-    pre-built, codegen-warmed constraints are returned verbatim; with a
-    mismatched schema the fallback builds fresh. Both paths produce the
-    same counts as compile_constraints."""
-    from jsonschema_infer_spark.operators import validate as V
-    from jsonschema_infer_spark.operators.pipeline import (
-        ValidationPrewarm,
-        infer_and_integrity_parquet,
-    )
-
-    path = tx_paths["viol"]
-    df = spark.read.parquet(path)
-
-    pw = ValidationPrewarm(spark, path)
-    res, _ = infer_and_integrity_parquet(spark, path)
-    cons = pw.constraints_for(res.schema, res.state, df)
-    assert pw.error is None
-    assert pw.hit is True
-    assert cons is pw.constraints  # the pre-built list, not a rebuild
-    want = {
-        (r.constraint, r.violation_count)
-        for r in V.violation_counts(
-            df, V.compile_constraints(res.schema, state=res.state, df=df)
-        ).collect()
-    }
-    got = {
-        (r.constraint, r.violation_count)
-        for r in V.violation_counts(df, cons).collect()
-    }
-    assert got == want
-
-    # miss: a schema whose spec can't match the sampled one
-    pw2 = ValidationPrewarm(spark, path)
-    other = {
-        "type": "object",
-        "properties": {"conv_id": {"type": "string"}},
-        "required": ["conv_id"],
-    }
-    cons2 = pw2.constraints_for(other, {"props": {}}, df)
-    assert pw2.hit is False
-    assert [c.name for c in cons2] == ["required:conv_id"]
-
-
 def test_constraint_spec_build_equals_compile(spark, tx_paths):
     """constraint_spec + build_constraints is compile_constraints."""
     from jsonschema_infer_spark.operators import validate as V
@@ -402,47 +379,43 @@ def _spark_truth(spark, path, spec):
 
 def test_fused_violation_counts_match_spark(spark, tx_paths):
     """The arrow violation counter inside the fused scan must equal the
-    Spark violations pass bit-for-bit — on the self-spec (all zeros by the
-    structural invariant) AND on a cross-table spec that genuinely flags
-    rows (clean-table spec applied to the violated table)."""
-    from jsonschema_infer_spark.operators.pipeline import (
-        predict_constraint_spec,
-    )
+    Spark violations pass bit-for-bit, for a contract known before the
+    scan. A self-spec (inferred from the violated table itself) counts 0
+    everywhere by construction; the clean table's contract applied to the
+    violated table counts exactly the injected rows."""
+    viol_df = spark.read.parquet(tx_paths["viol"])
+    temporal = V.temporal_columns(viol_df)
 
-    # hit flow: prediction from row-group 0, fused counts, spec confirmed
-    pred = predict_constraint_spec(tx_paths["viol"])
-    res, integ, vcounts = infer_and_integrity_parquet(
-        spark, tx_paths["viol"], rg_per_task=1, violation_spec=pred
+    # case 1: self-spec -> all zeros, and integrity unchanged by counting
+    own = infer_parquet(spark, tx_paths["viol"], rg_per_task=1)
+    self_spec = V.constraint_spec(
+        own.schema, state=own.state, temporal_cols=temporal
     )
-    real = V.constraint_spec(
-        res.schema,
-        state=res.state,
-        temporal_cols=V.temporal_columns(spark.read.parquet(tx_paths["viol"])),
+    res, integ, vself = infer_and_integrity_parquet(
+        spark, tx_paths["viol"], rg_per_task=1, violation_spec=self_spec
     )
-    assert frozenset(real) == frozenset(pred)  # prediction hits
-    assert vcounts == _spark_truth(spark, tx_paths["viol"], pred)
-    # self-validation invariant: constraints inferred from the snapshot
-    # cannot flag the snapshot
-    assert all(v == 0 for v in vcounts.values())
-    # integrity unchanged by the extra counting
-    assert integ == V.transcript_integrity_summary(
-        spark.read.parquet(tx_paths["viol"])
-    )
+    assert res.schema_json == own.schema_json
+    assert vself == _spark_truth(spark, tx_paths["viol"], self_spec)
+    assert vself and all(v == 0 for v in vself.values())
+    assert integ == V.transcript_integrity_summary(viol_df)
 
-    # cross-table spec: clean table's constraints against the violated
-    # table — must flag rows, and must match Spark exactly
-    clean_res = infer_parquet(spark, tx_paths["clean"], rg_per_task=2)
-    cross = V.constraint_spec(
-        clean_res.schema,
-        state=clean_res.state,
-        temporal_cols=V.temporal_columns(spark.read.parquet(tx_paths["clean"])),
+    # case 2: the clean snapshot's contract against the violated snapshot
+    clean = infer_parquet(spark, tx_paths["clean"], rg_per_task=2)
+    contract = V.constraint_spec(
+        clean.schema, state=clean.state, temporal_cols=temporal
     )
     _, _, vcross = infer_and_integrity_parquet(
-        spark, tx_paths["viol"], rg_per_task=1, violation_spec=cross
+        spark, tx_paths["viol"], rg_per_task=1, violation_spec=contract
     )
-    truth = _spark_truth(spark, tx_paths["viol"], cross)
-    assert vcross == truth
-    assert sum(vcross.values()) > 0  # the cross spec genuinely flags rows
+    assert vcross == _spark_truth(spark, tx_paths["viol"], contract)
+    log = tx_paths["log"]
+    logged = {
+        "required:role": len(log["null_role_rows"]),
+        "required:text": len(log["null_text_rows"]),
+        "enum:role": len(log["bad_role_rows"]),
+    }
+    assert all(n > 0 for n in logged.values())
+    assert vcross == {**dict.fromkeys(vcross, 0), **logged}
 
 
 def test_arrow_violation_counter_kinds_match_spark(spark, tmp_path):

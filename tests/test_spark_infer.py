@@ -3,6 +3,7 @@ oracle under hostile partitionings (SURVEY.md §5.2 item 2 — the distributed
 analogue of the reference's concurrency tests jsonschema_test.go:775-885)."""
 
 import json
+import math
 from datetime import timezone
 
 import pyarrow.parquet as pq
@@ -290,3 +291,124 @@ def test_nested_fold_row_form_matches_duckdb_recursive_oracle(spark):
     assert paths["big"][0] == "['integer', 'number']"
     assert paths["fmt2"] == ("string", False, "ipv4")
     assert paths["nested.deep.deeper[].w"] == ("boolean", True, "")
+
+
+def _norm_state(st):
+    """A SchemaState with the order-dependent parts put in a canonical
+    form: distinct values sorted, zero type counts dropped, NaN consts
+    made comparable."""
+    if st is None:
+        return None
+    out = {}
+    for k, v in st.items():
+        if k == "props":
+            out[k] = {name: _norm_state(c) for name, c in v.items()}
+        elif k == "items":
+            out[k] = _norm_state(v)
+        elif k == "distinct":
+            if v is None:
+                out[k] = None
+            else:
+                out[k] = sorted(repr((t, x)) for t, x in v)
+        elif k == "types":
+            out[k] = {t: n for t, n in v.items() if n}
+        elif k == "const" and v is not None:
+            t, x = v
+            out[k] = (t, "nan") if isinstance(x, float) and math.isnan(x) else v
+        else:
+            out[k] = v
+    return out
+
+
+def _assert_partition_invariant(df):
+    one = infer_dataframe(df, num_partitions=1)
+    four = infer_dataframe(df, num_partitions=4)
+    assert four.schema_json == one.schema_json
+    assert four.total_rows == one.total_rows
+    assert _norm_state(four.state) == _norm_state(one.state)
+
+
+def test_infer_parquet_matches_mapinarrow(spark, tx_paths):
+    from jsonschema_infer_spark.operators.infer_spark import infer_parquet
+
+    for key in ("clean", "viol"):
+        path = tx_paths[key]
+        a = infer_parquet(spark, path, rg_per_task=1)
+        b = infer_dataframe(spark.read.parquet(path), num_partitions=4)
+        assert a.schema_json == b.schema_json
+        assert a.total_rows == b.total_rows
+        assert _norm_state(a.state) == _norm_state(b.state)
+
+
+def test_edge_columns(spark):
+    # NaN/inf, integral floats, formats, empty and all-null strings: the
+    # columnar fold's partials must merge to the single-partition state
+    rows = []
+    for i in range(300):
+        rows.append(
+            (
+                i,
+                42,  # const int
+                2.0,  # integral const float -> integer
+                float("nan") if i == 7 else float(i) / 3.0,
+                float("inf") if i == 3 else float(i),
+                f"550e8400-e29b-41d4-a716-44665544{i % 100:04d}"[:36],
+                f"user{i}@example.com",
+                "" if i % 50 == 0 else f"text value {i % 5}",
+                None,  # all-null string
+                i % 2 == 0,
+                "red" if i % 3 == 0 else ("green" if i % 3 == 1 else "blue"),
+            )
+        )
+    df = spark.createDataFrame(
+        rows,
+        "id long, c_int long, c_float double, with_nan double, with_inf double, "
+        "uuid_col string, email_col string, texty string, nul string, "
+        "flag boolean, enum3 string",
+    )
+    _assert_partition_invariant(df)
+
+
+def test_timestamp_fractions(spark):
+    df = spark.sql(
+        """
+        SELECT * FROM VALUES
+          (TIMESTAMP'2026-01-01 00:00:00'),
+          (TIMESTAMP'2026-01-01 00:00:00.5'),
+          (TIMESTAMP'2026-01-01 00:00:00.123'),
+          (TIMESTAMP'2026-01-01 00:00:00.123456'),
+          (CAST(NULL AS TIMESTAMP))
+        AS t(ts)
+        """
+    )
+    _assert_partition_invariant(df)
+
+
+def test_huge_double_demotion(spark):
+    # Go's int64 round-trip rule (node.go:296-301): |v| >= 2^63 integral
+    # floats are "number"; -2^63 is exactly representable -> "integer"
+    rows = [
+        (1e19,),
+        (-3.4028e38,),
+        (float(2**63),),
+        (float(-(2**63)),),
+        (5.0,),
+        (2.5,),
+    ]
+    df = spark.createDataFrame(rows, "d double")
+    st = infer_dataframe(df, num_partitions=2).state["props"]["d"]
+    assert st["types"] == {"number": 4, "integer": 2}
+    tags = dict((v, t) for t, v in st["distinct"])
+    assert tags[5] == "integer" and tags[2.5] == "number"
+    assert tags[1e19] == "number" and tags[float(2**63)] == "number"
+    assert tags[-(2**63)] == "integer"
+
+
+def test_timestamp_render_len_columnar(spark):
+    # the columnar fold's closed-form length table must equal the actual
+    # trimmed RFC 3339 rendering (frac .5 -> ".5", 2 extra chars)
+    df = spark.sql("SELECT TIMESTAMP'2026-01-01 00:00:00.5' AS ts")
+    res = infer_dataframe(df, num_partitions=1)
+    st = res.state["props"]["ts"]
+    assert st["const"] == ("string", "2026-01-01T00:00:00.5Z")
+    assert st["len_min"] == st["len_max"] == len("2026-01-01T00:00:00.5Z")

@@ -267,39 +267,6 @@ def test_violation_examples_bounded_and_deterministic(spark):
     }
 
 
-def test_validation_scan_tunes_and_restores_confs(spark, tx_paths, compiled):
-    """validation_scan pins maxPartitionBytes + disables AQE for the block
-    (read at action time), restores both on exit, and yields a scan whose
-    results equal the untuned path."""
-    res, cons, clean, viol, log = compiled
-    before_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    before_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    baseline = {
-        (r.constraint, r.violation_count)
-        for r in V.violation_counts(viol, cons).collect()
-    }
-    with V.validation_scan(spark, tx_paths["viol"]) as vdf:
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        mpb = int(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-        # clamped to [16 MiB, 128 MiB] regardless of file size
-        assert (16 << 20) <= mpb <= (128 << 20)
-        q = V.violation_counts(vdf, cons)
-        # AQE genuinely off for this plan, not just the conf flipped
-        assert "AdaptiveSparkPlan" not in q._jdf.queryExecution().toString()
-        got = {(r.constraint, r.violation_count) for r in q.collect()}
-    assert got == baseline
-    assert spark.conf.get("spark.sql.files.maxPartitionBytes") == before_mpb
-    assert spark.conf.get("spark.sql.adaptive.enabled") == before_aqe
-
-
-def test_validation_scan_restores_confs_on_error(spark, tx_paths):
-    before_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    with pytest.raises(RuntimeError, match="boom"):
-        with V.validation_scan(spark, tx_paths["viol"]):
-            raise RuntimeError("boom")
-    assert spark.conf.get("spark.sql.adaptive.enabled") == before_aqe
-
-
 def test_merge_partials_local_hash_path_and_collisions():
     """The ``ch`` fast path equals the string fallback, and a hash
     COLLISION between two different convs only routes both through the
@@ -472,32 +439,6 @@ def test_reduce_spilled_partials_fuzz(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(V, "_DRIVER_MERGE_MAX_BYTES", 0)
     for d, want in trials:
         assert V.reduce_spilled_partials(spark, d) == want, d
-
-
-def test_validation_scan_nested_and_concurrent_restore(spark, tx_paths):
-    """Same-thread nesting is legal (RLock) and restores confs inside-out;
-    a conf another actor re-set DURING the block is kept, not clobbered by
-    the block's stale saved value."""
-    before_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    before_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    with V.validation_scan(spark, tx_paths["viol"]):
-        inner_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        with V.validation_scan(spark, tx_paths["viol"], waves=12):
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        # inner restored to the outer block's pin (values equal here since
-        # both scans read the same file set; AQE must still be off)
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        assert (
-            spark.conf.get("spark.sql.files.maxPartitionBytes") == inner_mpb
-        )
-    assert spark.conf.get("spark.sql.adaptive.enabled") == before_aqe
-    assert spark.conf.get("spark.sql.files.maxPartitionBytes") == before_mpb
-
-    # third-party re-set during the block survives the exit
-    with V.validation_scan(spark, tx_paths["viol"]):
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    spark.conf.set("spark.sql.adaptive.enabled", before_aqe)
 
 
 def test_integrity_fold_emits_deterministic_ch(spark, tx_paths):
