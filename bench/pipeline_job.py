@@ -61,7 +61,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # rev 12 = contract-first: the violated snapshot is validated against the
 #         clean snapshot's contract in the one fused scan; the spec guess,
 #         its driver thread and the fallback scan are gone.
-ENGINE_REV = 12
+# rev 13 = each fused task commits a completion marker after its spill,
+#         so the same call resumes from a checkpoint directory.
+ENGINE_REV = 13
 
 
 def main():

@@ -1,16 +1,20 @@
-"""Checkpointed, resumable distributed inference (north_rule: "resumable
-from a checkpointed partition manifest carrying per-partition lineage and
-metrics").
+"""Checkpoint primitives and checkpointed, resumable inference over a
+DataFrame (north_rule: "resumable from a checkpointed partition manifest
+carrying per-partition lineage and metrics").
 
-Design: NO extra shuffle. The fold runs over the scan's own partitions
-(deterministic for a fixed parquet file set + maxPartitionBytes); each task
-writes its partial SchemaState to ``<dir>/states/state_<pid>.json``
-atomically (tmp + rename, idempotent under task retry). A resumed run checks
-for the state file BEFORE consuming its Arrow batches, so completed
-partitions cost an open, not a scan. The driver merges whatever states exist
-(the merge is associative — any subset is a valid partial result) and the
-manifest records lineage: input files, partition count, config fingerprint,
-per-partition row counts and timings.
+A checkpoint directory holds ``manifest.json`` and one completion marker
+per task, ``states/state_<pid>.json``: the task's partial SchemaState and
+lineage, written atomically (tmp + rename, idempotent under task retry)
+as the task's last step. ``_open_manifest`` records the run's identity
+(input files + config fingerprint) before any task runs and refuses a
+directory written for another one. A rerun skips every task whose marker
+exists. Two drivers use this layout:
+- ``infer_with_checkpoint`` (here) folds a DataFrame's own scan
+  partitions with no extra shuffle; a resumed partition checks its marker
+  before consuming its Arrow batches, so it costs an open, not a scan.
+- ``operators.pipeline.infer_and_integrity_parquet(checkpoint_dir=...)``,
+  the fused inference + integrity + contract-validation scan; its markers
+  also carry the violation vector, next to ``integrity/part-<i>.parquet``.
 
 This improves on the reference's ``Load`` resume (jsonschema.go:178-209),
 which reconstructs lossy synthetic counts from the OUTPUT schema; we
@@ -35,20 +39,22 @@ from ._worker import release_zip_finders
 from .config import InferConfig, default_config
 from .operators import state as S
 from .operators.infer_spark import (
-    InferResult,
+    _infer_result,
     fold_batches_columnar,
     fold_batches_json,
     merge_states,
 )
-from .plans.render import render_schema
 
 MANIFEST = "manifest.json"
 STATES = "states"
 
 
 def config_fingerprint(
-    config: InferConfig, mode: str, json_column, order_cols=None
+    config: InferConfig, mode, json_column, order_cols=None
 ) -> str:
+    """``mode`` names the fold: a string for ``infer_with_checkpoint``, a
+    JSON-able description of the task layout and contract for the fused
+    scan."""
     key = json.dumps(
         {
             "formats": list(config.format_names()),
@@ -61,6 +67,7 @@ def config_fingerprint(
             "order_cols": list(order_cols) if order_cols else None,
         },
         sort_keys=True,
+        default=str,
     )
     return hashlib.sha256(key.encode()).hexdigest()[:16]
 
@@ -102,12 +109,11 @@ def infer_with_checkpoint(
     mode: str = "columnar",
     json_column: str | None = None,
     order_cols: list | None = None,
-    _skip_partitions=None,  # test hook: simulate partitions that never finish
 ):
     """Run (or resume) a checkpointed inference. Returns (InferResult,
-    manifest dict). ``manifest['complete']`` is False when some partitions
-    have no state yet (e.g. a simulated failure) — rerunning with the same
-    checkpoint_dir folds only the missing ones."""
+    manifest dict). A run that fails mid-job leaves its finished
+    partitions' states behind; rerunning with the same checkpoint_dir folds
+    only the missing ones (``manifest['folded_this_run']``)."""
     config = config or default_config()
     if config.examples and not order_cols:
         raise NotImplementedError(
@@ -129,7 +135,6 @@ def infer_with_checkpoint(
         },
     )
 
-    skip = set(_skip_partitions or ())
     ckpt = checkpoint_dir
 
     def fold(batches):
@@ -141,8 +146,6 @@ def infer_with_checkpoint(
             path = _state_path(ckpt, pid)
             if os.path.exists(path):
                 return  # resume: completed partition, skip without scanning
-            if pid in skip:
-                return  # test hook: pretend this partition never finished
             t0 = time.time()
             if mode == "json":
                 st, rows = fold_batches_json(batches, config, json_column, order_cols)
@@ -182,16 +185,9 @@ def infer_with_checkpoint(
         states.append(S.state_from_jsonable(rec["state"]))
         partitions.append((rec["pid"], rec["rows"], rec["secs"]))
 
-    merged = merge_states(states)
-    schema = S.finalize(merged, config)
-    result = InferResult(
-        state=merged,
-        config=config,
-        schema=schema,
-        schema_json=render_schema(schema, config.indent),
-        total_rows=sum(p[1] for p in partitions),
-        partitions=partitions,
-        wall_secs=time.time() - t0,
+    result = _infer_result(
+        merge_states(states), sum(p[1] for p in partitions), partitions,
+        config, t0,
     )
 
     manifest = {
@@ -211,146 +207,3 @@ def infer_with_checkpoint(
     }
     _atomic_write(mpath, json.dumps(manifest, indent=2))
     return result, manifest
-
-
-def fused_with_checkpoint(
-    spark,
-    path: str,
-    checkpoint_dir: str,
-    config: InferConfig | None = None,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    rg_per_task: int = 4,
-    _skip_tasks=None,  # test hook: simulate tasks that never finish
-):
-    """Checkpointed, resumable form of the FUSED benchmark pipeline
-    (``operators.pipeline.infer_and_integrity_parquet``): each (file,
-    row-group-range) task writes its integrity partial parquet and then —
-    last, as the completion marker — its inference state JSON with
-    lineage (file, row-group range, rows, seconds, attempt). A resumed
-    run skips tasks whose marker exists WITHOUT re-reading their bytes;
-    the driver merges whatever states exist and reduces the spilled
-    integrity partials, so a partial manifest is still a valid partial
-    result (associative merges on both sides). The spill must hold
-    exactly one part file per completed task, or the run is refused.
-
-    Returns (InferResult | None, integrity dict | None, manifest) —
-    the results are None only when no task has completed yet."""
-    from .operators.infer_spark import _list_rg_tasks, list_parquet_files
-    from .operators.pipeline import _check_spill_parts, _fused_task
-    from .operators.validate import reduce_spilled_partials
-
-    config = config or default_config()
-    if config.max_samples > 0:
-        raise ValueError(
-            "max_samples is unsupported on the fused path (integrity must "
-            "see every row); see infer_and_integrity_parquet"
-        )
-    if config.examples:
-        raise NotImplementedError(
-            "examples capture is not wired into the checkpointed fused "
-            "path; use infer_with_checkpoint(order_cols=...) or the "
-            "direct pipeline"
-        )
-    files = list_parquet_files(path)
-    tasks = _list_rg_tasks(files, rg_per_task)
-    fp = config_fingerprint(config, f"fused:{conv_col}:{idx_col}:{rg_per_task}", None)
-
-    states_dir = os.path.join(checkpoint_dir, STATES)
-    spill_dir = os.path.join(checkpoint_dir, "integrity")
-    os.makedirs(states_dir, exist_ok=True)
-    os.makedirs(spill_dir, exist_ok=True)
-
-    mpath = _open_manifest(
-        checkpoint_dir, {"config_fingerprint": fp, "input_files": sorted(files)}
-    )
-
-    skip = set(_skip_tasks or ())
-    ckpt = checkpoint_dir
-
-    def run(item):
-        from pyspark import TaskContext
-
-        i, (f, lo, hi) = item
-        spath = _state_path(ckpt, i)
-        if os.path.exists(spath) or i in skip:
-            return None
-        t0 = time.time()
-        st, rows = _fused_task(
-            f, lo, hi, config, conv_col, idx_col, spill_dir, i
-        )
-        ctx = TaskContext.get()
-        _atomic_write(
-            spath,
-            json.dumps(
-                {
-                    "pid": i,
-                    "file": f,
-                    "row_groups": [lo, hi],
-                    "rows": rows,
-                    "secs": time.time() - t0,
-                    "attempt": ctx.attemptNumber() if ctx is not None else 0,
-                    "state": S.state_to_jsonable(st),
-                }
-            ),
-        )
-        return i
-
-    t0 = time.time()
-    spark.sparkContext.parallelize(
-        list(enumerate(tasks)), max(len(tasks), 1)
-    ).map(run).collect()
-
-    states, partitions, lineage = [], [], []
-    for fn in sorted(os.listdir(states_dir)):
-        if not (fn.startswith("state_") and fn.endswith(".json")):
-            continue  # orphaned "*.json.tmp.<pid>" from a killed writer
-        with open(os.path.join(states_dir, fn)) as f:
-            rec = json.load(f)
-        states.append(S.state_from_jsonable(rec["state"]))
-        partitions.append((rec["pid"], rec["rows"], rec["secs"]))
-        lineage.append(
-            {
-                "pid": rec["pid"],
-                "file": rec["file"],
-                "row_groups": rec["row_groups"],
-                "rows": rec["rows"],
-                "secs": round(rec["secs"], 4),
-                "attempt": rec.get("attempt", 0),
-            }
-        )
-
-    _check_spill_parts(spill_dir, [p[0] for p in partitions])
-    result = integ = None
-    if states:
-        merged = merge_states(states)
-        schema = S.finalize(merged, config)
-        result = InferResult(
-            state=merged,
-            config=config,
-            schema=schema,
-            schema_json=render_schema(schema, config.indent),
-            total_rows=sum(p[1] for p in partitions),
-            partitions=partitions,
-            wall_secs=time.time() - t0,
-        )
-        integ = reduce_spilled_partials(spark, spill_dir)
-
-    manifest = {
-        "config_fingerprint": fp,
-        "mode": "fused",
-        "input_files": sorted(files),
-        "num_tasks": len(tasks),
-        "completed_tasks": sorted(p[0] for p in partitions),
-        "complete": len(partitions) >= len(tasks),
-        "total_rows": result.total_rows if result else 0,
-        "per_task": lineage,
-        "integrity": integ,
-        "schema_sha256": (
-            hashlib.sha256(result.schema_json.encode()).hexdigest()
-            if result
-            else None
-        ),
-    }
-    _atomic_write(mpath, json.dumps(manifest, indent=2))
-    return result, integ, manifest

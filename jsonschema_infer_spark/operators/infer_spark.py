@@ -806,6 +806,15 @@ def infer_parquet(
         merged = merge_states([out[0] for out, _ in got])
         total_rows = sum(out[1] for out, _ in got)
 
+    return _infer_result(merged, total_rows, partitions, config, t0)
+
+
+def _infer_result(
+    merged: dict, total_rows: int, partitions: list, config: InferConfig, t0: float
+) -> InferResult:
+    """The driver tail every inference entry point shares: finalize the
+    merged state, render it, and wrap both with the run's lineage and the
+    wall seconds since ``t0``."""
     schema = S.finalize(merged, config)
     return InferResult(
         state=merged,
@@ -882,13 +891,4 @@ def infer_dataframe(
         )
         total_rows = sum(r.rows for r in rows)
 
-    schema = S.finalize(merged, config)
-    return InferResult(
-        state=merged,
-        config=config,
-        schema=schema,
-        schema_json=render_schema(schema, config.indent),
-        total_rows=total_rows,
-        partitions=partitions,
-        wall_secs=time.time() - t0,
-    )
+    return _infer_result(merged, total_rows, partitions, config, t0)

@@ -12,18 +12,23 @@ over again.
 Here each (file, row-group-range) task iterates its Arrow batches ONCE:
 
     pyarrow row-group scan (memory-mapped, no Spark row pipeline)
-      -> vectorized inference fold (observe every column)   \\ same batch
-      -> per-conversation integrity pre-aggregation          / stream
+      -> vectorized inference fold (observe every column)   \\ same
+      -> per-conversation integrity pre-aggregation          | batch
+      -> contract violation counter (given a violation_spec) / stream
     inference partial  -> returned, merged via the associative combOp
                           (collect+reduce, or treeReduce for large P)
     integrity partials -> spilled to parquet (a few % of input bytes),
                           one part file per task, reduced by
                           validate.reduce_spilled_partials (driver merge or
                           distributed, picked from the measured spill size)
+    completion marker  -> the task's state, rows, violation vector and
+                          lineage, written last: the checkpoint a rerun
+                          over the same directory resumes from
 
-Results equal `infer_parquet` and `transcript_integrity_summary` on the
-same table — the folds are the same code; tests assert equality on clean,
-violated and NULL-key tables.
+Results equal `infer_parquet`, `transcript_integrity_summary` and
+`violation_counts` on the same table — the folds are the same code; tests
+assert equality on clean, violated and NULL-key tables, fresh and resumed.
+`infer_and_integrity_parquet` is the one driver of this scan.
 
 Reference anchor: the sequential equivalent is AddSample folding each
 document once (`/root/reference/jsonschema.go:57-92`); validation is the
@@ -33,17 +38,26 @@ natural distributed home is the same pass that already reads the rows.
 
 from __future__ import annotations
 
+import hashlib
+import json
 import math
+import os
+import shutil
+import tempfile
 import time
 
+import numpy as np
 import pyarrow as pa
 
 from .._worker import release_zip_finders
+from ..checkpoint import (
+    STATES, _atomic_write, _open_manifest, _state_path, config_fingerprint,
+)
 from ..config import InferConfig, default_config
 from ..operators import state as S
 from .infer_spark import (
-    InferResult,
     _TREE_REDUCE_THRESHOLD,
+    _infer_result,
     _list_rg_tasks,
     fold_batches_columnar,
     list_parquet_files,
@@ -54,7 +68,6 @@ from .validate import (
     _partial_schema,
     reduce_spilled_partials,
 )
-from ..plans.render import render_schema
 
 
 def _fused_task(
@@ -176,7 +189,7 @@ def infer_and_integrity_parquet(
     idx_col: str = "turn_idx",
     rg_per_task: int = 4,
     order_cols: list | None = None,
-    spill_dir: str | None = None,
+    checkpoint_dir: str | None = None,
     violation_spec: list | None = None,
 ) -> tuple:
     """Fused scan: returns ``(InferResult, integrity_dict)`` where the
@@ -193,9 +206,12 @@ def infer_and_integrity_parquet(
     — inference, integrity and validation in one table read. A spec
     inferred from this same table counts 0 everywhere by construction.
 
-    ``spill_dir`` must be empty or hold only this run's part files: the
-    integrity reduce refuses a spill whose part files are not exactly one
-    per task (see _check_spill_parts).
+    ``checkpoint_dir`` makes the run resumable (layout in checkpoint.py):
+    each task spills ``integrity/part-<i>.parquet`` and then commits its
+    marker ``states/state_<i>.json``; a rerun over the directory returns
+    each committed task's recorded result instead of scanning it again.
+    The call returns complete results or raises, and finished work stays
+    on disk. ``None`` uses a temp directory, deleted afterwards.
 
     ``max_samples`` is not supported here (a row budget caps inference but
     integrity must still see every row — the two folds would need
@@ -213,14 +229,9 @@ def infer_and_integrity_parquet(
             "examples capture needs a total order in distributed mode: pass "
             "order_cols=[...] (e.g. ['conv_id', 'turn_idx'])"
         )
-    import os
-    import shutil
-    import tempfile
-
     t0 = time.time()
-    tasks = _list_rg_tasks(list_parquet_files(path), rg_per_task)
-    out_dir = spill_dir or tempfile.mkdtemp(prefix="jis_pipeline_")
-    os.makedirs(out_dir, exist_ok=True)
+    files = list_parquet_files(path)
+    tasks = _list_rg_tasks(files, rg_per_task)
 
     if violation_spec is not None:
         # validate support up front (raises UnsupportedArrowSpec on the
@@ -233,22 +244,60 @@ def infer_and_integrity_parquet(
             violation_spec, _pq.ParquetFile(tasks[0][0]).schema_arrow
         )
 
+    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="jis_pipeline_")
+    out_dir = os.path.join(ckpt, "integrity")
+    os.makedirs(out_dir, exist_ok=True)
+    os.makedirs(os.path.join(ckpt, STATES), exist_ok=True)
+    layout = {
+        "fused": [conv_col, idx_col, rg_per_task],
+        "violation_spec": violation_spec,
+    }
+    identity = {
+        "config_fingerprint": config_fingerprint(config, layout, None, order_cols),
+        "input_files": sorted(files),
+    }
+
     def run(item):
-        # the task's result and its lineage entry (task, rows, seconds)
+        # the task's result and lineage; the marker, written after the
+        # part file, commits the task, and a rerun returns what it recorded
+        from pyspark import TaskContext
+
         i, (f, lo, hi) = item
+        marker = _state_path(ckpt, i)
+        if os.path.exists(marker):
+            with open(marker) as fh:
+                rec = json.load(fh)
+            out = (S.state_from_jsonable(rec.pop("state")), rec["rows"])
+            vec = rec.pop("violations")
+            if violation_spec is not None:
+                out += (np.asarray(vec, dtype=np.int64),)
+            return out, rec
+        ctx = TaskContext.get()
         t = time.perf_counter()
         out = _fused_task(
             f, lo, hi, config, conv_col, idx_col, out_dir, i, order_cols,
             violation_spec,
         )
-        return out, (i, out[1], time.perf_counter() - t)
+        rec = {
+            "pid": i,
+            "file": f,
+            "row_groups": [lo, hi],
+            "rows": out[1],
+            "secs": time.perf_counter() - t,
+            "attempt": ctx.attemptNumber() if ctx is not None else 0,
+        }
+        vec = out[2].tolist() if violation_spec is not None else None
+        state = S.state_to_jsonable(out[0])
+        _atomic_write(marker, json.dumps({**rec, "state": state, "violations": vec}))
+        return out, rec
 
     try:
+        mpath = _open_manifest(ckpt, identity)
         rdd = spark.sparkContext.parallelize(
             list(enumerate(tasks)), max(len(tasks), 1)
         ).map(run)
         vtotals = None
-        partitions: list = []
+        per_task: list = []
         if len(tasks) > _TREE_REDUCE_THRESHOLD:
             # treeReduce yields only the merged value: no per-task
             # lineage here, as in infer_dataframe
@@ -269,27 +318,42 @@ def infer_and_integrity_parquet(
         else:
             got = rdd.collect()
             pairs = [out for out, _ in got]
-            partitions = [lineage for _, lineage in got]
+            per_task = [rec for _, rec in got]
             merged = merge_states([p[0] for p in pairs])
             total_rows = sum(p[1] for p in pairs)
             if violation_spec is not None:
                 vtotals = sum(p[2] for p in pairs)
+            # checked, not assumed: a resume mixes recorded and fresh tasks
+            pids = sorted(r["pid"] for r in per_task)
+            lineage_rows = sum(r["rows"] for r in per_task)
+            if pids != list(range(len(tasks))) or lineage_rows != total_rows:
+                raise RuntimeError(
+                    f"fused lineage holds tasks {pids[:10]} for {len(tasks)} "
+                    f"tasks and {lineage_rows} rows for {total_rows}"
+                )
 
-        schema = S.finalize(merged, config)
-        res = InferResult(
-            state=merged,
-            config=config,
-            schema=schema,
-            schema_json=render_schema(schema, config.indent),
-            total_rows=total_rows,
-            partitions=partitions,
-            wall_secs=time.time() - t0,
-        )
+        partitions = [(r["pid"], r["rows"], r["secs"]) for r in per_task]
+        res = _infer_result(merged, total_rows, partitions, config, t0)
         _check_spill_parts(out_dir, range(len(tasks)))
         integ = reduce_spilled_partials(spark, out_dir)
+        counts = None
         if violation_spec is not None:
-            return res, integ, dict(zip(vnames, (int(v) for v in vtotals)))
+            counts = dict(zip(vnames, (int(v) for v in vtotals)))
+        sha = hashlib.sha256(res.schema_json.encode()).hexdigest()
+        manifest = {
+            **identity,
+            "num_tasks": len(tasks),
+            "complete": True,
+            "total_rows": total_rows,
+            "per_task": per_task,
+            "integrity": integ,
+            "violations": counts,
+            "schema_sha256": sha,
+        }
+        _atomic_write(mpath, json.dumps(manifest, indent=2))
+        if violation_spec is not None:
+            return res, integ, counts
         return res, integ
     finally:
-        if spill_dir is None:
-            shutil.rmtree(out_dir, ignore_errors=True)
+        if checkpoint_dir is None:
+            shutil.rmtree(ckpt, ignore_errors=True)

@@ -4,7 +4,11 @@ The fused scan (pipeline.infer_and_integrity_parquet) must return exactly
 the InferResult of infer_parquet AND the integrity counts of
 transcript_integrity_summary / duplicate_keys / turn_ordering_violations
 on the same files — the folds are shared code, so any divergence is a
-wiring bug in the tee or the spill reduce."""
+wiring bug in the tee or the spill reduce. A checkpointed run resumes
+from its task markers and equals a fresh one (fault-injection tests)."""
+
+import json
+import os
 
 import pytest
 
@@ -132,116 +136,192 @@ def _multi_rg_copy(tx_paths, tmp_path, name="viol_multi_rg.parquet"):
     return path
 
 
+def _clean_contract(spark, tx_paths) -> list:
+    """The constraint spec of a contract inferred from the clean fixture,
+    for validating the violated one."""
+    clean = infer_parquet(spark, tx_paths["clean"], rg_per_task=2)
+    temporal = V.temporal_columns(spark.read.parquet(tx_paths["viol"]))
+    return V.constraint_spec(clean.schema, state=clean.state, temporal_cols=temporal)
+
+
+def _logged_counts(log) -> dict:
+    """The three constraints inject_violations breaks, with its log's
+    counts; every other constraint of the clean contract counts 0."""
+    return {
+        "required:role": len(log["null_role_rows"]),
+        "required:text": len(log["null_text_rows"]),
+        "enum:role": len(log["bad_role_rows"]),
+    }
+
+
+def _mtimes(d) -> dict:
+    return {fn: os.stat(os.path.join(d, fn)).st_mtime_ns for fn in os.listdir(d)}
+
+
 def test_fused_checkpoint_resume_and_lineage(spark, tx_paths, tmp_path):
-    from jsonschema_infer_spark.checkpoint import fused_with_checkpoint
-    from jsonschema_infer_spark.operators.pipeline import (
-        infer_and_integrity_parquet,
-    )
-
-    # re-materialize with small row groups so there are MANY fused tasks
+    """Crash between commits: a task spilled its part file but died before
+    its marker. The resume reruns only that task and equals a fresh run;
+    the manifest carries one lineage entry per task."""
     path = _multi_rg_copy(tx_paths, tmp_path)
+    spec = _clean_contract(spark, tx_paths)
     ckpt = str(tmp_path / "fused_ckpt")
+    states, parts = os.path.join(ckpt, "states"), os.path.join(ckpt, "integrity")
 
-    # first run: tasks 0 and 1 "never finish"
-    res1, integ1, man1 = fused_with_checkpoint(
-        spark, path, ckpt, rg_per_task=1, _skip_tasks=[0, 1]
+    infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, checkpoint_dir=ckpt, violation_spec=spec
     )
-    assert not man1["complete"]
-    assert 0 not in man1["completed_tasks"] and 1 not in man1["completed_tasks"]
-    # a partial manifest is still a valid partial result
-    assert res1 is not None and res1.total_rows < spark.read.parquet(path).count()
+    markers, spills = _mtimes(states), _mtimes(parts)
+    assert sorted(markers) == [f"state_{i:06d}.json" for i in range(7)]
+    os.remove(os.path.join(states, "state_000003.json"))
 
-    # resume: only the missing tasks fold; manifest completes
-    res2, integ2, man2 = fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
-    assert man2["complete"]
-    assert res2.total_rows == spark.read.parquet(path).count()
-    # lineage carries (file, row-group range, rows, secs) per task
+    res, integ, counts = infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, checkpoint_dir=ckpt, violation_spec=spec
+    )
+    after, spills_after = _mtimes(states), _mtimes(parts)
+    assert after.keys() == markers.keys()
+    assert {fn for fn in markers if after[fn] != markers[fn]} == {"state_000003.json"}
+    assert {fn for fn in spills if spills_after[fn] != spills[fn]} == {
+        "part-00003.parquet"
+    }
+
+    res_d, integ_d, counts_d = infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, violation_spec=spec
+    )
+    assert res.schema_json == res_d.schema_json
+    assert res.total_rows == res_d.total_rows == spark.read.parquet(path).count()
+    assert integ == integ_d and counts == counts_d
+    assert counts == {**dict.fromkeys(counts, 0), **_logged_counts(tx_paths["log"])}
+
+    # lineage: (file, row-group range, rows, secs, attempt) per task
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        man = json.load(f)
+    assert man["complete"] and man["num_tasks"] == 7
+    assert [r["pid"] for r in man["per_task"]] == list(range(7))
     assert all(
-        rec["file"] and rec["rows"] > 0 and len(rec["row_groups"]) == 2
-        for rec in man2["per_task"]
+        r["file"] == path and r["row_groups"] == [r["pid"], r["pid"] + 1]
+        and r["rows"] > 0 and r["secs"] > 0 and r["attempt"] == 0
+        for r in man["per_task"]
     )
+    assert sum(r["rows"] for r in man["per_task"]) == res.total_rows
+    assert [(r["pid"], r["rows"]) for r in man["per_task"]] == [
+        (i, rows) for i, rows, _ in res.partitions
+    ]
+    assert man["integrity"] == integ and man["violations"] == counts
 
-    # equals the unchecked pipeline on both outputs
-    res_d, integ_d = infer_and_integrity_parquet(spark, path, rg_per_task=1)
-    assert res2.schema_json == res_d.schema_json
-    assert integ2 == integ_d
+    # an idempotent rerun scans nothing
+    again = infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, checkpoint_dir=ckpt, violation_spec=spec
+    )
+    assert _mtimes(states) == after and _mtimes(parts) == spills_after
+    assert again[1:] == (integ, counts)
+    assert again[0].schema_json == res.schema_json
 
-    # config/input mismatch is refused
-    import pytest
+    # another task layout is refused
+    with pytest.raises(ValueError, match="does not match"):
+        infer_and_integrity_parquet(
+            spark, path, rg_per_task=2, checkpoint_dir=ckpt, violation_spec=spec
+        )
+    # the lineage is checked, not assumed: a marker recorded under another
+    # task id leaves task 2 out of it
+    marker = os.path.join(states, "state_000002.json")
+    with open(marker) as f:
+        rec = json.load(f)
+    with open(marker, "w") as f:
+        json.dump({**rec, "pid": 1}, f)
+    with pytest.raises(RuntimeError, match="fused lineage"):
+        infer_and_integrity_parquet(
+            spark, path, rg_per_task=1, checkpoint_dir=ckpt, violation_spec=spec
+        )
 
-    with pytest.raises(ValueError):
-        fused_with_checkpoint(spark, path, ckpt, rg_per_task=2)
+
+def test_fused_checkpoint_refuses_changed_contract(spark, tx_paths, tmp_path):
+    """A checkpoint records its contract and order columns: resuming it
+    with another violation_spec, none, or other order_cols is refused."""
+    path = tx_paths["viol"]
+    spec = _clean_contract(spark, tx_paths)
+    ckpt = str(tmp_path / "ckpt")
+    infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, checkpoint_dir=ckpt, violation_spec=spec
+    )
+    for kwargs in (
+        {"violation_spec": spec[:-1]},
+        {"violation_spec": None},
+        {"violation_spec": spec, "order_cols": ["conv_id", "turn_idx"]},
+    ):
+        with pytest.raises(ValueError, match="does not match"):
+            infer_and_integrity_parquet(
+                spark, path, rg_per_task=1, checkpoint_dir=ckpt, **kwargs
+            )
 
 
 def test_fused_checkpoint_ignores_orphan_tmp_files(spark, tx_paths, tmp_path):
-    from jsonschema_infer_spark.checkpoint import fused_with_checkpoint
-
     path = tx_paths["viol"]
     ckpt = str(tmp_path / "tmpfile_ckpt")
-    res1, integ1, man1 = fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
-    # simulate a writer killed between tmp write and os.replace
-    import os
-
-    states = os.path.join(ckpt, "states")
-    with open(os.path.join(states, "state_000000.json.tmp.999"), "w") as f:
-        f.write('{"truncat')  # torn write
-    res2, integ2, man2 = fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
+    res1, integ1 = infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, checkpoint_dir=ckpt
+    )
+    # writers killed between the tmp write and os.replace
+    with open(os.path.join(ckpt, "states", "state_000000.json.tmp.999"), "w") as f:
+        f.write('{"truncat')
+    with open(
+        os.path.join(ckpt, "integrity", ".part-00000.parquet.inprogress-999"), "wb"
+    ) as f:
+        f.write(b"PAR1\x00")
+    res2, integ2 = infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, checkpoint_dir=ckpt
+    )
     assert res2.total_rows == res1.total_rows  # no double-count, no crash
+    assert res2.schema_json == res1.schema_json
     assert integ2 == integ1
 
 
 def test_fused_refuses_stale_spill_parts(spark, tx_paths, tmp_path):
-    """A reused spill_dir holding part files of an earlier run with more
-    tasks must be refused, not double-counted."""
+    """A reused checkpoint directory holding part files of an earlier run
+    with more tasks must be refused, not double-counted: by the manifest
+    while it is there, by the spill check once it is gone."""
     path = _multi_rg_copy(tx_paths, tmp_path)
-    spill = str(tmp_path / "spill")
+    ckpt = str(tmp_path / "spill")
     _, want = infer_and_integrity_parquet(
-        spark, path, rg_per_task=1, spill_dir=spill
+        spark, path, rg_per_task=1, checkpoint_dir=ckpt
     )
-    # same task layout: every part file is rewritten, nothing stale
+    # same task layout: every task resumes from its marker
     _, again = infer_and_integrity_parquet(
-        spark, path, rg_per_task=1, spill_dir=spill
+        spark, path, rg_per_task=1, checkpoint_dir=ckpt
     )
     assert again == want
+    with pytest.raises(ValueError, match="does not match"):
+        infer_and_integrity_parquet(spark, path, rg_per_task=2, checkpoint_dir=ckpt)
     # 7 row groups: 4 tasks now, part-00004..6 are the first run's
+    os.remove(os.path.join(ckpt, "manifest.json"))
     with pytest.raises(ValueError, match=r"unexpected \['part-00004"):
-        infer_and_integrity_parquet(spark, path, rg_per_task=2, spill_dir=spill)
+        infer_and_integrity_parquet(spark, path, rg_per_task=2, checkpoint_dir=ckpt)
 
 
 def test_fused_checkpoint_refuses_missing_part(spark, tx_paths, tmp_path):
     """A part file lost between runs (its task's state marker survives, so
     resume would skip the task) must fail the resume, not silently drop
     that task's conversations from the integrity counts."""
-    import os
-
-    from jsonschema_infer_spark.checkpoint import fused_with_checkpoint
-
     path = _multi_rg_copy(tx_paths, tmp_path)
     ckpt = str(tmp_path / "ckpt")
-    _, _, man = fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
-    assert man["complete"]
+    infer_and_integrity_parquet(spark, path, rg_per_task=1, checkpoint_dir=ckpt)
     os.remove(os.path.join(ckpt, "integrity", "part-00002.parquet"))
     with pytest.raises(ValueError, match="part-00002"):
-        fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
+        infer_and_integrity_parquet(spark, path, rg_per_task=1, checkpoint_dir=ckpt)
 
 
 def test_fused_checkpoint_fingerprint_written_before_scan(
     spark, tx_paths, tmp_path
 ):
-    """A run that dies mid-scan (one input file has corrupt data pages)
-    has already recorded its fingerprint, so a resume with another task
-    layout is refused; once the file is repaired, a resume with the
-    original layout completes and equals the unchecked pipeline."""
-    import json
-    import os
-
+    """A contract-first run that dies mid-job (its last input file has
+    corrupt data pages) has already recorded its fingerprint, so a resume
+    with another task layout is refused. Once the file is repaired, the
+    resume scans only the unfinished tasks, and its inference, integrity
+    and per-constraint counts equal a fresh run and the injection log."""
     import pyarrow.parquet as pq
 
-    from jsonschema_infer_spark.checkpoint import (
-        fused_with_checkpoint,
-        infer_with_checkpoint,
-    )
+    from jsonschema_infer_spark.checkpoint import infer_with_checkpoint
 
+    spec = _clean_contract(spark, tx_paths)
     src = pq.read_table(tx_paths["viol"])
     data = tmp_path / "data"
     data.mkdir()
@@ -252,18 +332,25 @@ def test_fused_checkpoint_fingerprint_written_before_scan(
             t, str(data / f"f{k}.parquet"), row_group_size=len(t) // 2 + 1,
             compression="NONE",
         )
-    bad = str(data / "f1.parquet")
+    # tasks run in id order and the garbled row group is task 4 of six, so
+    # on local[4] a slot frees (a task commits) before it starts
+    bad = str(data / "f2.parquet")
     with open(bad, "r+b") as f:  # garble the first page header
         f.seek(4)
         f.write(b"\xff" * 64)
 
     ckpt = str(tmp_path / "ckpt")
+    states = os.path.join(ckpt, "states")
+    run = dict(rg_per_task=1, checkpoint_dir=ckpt, violation_spec=spec)
     with pytest.raises(Exception):
-        fused_with_checkpoint(spark, str(data), ckpt, rg_per_task=1)
+        infer_and_integrity_parquet(spark, str(data), **run)
     with open(os.path.join(ckpt, "manifest.json")) as f:
         assert json.load(f)["complete"] is False
+    committed = _mtimes(states)
+    assert committed and all(fn.endswith(".json") for fn in committed)
+    assert "state_000004.json" not in committed  # the garbled row group
     with pytest.raises(ValueError, match="does not match"):
-        fused_with_checkpoint(spark, str(data), ckpt, rg_per_task=2)
+        infer_and_integrity_parquet(spark, str(data), **{**run, "rg_per_task": 2})
     # the Spark-partitioned checkpoint records its fingerprint up front too
     df = spark.read.parquet(str(data))
     ckpt2 = str(tmp_path / "ckpt_infer")
@@ -273,19 +360,24 @@ def test_fused_checkpoint_fingerprint_written_before_scan(
         infer_with_checkpoint(df, ckpt2, order_cols=["conv_id", "turn_idx"])
 
     pq.write_table(
-        parts[1], bad, row_group_size=len(parts[1]) // 2 + 1,
+        parts[2], bad, row_group_size=len(parts[2]) // 2 + 1,
         compression="NONE",
     )
-    res, integ, man = fused_with_checkpoint(
-        spark, str(data), ckpt, rg_per_task=1
-    )
+    res, integ, counts = infer_and_integrity_parquet(spark, str(data), **run)
+    after = _mtimes(states)
+    assert len(after) == 6
+    assert all(after[fn] == committed[fn] for fn in committed)
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        man = json.load(f)
     assert man["complete"] and man["num_tasks"] == 6
-    res_d, integ_d = infer_and_integrity_parquet(
-        spark, str(data), rg_per_task=1
+    res_d, integ_d, counts_d = infer_and_integrity_parquet(
+        spark, str(data), rg_per_task=1, violation_spec=spec
     )
     assert res.schema_json == res_d.schema_json
     assert res.total_rows == res_d.total_rows == src.num_rows
-    assert integ == integ_d
+    assert integ == integ_d and counts == counts_d
+    assert counts == {**dict.fromkeys(counts, 0), **_logged_counts(tx_paths["log"])}
+    assert man["violations"] == counts
 
 
 def test_integrity_null_keys_embedded_uniqueness(spark, tmp_path, monkeypatch):
@@ -400,20 +492,12 @@ def test_fused_violation_counts_match_spark(spark, tx_paths):
     assert integ == V.transcript_integrity_summary(viol_df)
 
     # case 2: the clean snapshot's contract against the violated snapshot
-    clean = infer_parquet(spark, tx_paths["clean"], rg_per_task=2)
-    contract = V.constraint_spec(
-        clean.schema, state=clean.state, temporal_cols=temporal
-    )
+    contract = _clean_contract(spark, tx_paths)
     _, _, vcross = infer_and_integrity_parquet(
         spark, tx_paths["viol"], rg_per_task=1, violation_spec=contract
     )
     assert vcross == _spark_truth(spark, tx_paths["viol"], contract)
-    log = tx_paths["log"]
-    logged = {
-        "required:role": len(log["null_role_rows"]),
-        "required:text": len(log["null_text_rows"]),
-        "enum:role": len(log["bad_role_rows"]),
-    }
+    logged = _logged_counts(tx_paths["log"])
     assert all(n > 0 for n in logged.values())
     assert vcross == {**dict.fromkeys(vcross, 0), **logged}
 

@@ -4,6 +4,7 @@ analogue of the reference's concurrency tests jsonschema_test.go:775-885)."""
 
 import json
 import math
+import os
 from datetime import timezone
 
 import pyarrow.parquet as pq
@@ -222,11 +223,14 @@ def test_checkpoint_resume(spark, tx_paths, tmp_path):
     full = infer_dataframe(df)
     ck = str(tmp_path / "ck")
 
-    r1, m1 = infer_with_checkpoint(df, ck, _skip_partitions={0})
-    assert not m1["complete"]
+    r1, m1 = infer_with_checkpoint(df, ck)
+    assert m1["complete"]
+    assert m1["folded_this_run"] == m1["completed_partitions"]
+    # partition 0 never committed: the resume folds it and nothing else
+    os.remove(os.path.join(ck, "states", "state_000000.json"))
     r2, m2 = infer_with_checkpoint(df, ck)
     assert m2["complete"]
-    assert 0 in m2["folded_this_run"]
+    assert m2["folded_this_run"] == [0]
     assert r2.schema_json == full.schema_json
     assert r2.total_rows == full.total_rows
     # idempotent third run folds nothing
