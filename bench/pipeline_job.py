@@ -63,7 +63,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 #         its driver thread and the fallback scan are gone.
 # rev 13 = each fused task commits a completion marker after its spill,
 #         so the same call resumes from a checkpoint directory.
-ENGINE_REV = 13
+# rev 14 = one task protocol and one reduce (checkpoint.run_task and
+#         reduce_tasks) for every inference driver; a resumed fused task
+#         must match its file's fingerprint.
+ENGINE_REV = 14
 
 
 def main():

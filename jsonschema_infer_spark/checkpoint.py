@@ -1,58 +1,54 @@
-"""Checkpoint primitives and checkpointed, resumable inference over a
-DataFrame (north_rule: "resumable from a checkpointed partition manifest
-carrying per-partition lineage and metrics").
+"""The engine's one task protocol: how every inference scan commits,
+resumes, reduces and checks its tasks (north_rule: "resumable from a
+checkpointed partition manifest carrying per-partition lineage and
+metrics").
 
-A checkpoint directory holds ``manifest.json`` and one completion marker
-per task, ``states/state_<pid>.json``: the task's partial SchemaState and
-lineage, written atomically (tmp + rename, idempotent under task retry)
-as the task's last step. ``_open_manifest`` records the run's identity
-(input files + config fingerprint) before any task runs and refuses a
-directory written for another one. A rerun skips every task whose marker
-exists. Two drivers use this layout:
-- ``infer_with_checkpoint`` (here) folds a DataFrame's own scan
-  partitions with no extra shuffle; a resumed partition checks its marker
-  before consuming its Arrow batches, so it costs an open, not a scan.
-- ``operators.pipeline.infer_and_integrity_parquet(checkpoint_dir=...)``,
-  the fused inference + integrity + contract-validation scan; its markers
-  also carry the violation vector, next to ``integrity/part-<i>.parquet``.
+A checkpoint directory holds ``manifest.json`` and one marker per task,
+``states/state_<i>.json``: {pid, rows, secs, attempt, state, violations}
+plus the task's key. ``run_task`` returns task i's ``recorded`` result
+when its marker's key equals the task's key; otherwise it runs the task
+and then ``commit``s the marker atomically (tmp + rename, idempotent
+under task retry). ``_open_manifest`` records the run's identity before
+any task runs and refuses a directory written for another one.
+``reduce_tasks`` is the one reduce: a single ``treeAggregate`` (depth 1,
+i.e. collect plus driver fold, up to ``_TREE_REDUCE_THRESHOLD`` tasks)
+whose lineage is checked at every task count.
+
+Drivers: ``infer_spark.infer_parquet`` (no markers);
+``infer_spark.infer_dataframe(checkpoint_dir=...)``, whose resumed
+partitions read their marker before consuming any Arrow batch; and
+``pipeline.infer_and_integrity_parquet``, whose markers carry the
+violation vector and whose task key is (file, row-group range,
+``file_fingerprint``), so a file rewritten in place is scanned again.
 
 This improves on the reference's ``Load`` resume (jsonschema.go:178-209),
 which reconstructs lossy synthetic counts from the OUTPUT schema; we
 checkpoint the exact aggregation STATE, so resume is lossless (SURVEY.md
-§2.1 #20). A reference-parity schema-JSON loader still exists in
-plans/render.py.
-
-On a real cluster the checkpoint dir must be shared storage (HDFS/S3/...);
-in this sandbox it is a local path, which on local[N] is equivalent.
+§2.1 #20). On a real cluster the checkpoint dir must be shared storage.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import math
 import os
 import time
 
-import pyarrow as pa
+import numpy as np
 
-from ._worker import release_zip_finders
-from .config import InferConfig, default_config
 from .operators import state as S
-from .operators.infer_spark import (
-    _infer_result,
-    fold_batches_columnar,
-    fold_batches_json,
-    merge_states,
-)
 
 MANIFEST = "manifest.json"
 STATES = "states"
 
+# Above this many tasks the reduce is a real tree, so the driver never
+# deserializes all partial states at once.
+_TREE_REDUCE_THRESHOLD = 512
 
-def config_fingerprint(
-    config: InferConfig, mode, json_column, order_cols=None
-) -> str:
-    """``mode`` names the fold: a string for ``infer_with_checkpoint``, a
+
+def config_fingerprint(config, mode, json_column, order_cols=None) -> str:
+    """``mode`` names the fold: a string for ``infer_dataframe``, a
     JSON-able description of the task layout and contract for the fused
     scan."""
     key = json.dumps(
@@ -72,6 +68,19 @@ def config_fingerprint(
     return hashlib.sha256(key.encode()).hexdigest()[:16]
 
 
+def file_fingerprint(path: str) -> str:
+    """A parquet file's identity: its size plus the sha256 of its footer
+    (the length word in the last 8 bytes says how long it is). A rewrite
+    under the same name changes it, and it costs two reads, not a scan."""
+    with open(path, "rb") as f:
+        size = f.seek(0, os.SEEK_END)
+        f.seek(max(size - 8, 0))
+        n = int.from_bytes(f.read(4), "little") + 8
+        f.seek(max(size - n, 0))
+        footer = f.read(n)
+    return f"{size}:{hashlib.sha256(footer).hexdigest()}"
+
+
 def _state_path(ckpt: str, pid: int) -> str:
     return os.path.join(ckpt, STATES, f"state_{pid:06d}.json")
 
@@ -88,6 +97,7 @@ def _open_manifest(checkpoint_dir: str, identity: dict) -> str:
     layout; on a fresh one, record ``identity`` BEFORE any task runs, so a
     run killed mid-scan still leaves behind which layout its state files
     and spills belong to. Returns the manifest path."""
+    os.makedirs(os.path.join(checkpoint_dir, STATES), exist_ok=True)
     mpath = os.path.join(checkpoint_dir, MANIFEST)
     if os.path.exists(mpath):
         with open(mpath) as f:
@@ -102,108 +112,95 @@ def _open_manifest(checkpoint_dir: str, identity: dict) -> str:
     return mpath
 
 
-def infer_with_checkpoint(
-    df,
-    checkpoint_dir: str,
-    config: InferConfig | None = None,
-    mode: str = "columnar",
-    json_column: str | None = None,
-    order_cols: list | None = None,
-):
-    """Run (or resume) a checkpointed inference. Returns (InferResult,
-    manifest dict). A run that fails mid-job leaves its finished
-    partitions' states behind; rerunning with the same checkpoint_dir folds
-    only the missing ones (``manifest['folded_this_run']``)."""
-    config = config or default_config()
-    if config.examples and not order_cols:
-        raise NotImplementedError(
-            "examples capture needs a total order: pass order_cols=[...]"
+def recorded(ckpt: str, i: int, key: dict):
+    """Task ``i``'s committed result as a ``reduce_tasks`` element, or None
+    when it has no marker or one committed under another task key. A
+    writer killed before its rename leaves only ``state_<i>.json.tmp.*``,
+    which is never read."""
+    path = _state_path(ckpt, i)
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        rec = json.load(f)
+    if any(rec.get(k) != v for k, v in key.items()):
+        return None
+    state, vec = S.state_from_jsonable(rec.pop("state")), rec.pop("violations")
+    vec = None if vec is None else np.asarray(vec, dtype=np.int64)
+    return state, rec["rows"], vec, [{**rec, "resumed": True}]
+
+
+def commit(ckpt: str, i: int, rec: dict, state: dict, vec) -> None:
+    """Commit task ``i`` after every output it spills: its marker is its
+    lineage ``rec`` (task key included), state and violation vector."""
+    vec = None if vec is None else vec.tolist()
+    marker = {**rec, "state": S.state_to_jsonable(state), "violations": vec}
+    _atomic_write(_state_path(ckpt, i), json.dumps(marker))
+
+
+def run_task(ckpt: str | None, i: int, key: dict, body) -> tuple:
+    """Task ``i``'s recorded result if ``ckpt`` holds a marker for ``key``,
+    else ``body() -> (state, rows[, violation vector])`` and its commit
+    (none with ``ckpt=None``). Returns the ``reduce_tasks`` element
+    (state, rows, vector or None, [lineage])."""
+    got = recorded(ckpt, i, key) if ckpt is not None else None
+    if got is not None:
+        return got
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    t = time.perf_counter()
+    out = body()
+    vec = out[2] if len(out) > 2 else None
+    rec = {
+        "pid": i,
+        **key,
+        "rows": out[1],
+        "secs": time.perf_counter() - t,
+        "attempt": ctx.attemptNumber() if ctx is not None else 0,
+    }
+    if ckpt is not None:
+        commit(ckpt, i, rec, out[0], vec)
+    return out[0], out[1], vec, [{**rec, "resumed": False}]
+
+
+def _combine(a: tuple, b: tuple) -> tuple:
+    # None is the identity of the state and of the violation vector
+    st = b[0] if a[0] is None else a[0] if b[0] is None else S.merge(a[0], b[0])
+    vec = b[2] if a[2] is None else a[2] if b[2] is None else a[2] + b[2]
+    return st, a[1] + b[1], vec, a[3] + b[3]
+
+
+def reduce_tasks(rdd, n_tasks: int) -> tuple:
+    """Reduce an RDD of ``run_task`` elements, one per task, with one
+    ``treeAggregate`` to (merged_state, total_rows, violation totals or
+    None, lineage). Its zero value makes an empty input an empty state,
+    where ``treeReduce`` would raise. The lineage is checked, not assumed:
+    every task id in ``range(n_tasks)`` exactly once, rows summing to the
+    total."""
+    depth = 1
+    if n_tasks > _TREE_REDUCE_THRESHOLD:
+        depth = max(2, math.ceil(math.log(n_tasks, 64)))
+    st, rows, vec, lineage = rdd.treeAggregate(
+        (None, 0, None, []), _combine, _combine, depth
+    )
+    lineage.sort(key=lambda r: r["pid"])
+    pids = [r["pid"] for r in lineage]
+    lineage_rows = sum(r["rows"] for r in lineage)
+    if pids != list(range(n_tasks)) or lineage_rows != rows:
+        raise RuntimeError(
+            f"task lineage holds tasks {pids[:10]} for {n_tasks} tasks "
+            f"and {lineage_rows} rows for {rows}"
         )
-    if config.max_samples > 0:
-        df = df.limit(config.max_samples)
+    return (st if st is not None else S.new_state()), rows, vec, lineage
 
-    os.makedirs(os.path.join(checkpoint_dir, STATES), exist_ok=True)
-    fp = config_fingerprint(config, mode, json_column, order_cols)
-    input_files = sorted(df.inputFiles())
-    n_parts = df.rdd.getNumPartitions()
-    mpath = _open_manifest(
-        checkpoint_dir,
-        {
-            "config_fingerprint": fp,
-            "input_files": input_files,
-            "num_partitions": n_parts,
-        },
-    )
 
-    ckpt = checkpoint_dir
-
-    def fold(batches):
-        from pyspark import TaskContext
-
-        try:
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx is not None else 0
-            path = _state_path(ckpt, pid)
-            if os.path.exists(path):
-                return  # resume: completed partition, skip without scanning
-            t0 = time.time()
-            if mode == "json":
-                st, rows = fold_batches_json(batches, config, json_column, order_cols)
-            else:
-                st, rows = fold_batches_columnar(batches, config, order_cols)
-            _atomic_write(
-                path,
-                json.dumps(
-                    {
-                        "pid": pid,
-                        "rows": rows,
-                        "secs": time.time() - t0,
-                        "attempt": ctx.attemptNumber() if ctx is not None else 0,
-                        "state": S.state_to_jsonable(st),
-                    }
-                ),
-            )
-            yield pa.RecordBatch.from_pydict({"pid": pa.array([pid], pa.int64())})
-        finally:
-            release_zip_finders()
-
-    t0 = time.time()
-    folded_now = [
-        r.pid for r in df.mapInArrow(fold, "pid long").collect()
-    ]
-
-    # driver: read every completed state from the manifest dir. Only
-    # exact "state_*.json" names count — a writer killed between the tmp
-    # write and os.replace leaves "state_*.json.tmp.<pid>" behind, which
-    # must not be merged (double-count) nor crash the resume (truncated)
-    states, partitions = [], []
-    for fn in sorted(os.listdir(os.path.join(ckpt, STATES))):
-        if not (fn.startswith("state_") and fn.endswith(".json")):
-            continue
-        with open(os.path.join(ckpt, STATES, fn)) as f:
-            rec = json.load(f)
-        states.append(S.state_from_jsonable(rec["state"]))
-        partitions.append((rec["pid"], rec["rows"], rec["secs"]))
-
-    result = _infer_result(
-        merge_states(states), sum(p[1] for p in partitions), partitions,
-        config, t0,
-    )
-
+def write_manifest(mpath: str, identity: dict, lineage: list, res, **extra) -> None:
+    """The finished run's manifest: identity, per-task lineage, row total,
+    schema digest and the driver's ``extra`` results."""
+    sha = hashlib.sha256(res.schema_json.encode()).hexdigest()
     manifest = {
-        "config_fingerprint": fp,
-        "mode": mode,
-        "json_column": json_column,
-        "input_files": input_files,
-        "num_partitions": n_parts,
-        "completed_partitions": sorted(p[0] for p in partitions),
-        "folded_this_run": sorted(folded_now),
-        "complete": len(partitions) >= n_parts,
-        "total_rows": result.total_rows,
-        "per_partition": [
-            {"pid": p, "rows": r, "secs": round(s, 4)} for p, r, s in partitions
-        ],
-        "schema_sha256": hashlib.sha256(result.schema_json.encode()).hexdigest(),
+        **identity, "num_tasks": len(lineage), "complete": True,
+        "total_rows": res.total_rows, "per_task": lineage,
+        "schema_sha256": sha, **extra,
     }
     _atomic_write(mpath, json.dumps(manifest, indent=2))
-    return result, manifest

@@ -6,9 +6,10 @@ Physical plan (SURVEY.md §4.3):
     scan (parquet/iceberg, columnar Arrow batches)
       -> mapInArrow partial fold: one SchemaState per partition
          (vectorized per-column observation — the seqOp)
-      -> tree merge of the tiny per-partition states (the combOp,
-         SURVEY.md §2.4) — collect+reduce for small P, RDD treeReduce
-         for large P so the driver merge stays O(sqrt P)
+      -> merge of the tiny per-partition states (the combOp, SURVEY.md
+         §2.4) through checkpoint.reduce_tasks: one treeAggregate, a
+         collect plus driver fold for small P and a real tree for large
+         P, with the per-task lineage checked either way
       -> driver finalize: predefined overrides + Go-byte-compatible render
 
 Two fold modes:
@@ -29,7 +30,6 @@ shared with the local oracle (tests assert byte-identical output).
 from __future__ import annotations
 
 import json
-import math
 import time
 from dataclasses import dataclass, field
 
@@ -38,15 +38,14 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .._worker import release_zip_finders
+from ..checkpoint import (
+    _open_manifest, config_fingerprint, reduce_tasks, run_task, write_manifest,
+)
 from ..config import InferConfig, default_config
 from ..operators import state as S
 from ..plans.render import render_schema
 
-STATE_SCHEMA = "pid long, rows long, state string, secs double"
-
-# Collect threshold: above this many partitions use RDD treeReduce so the
-# driver never deserializes all partial states at once.
-_TREE_REDUCE_THRESHOLD = 512
+STATE_SCHEMA = "state string, lineage string"
 
 
 @dataclass
@@ -644,24 +643,29 @@ def fold_batches_json(
     return st, rows
 
 
-def _make_fold(config: InferConfig, mode: str, json_column, order_cols=None):
+def _fold(batches, config: InferConfig, mode: str, json_column, order_cols):
+    if mode == "json":
+        return fold_batches_json(batches, config, json_column, order_cols)
+    return fold_batches_columnar(batches, config, order_cols)
+
+
+def _make_fold(config: InferConfig, mode: str, json_column, order_cols, ckpt):
+    """The DataFrame partition fold under the task protocol: a partition
+    committed in ``ckpt`` yields its recorded state without reading a batch."""
+
     def fn(batches):
         from pyspark import TaskContext
 
         try:
-            t0 = time.time()
-            if mode == "json":
-                st, rows = fold_batches_json(batches, config, json_column, order_cols)
-            else:
-                st, rows = fold_batches_columnar(batches, config, order_cols)
             ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx is not None else -1
+            pid = ctx.partitionId() if ctx is not None else 0
+            st, _, _, lineage = run_task(ckpt, pid, {}, lambda: _fold(
+                batches, config, mode, json_column, order_cols
+            ))
             yield pa.RecordBatch.from_pydict(
                 {
-                    "pid": pa.array([pid], pa.int64()),
-                    "rows": pa.array([rows], pa.int64()),
-                    "state": pa.array([json.dumps(S.state_to_jsonable(st))]),
-                    "secs": pa.array([time.time() - t0], pa.float64()),
+                    "state": [json.dumps(S.state_to_jsonable(st))],
+                    "lineage": [json.dumps(lineage[0])],
                 }
             )
         finally:
@@ -761,60 +765,43 @@ def infer_parquet(
         tasks = [(f, lo, hi, None) for f, lo, hi in tasks]
 
     def fold_task(item):
-        # the task's (state, rows) and its lineage entry (task, rows, secs)
         import pyarrow.parquet as pq
 
         i, (f, lo, hi, take) = item
-        t = time.perf_counter()
-        pf = pq.ParquetFile(f)
-        rgs = list(range(lo, hi)) if hi > lo else []
-        batches = pf.iter_batches(batch_size=10_000, row_groups=rgs)
-        if take is not None:
-            def limited(bs, cap=take):
-                got = 0
-                for b in bs:
-                    if got >= cap:
-                        return
-                    if got + b.num_rows > cap:
-                        b = b.slice(0, cap - got)
-                    got += b.num_rows
-                    yield b
 
-            batches = limited(batches)
-        try:
-            if mode == "json":
-                out = fold_batches_json(batches, config, json_column, order_cols)
-            else:
-                out = fold_batches_columnar(batches, config, order_cols)
-        finally:
-            release_zip_finders()
-        return out, (i, out[1], time.perf_counter() - t)
+        def limited(bs, cap):
+            for b in bs:
+                if cap <= 0:
+                    return
+                yield b.slice(0, cap)
+                cap -= b.num_rows
+
+        def body():
+            pf = pq.ParquetFile(f)
+            rgs = list(range(lo, hi)) if hi > lo else []
+            batches = pf.iter_batches(batch_size=10_000, row_groups=rgs)
+            if take is not None:
+                batches = limited(batches, take)
+            try:
+                return _fold(batches, config, mode, json_column, order_cols)
+            finally:
+                release_zip_finders()
+
+        return run_task(None, i, {"file": f, "row_groups": [lo, hi]}, body)
 
     rdd = spark.sparkContext.parallelize(
         list(enumerate(tasks)), max(len(tasks), 1)
     ).map(fold_task)
-    partitions: list = []
-    if len(tasks) > _TREE_REDUCE_THRESHOLD:
-        # treeReduce yields only the merged value: no per-task lineage
-        depth = max(2, int(math.ceil(math.log(max(len(tasks), 2), 64))))
-        merged, total_rows = rdd.map(lambda r: r[0]).treeReduce(
-            lambda a, b: (S.merge(a[0], b[0]), a[1] + b[1]), depth=depth
-        )
-    else:
-        got = rdd.collect()
-        partitions = [lineage for _, lineage in got]
-        merged = merge_states([out[0] for out, _ in got])
-        total_rows = sum(out[1] for out, _ in got)
-
-    return _infer_result(merged, total_rows, partitions, config, t0)
+    merged, total_rows, _, lineage = reduce_tasks(rdd, len(tasks))
+    return _infer_result(merged, total_rows, lineage, config, t0)
 
 
 def _infer_result(
-    merged: dict, total_rows: int, partitions: list, config: InferConfig, t0: float
+    merged: dict, total_rows: int, lineage: list, config: InferConfig, t0: float
 ) -> InferResult:
     """The driver tail every inference entry point shares: finalize the
-    merged state, render it, and wrap both with the run's lineage and the
-    wall seconds since ``t0``."""
+    merged state, render it, and wrap both with the run's (task, rows,
+    secs) lineage and the wall seconds since ``t0``."""
     schema = S.finalize(merged, config)
     return InferResult(
         state=merged,
@@ -822,7 +809,7 @@ def _infer_result(
         schema=schema,
         schema_json=render_schema(schema, config.indent),
         total_rows=total_rows,
-        partitions=partitions,
+        partitions=[(r["pid"], r["rows"], r["secs"]) for r in lineage],
         wall_secs=time.time() - t0,
     )
 
@@ -841,6 +828,7 @@ def infer_dataframe(
     json_column: str | None = None,
     num_partitions: int | None = None,
     order_cols: list | None = None,
+    checkpoint_dir: str | None = None,
 ) -> InferResult:
     """Run distributed inference over ``df`` and finalize on the driver.
 
@@ -852,6 +840,11 @@ def infer_dataframe(
     'turn_idx']) and every node's example is the value at the minimal key
     — byte-equal to a sequential fold over order-sorted rows under any
     partitioning (tests assert; merge keeps the min key, state.py).
+
+    ``checkpoint_dir`` makes the run resumable per scan partition (layout
+    in checkpoint.py; the manifest's lineage marks recorded partitions
+    ``resumed``). Not with ``num_partitions``: a resumed partition behind
+    a repartition would still pay the whole shuffle.
     """
     config = config or default_config()
     if config.examples and not order_cols:
@@ -862,33 +855,37 @@ def infer_dataframe(
         )
     if mode == "json" and not json_column:
         raise ValueError("json mode requires json_column")
+    if checkpoint_dir and num_partitions:
+        raise ValueError("checkpoint_dir resumes scan partitions: drop num_partitions")
 
     t0 = time.time()
     if config.max_samples > 0:
         df = df.limit(config.max_samples)
     if num_partitions:
         df = df.repartition(num_partitions)
+    states = df.mapInArrow(
+        _make_fold(config, mode, json_column, order_cols, checkpoint_dir),
+        STATE_SCHEMA,
+    ).rdd.map(_fold_element)
+    n_parts = states.getNumPartitions()
+    if checkpoint_dir:
+        identity = {
+            "config_fingerprint": config_fingerprint(
+                config, mode, json_column, order_cols
+            ),
+            "input_files": sorted(df.inputFiles()),
+            "num_partitions": n_parts,
+        }
+        mpath = _open_manifest(checkpoint_dir, identity)
+    merged, total_rows, _, lineage = reduce_tasks(states, n_parts)
+    res = _infer_result(merged, total_rows, lineage, config, t0)
+    if checkpoint_dir:
+        write_manifest(mpath, identity, lineage, res)
+    return res
 
-    states_df = df.mapInArrow(
-        _make_fold(config, mode, json_column, order_cols), STATE_SCHEMA
-    )
 
-    n_parts = df.rdd.getNumPartitions() if num_partitions is None else num_partitions
-    if n_parts > _TREE_REDUCE_THRESHOLD:
-        depth = max(2, int(math.ceil(math.log(max(n_parts, 2), 64))))
-        pairs_rdd = states_df.rdd.map(
-            lambda r: (S.state_from_jsonable(json.loads(r.state)), r.rows)
-        )
-        merged, total_rows = pairs_rdd.treeReduce(
-            lambda a, b: (S.merge(a[0], b[0]), a[1] + b[1]), depth=depth
-        )
-        partitions = []
-    else:
-        rows = states_df.collect()
-        partitions = [(r.pid, r.rows, r.secs) for r in rows]
-        merged = merge_states(
-            [S.state_from_jsonable(json.loads(r.state)) for r in rows]
-        )
-        total_rows = sum(r.rows for r in rows)
-
-    return _infer_result(merged, total_rows, partitions, config, t0)
+def _fold_element(row) -> tuple:
+    """A ``_make_fold`` output row as a ``reduce_tasks`` element."""
+    lineage = json.loads(row.lineage)
+    state = S.state_from_jsonable(json.loads(row.state))
+    return state, lineage["rows"], None, [lineage]

@@ -15,15 +15,17 @@ Here each (file, row-group-range) task iterates its Arrow batches ONCE:
       -> vectorized inference fold (observe every column)   \\ same
       -> per-conversation integrity pre-aggregation          | batch
       -> contract violation counter (given a violation_spec) / stream
-    inference partial  -> returned, merged via the associative combOp
-                          (collect+reduce, or treeReduce for large P)
+    inference partial  -> returned, merged by checkpoint.reduce_tasks (one
+                          treeAggregate, lineage checked at any task count)
     integrity partials -> spilled to parquet (a few % of input bytes),
                           one part file per task, reduced by
                           validate.reduce_spilled_partials (driver merge or
                           distributed, picked from the measured spill size)
     completion marker  -> the task's state, rows, violation vector and
-                          lineage, written last: the checkpoint a rerun
-                          over the same directory resumes from
+                          lineage, written last (checkpoint.run_task): the
+                          checkpoint a rerun over the same directory
+                          resumes from, keyed by (file, row-group range,
+                          file fingerprint)
 
 Results equal `infer_parquet`, `transcript_integrity_summary` and
 `violation_counts` on the same table — the folds are the same code; tests
@@ -38,30 +40,24 @@ natural distributed home is the same pass that already reads the rows.
 
 from __future__ import annotations
 
-import hashlib
-import json
-import math
 import os
 import shutil
 import tempfile
 import time
 
-import numpy as np
 import pyarrow as pa
 
 from .._worker import release_zip_finders
 from ..checkpoint import (
-    STATES, _atomic_write, _open_manifest, _state_path, config_fingerprint,
+    _open_manifest, config_fingerprint, file_fingerprint, reduce_tasks,
+    run_task, write_manifest,
 )
 from ..config import InferConfig, default_config
-from ..operators import state as S
 from .infer_spark import (
-    _TREE_REDUCE_THRESHOLD,
     _infer_result,
     _list_rg_tasks,
     fold_batches_columnar,
     list_parquet_files,
-    merge_states,
 )
 from .validate import (
     _integrity_fold,
@@ -209,9 +205,11 @@ def infer_and_integrity_parquet(
     ``checkpoint_dir`` makes the run resumable (layout in checkpoint.py):
     each task spills ``integrity/part-<i>.parquet`` and then commits its
     marker ``states/state_<i>.json``; a rerun over the directory returns
-    each committed task's recorded result instead of scanning it again.
-    The call returns complete results or raises, and finished work stays
-    on disk. ``None`` uses a temp directory, deleted afterwards.
+    each committed task's recorded result instead of scanning it again,
+    unless the task's file has changed since (size + footer hash): then
+    the task runs again and rewrites its part file. The call returns
+    complete results or raises, and finished work stays on disk. ``None``
+    uses a temp directory, deleted afterwards.
 
     ``max_samples`` is not supported here (a row budget caps inference but
     integrity must still see every row — the two folds would need
@@ -247,7 +245,6 @@ def infer_and_integrity_parquet(
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="jis_pipeline_")
     out_dir = os.path.join(ckpt, "integrity")
     os.makedirs(out_dir, exist_ok=True)
-    os.makedirs(os.path.join(ckpt, STATES), exist_ok=True)
     layout = {
         "fused": [conv_col, idx_col, rg_per_task],
         "violation_spec": violation_spec,
@@ -256,104 +253,30 @@ def infer_and_integrity_parquet(
         "config_fingerprint": config_fingerprint(config, layout, None, order_cols),
         "input_files": sorted(files),
     }
+    fingerprints = {f: file_fingerprint(f) for f in files}
 
     def run(item):
-        # the task's result and lineage; the marker, written after the
-        # part file, commits the task, and a rerun returns what it recorded
-        from pyspark import TaskContext
-
         i, (f, lo, hi) = item
-        marker = _state_path(ckpt, i)
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                rec = json.load(fh)
-            out = (S.state_from_jsonable(rec.pop("state")), rec["rows"])
-            vec = rec.pop("violations")
-            if violation_spec is not None:
-                out += (np.asarray(vec, dtype=np.int64),)
-            return out, rec
-        ctx = TaskContext.get()
-        t = time.perf_counter()
-        out = _fused_task(
+        key = {"file": f, "row_groups": [lo, hi], "fingerprint": fingerprints[f]}
+        return run_task(ckpt, i, key, lambda: _fused_task(
             f, lo, hi, config, conv_col, idx_col, out_dir, i, order_cols,
             violation_spec,
-        )
-        rec = {
-            "pid": i,
-            "file": f,
-            "row_groups": [lo, hi],
-            "rows": out[1],
-            "secs": time.perf_counter() - t,
-            "attempt": ctx.attemptNumber() if ctx is not None else 0,
-        }
-        vec = out[2].tolist() if violation_spec is not None else None
-        state = S.state_to_jsonable(out[0])
-        _atomic_write(marker, json.dumps({**rec, "state": state, "violations": vec}))
-        return out, rec
+        ))
 
     try:
         mpath = _open_manifest(ckpt, identity)
         rdd = spark.sparkContext.parallelize(
             list(enumerate(tasks)), max(len(tasks), 1)
         ).map(run)
-        vtotals = None
-        per_task: list = []
-        if len(tasks) > _TREE_REDUCE_THRESHOLD:
-            # treeReduce yields only the merged value: no per-task
-            # lineage here, as in infer_dataframe
-            rdd = rdd.map(lambda r: r[0])
-            depth = max(2, int(math.ceil(math.log(max(len(tasks), 2), 64))))
-            if violation_spec is not None:
-                merged, total_rows, vtotals = rdd.treeReduce(
-                    lambda a, b: (
-                        S.merge(a[0], b[0]), a[1] + b[1], a[2] + b[2]
-                    ),
-                    depth=depth,
-                )
-            else:
-                merged, total_rows = rdd.treeReduce(
-                    lambda a, b: (S.merge(a[0], b[0]), a[1] + b[1]),
-                    depth=depth,
-                )
-        else:
-            got = rdd.collect()
-            pairs = [out for out, _ in got]
-            per_task = [rec for _, rec in got]
-            merged = merge_states([p[0] for p in pairs])
-            total_rows = sum(p[1] for p in pairs)
-            if violation_spec is not None:
-                vtotals = sum(p[2] for p in pairs)
-            # checked, not assumed: a resume mixes recorded and fresh tasks
-            pids = sorted(r["pid"] for r in per_task)
-            lineage_rows = sum(r["rows"] for r in per_task)
-            if pids != list(range(len(tasks))) or lineage_rows != total_rows:
-                raise RuntimeError(
-                    f"fused lineage holds tasks {pids[:10]} for {len(tasks)} "
-                    f"tasks and {lineage_rows} rows for {total_rows}"
-                )
-
-        partitions = [(r["pid"], r["rows"], r["secs"]) for r in per_task]
-        res = _infer_result(merged, total_rows, partitions, config, t0)
+        merged, total_rows, vtotals, lineage = reduce_tasks(rdd, len(tasks))
+        res = _infer_result(merged, total_rows, lineage, config, t0)
         _check_spill_parts(out_dir, range(len(tasks)))
         integ = reduce_spilled_partials(spark, out_dir)
         counts = None
         if violation_spec is not None:
             counts = dict(zip(vnames, (int(v) for v in vtotals)))
-        sha = hashlib.sha256(res.schema_json.encode()).hexdigest()
-        manifest = {
-            **identity,
-            "num_tasks": len(tasks),
-            "complete": True,
-            "total_rows": total_rows,
-            "per_task": per_task,
-            "integrity": integ,
-            "violations": counts,
-            "schema_sha256": sha,
-        }
-        _atomic_write(mpath, json.dumps(manifest, indent=2))
-        if violation_spec is not None:
-            return res, integ, counts
-        return res, integ
+        write_manifest(mpath, identity, lineage, res, integrity=integ, violations=counts)
+        return (res, integ) if counts is None else (res, integ, counts)
     finally:
         if checkpoint_dir is None:
             shutil.rmtree(ckpt, ignore_errors=True)

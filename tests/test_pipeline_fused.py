@@ -228,7 +228,7 @@ def test_fused_checkpoint_resume_and_lineage(spark, tx_paths, tmp_path):
         rec = json.load(f)
     with open(marker, "w") as f:
         json.dump({**rec, "pid": 1}, f)
-    with pytest.raises(RuntimeError, match="fused lineage"):
+    with pytest.raises(RuntimeError, match="task lineage"):
         infer_and_integrity_parquet(
             spark, path, rg_per_task=1, checkpoint_dir=ckpt, violation_spec=spec
         )
@@ -319,7 +319,7 @@ def test_fused_checkpoint_fingerprint_written_before_scan(
     and per-constraint counts equal a fresh run and the injection log."""
     import pyarrow.parquet as pq
 
-    from jsonschema_infer_spark.checkpoint import infer_with_checkpoint
+    from jsonschema_infer_spark.operators.infer_spark import infer_dataframe
 
     spec = _clean_contract(spark, tx_paths)
     src = pq.read_table(tx_paths["viol"])
@@ -355,9 +355,9 @@ def test_fused_checkpoint_fingerprint_written_before_scan(
     df = spark.read.parquet(str(data))
     ckpt2 = str(tmp_path / "ckpt_infer")
     with pytest.raises(Exception):
-        infer_with_checkpoint(df, ckpt2)
+        infer_dataframe(df, checkpoint_dir=ckpt2)
     with pytest.raises(ValueError, match="does not match"):
-        infer_with_checkpoint(df, ckpt2, order_cols=["conv_id", "turn_idx"])
+        infer_dataframe(df, checkpoint_dir=ckpt2, order_cols=["conv_id", "turn_idx"])
 
     pq.write_table(
         parts[2], bad, row_group_size=len(parts[2]) // 2 + 1,
@@ -378,6 +378,162 @@ def test_fused_checkpoint_fingerprint_written_before_scan(
     assert integ == integ_d and counts == counts_d
     assert counts == {**dict.fromkeys(counts, 0), **_logged_counts(tx_paths["log"])}
     assert man["violations"] == counts
+
+
+def test_fused_checkpoint_reruns_file_rewritten_in_place(spark, tx_paths, tmp_path):
+    """A marker is reused only under its task's key (file, row-group
+    range, file fingerprint). A 2,000-conv file rewritten in place, under
+    the same name, with 3,000 convs and injected violations is scanned
+    again: the resume equals a fresh run on the new file."""
+    from jsonschema_infer_spark.sources.transcripts import (
+        generate_transcripts, inject_violations, write_parquet,
+    )
+
+    spec = _clean_contract(spark, tx_paths)
+    data = tmp_path / "data"
+    data.mkdir()
+    path = str(data / "t.parquet")
+    write_parquet(generate_transcripts(2000, seed=7), path, row_group_size=5000)
+    ckpt = str(tmp_path / "ckpt")
+    run = dict(rg_per_task=1, violation_spec=spec)
+    old, old_integ, _ = infer_and_integrity_parquet(
+        spark, str(data), checkpoint_dir=ckpt, **run
+    )
+    assert old_integ == {"dup_rows_excess": 0, "ordering_violations": 0}
+
+    viol, log = inject_violations(generate_transcripts(3000, seed=8), seed=8)
+    write_parquet(viol, path, row_group_size=5000)
+    res, integ, counts = infer_and_integrity_parquet(
+        spark, str(data), checkpoint_dir=ckpt, **run
+    )
+    res_d, integ_d, counts_d = infer_and_integrity_parquet(spark, str(data), **run)
+    assert res.schema_json == res_d.schema_json
+    assert res.total_rows == res_d.total_rows == viol.num_rows > old.total_rows
+    assert integ == integ_d and counts == counts_d
+    assert integ["dup_rows_excess"] > 0 and integ["ordering_violations"] > 0
+    assert counts == {**dict.fromkeys(counts, 0), **_logged_counts(log)}
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        man = json.load(f)
+    assert not any(r["resumed"] for r in man["per_task"])
+
+
+@pytest.fixture
+def tree_reduce(monkeypatch):
+    """Force the tree branch of checkpoint.reduce_tasks (a driver-side
+    threshold) and record the depth of every treeAggregate it runs."""
+    from pyspark import RDD
+
+    from jsonschema_infer_spark import checkpoint
+
+    depths = []
+    real = RDD.treeAggregate
+
+    def spy(self, zero, seq, comb, depth=2):
+        depths.append(depth)
+        return real(self, zero, seq, comb, depth)
+
+    monkeypatch.setattr(checkpoint, "_TREE_REDUCE_THRESHOLD", 2)
+    monkeypatch.setattr(RDD, "treeAggregate", spy)
+    return depths
+
+
+def _tamper_marker(ckpt, i, pid):
+    """Rewrite task i's committed marker as if task ``pid`` recorded it."""
+    marker = os.path.join(ckpt, "states", f"state_{i:06d}.json")
+    with open(marker) as f:
+        rec = json.load(f)
+    with open(marker, "w") as f:
+        json.dump({**rec, "pid": pid}, f)
+
+
+def test_tree_reduce_fused_lineage(spark, tx_paths, tmp_path, request):
+    """Above the threshold the fused scan reduces through a real tree and
+    still returns and checks one lineage entry per task."""
+    path = _multi_rg_copy(tx_paths, tmp_path)
+    spec = _clean_contract(spark, tx_paths)
+    want = infer_and_integrity_parquet(spark, path, rg_per_task=1, violation_spec=spec)
+    depths = request.getfixturevalue("tree_reduce")
+    ckpt = str(tmp_path / "ckpt")
+    run = dict(rg_per_task=1, checkpoint_dir=ckpt, violation_spec=spec)
+    res, integ, counts = infer_and_integrity_parquet(spark, path, **run)
+    assert depths == [2]
+    assert res.schema_json == want[0].schema_json
+    assert res.total_rows == want[0].total_rows
+    assert (integ, counts) == want[1:]
+    assert [i for i, _, _ in res.partitions] == list(range(7))
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        man = json.load(f)
+    assert [r["pid"] for r in man["per_task"]] == list(range(7))
+    assert sum(r["rows"] for r in man["per_task"]) == res.total_rows
+    _tamper_marker(ckpt, 2, 1)
+    with pytest.raises(RuntimeError, match="task lineage"):
+        infer_and_integrity_parquet(spark, path, **run)
+
+
+def test_tree_reduce_infer_parquet_lineage(spark, tx_paths, tmp_path, request):
+    path = _multi_rg_copy(tx_paths, tmp_path)
+    want = infer_parquet(spark, path, rg_per_task=1)
+    depths = request.getfixturevalue("tree_reduce")
+    res = infer_parquet(spark, path, rg_per_task=1)
+    assert depths == [2]
+    assert res.schema_json == want.schema_json
+    assert res.total_rows == want.total_rows
+    assert [i for i, _, _ in res.partitions] == list(range(7))
+    assert sum(rows for _, rows, _ in res.partitions) == res.total_rows
+
+
+@pytest.fixture
+def seven_file_df(spark, tx_paths, tmp_path):
+    """The violated fixture as 7 files of ~equal size, read with a 1-byte
+    file open cost so each file is one scan partition."""
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(tx_paths["viol"])
+    data = tmp_path / "data"
+    data.mkdir()
+    step = -(-table.num_rows // 7)
+    for k in range(7):
+        pq.write_table(table.slice(k * step, step), str(data / f"f{k}.parquet"))
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    try:
+        yield spark.read.parquet(str(data)), table
+    finally:
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+
+
+def test_tree_reduce_infer_dataframe_lineage(seven_file_df, tmp_path, request):
+    """infer_dataframe on the tree branch, repartitioned and checkpointed."""
+    from jsonschema_infer_spark.operators.infer_spark import infer_dataframe
+
+    df, table = seven_file_df
+    want = infer_dataframe(df)
+    depths = request.getfixturevalue("tree_reduce")
+    res = infer_dataframe(df, num_partitions=7)
+    assert res.schema_json == want.schema_json
+    assert res.total_rows == want.total_rows == table.num_rows
+    assert [i for i, _, _ in res.partitions] == list(range(7))
+
+    ckpt = str(tmp_path / "ckpt")
+    res = infer_dataframe(df, checkpoint_dir=ckpt)
+    assert depths == [2, 2]
+    assert res.schema_json == want.schema_json
+    assert res.total_rows == want.total_rows
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        man = json.load(f)
+    assert man["num_partitions"] == 7
+    assert [r["pid"] for r in man["per_task"]] == list(range(7))
+    assert sum(r["rows"] for r in man["per_task"]) == res.total_rows
+    _tamper_marker(ckpt, 2, 1)
+    with pytest.raises(RuntimeError, match="task lineage"):
+        infer_dataframe(df, checkpoint_dir=ckpt)
+
+
+def test_infer_parquet_empty_directory(spark, tmp_path):
+    """An empty input reduces to the zero value, not an error."""
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    res = infer_parquet(spark, str(empty))
+    assert res.total_rows == 0 and res.partitions == []
 
 
 def test_integrity_null_keys_embedded_uniqueness(spark, tmp_path, monkeypatch):

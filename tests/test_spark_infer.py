@@ -217,30 +217,43 @@ def test_examples_parquet_native_matches(spark, tmp_path):
 
 
 def test_checkpoint_resume(spark, tx_paths, tmp_path):
-    from jsonschema_infer_spark.checkpoint import infer_with_checkpoint
-
     df = spark.read.parquet(tx_paths["clean"])
     full = infer_dataframe(df)
     ck = str(tmp_path / "ck")
 
-    r1, m1 = infer_with_checkpoint(df, ck)
+    def manifest():
+        with open(os.path.join(ck, "manifest.json")) as f:
+            return json.load(f)
+
+    r1 = infer_dataframe(df, checkpoint_dir=ck)
+    m1 = manifest()
     assert m1["complete"]
-    assert m1["folded_this_run"] == m1["completed_partitions"]
+    assert r1.schema_json == full.schema_json
+    pids = [r["pid"] for r in m1["per_task"]]
+    assert pids == list(range(m1["num_partitions"]))
+    assert not any(r["resumed"] for r in m1["per_task"])
     # partition 0 never committed: the resume folds it and nothing else
     os.remove(os.path.join(ck, "states", "state_000000.json"))
-    r2, m2 = infer_with_checkpoint(df, ck)
+    r2 = infer_dataframe(df, checkpoint_dir=ck)
+    m2 = manifest()
     assert m2["complete"]
-    assert m2["folded_this_run"] == [0]
+    assert [r["pid"] for r in m2["per_task"]] == pids
+    assert [r["pid"] for r in m2["per_task"] if not r["resumed"]] == [0]
     assert r2.schema_json == full.schema_json
     assert r2.total_rows == full.total_rows
     # idempotent third run folds nothing
-    r3, m3 = infer_with_checkpoint(df, ck)
-    assert m3["folded_this_run"] == []
+    infer_dataframe(df, checkpoint_dir=ck)
+    assert all(r["resumed"] for r in manifest()["per_task"])
     # config change is rejected
     from jsonschema_infer_spark.config import default_config, DRAFT06
 
     with pytest.raises(ValueError):
-        infer_with_checkpoint(df, ck, config=default_config(schema_version=DRAFT06))
+        infer_dataframe(
+            df, config=default_config(schema_version=DRAFT06), checkpoint_dir=ck
+        )
+    # a resumed partition behind a repartition would still pay the shuffle
+    with pytest.raises(ValueError, match="num_partitions"):
+        infer_dataframe(df, num_partitions=2, checkpoint_dir=ck)
 
 
 def test_nested_fold_row_form_matches_duckdb_recursive_oracle(spark):
