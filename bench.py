@@ -11,8 +11,9 @@ violated synthetic transcript table (seed-fixed, cached under .cache/
 next to its clean twin and the injection log) validated against the
 clean table's contract in one fused scan (inference + row violations +
 uniqueness + turn ordering), reported as turns/sec — the BASELINE.json
-metric. Its per-constraint counts must equal the injection log. Scaling
-evidence across parallelism levels comes from bench_scaling.py.
+metric. Its per-constraint counts must equal the injection log.
+bench_scaling.py runs the same pipeline at local[1] and local[N] under
+spark-submit.
 """
 
 from __future__ import annotations
@@ -23,6 +24,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from contractbench.hostinfo import probe_health  # noqa: E402
 
 BENCH_QUERIES = [
     "events_column_stats",
@@ -55,108 +58,6 @@ BENCH_QUERIES = [
 ]
 
 CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache")
-
-
-# --- host-health probes (shared with bench_scaling.py) -----------------------
-# This microVM degrades on two independent axes for minutes at a time:
-# page-fault servicing (the same 256 MB numpy copy measured 29 s and 0.08 s
-# apart) and raw CPU clock (fixed single-thread burn 1.4 s healthy, 3.1 s
-# degraded with 4-5% steal). Every benchmark number is gated on both.
-
-
-def memcpy_gbps(size_mb: int = 256, reps: int = 3) -> float:
-    """First-touch + copy bandwidth probe (best of reps), GB/s."""
-    import numpy as np
-
-    a = np.zeros(size_mb * 1024 * 1024 // 8)
-    best = 1e9
-    for _ in range(reps):
-        t = time.time()
-        b = a.copy()
-        best = min(best, time.time() - t)
-        del b
-    return round(size_mb / 1024.0 / best, 2)
-
-
-def _burn(_=None):
-    s = 0
-    for i in range(20_000_000):
-        s += i % 7
-    return s
-
-
-def cpu_burn_secs() -> float:
-    """Fixed-work single-thread probe, seconds (best of 2)."""
-    best = 1e9
-    for _ in range(2):
-        t = time.time()
-        _burn()
-        best = min(best, time.time() - t)
-    return round(best, 2)
-
-
-def probe_health() -> tuple:
-    """(mem GB/s, cpu burn secs, healthy?) — healthy needs BOTH axes."""
-    gbps = memcpy_gbps()
-    burn = cpu_burn_secs()
-    return gbps, burn, gbps >= 2.0 and burn <= 2.0
-
-
-def wait_healthy(max_wait_s: float = 600.0) -> tuple:
-    """Block (bounded) until the host leaves a degraded window; fail-open
-    on a permanently slow host. Returns the last (gbps, burn_s)."""
-    deadline = time.time() + max_wait_s
-    gbps, burn, ok = probe_health()
-    while not ok and time.time() < deadline:
-        print(
-            f"  host degraded (mem {gbps} GB/s, burn {burn}s) — waiting 30s",
-            file=sys.stderr,
-            flush=True,
-        )
-        time.sleep(30)
-        gbps, burn, ok = probe_health()
-    return gbps, burn
-
-
-_PROBE_ARR = None
-
-
-def _probe_init(size_mb: int) -> None:
-    """Pool initializer: allocate + pre-fault each worker's source array
-    OUTSIDE the timed region, so the timed copy carries the same traffic
-    mix as memcpy_gbps' steady-state reps (copy + dest faults only)."""
-    global _PROBE_ARR
-    import numpy as np
-
-    _PROBE_ARR = np.zeros(size_mb * 1024 * 1024 // 8)
-    _PROBE_ARR += 1.0
-
-
-def _copy_worker(_) -> float:
-    t = time.time()
-    b = _PROBE_ARR.copy()
-    dt = time.time() - t
-    del b
-    return dt
-
-
-def parallel_memcpy_gbps(procs: int, size_mb: int = 256, reps: int = 3) -> float:
-    """AGGREGATE copy bandwidth with `procs` concurrent workers, GB/s —
-    how much wider the one memory bus gets when threads multiply. The
-    (bw_4N / bw_N) / 4 ratio is the hard ceiling for any memory-bound
-    job's N->4N scaling efficiency on this host (bench_scaling.py reports
-    it next to the measured pair). Wall-times the concurrent map of pure
-    copies (sources pre-faulted in the pool initializer)."""
-    import multiprocessing as mp
-
-    best = 1e9
-    with mp.Pool(procs, initializer=_probe_init, initargs=(size_mb,)) as p:
-        p.map(_copy_worker, range(procs), chunksize=1)  # warm pool + pages
-        for _ in range(reps):
-            t0 = time.time()
-            p.map(_copy_worker, range(procs), chunksize=1)
-            best = min(best, time.time() - t0)
-    return round(procs * size_mb / 1024.0 / best, 2)
 
 
 # the injection log's file name, next to the two snapshots
@@ -281,7 +182,7 @@ def run_suite(
         if not pipe or p["turns_per_sec"] > pipe["turns_per_sec"]:
             pipe = p
     timings["transcript_pipeline"] = round(pipe["secs"], 3)
-    mid_g, mid_b, _ = probe_health()
+    mid = probe_health()
 
     for name in BENCH_QUERIES:
         df = qs[name](spark, sf_dir)
@@ -295,7 +196,7 @@ def run_suite(
             df.write.format("noop").mode("overwrite").save()  # full exec, no collect
             best = min(best, time.time() - t0)
         timings[name] = round(best, 3)
-    return timings, pipe, {"mid_gbps": mid_g, "mid_burn_s": mid_b}
+    return timings, pipe, {"mid_gbps": mid["mem_gbps"], "mid_burn_s": mid["burn_s"]}
 
 
 def spark_resources() -> tuple:
@@ -342,30 +243,42 @@ def main() -> None:
 
     qs = E.queries()
 
-    # Health-gated measurement: wait (bounded) for a healthy window, run
-    # the suite best-of-N, re-probe after — if the window collapsed
-    # mid-suite, run again and keep the per-query minima. Probes are
-    # recorded in the output so a degraded-host number is labeled as such.
+    # Health-gated measurement (contractbench.hostinfo.probe_health: memory
+    # copy bandwidth and a fixed CPU burn): wait (bounded, fail-open on a
+    # host that stays slow) for a healthy window, run the suite best-of-N,
+    # re-probe after — if the window collapsed mid-suite, run again and
+    # keep the per-query minima. Probes are recorded in the output so a
+    # degraded-host number is labeled as such.
     timings: dict = {}
     pipe: dict = {}
     probes = []
     for attempt in range(max_attempts):
-        pre_g, pre_b = wait_healthy()
+        deadline = time.time() + 600.0
+        pre = probe_health()
+        while not pre["healthy"] and time.time() < deadline:
+            print(
+                f"  host degraded (mem {pre['mem_gbps']:.2f} GB/s, "
+                f"burn {pre['burn_s']:.3f}s) — waiting 30s",
+                file=sys.stderr,
+                flush=True,
+            )
+            time.sleep(30)
+            pre = probe_health()
         t, p, mid = run_suite(spark, qs, sf_dir, n_convs, reps, pipe_reps)
-        post_g, post_b, post_ok = probe_health()
+        post = probe_health()
         probes.append(
-            {"pre_gbps": pre_g, "pre_burn_s": pre_b,
+            {"pre_gbps": pre["mem_gbps"], "pre_burn_s": pre["burn_s"],
              **mid,
-             "post_gbps": post_g, "post_burn_s": post_b}
+             "post_gbps": post["mem_gbps"], "post_burn_s": post["burn_s"]}
         )
         timings = {k: min(v, timings.get(k, 1e9)) for k, v in t.items()}
         if not pipe or p["turns_per_sec"] > pipe["turns_per_sec"]:
             pipe = p
-        if post_ok:
+        if post["healthy"]:
             break
         print(
             f"  suite attempt {attempt + 1} tainted "
-            f"(post mem {post_g} GB/s, burn {post_b}s)",
+            f"(post mem {post['mem_gbps']:.2f} GB/s, burn {post['burn_s']:.3f}s)",
             file=sys.stderr,
             flush=True,
         )
@@ -388,8 +301,7 @@ def main() -> None:
                 "cpus": cpus,
                 "query_reps": reps,
                 "host_probes": probes,
-                "host_healthy": bool(probes and probes[-1]["post_gbps"] >= 2.0
-                                     and probes[-1]["post_burn_s"] <= 2.0),
+                "host_healthy": post["healthy"],
             }
         )
     )

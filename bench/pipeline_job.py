@@ -20,52 +20,7 @@ import sys
 # the repo root holds bench.py, whose run_transcript_pipeline this job runs
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# bumped on every engine/config change that affects timings: bench_scaling
-# stores it per paired-round side, auto-excludes rounds whose two sides ran
-# different revisions, and scopes the current-engine claim to the max rev.
-# rev 2 = fused scan + background integrity reduce overlap.
-# rev 3 = tuned validation scan (right-sized splits + AQE off for the
-#         single-agg violations pass; deleted in rev 12).
-# rev 4 = hash-keyed integrity merge (int64 conv hash spilled by map
-#         tasks; driver reduce 6.6s -> ~1s at 5M partials).
-# rev 5 = constraint build + violations codegen compiled against a
-#         one-row twin on a driver thread DURING the fused scan (deleted
-#         in rev 12).
-# rev 6 = single-pass validation: the fused scan also counts row
-#         violations against a spec guessed from row-group 0 (arrow twin
-#         of the Spark predicates, equality-tested); a wrong guess fell
-#         back to the rev-5 flow.
-# rev 7 = incremental spill watcher: the background integrity reduce's
-#         parquet decode is prepaid DURING the scan by a driver tail
-#         thread (the spill watcher, deleted in rev 10) — rev 6 removed the
-#         stages the reduce used to hide behind, exposing 1.6-8 s of
-#         integrity_wait at both parallelism levels in paired rounds.
-# rev 8 = watcher's incremental ch-merge replaced by ONE finalize radix
-#         sort: rev 7's insertion-merge was O(n²/batch) — 5-7 s of
-#         prepaid memory-bus traffic during the scan plus a 1.75 s
-#         serial tail fold; numpy stable (LSD radix) sort of the
-#         concatenated chunks is ~0.2 s at 5M hashes.
-# rev 9 = finalize made allocation-free: rev 8's concat+radix allocated
-#         ~80 MB fresh AT finalize, and this host's fault-servicing
-#         degradation (100x, invisible to bandwidth probes that pass at
-#         3 GB/s moments later) turned that 0.2 s into 5-10 s of
-#         integrity_wait in half the paired rounds. The watcher now
-#         copies chunks into a growing pre-faulted buffer DURING the
-#         scan and finalize runs one in-place introsort (~0.07-0.35 s
-#         in every host state).
-# rev 10 = one eager integrity reduce: the watcher thread and the
-#         background reduce are gone; the spill reduce runs inside the
-#         fused call.
-# rev 11 = engine tasks drop the worker's cached zip finders on exit, so
-#         PySpark's per-task importlib.invalidate_caches() re-reads no zip.
-# rev 12 = contract-first: the violated snapshot is validated against the
-#         clean snapshot's contract in the one fused scan; the spec guess,
-#         its driver thread and the fallback scan are gone.
-# rev 13 = each fused task commits a completion marker after its spill,
-#         so the same call resumes from a checkpoint directory.
-# rev 14 = one task protocol and one reduce (checkpoint.run_task and
-#         reduce_tasks) for every inference driver; a resumed fused task
-#         must match its file's fingerprint.
+# the engine revision in the result line: ties a timing to the code that made it
 ENGINE_REV = 14
 
 

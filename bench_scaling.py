@@ -1,72 +1,31 @@
 #!/usr/bin/env python
-"""Two-cluster-size scaling evidence (north_rule: throughput scaling
-efficiency >= 0.8 between N and 4N executors).
+"""Scaling run: the transcript pipeline (bench/pipeline_job.py, the
+violated snapshot validated against the clean snapshot's contract in one
+fused scan) submitted with spark-submit --py-files at local[1] and at
+local[N], N the usable CPUs ($SPARK_GRAFT_CPUS caps it, as in bench.py).
 
-No multi-node cluster exists in this sandbox; per the driver instruction the
-proxy is the SAME spark-submit --py-files job at several local[N] parallelism
-levels on identical input. This script:
+Each side runs best of $SPARK_GRAFT_BENCH_REPS (default 2) on the same
+input ($SPARK_GRAFT_BENCH_CONVS conversations, default 300000), the two
+sides alternating which goes first. Prints ONE JSON line: rows, turns/s
+per side, the efficiency (tp_N / tp_1) / N, the engine revision and the
+host-health probe before and after.
 
-  1. measures the HOST's parallel capacity with a pure-Python fixed-work
-     probe (the ceiling any job can reach on this microVM);
-  2. runs bench/pipeline_job.py (the violated snapshot validated against
-     the clean snapshot's contract in one fused scan) at
-     local[1,2,4,8,16,32], best of R reps each;
-  3. reports throughput at every level and the N->4N efficiencies for all
-     pairs, next to the host ceiling for the same pair.
-
-Key caveat recorded in BENCH/BASELINE.md: on a real N->4N EXECUTOR scale-up
-every executor brings its own disks and memory channels, so shuffle and scan
-bandwidth grow 4x too. A single VM only multiplies threads — measured here,
-the host itself delivers ~19 effective cores at 32 threads (0.65 ceiling for
-the 8->32 pair), so the in-sandbox efficiency for high pairs is bounded by
-hardware, not by the engine's plan shape.
+BENCH/BASELINE.md and BENCH/scale_evidence.json are the frozen record of
+the earlier paired-round evidence; this script does not write them.
 """
 
 import json
-import multiprocessing as mp
 import os
 import shutil
 import subprocess
 import sys
-import time
 import zipfile
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-LEVELS = [1, 2, 4, 8, 16, 32]
-PAIRS = [(1, 4), (2, 8), (4, 16), (8, 32)]
-
-# Host probes live in bench.py (shared with the driver's bench run):
-# memcpy_gbps — page-fault/copy bandwidth (flaps 0.1-4 GB/s for minutes);
-# cpu_burn_secs — fixed work, catches clock/steal degradation the memory
-# probe misses; probe_health/wait_healthy — gate on BOTH axes;
-# parallel_memcpy_gbps — AGGREGATE bus bandwidth at N workers, whose
-# (bw_4/bw_1)/4 ratio is the hard 1->4 ceiling for any memory-bound job.
-from bench import (  # noqa: E402
-    _burn,
-    cpu_burn_secs,  # noqa: F401 (re-exported for callers/tests)
-    memcpy_gbps,  # noqa: F401
-    parallel_memcpy_gbps,
-    probe_health,
-    spark_resources,
-    wait_healthy,
-)
-
-
-def round_flag(r: dict, ref_tp1: float) -> str:
-    """The "counts?" cell of a paired round: why it is excluded, if it is.
-    A round whose local[1] side was healthy can still fail the eff <= 1.0
-    plausibility gate; it must not be labelled a slow serial side."""
-    if r["healthy_base"]:
-        return "yes"
-    if r.get("external_load"):
-        return "no (external CPU load overlapped the round)"
-    if r.get("mixed_code"):
-        return "no (code changed between the round's two sides)"
-    if r["eff"] > 1.0 and r["tp1"] >= 0.75 * ref_tp1:
-        return "no (eff > 1.0, implausible)"
-    return "no (slow local[1] side)"
+from bench import ensure_bench_transcripts, spark_resources  # noqa: E402
+from contractbench.hostinfo import probe_health  # noqa: E402
 
 
 def build_pyfiles_zip(path: str) -> str:
@@ -78,89 +37,6 @@ def build_pyfiles_zip(path: str) -> str:
                     full = os.path.join(root, fn)
                     z.write(full, os.path.relpath(full, REPO))
     return path
-
-
-def _kernel_rps1_range(rounds: list) -> str:
-    ks = sorted({r["kernel_rps_1"] for r in rounds if r.get("kernel_rps_1")})
-    if not ks:
-        return "~556-748k (out-of-band)"
-    return f"{int(ks[0] / 1000)}k-{int(ks[-1] / 1000)}k"
-
-
-def _kernel_median(rounds: list) -> float | None:
-    """Median same-window kernel 1->4 efficiency over rounds carrying the
-    control measurement (true median: even counts average the middle two
-    — the upper-middle shortcut biased the headline number upward)."""
-    import statistics
-
-    vals = [r["kernel_eff"] for r in rounds if r.get("kernel_eff")]
-    return round(statistics.median(vals), 3) if vals else None
-
-
-def _kernel_task(args):
-    """One fused-pipeline task (pyarrow row-group decode + inference +
-    integrity fold — the EXACT code a Spark task runs) over row-groups
-    [lo, hi) of the bench table, for the plain-multiprocessing kernel
-    scaling measurement."""
-    path, lo, hi, i, out = args
-    import sys
-
-    sys.path.insert(0, REPO)
-    from jsonschema_infer_spark.config import default_config
-    from jsonschema_infer_spark.operators.pipeline import _fused_task
-
-    _, rows = _fused_task(
-        path, lo, hi, default_config(), "conv_id", "turn_idx", out, i
-    )
-    return rows
-
-
-def kernel_eff_1_4(data: str, k_rg: int = 12) -> dict:
-    """The job's own task kernel at 1 vs 4 plain processes — no Spark, no
-    JVM. This separates the engine's data path from Spark/host effects:
-    a ~1.0 kernel efficiency in the same window as a low Spark paired
-    ratio attributes the gap to the host/JVM interaction, not the plan."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="kern_scale_")
-    rates = {}
-    for n in (1, 4):
-        spans = [(data, i * k_rg, (i + 1) * k_rg, i, out) for i in range(n)]
-        best = 1e9
-        rows = 0
-        with mp.Pool(n) as p:
-            p.map(_kernel_task, spans, chunksize=1)  # warm cache + imports
-            for _ in range(2):
-                t0 = time.time()
-                got = p.map(_kernel_task, spans, chunksize=1)
-                dt = time.time() - t0
-                if dt < best:
-                    best, rows = dt, sum(got)
-        rates[n] = rows / best
-    return {
-        "kernel_rps_1": round(rates[1], 1),
-        "kernel_rps_4": round(rates[4], 1),
-        "kernel_eff": round((rates[4] / rates[1]) / 4.0, 3),
-    }
-
-
-def host_ceiling() -> dict:
-    """Pure-Python fixed-work-per-process probe: how many effective cores
-    does this VM actually deliver at each parallelism level?"""
-    eff = {}
-    base = None
-    for n in LEVELS:
-        best = 1e9
-        with mp.Pool(n) as p:
-            p.map(_burn, range(n))  # warm the pool
-            for _ in range(3):
-                t = time.time()
-                p.map(_burn, range(n))
-                best = min(best, time.time() - t)
-        if base is None:
-            base = best
-        eff[n] = round(n * base / best, 1)
-    return eff
 
 
 def run(master: str, snaps: tuple, out: str, mem: str) -> dict:
@@ -189,621 +65,37 @@ def run(master: str, snaps: tuple, out: str, mem: str) -> dict:
 
 
 def main():
-    n_convs = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "5000000"))
-    _, mem = spark_resources()
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    from bench import ensure_bench_transcripts
+    n_convs = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "300000"))
+    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
+    cores, mem = spark_resources()
+    snaps = ensure_bench_transcripts(n_convs)  # creates .cache/
 
-    snaps = ensure_bench_transcripts(n_convs)
-    data = snaps[1]
-    os.makedirs(os.path.join(REPO, ".cache"), exist_ok=True)
-    # Evidence lives in a GIT-TRACKED file: the first 70 rounds were kept
-    # only in .cache/ and a workspace reset wiped them (they were recovered
-    # from the rendered report). Paired rounds are expensive host-window
-    # samples — they must survive resets.
-    evid_path = os.path.join(REPO, "BENCH", "scale_evidence.json")
-    legacy_path = os.path.join(REPO, ".cache", "scale_results.json")
-    cached = None
-    for p in (evid_path, legacy_path):
-        if os.path.exists(p):
-            with open(p) as f:
-                cached = json.load(f)
-            break
-    # prior paired rounds ALWAYS accumulate (a fresh six-level sweep must
-    # not discard the round pool — each round is one irreplaceable sample
-    # of a host window)
-    prior_rounds = cached.get("rounds", []) if cached else []
-    for r in prior_rounds:
-        # scrub bw_ceiling fields recorded by the retired per-round bus
-        # probe (its timed region included allocation + pool overhead —
-        # values 0.15-1.77 were artifacts, replaced by the kernel control)
-        r.pop("bw_ceiling", None)
-
-    # Paired-only mode: additionally reuse the last full run's per-level
-    # results and ceiling probe, running only fresh paired rounds — lets
-    # later (possibly healthier) host windows improve the headline
-    # evidence without repeating the six-level sweep.
-    paired_only = os.environ.get("SPARK_GRAFT_BENCH_PAIRED_ONLY") == "1"
-    if paired_only:
-        if cached is None:
-            raise SystemExit(
-                "SPARK_GRAFT_BENCH_PAIRED_ONLY=1 but no prior evidence file "
-                f"({evid_path} or {legacy_path}); run a full sweep first "
-                "(unset SPARK_GRAFT_BENCH_PAIRED_ONLY)."
-            )
-        ceil = {int(k): v for k, v in cached["ceil"].items()}
-        results = {int(k): v for k, v in cached["results"].items()}
-    else:
-        wait_healthy(1800.0)  # the ceiling probe is a measurement too
-        ceil = host_ceiling()
-        results = {}
-
-    for n in [] if paired_only else LEVELS:
-        best = None
-        gbps_min = 1e9
-        taken = retries = 0
-        while taken < reps:
-            # gate EVERY rep on host health — and re-probe AFTER the rep:
-            # a window can collapse mid-run, so a rep only counts when the
-            # host was healthy on both sides of it (up to `reps` retries)
-            pre_gbps, pre_burn = wait_healthy(1800.0)
-            out = os.path.join(REPO, ".cache", f"scale{n}.json")
+    before = probe_health()
+    best: dict = {}
+    for rep in range(reps):
+        sides = (1, cores) if rep % 2 == 0 else (cores, 1)
+        for n in dict.fromkeys(sides):  # one side when cores == 1
+            out = os.path.join(REPO, ".cache", f"scaling_local{n}.json")
             r = run(f"local[{n}]", snaps, out, mem)
-            post_gbps, post_burn, post_ok = probe_health()
-            tainted = not post_ok and retries < reps
-            print(f"  local[{n}]: {r['turns_per_sec']:,} turns/s "
-                  f"({r['secs']}s) pre={pre_gbps}GB/s,{pre_burn}s "
-                  f"post={post_gbps}GB/s,{post_burn}s"
-                  f"{' TAINTED, retrying' if tainted else ''}", flush=True)
-            if tainted:
-                retries += 1
-                continue
-            taken += 1
-            gbps_min = min(gbps_min, pre_gbps, post_gbps)
-            if best is None or r["turns_per_sec"] > best["turns_per_sec"]:
-                best = r
-        best["host_gbps"] = gbps_min
-        results[n] = best
+            if n not in best or r["turns_per_sec"] > best[n]["turns_per_sec"]:
+                best[n] = r
+    after = probe_health()
 
-    pair_rows = []
-    for a, b in PAIRS:
-        eff = (results[b]["turns_per_sec"] / results[a]["turns_per_sec"]) / 4.0
-        hw = (ceil[b] / ceil[a]) / 4.0
-        pair_rows.append((a, b, round(eff, 3), round(hw, 3)))
-
-    best_pair = max(pair_rows, key=lambda r: r[2])
-
-    # Paired rounds for the headline pair: one local[1] rep immediately
-    # followed by one local[4] rep, efficiency computed within the round.
-    # Best-of-level ratios mix host windows (a lucky local[1] against an
-    # unlucky local[4] understates scaling on a host whose memory bandwidth
-    # flaps 1.2-4 GB/s); a paired round holds the window fixed across both
-    # sides of the ratio. Rounds are still health-gated on every probe.
-    pn, pm = 1, 4
-    paired_rounds = int(os.environ.get("SPARK_GRAFT_BENCH_PAIRED_ROUNDS", "4"))
-    rounds = []
-    attempts = 0
-    while len(rounds) < paired_rounds and attempts < paired_rounds * 2:
-        attempts += 1
-        wait_healthy(1800.0)
-        out = os.path.join(REPO, ".cache", "paired.json")
-        r1 = run(f"local[{pn}]", snaps, out, mem)
-        mid_g, mid_b, mid_ok = probe_health()
-        r4 = run(f"local[{pm}]", snaps, out, mem)
-        post_g, post_b, post_ok = probe_health()
-        eff = (r4["turns_per_sec"] / r1["turns_per_sec"]) / (pm / pn)
-        tainted = not (mid_ok and post_ok) and attempts < paired_rounds * 2
-        print(
-            f"  paired: local[{pn}] {r1['turns_per_sec']:,} -> "
-            f"local[{pm}] {r4['turns_per_sec']:,} eff={eff:.3f} "
-            f"mid={mid_g}GB/s,{mid_b}s post={post_g}GB/s,{post_b}s"
-            f"{' TAINTED, retrying' if tainted else ''}",
-            flush=True,
-        )
-        if tainted:
-            continue
-        # same-window KERNEL control: the job's own task code (decode +
-        # fused fold) at 1 vs 4 plain processes, measured right next to
-        # the Spark pair. Kernel ~1.0 + low Spark ratio in the same
-        # window = the gap is host/JVM non-stationarity, not the plan.
-        kern = kernel_eff_1_4(data)
-        print(
-            f"    kernel control: {kern['kernel_rps_1']:,.0f} -> "
-            f"{kern['kernel_rps_4']:,.0f} rows/s, eff={kern['kernel_eff']}",
-            flush=True,
-        )
-        rounds.append(
+    tp1, tpn = best[1]["turns_per_sec"], best[cores]["turns_per_sec"]
+    print(
+        json.dumps(
             {
-                "tp1": r1["turns_per_sec"],
-                "tp4": r4["turns_per_sec"],
-                "eff": round(eff, 3),
-                # per-stage wall times from both sides: lets the report
-                # attribute WHERE a low round lost its ratio (fused scan vs
-                # constraint compile vs the violations pass) instead of
-                # treating the job as one opaque number
-                "stages1": r1.get("stage_secs"),
-                "stages4": r4.get("stage_secs"),
-                # explicit engine revision from the job (see
-                # bench/pipeline_job.ENGINE_REV): lets the mixed-code and
-                # current-engine cuts survive config-only changes that the
-                # stage-key heuristic can't see
-                "rev1": r1.get("engine_rev"),
-                "rev4": r4.get("engine_rev"),
-                **kern,
+                "rows": best[1]["rows"],
+                "cores": cores,
+                "reps": reps,
+                "turns_per_sec": {"local[1]": tp1, f"local[{cores}]": tpn},
+                "efficiency": round(tpn / tp1 / cores, 3),
+                "engine_rev": best[1]["engine_rev"],
+                "probe_before": before,
+                "probe_after": after,
             }
         )
-    rounds = prior_rounds + rounds
-
-    # Bandwidth attribution for the median-vs-0.8 gap: measure the
-    # AGGREGATE memory-bus bandwidth at 1/2/4/8 concurrent workers (pure
-    # numpy copies, no Spark) and the fused job's decoded-bytes rate at
-    # local[1]. If the serial side already streams a large fraction of the
-    # single-worker bus bandwidth, the job is memory-bound and
-    # (bw_4 / bw_1) / 4 — NOT 1.0 — is the physically reachable 1->4
-    # efficiency on this one-bus VM.
-    wait_healthy(1800.0)
-    bw = {n: parallel_memcpy_gbps(n) for n in (1, 2, 4, 8)}
-    bw_ceiling_1_4 = round((bw[4] / bw[1]) / 4.0, 3)
-    import pyarrow.parquet as pq
-
-    meta = pq.ParquetFile(data).metadata
-    decoded_bytes = sum(
-        meta.row_group(i).total_byte_size for i in range(meta.num_row_groups)
     )
-    tp1_best = max([r["tp1"] for r in rounds] + [results[1]["turns_per_sec"]])
-    serial_gbps = round(
-        tp1_best * (decoded_bytes / results[32]["rows"]) / (1 << 30), 2
-    )
-
-    # A round's ratio is only meaningful if its local[1] side was itself
-    # healthy: the host's degradation hits long serial reps hardest, and a
-    # slow denominator INFLATES efficiency (one observed round: tp1 at 48%
-    # of the healthy rate -> eff "1.07", an artifact, not scaling). A round
-    # counts toward the claim when its tp1 is within 75% of the best
-    # local[1] seen anywhere, and its eff is physically plausible (<= 1.0
-    # on a fixed-size machine).
-    ref_tp1 = max(
-        [r["tp1"] for r in rounds] + [results[pn]["turns_per_sec"]]
-    )
-    for r in rounds:
-        # a paired round is only evidence when BOTH sides ran the same
-        # code: an engine edit landing between the local[1] and local[4]
-        # runs of one round skews the ratio in whichever direction the
-        # edit went. Detectable from the stage keys (the integrity-overlap
-        # rollout added "integrity_wait"): sides disagreeing on the key
-        # set ran different code.
-        s1, s4 = r.get("stages1"), r.get("stages4")
-        r["mixed_code"] = bool(s1 and s4 and set(s1) != set(s4)) or (
-            r.get("rev1") != r.get("rev4")
-        )
-        r["healthy_base"] = (
-            r["tp1"] >= 0.75 * ref_tp1
-            and r["eff"] <= 1.0
-            and not r["mixed_code"]
-            # external_load is set BY HAND (never by this script) on rounds
-            # whose window demonstrably overlapped other CPU work on the
-            # box (e.g. a pytest/bench run next to the accumulator) — the
-            # competitor steals cores from whichever side it overlaps, so
-            # the ratio is an artifact in an unknowable direction. Flagged
-            # rounds stay in the table for transparency but never count.
-            and not r.get("external_load")
-        )
-    # A hand-edit applied to the evidence FILE while this batch was in
-    # flight (~12 min) must not be clobbered by our stale start-of-run
-    # copy (ADVICE r4): re-read the file now and merge any external_load
-    # flags by round identity — (tp1, tp4) is unique across 300+ rounds
-    # (float throughputs from independent 60-90 s timings).
-    try:
-        with open(evid_path) as f:
-            _on_disk = json.load(f)
-        _flagged = {
-            (r.get("tp1"), r.get("tp4"))
-            for r in _on_disk.get("rounds", [])
-            if r.get("external_load")
-        }
-        for r in rounds:
-            if (r["tp1"], r["tp4"]) in _flagged and not r.get("external_load"):
-                r["external_load"] = True
-                r["healthy_base"] = False
-    except (OSError, ValueError):
-        pass
-    valid = [r["eff"] for r in rounds if r["healthy_base"]]
-    valid.sort()
-    paired = {
-        "pair": f"{pn}->{pm}",
-        "rounds": rounds,
-        "median_eff": (
-            round(__import__("statistics").median(valid), 3) if valid else None
-        ),
-        "best_eff": valid[-1] if valid else None,
-    }
-    evid = {"ceil": ceil, "results": results, "rounds": rounds}
-    if cached and cached.get("note"):
-        evid["note"] = cached["note"]
-    with open(evid_path, "w") as f:
-        json.dump(evid, f, indent=1)
-    summary = {
-        "metric": "turns/sec validated (inference + constraint eval)",
-        "rows": results[32]["rows"],
-        "throughput": {f"local[{n}]": results[n]["turns_per_sec"] for n in LEVELS},
-        "efficiency_pairs": {
-            f"{a}->{b}": {"measured": e, "host_ceiling": h}
-            for a, b, e, h in pair_rows
-        },
-        "best_pair": f"{best_pair[0]}->{best_pair[1]}",
-        "best_efficiency": best_pair[2],
-        "paired": paired,
-        "host_effective_cores": ceil,
-        "host_mem_gbps": {f"local[{n}]": results[n].get("host_gbps") for n in LEVELS},
-        "host_parallel_memcpy_gbps": bw,
-        "bw_ceiling_1_4": bw_ceiling_1_4,
-        "kernel_eff_1_4_median": _kernel_median(rounds),
-        "cpu_ceiling_1_4": round((ceil[4] / ceil[1]) / 4, 3),
-        "serial_decoded_gbps": serial_gbps,
-        "target": ">= 0.8 (on a real N->4N executor cluster)",
-    }
-    print(json.dumps(summary))
-
-    lines = [
-        "# BENCH baseline — transcript pipeline scaling evidence",
-        "",
-        "The same `spark-submit --py-files` job (`bench/pipeline_job.py`:",
-        "the seed-fixed violated transcript table validated against the",
-        "clean table's contract in one fused scan — schema inference, row",
-        f"violations, uniqueness and turn ordering — {results[32]['rows']:,}",
-        "turns), run at six parallelism levels, best of "
-        f"{reps} reps each.",
-        "",
-        "| config | wall sec | turns/sec | stage secs | host mem GB/s |",
-        "|---|---|---|---|---|",
-    ]
-    for n in LEVELS:
-        r = results[n]
-        # labelled per key: results reused from an older engine revision
-        # (paired-only mode) carry that revision's stages
-        stages = " / ".join(f"{k} {v}" for k, v in r["stage_secs"].items())
-        lines.append(
-            f"| local[{n}] | {r['secs']} | {r['turns_per_sec']:,} | {stages} | "
-            f"{r.get('host_gbps', '')} |"
-        )
-    lines += [
-        "",
-        "`host mem GB/s` is the worst of the 256 MB numpy first-touch+copy",
-        "probes taken immediately BEFORE and AFTER each kept rep. This",
-        "microVM degrades on two independent axes — page-fault servicing",
-        "(same copy measured 88 s and 0.15 s within minutes) and raw CPU",
-        "clock (fixed single-thread burn 1.4 s healthy, 3.1 s degraded with",
-        "4-5% steal) — so a rep counts only when memory >= 2 GB/s AND",
-        "burn <= 2.0 s on both sides (degraded reps discarded and retried).",
-        "",
-        "## N -> 4N efficiency, next to what this host can physically deliver",
-        "",
-        "A pure-Python fixed-work probe (no Spark, no IO) measures the VM's",
-        "parallel capacity — the ceiling ANY job has on this machine:",
-        "",
-        "| procs | " + " | ".join(str(n) for n in LEVELS) + " |",
-        "|---|" + "---|" * len(LEVELS),
-        "| effective cores | "
-        + " | ".join(str(ceil[n]) for n in LEVELS)
-        + " |",
-        "",
-        "| pair | measured efficiency | host ceiling for this pair |",
-        "|---|---|---|",
-    ]
-    for a, b, e, h in pair_rows:
-        lines.append(f"| local[{a}] -> local[{b}] | {e} | {h} |")
-    lines += [
-        "",
-        f"Best measured pair: local[{best_pair[0]}] -> local[{best_pair[1]}]"
-        f" at **{best_pair[2]}** (host ceiling {best_pair[3]}).",
-        "",
-        "## Paired rounds (the headline 1 -> 4 measurement)",
-        "",
-        "Best-of-level ratios mix host windows: this VM's memory bandwidth",
-        "flaps between 1.2 and 4 GB/s, so a lucky local[1] rep against an",
-        "unlucky local[4] rep understates scaling (and vice versa). A",
-        "paired round runs one local[1] rep immediately followed by one",
-        "local[4] rep and computes the efficiency inside the round — both",
-        "sides of the ratio see the same window. All probes health-gated.",
-        "A round only counts toward the claim when its local[1] side was",
-        "itself healthy (within 75% of the best local[1] seen) and the",
-        "ratio is physically plausible (<= 1.0): a degraded serial rep",
-        "INFLATES efficiency, so slow-base rounds are shown but excluded.",
-        "Rounds whose window overlapped other CPU work on the box (a test",
-        "or bench run next to the accumulator) are hand-flagged",
-        "external_load and likewise shown but excluded: the competitor",
-        "steals cores from whichever side it overlaps.",
-        "",
-        "| round | local[1] turns/s | local[4] turns/s | efficiency | same-window kernel 1->4 | counts? |",
-        "|---|---|---|---|---|---|",
-    ]
-    for i, r in enumerate(rounds, 1):
-        lines.append(
-            f"| {i} | {r['tp1']:,} | {r['tp4']:,} | {r['eff']} | "
-            f"{r.get('kernel_eff', '—')} | {round_flag(r, ref_tp1)} |"
-        )
-    # claim strictly about the 1 -> 4 pair: the best-of-level 1->4 ratio or
-    # the best healthy paired round — never another pair's ratio, which
-    # would mislabel the evidence
-    level_1_4 = next(e for a, b, e, _ in pair_rows if (a, b) == (pn, pm))
-    claim_eff = max(level_1_4, paired["best_eff"] or 0.0)
-    n_valid = sum(1 for r in rounds if r["healthy_base"])
-    lines += [
-        "",
-        f"Paired 1 -> 4 efficiency over {n_valid} healthy-base rounds "
-        f"(of {len(rounds)}): median **{paired['median_eff']}**, "
-        f"best **{paired['best_eff']}**.",
-        "",
-    ]
-    # the pool spans engine versions (the engine improved across rounds);
-    # rounds whose BOTH sides ran the current engine are the
-    # claim-relevant subset, since the question is how the engine AS
-    # SHIPPED scales, not how its older builds did. Revision of a round:
-    # the explicit engine_rev emitted by bench/pipeline_job when present,
-    # else inferred from the stage keys (integrity_wait on both sides =
-    # the overlap build = rev 2; stage data without it = rev 1)
-    def _round_rev(r):
-        if r.get("rev1") is not None and r.get("rev1") == r.get("rev4"):
-            return r["rev1"]
-        s1, s4 = r.get("stages1"), r.get("stages4")
-        if s1 and s4 and "integrity_wait" in s1 and "integrity_wait" in s4:
-            return 2
-        if s1 and s4:
-            return 1
-        return 0
-
-    max_rev = max((_round_rev(r) for r in rounds), default=0)
-    current = [
-        r
-        for r in rounds
-        if r["healthy_base"] and max_rev > 0 and _round_rev(r) == max_rev
-    ]
-    cur_median = None
-    if current:
-        import statistics as _st
-
-        cur_effs = sorted(r["eff"] for r in current)
-        cur_median = round(_st.median(cur_effs), 3)
-        lines += [
-            f"Over the {len(current)} healthy-base rounds where both sides "
-            f"ran the CURRENT engine (revision {max_rev} — older rounds in "
-            "the pool predate the serial-term fixes): median "
-            f"**{round(_st.median(cur_effs), 3)}**, "
-            f"range {cur_effs[0]}-{cur_effs[-1]}.",
-            "",
-        ]
-    staged = [
-        r
-        for r in rounds
-        if r["healthy_base"] and r.get("stages1") and r.get("stages4")
-    ]
-    # scope the stage table to the CURRENT engine when the sample allows:
-    # mixing revisions misattributes (e.g. pre-rev-6 rounds still carry a
-    # real violations stage that the one-scan pipeline fused away)
-    staged_cur = [r for r in staged if _round_rev(r) == max_rev]
-    stage_scope = "current-engine " if len(staged_cur) >= 4 else ""
-    if len(staged_cur) >= 4:
-        staged = staged_cur
-    if staged:
-        import statistics as _st
-
-        stage_lines = []
-        # the newest round's stage keys: each engine revision names its
-        # own stages, so a stage's rows are the rounds that carry it
-        for s in staged[-1]["stages1"]:
-            have = [r for r in staged if s in r["stages1"] and s in r["stages4"]]
-            effs = [
-                round((r["stages1"][s] / r["stages4"][s]) / 4.0, 3)
-                for r in have
-                if r["stages4"][s]
-            ]
-            t1m = _st.median(r["stages1"][s] for r in have)
-            if t1m < 0.5:
-                # a near-zero stage's 1->4 ratio is quantization noise
-                # (e.g. the spec compile); report its (negligible) cost,
-                # not a meaningless efficiency — and say so explicitly for
-                # EVERY stage, so the attribution row carries them all
-                # (VERDICT r4 item 6)
-                stage_lines.append(f"{s} negligible (median t1 {round(t1m, 2)}s)")
-                continue
-            if effs:
-                stage_lines.append(
-                    f"{s} {round(_st.median(effs), 3)} "
-                    f"(median t1 {round(t1m, 1)}s)"
-                )
-        waits = [
-            r["stages4"]["integrity_wait"]
-            for r in staged
-            if "integrity_wait" in r["stages4"]
-        ]
-        if waits:
-            stage_lines.append(
-                "residual integrity wait after overlap "
-                f"{_st.median(waits)}s at local[4]"
-            )
-        lines += [
-            f"Per-stage 1 -> 4 efficiency (median over {stage_scope}"
-            f"healthy-base rounds carrying stage timings, n={len(staged)}): "
-            + "; ".join(stage_lines)
-            + ". This attributes a low round's loss to a specific stage "
-            "instead of treating the job as one opaque ratio.",
-            "",
-        ]
-    # The claim, in descending order of strength: (1) the MEDIAN of the
-    # current-engine healthy-base rounds clears 0.8 over an adequate
-    # sample — the strongest admissible form; (2) a best healthy round
-    # clears 0.8 with the median gap attributed by kernel controls;
-    # (3) no round clears it — attribute, don't assert.
-    if cur_median is not None and cur_median >= 0.8 and len(current) >= 8:
-        claim_text = (
-            f"**The N -> 4N criterion (>= 0.8) is met at the MEDIAN — "
-            f"{cur_median} over the {len(current)} healthy-base rounds of "
-            "the current engine — on the 1 -> 4 pair** (best healthy round "
-            f"{claim_eff}), the pair whose 4x parallel capacity this VM "
-            "actually provides (higher pairs are bounded by the host "
-            "itself, as the probe column shows). Every contributing round "
-            "is health-gated with a HEALTHY serial base (a degraded "
-            "denominator would inflate the ratio, so those rounds are "
-            "excluded) and carries a same-window kernel control"
-            + (
-                f" (median {_kernel_median(rounds)}, at the host's own "
-                "pure-CPU pair ceiling of 0.9)."
-                if _kernel_median(rounds) is not None
-                else "."
-            )
-            + " Rounds below the median are stage-attributed to host "
-            "windows (see the per-stage split above), not plan shape."
-        )
-    elif claim_eff >= 0.8:
-        claim_text = (
-            f"**The N -> 4N criterion (>= 0.8) is met at {claim_eff} on the "
-            "1 -> 4 pair** — the pair whose 4x parallel capacity this VM "
-            "actually provides (higher pairs are bounded by the host "
-            "itself, as the probe column shows). The claiming round is "
-            "health-gated, has a HEALTHY serial base (so its ratio is not "
-            "inflated by a degraded denominator), and carries a "
-            "same-window kernel control corroborating it; the lower "
-            "healthy-base median is attributed to host non-stationarity "
-            "by the kernel controls below"
-            + (
-                f" (median {_kernel_median(rounds)}, at the host's own "
-                "pure-CPU pair ceiling of 0.9)."
-                if _kernel_median(rounds) is not None
-                else "."
-            )
-        )
-    else:
-        claim_text = (
-            f"Best healthy 1 -> 4 evidence this run: {claim_eff}. "
-            "The gap to 0.8 is ATTRIBUTED, not asserted — see the kernel "
-            "control below: the job's own task code scales ~1.0 from 1 to "
-            "4 processes in the same windows, so the paired-round spread "
-            "is the host's non-stationary virtualization behavior over "
-            "long JVM runs, not the engine's plan shape."
-        )
-    lines += [
-        claim_text,
-        "",
-        "## Attribution of the 1 -> 4 gap: kernel control vs Spark job",
-        "",
-        "Every new paired round also runs the job's OWN task kernel —",
-        "pyarrow row-group decode + the fused inference/integrity fold,",
-        "the exact per-task code (`operators/pipeline._fused_task`) —",
-        "through plain multiprocessing at 1 and 4 workers, in the same",
-        "window as the Spark pair (the `same-window kernel 1 -> 4` column",
-        "above). Result: the kernel's efficiency is "
-        + (
-            f"**{_kernel_median(rounds)} (median)**"
-            if _kernel_median(rounds)
-            else "~1.0-1.2 (measured out-of-band this round)"
-        )
-        + " — the engine's data path scales at the host's own ceiling "
-        "(the stable pure-CPU fixed-work pool pair measures 0.9: no "
-        "code on this VM scales 1->4 much above that) —",
-        "while the Spark pair in the same windows has ranged "
-        + (
-            "{}-{}.".format(
-                min(r["eff"] for r in rounds if r.get("kernel_eff")),
-                max(r["eff"] for r in rounds if r.get("kernel_eff")),
-            )
-            if any(r.get("kernel_eff") for r in rounds)
-            else "0.33-0.94."
-        ),
-        "The delta is the host, not the plan: bare Spark local[1]",
-        "throughput flaps {}k-{}k turns/s across GREEN-probed windows".format(
-            int(min(r["tp1"] for r in rounds) / 1000),
-            int(max(r["tp1"] for r in rounds) / 1000),
-        ),
-        f"(best {int(tp1_best):,}), while the bare kernel's single-process",
-        "rate in the recorded control rounds was "
-        + _kernel_rps1_range(rounds)
-        + " rows/s — FASTER than any Spark serial side, because 60-90 s",
-        "JVM runs integrate over CPU-steal and clock flaps that 15 s",
-        "health probes (and 30 s kernel runs) largely dodge.",
-        "",
-        "Supporting simple-kernel probes measured on this host: fixed-work",
-        "CPU pool scales the 1 -> 4 pair at "
-        + str(round((ceil[4] / ceil[1]) / 4, 3))
-        + "; allocation-churn (fresh 64 MB arrays, page-fault heavy) at"
-        " 0.97; raw parquet row-group decode at 1.24 (cache-warm"
-        " superlinear). An aggregate-copy-bandwidth probe was tried as a"
-        " per-round bus ceiling and RETIRED: its ratio flapped 0.25-0.88"
-        " between minutes on this host — no stable hardware ceiling below"
-        " 0.9 exists to blame, which is precisely why the job's own kernel"
-        " is the control. On a real N -> 4N EXECUTOR scale-up every"
-        " executor brings its own cores, memory channels and disks — and"
-        " no co-tenant noise shared with its baseline — which is the"
-        " regime the >= 0.8 criterion describes; the kernel control is"
-        " the transferable measurement.",
-        "",
-        "Two per-round corroborations: (a) the LOWEST healthy-base Spark",
-        "ratio recorded (0.27) sits in a window whose kernel control also",
-        "dropped to 0.731 — the window itself lost 4-way capacity, visibly",
-        "degrading even the bare data path; (b) the >= 0.8 claiming round",
-        "sits in a window whose kernel control reads 0.953. The Spark",
-        "ratio tracks the window, with extra variance from the JVM's",
-        "longer exposure. Session-level: the healthiest windows produced",
-        "the FASTEST serial sides ever measured "
-        f"(local[1] up to {int(tp1_best):,} turns/s vs 441k best-of-level) "
-        "and usually LOWER ratios — a faster denominator under a fixed",
-        "parallel-side window lowers the quotient; rounds with degraded",
-        "serial sides (excluded above) show inflated ratios up to 1.07",
-        "for the same reason.",
-        "",
-        "## The kernel control's blind spot — found and fixed (r3)",
-        "",
-        "The kernel control times the MAP side only, so it was blind to a",
-        "real engine-side Amdahl term: the driver merge of spilled per-conv",
-        "integrity partials ran 10-12 s serial at EVERY parallelism level",
-        "(it dictionary-encoded + bincounted all ~5M partial rows). Fitting",
-        "T(p) = S + P/p to paired rounds exposed S ~= 12 s; the fix",
-        "(validate._merge_partials_local: singles judged row-wise, only",
-        "multi-task stragglers grouped — one value_counts + one is_in C++",
-        "hash pass) cut it to ~2 s with identical counts. Engine-side",
-        "serial work is now merge ~2 s + constraint compile ~0.7 s against",
-        "a ~65 s serial-side job; the two batches right after the fix put",
-        "HEALTHY serial bases (429-499k turns/s) up reliably where the",
-        "batch before it sat at ~360k.",
-        "The residual round-to-round ratio spread tracks the host window,",
-        "as the same-window kernel controls show.",
-        "",
-        "## Versus the round-1 evidence (same host, same table)",
-        "",
-        "Round 1 measured the UNFUSED pipeline at 278-398k turns/s on",
-        "local[1] and recorded a 1 -> 4 efficiency of 0.825 in a healthy",
-        "host window. The fused one-pass scan then raised absolute",
-        "throughput at every level (local[1] best 554k, peak 1.86M at",
-        "local[8]) — and a faster serial baseline mechanically lowers the",
-        "measured ratio when the parallel side lands in an ordinary",
-        "window: the job got faster everywhere; the host did not get any",
-        "steadier.",
-        "",
-        "## Why higher pairs cannot express the >= 0.8 target in this sandbox",
-        "",
-        "The north_rule's criterion is N vs 4N **executors**: 4x machines",
-        "bring 4x shuffle disks, 4x memory bandwidth, 4x scan throughput.",
-        "This single microVM multiplies only threads: the probe above shows",
-        "it delivers ~" + str(ceil[32]) + " effective cores at 32 threads",
-        "(pair ceiling " + str(dict((f'{a}->{b}', h) for a, b, _, h in pair_rows).get('8->32')) + " for 8->32), and the shuffle/scan stages share one",
-        "virtio disk and one memory bus at every level. The engine-side",
-        "properties that DO transfer to a real cluster are evidenced",
-        "elsewhere in this file and in the code: 233-way splittable scan,",
-        "map-side-combined aggregations, single-shuffle integrity check,",
-        "associative treeReduce schema merge (driver work O(columns), not",
-        "O(rows)), no per-row Python, no driver-side data loops.",
-        "",
-        "Validation work per run: row constraints ("
-        + str(results[32]["row_violations"])
-        + " violations), uniqueness ("
-        + str(results[32]["dup_rows_excess"])
-        + " duplicate-key excess rows), dense turn-ordering ("
-        + str(results[32]["ordering_violations"])
-        + " violating convs) — identical counts at every parallelism level.",
-        "",
-    ]
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write("\n".join(lines))
 
 
 if __name__ == "__main__":

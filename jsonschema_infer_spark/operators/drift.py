@@ -28,8 +28,8 @@ def _paired_category_counts(
     """(cat, n_a, n_b) counts of a categorical column over two snapshots:
     one union scan, one map-side-combined groupBy shuffling only
     (category, counts) pairs — no row-proportional shuffle at any size.
-    Categories are cast to string (the ``__other__`` fold and the
-    streaming twin's reference profiles are string-keyed)."""
+    Categories are cast to string (the ``__other__`` fold is
+    string-keyed)."""
     a = df_a.select(F.col(column).cast("string").alias("cat")).where(
         F.col("cat").isNotNull()
     )
@@ -46,8 +46,7 @@ def _paired_category_counts(
 def _cap_paired_counts(g: DataFrame, k: int) -> DataFrame:
     """Bound a (cat, n_a, n_b) count table to the top-``k`` categories by
     combined count (category asc on ties — deterministic), folding the
-    rest into one ``__other__`` row. Batch twin of
-    streaming/drift._cap_category_counts: an id-like column passed as
+    rest into one ``__other__`` row. An id-like column passed as
     "categorical" then costs a ``k+1``-row driver collect instead of an
     O(categories) OOM. Top-k is TakeOrderedAndProject (distributed partial
     top-k, no global sort); the remainder fold is a broadcast anti-join +
@@ -74,9 +73,9 @@ def categorical_drift(
     The groupBy shuffles only (category, count) pairs — map-side combined,
     so cost is a scan regardless of table size. The driver collect is
     bounded by ``max_categories``: beyond it, the tail folds DISTRIBUTED
-    into one ``__other__`` category on BOTH sides (same top-K+other cap
-    the streaming monitors use — both sides must share one partition of
-    the category space for the homogeneity test to mean anything). Pass
+    into one ``__other__`` category on BOTH sides (one top-K+other cap —
+    both sides must share one partition of the category space for the
+    homogeneity test to mean anything). Pass
     ``max_categories=None`` to collect the full domain."""
     g = _paired_category_counts(df_a, df_b, column)
     if max_categories is not None:
@@ -222,8 +221,8 @@ def psi_categorical(
     decimals for deterministic comparison.
 
     Output cardinality is bounded by ``max_categories`` (top-K by combined
-    count, tail folded distributed into ``__other__`` — the same cap the
-    streaming monitors apply), so a caller's ``.collect()`` on the result
+    count, tail folded distributed into ``__other__`` — the same cap as
+    ``categorical_drift``), so a caller's ``.collect()`` on the result
     can't OOM the driver when handed an id-like column. Totals (and hence
     the summed PSI's category partition) are fold-exact. ``None`` skips
     the cap."""
@@ -288,7 +287,7 @@ def psi_numeric(
     width = (hi - lo) / bins if hi > lo else 1.0
     # clamp BOTH edges: with an explicitly pinned lo, values below it must
     # collapse into bucket 0 the way values past hi collapse into bins-1
-    # (matches streaming.windowed_histogram_counts and the SQL oracle)
+    # (matches the SQL oracle)
     bucket = F.greatest(
         F.lit(0).cast("long"),
         F.least(

@@ -86,8 +86,9 @@ def _fused_task(
     ``violation_spec`` is given — the same batch stream then ALSO feeds
     the arrow violation counter (validate.arrow_violation_counter), so a
     contract's constraint spec is validated in this one pass instead of a
-    second whole-table scan. Shared by the direct and checkpointed
-    pipelines (and driven standalone by bench_scaling's kernel control)."""
+    second whole-table scan. Run by ``infer_and_integrity_parquet`` (with or
+    without a checkpoint directory) and, one task at a time without Spark,
+    by contractbench's layer replay."""
     import os
 
     import pyarrow.parquet as pq

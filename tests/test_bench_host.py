@@ -1,9 +1,11 @@
-"""Bench defaults fit the host; the scaling report labels exclusions by
-their cause; the headline pipeline checks its counts against the
+"""Bench defaults fit the host; the scaling run's --py-files zip holds
+the whole package; the headline pipeline checks its counts against the
 injection log."""
 
 import json
 import os
+import subprocess
+import zipfile
 
 import pytest
 
@@ -33,26 +35,25 @@ def test_spark_resources_refuse_more_cores_than_host(monkeypatch):
         bench.spark_resources()
 
 
-@pytest.mark.parametrize(
-    "round_, label",
-    [
-        ({"healthy_base": True, "tp1": 700, "eff": 0.9}, "yes"),
-        # healthy serial side, excluded only by the eff <= 1.0 gate
-        ({"healthy_base": False, "tp1": 700, "eff": 1.009},
-         "no (eff > 1.0, implausible)"),
-        # slow serial side (tp1 < 75% of the best): the slow label wins
-        ({"healthy_base": False, "tp1": 500, "eff": 1.167},
-         "no (slow local[1] side)"),
-        ({"healthy_base": False, "tp1": 500, "eff": 0.9},
-         "no (slow local[1] side)"),
-        ({"healthy_base": False, "tp1": 700, "eff": 1.2, "mixed_code": True},
-         "no (code changed between the round's two sides)"),
-        ({"healthy_base": False, "tp1": 700, "eff": 1.2, "external_load": True},
-         "no (external CPU load overlapped the round)"),
-    ],
-)
-def test_round_flag_names_the_exclusion_cause(round_, label):
-    assert bench_scaling.round_flag(round_, ref_tp1=800) == label
+def test_pyfiles_zip_holds_every_tracked_module(tmp_path):
+    """bench_scaling ships the package to spark-submit workers as this zip:
+    every git-tracked module must be in it, and no deleted package."""
+    try:
+        tracked = subprocess.run(
+            ["git", "ls-files", "jsonschema_infer_spark/*.py"],
+            cwd=bench_scaling.REPO, capture_output=True, text=True, check=True,
+        ).stdout.split()
+    except (OSError, subprocess.CalledProcessError):
+        pytest.skip("not a git checkout")
+    zip_path = bench_scaling.build_pyfiles_zip(str(tmp_path / "jis.zip"))
+    with zipfile.ZipFile(zip_path) as z:
+        names = set(z.namelist())
+    assert {
+        "jsonschema_infer_spark/_worker.py",
+        "jsonschema_infer_spark/checkpoint.py",
+    } <= set(tracked)
+    assert set(tracked) <= names
+    assert not [n for n in names if n.startswith("jsonschema_infer_spark/streaming/")]
 
 
 def test_transcript_pipeline_checks_counts_against_log(spark, tx_paths, tmp_path):

@@ -225,27 +225,6 @@ def test_multimodal_plumbing(spark):
     assert plan.filter(F.col("n_frames") <= 0).count() == 0
 
 
-def test_streaming_incremental_inference(spark, tx_paths, tmp_path):
-    """foreachBatch incremental fold == batch fold over the same data."""
-    from jsonschema_infer_spark.operators.infer_spark import infer_dataframe
-    from jsonschema_infer_spark.streaming.incremental import IncrementalInferrer
-
-    df = spark.read.parquet(tx_paths["clean"])
-    inc = IncrementalInferrer(str(tmp_path / "state"))
-    # simulate micro-batches deterministically (3 slices by bucket)
-    b = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(3))
-    for i in range(3):
-        inc(df.filter(b == i), batch_id=i)
-    batch = infer_dataframe(df)
-    assert inc.current_schema_json() == batch.schema_json
-    # replayed batch id is a no-op (exactly-once)
-    inc(df.limit(50), batch_id=2)
-    assert inc.current_schema_json() == batch.schema_json
-    # a fresh instance resumes from the persisted state
-    inc2 = IncrementalInferrer(str(tmp_path / "state"))
-    assert inc2.current_schema_json() == batch.schema_json
-
-
 def test_md5_hash64_matches_python(spark):
     """md5_hash64 is the engine-portability contract: first 15 md5 hex
     chars as a 60-bit BIGINT, identical in Spark, DuckDB and hashlib."""

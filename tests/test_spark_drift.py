@@ -3,6 +3,7 @@ and both KS checks must reject at alpha=0.01; tool chi2 must NOT reject
 (false-positive guard)."""
 
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 
 from jsonschema_infer_spark.operators.drift import (
     categorical_drift,
@@ -239,3 +240,46 @@ def test_batch_drift_cap_noop_below_k(spark):
     r_full = categorical_drift(a, b, "cat", max_categories=None)
     assert r_cap["statistic"] == pytest.approx(r_full["statistic"])
     assert r_cap["dof"] == r_full["dof"]
+
+
+# (cat, n_a, n_b) tables as _paired_category_counts builds them (every
+# category seen at least once; counts 0-2 so ranks tie often) and a k
+# that mostly cuts through them
+@st.composite
+def _capped_tables(draw):
+    table = draw(st.dictionaries(
+        keys=st.text(alphabet="abc", min_size=1, max_size=3),
+        values=st.tuples(st.integers(0, 2), st.integers(0, 2)).filter(any),
+        min_size=1,
+        max_size=30,
+    ))
+    return table, draw(st.integers(1, len(table) + 1))
+
+
+@settings(max_examples=20, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(case=_capped_tables())
+def test_cap_paired_counts_matches_python_top_k(spark, case):
+    """The cap against a pure-Python top-k fold: the kept set is the top
+    k by n_a + n_b with cat ascending on ties, the fold keeps both totals
+    exactly, and a table of at most k categories gets no __other__ row."""
+    from jsonschema_infer_spark.operators.drift import OTHER_BUCKET, _cap_paired_counts
+
+    table, k = case
+    g = spark.createDataFrame(
+        [(c, a, b) for c, (a, b) in table.items()], "cat string, n_a long, n_b long"
+    )
+    rows = _cap_paired_counts(g, k).collect()
+    got = {r.cat: (r.n_a, r.n_b) for r in rows}
+    assert len(got) == len(rows)
+
+    ranked = sorted(table, key=lambda c: (-sum(table[c]), c))
+    assert set(got) - {OTHER_BUCKET} == set(ranked[:k])
+    assert all(got[c] == table[c] for c in ranked[:k])
+    for side in (0, 1):
+        assert sum(v[side] for v in got.values()) == sum(v[side] for v in table.values())
+    if len(table) <= k:
+        assert OTHER_BUCKET not in got
+    else:
+        rest = ranked[k:]
+        assert got[OTHER_BUCKET] == tuple(sum(table[c][s] for c in rest) for s in (0, 1))
