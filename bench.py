@@ -107,11 +107,10 @@ def run_transcript_pipeline(spark, snaps: tuple) -> dict:
     # whose length is its count; every other constraint counts 0
     from contractbench.snapshots import LOGGED_CONSTRAINTS
     from jsonschema_infer_spark.operators import validate as V
-    from jsonschema_infer_spark.operators.infer_spark import infer_parquet
     from jsonschema_infer_spark.operators.pipeline import infer_and_integrity_parquet
 
     clean, violated, log_path = snaps
-    contract = infer_parquet(spark, clean)
+    contract, _ = infer_and_integrity_parquet(spark, clean)
     temporal = V.temporal_columns(spark.read.parquet(violated))
     # task granularity scaled to the cluster: aim for >=6 waves of fused
     # scan tasks per core so the last wave can't strand most of the cluster

@@ -14,8 +14,7 @@ any task runs and refuses a directory written for another one.
 i.e. collect plus driver fold, up to ``_TREE_REDUCE_THRESHOLD`` tasks)
 whose lineage is checked at every task count.
 
-Drivers: ``infer_spark.infer_parquet`` (no markers);
-``infer_spark.infer_dataframe(checkpoint_dir=...)``, whose resumed
+Drivers: ``infer_spark.infer_dataframe(checkpoint_dir=...)``, whose resumed
 partitions read their marker before consuming any Arrow batch; and
 ``pipeline.infer_and_integrity_parquet``, whose markers carry the
 violation vector and whose task key is (file, row-group range,

@@ -194,20 +194,6 @@ def is_url(value: str) -> bool:
 # --- vectorized forms --------------------------------------------------------
 
 
-def _vec_regex(pattern: re.Pattern):
-    def fn(s: pd.Series) -> pd.Series:
-        return s.str.match(pattern).fillna(False)
-
-    return fn
-
-
-def _vec_scalar(scalar):
-    def fn(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: scalar(v) if isinstance(v, str) else False)
-
-    return fn
-
-
 def vec_is_date_time(s: pd.Series) -> pd.Series:
     """Vectorized RFC 3339: regex shape gate, then exact field validation
     only on the (usually tiny) surviving subset."""

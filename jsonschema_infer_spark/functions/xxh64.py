@@ -95,14 +95,6 @@ def xxh64_int32(value: int, seed: int) -> int:
     return _fmix(h)
 
 
-def xxh64_int64(value: int, seed: int) -> int:
-    """Spark's 8-byte finalizer (long columns): hashLong."""
-    h = (seed + _P5 + 8) & _M
-    h ^= (_rotl(((value & _M) * _P2) & _M, 31) * _P1) & _M
-    h = (_rotl(h, 27) * _P1 + _P4) & _M
-    return _fmix(h)
-
-
 def to_signed(h: int) -> int:
     """Unsigned 64-bit -> the signed long Spark returns."""
     return h - (1 << 64) if h >= (1 << 63) else h

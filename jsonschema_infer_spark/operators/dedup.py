@@ -10,17 +10,14 @@ Four families, each scale-shaped differently:
   expressions), banded into LSH buckets, candidates from bucket joins,
   then EXACT Jaccard verification of candidates only — the 100 TB path
   (no all-pairs term ever materializes);
-- SimHash: 64-bit near-dup signature via an Arrow-vectorized pandas UDF
-  (numpy bit-twiddling; the one operator where a JVM expression would be
-  64 aggregates per row), hamming-distance bucketing on 4 16-bit chunks.
+- SimHash: 64-bit near-dup signature from one groupBy with 64 per-bit
+  majority-vote sums (pure JVM), hamming-distance bucketing on 4 16-bit
+  chunks.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 
 from .text import WS, normalize_text, fingerprint
 
@@ -449,41 +446,6 @@ def minhash_lsh_pairs(
 
 
 # --- SimHash ---------------------------------------------------------------------
-
-
-def simhash_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Arrow-vectorized SimHash variant (numpy bit ops per batch) — the
-    pandas-UDF surface demo; prefer simhash_table (pure JVM) on hot paths.
-    NOTE: python hash() is salted per-process unless PYTHONHASHSEED is
-    pinned; Spark pins it for workers, so signatures are stable within a
-    job — use simhash_table for cross-run stability."""
-
-    @pandas_udf("long")
-    def _simhash64(texts: pd.Series) -> pd.Series:
-        out = np.zeros(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
-            if not t:
-                continue
-            toks = t.lower().split()
-            if not toks:
-                continue
-            hs = np.fromiter(
-                (hash(tok) & 0xFFFFFFFFFFFFFFFF for tok in toks),
-                dtype=np.uint64,
-                count=len(toks),
-            )
-            bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & 1).astype(
-                np.int32
-            )
-            counts = bits.sum(axis=0)
-            sig = np.uint64(0)
-            for b in range(64):
-                if counts[b] * 2 >= len(toks):
-                    sig |= np.uint64(1) << np.uint64(b)
-            out[i] = np.int64(sig.astype(np.int64))
-        return pd.Series(out)
-
-    return df.withColumn("simhash", _simhash64(F.col(text_col)))
 
 
 def simhash_table(

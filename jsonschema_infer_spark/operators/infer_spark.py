@@ -643,12 +643,6 @@ def fold_batches_json(
     return st, rows
 
 
-def _fold(batches, config: InferConfig, mode: str, json_column, order_cols):
-    if mode == "json":
-        return fold_batches_json(batches, config, json_column, order_cols)
-    return fold_batches_columnar(batches, config, order_cols)
-
-
 def _make_fold(config: InferConfig, mode: str, json_column, order_cols, ckpt):
     """The DataFrame partition fold under the task protocol: a partition
     committed in ``ckpt`` yields its recorded state without reading a batch."""
@@ -659,8 +653,10 @@ def _make_fold(config: InferConfig, mode: str, json_column, order_cols, ckpt):
         try:
             ctx = TaskContext.get()
             pid = ctx.partitionId() if ctx is not None else 0
-            st, _, _, lineage = run_task(ckpt, pid, {}, lambda: _fold(
-                batches, config, mode, json_column, order_cols
+            st, _, _, lineage = run_task(ckpt, pid, {}, lambda: (
+                fold_batches_json(batches, config, json_column, order_cols)
+                if mode == "json"
+                else fold_batches_columnar(batches, config, order_cols)
             ))
             yield pa.RecordBatch.from_pydict(
                 {
@@ -700,100 +696,6 @@ def _list_rg_tasks(paths: list, rg_per_task: int) -> list:
         for i in range(0, max(n, 1), rg_per_task):
             tasks.append((f, i, min(i + rg_per_task, n)))
     return tasks
-
-
-def infer_parquet(
-    spark,
-    path: str,
-    config: InferConfig | None = None,
-    mode: str = "columnar",
-    json_column: str | None = None,
-    rg_per_task: int = 4,
-    order_cols: list | None = None,
-) -> InferResult:
-    """Distributed inference reading parquet DIRECTLY in python tasks.
-
-    ``mapInArrow`` pays Spark's columnar->row->arrow double conversion on
-    every row (measured 27s vs 6.4s single-core on a 10.4M-row table);
-    since inference observes whole columns with no predicate to push down,
-    the idiomatic fix is the native-reader pattern: schedule (file,
-    row-group-range) splits as Spark tasks and let each task run the
-    vectorized fold straight off the (memory-mapped, column-pruned-free)
-    pyarrow scan. Results are value-identical to infer_dataframe — the
-    fold and merge are the same code; tests byte-compare.
-
-    Executors must see the files (posix path or shared FS). For Iceberg
-    tables use infer_dataframe on the catalog read instead.
-
-    ``max_samples`` caps rows deterministically in (file, row-group, row)
-    order; ``order_cols`` enables distributed examples capture exactly as
-    in infer_dataframe."""
-    config = config or default_config()
-    if config.examples and not order_cols:
-        raise NotImplementedError(
-            "examples capture needs a total order in distributed mode: pass "
-            "order_cols=[...] (e.g. ['conv_id', 'turn_idx'])"
-        )
-    if mode == "json" and not json_column:
-        raise ValueError("json mode requires json_column")
-
-    t0 = time.time()
-    tasks = _list_rg_tasks(list_parquet_files(path), rg_per_task)
-
-    # max_samples (options.go:50-54): a deterministic ROW budget in (file,
-    # row-group, row) order — the native reader's stable total order, the
-    # same determinism infer_dataframe gets from a pushed-down limit. Tasks
-    # beyond the cap are dropped before scheduling (partition pruning).
-    if config.max_samples > 0:
-        import pyarrow.parquet as pq
-
-        remaining = config.max_samples
-        budgeted = []
-        meta_cache: dict = {}
-        for f, lo, hi in tasks:
-            if remaining <= 0:
-                break
-            md = meta_cache.get(f)
-            if md is None:
-                md = meta_cache[f] = pq.ParquetFile(f).metadata
-            in_task = sum(md.row_group(i).num_rows for i in range(lo, hi))
-            take = min(in_task, remaining)
-            budgeted.append((f, lo, hi, take))
-            remaining -= take
-        tasks = budgeted
-    else:
-        tasks = [(f, lo, hi, None) for f, lo, hi in tasks]
-
-    def fold_task(item):
-        import pyarrow.parquet as pq
-
-        i, (f, lo, hi, take) = item
-
-        def limited(bs, cap):
-            for b in bs:
-                if cap <= 0:
-                    return
-                yield b.slice(0, cap)
-                cap -= b.num_rows
-
-        def body():
-            pf = pq.ParquetFile(f)
-            rgs = list(range(lo, hi)) if hi > lo else []
-            batches = pf.iter_batches(batch_size=10_000, row_groups=rgs)
-            if take is not None:
-                batches = limited(batches, take)
-            try:
-                return _fold(batches, config, mode, json_column, order_cols)
-            finally:
-                release_zip_finders()
-
-        return run_task(None, i, {"file": f, "row_groups": [lo, hi]}, body)
-
-    rdd = spark.sparkContext.parallelize(
-        list(enumerate(tasks)), max(len(tasks), 1)
-    ).map(fold_task)
-    merged, total_rows, _, lineage = reduce_tasks(rdd, len(tasks))
-    return _infer_result(merged, total_rows, lineage, config, t0)
 
 
 def _infer_result(

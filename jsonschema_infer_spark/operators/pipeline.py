@@ -3,11 +3,11 @@ a SINGLE native parquet scan.
 
 The north_rule pipeline is infer -> compile -> validate. Composed from the
 standalone operators it scans the table twice before validation: once for
-the inference fold (`infer_parquet`) and once for the integrity fold
-(`validate.transcript_integrity_summary`). Both folds are per-partition
-pre-aggregations over the same rows — the classic multi-aggregate fusion a
-100 TB job cannot afford to skip, since the second scan is the same IO all
-over again.
+the inference fold (`infer_spark.infer_dataframe`) and once for the
+integrity fold (`validate.transcript_integrity_summary`). Both folds are
+per-partition pre-aggregations over the same rows — the classic
+multi-aggregate fusion a 100 TB job cannot afford to skip, since the
+second scan is the same IO all over again.
 
 Here each (file, row-group-range) task iterates its Arrow batches ONCE:
 
@@ -27,10 +27,11 @@ Here each (file, row-group-range) task iterates its Arrow batches ONCE:
                           resumes from, keyed by (file, row-group range,
                           file fingerprint)
 
-Results equal `infer_parquet`, `transcript_integrity_summary` and
+Results equal `infer_dataframe`, `transcript_integrity_summary` and
 `violation_counts` on the same table — the folds are the same code; tests
 assert equality on clean, violated and NULL-key tables, fresh and resumed.
-`infer_and_integrity_parquet` is the one driver of this scan.
+`infer_and_integrity_parquet` is the one driver of this scan and the one
+inference driver for parquet input.
 
 Reference anchor: the sequential equivalent is AddSample folding each
 document once (`/root/reference/jsonschema.go:57-92`); validation is the
@@ -102,8 +103,6 @@ def _fused_task(
     vnames: list = []
     if violation_spec is not None:
         vnames, counter = arrow_violation_counter(violation_spec, pf.schema_arrow)
-    # batch_size matches infer_parquet so the inference fold sees the
-    # exact same batch boundaries (value-identical partials)
     batches = pf.iter_batches(batch_size=10_000, row_groups=list(range(lo, hi)))
     kept: list = []
     ns = pf.schema_arrow.names
@@ -190,9 +189,11 @@ def infer_and_integrity_parquet(
     violation_spec: list | None = None,
 ) -> tuple:
     """Fused scan: returns ``(InferResult, integrity_dict)`` where the
-    InferResult equals ``infer_parquet(spark, path, config, ...)`` and the
-    dict equals ``transcript_integrity_summary`` over the same rows — one
-    data pass for both.
+    InferResult equals ``infer_dataframe(spark.read.parquet(path), config,
+    ...)`` and the dict equals ``transcript_integrity_summary`` over the
+    same rows — one data pass for both. This is the one inference driver
+    for parquet input; a capped (``max_samples``) or JSON-column inference
+    reads the table with ``infer_dataframe`` instead.
 
     ``violation_spec`` is the constraint spec of a contract known before
     the scan (``validate.constraint_spec`` of a schema inferred from a
@@ -214,14 +215,14 @@ def infer_and_integrity_parquet(
 
     ``max_samples`` is not supported here (a row budget caps inference but
     integrity must still see every row — the two folds would need
-    different scans, defeating the fusion); use infer_parquet and
+    different scans, defeating the fusion); use infer_dataframe and
     transcript_integrity_summary for that configuration."""
     config = config or default_config()
     if config.max_samples > 0:
         raise ValueError(
             "max_samples caps the inference scan but integrity must see "
-            "every row; run infer_parquet + transcript_integrity_summary "
-            "separately for capped inference"
+            "every row; run infer_dataframe(spark.read.parquet(path)) + "
+            "transcript_integrity_summary separately for capped inference"
         )
     if config.examples and not order_cols:
         raise NotImplementedError(
@@ -233,15 +234,18 @@ def infer_and_integrity_parquet(
     tasks = _list_rg_tasks(files, rg_per_task)
 
     if violation_spec is not None:
-        # validate support up front (raises UnsupportedArrowSpec on the
-        # driver, not inside 200 tasks) and capture the constraint names
         import pyarrow.parquet as _pq
 
-        from .validate import arrow_violation_counter
+        from .validate import arrow_violation_counter, constraint_name
 
-        vnames, _ = arrow_violation_counter(
-            violation_spec, _pq.ParquetFile(tasks[0][0]).schema_arrow
-        )
+        if tasks:
+            # validate support up front (raises UnsupportedArrowSpec on the
+            # driver, not inside 200 tasks) and capture the constraint names
+            vnames, _ = arrow_violation_counter(
+                violation_spec, _pq.ParquetFile(tasks[0][0]).schema_arrow
+            )
+        else:  # an empty table violates nothing
+            vnames = [constraint_name(e) for e in violation_spec]
 
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="jis_pipeline_")
     out_dir = os.path.join(ckpt, "integrity")
@@ -275,7 +279,10 @@ def infer_and_integrity_parquet(
         integ = reduce_spilled_partials(spark, out_dir)
         counts = None
         if violation_spec is not None:
-            counts = dict(zip(vnames, (int(v) for v in vtotals)))
+            # no tasks leave no violation vector: every count is 0
+            counts = dict.fromkeys(vnames, 0)
+            if vtotals is not None:
+                counts.update(zip(vnames, (int(v) for v in vtotals)))
         write_manifest(mpath, identity, lineage, res, integrity=integ, violations=counts)
         return (res, integ) if counts is None else (res, integ, counts)
     finally:

@@ -69,19 +69,17 @@ def run_validation_report(
     )
 
     bucket_col = conv_col if conv_col in df.columns else df.columns[0]
-    verdicts = V.partition_verdicts(
+    verdicts_path = os.path.join(out_dir, "verdicts.parquet")
+    V.partition_verdicts(
         df, cons, bucket_col=bucket_col, num_buckets=num_buckets
-    )
-    verdicts.write.mode("overwrite").parquet(
-        os.path.join(out_dir, "verdicts.parquet")
-    )
+    ).write.mode("overwrite").parquet(verdicts_path)
 
-    counts = {
-        r.constraint: int(r.violation_count)
-        for r in V.violation_counts(df, cons).collect()
-    }
+    # the run's totals are the column sums of its (at most num_buckets)
+    # verdict rows: no second scan of df; a table with no rows has none
+    buckets = df.sparkSession.read.parquet(verdicts_path).collect()
+    counts = {c.name: sum(int(b[c.name]) for b in buckets) for c in cons}
     metrics = {
-        "rows": df.count() if reference is not None else res.total_rows,
+        "rows": sum(int(b["rows"]) for b in buckets),
         "constraints": counts,
         "violation_total": int(sum(counts.values())),
         "wall_secs": round(time.time() - t0, 3),

@@ -287,17 +287,3 @@ def fingerprint(col: Column) -> Column:
     """Deterministic document fingerprint: md5 of the normalized text
     (portable across engines — DuckDB md5() agrees byte-for-byte)."""
     return F.md5(normalize_text(col))
-
-
-def rolling_fingerprint(col: Column, window: int = 8) -> Column:
-    """Winnowing-style content fingerprint: md5 over the sequence of
-    per-window-min token hashes — robust to small edits at the ends.
-    Pure Spark expressions: tokens -> xxhash64 -> sliding-window mins."""
-    tokens = F.split(normalize_text(col), " ")
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t))
-    n = F.size(hashes)
-    idx = F.sequence(F.lit(0), F.greatest(n - window, F.lit(0)))
-    mins = F.transform(
-        idx, lambda i: F.array_min(F.slice(hashes, i + 1, window))
-    )
-    return F.md5(F.to_json(mins))

@@ -161,20 +161,26 @@ def constraint_spec(
     return out
 
 
+def constraint_name(entry: tuple) -> str:
+    """The name of a spec entry's constraint, the key its violations are
+    counted under: ``kind:column``, and ``format:column:format``."""
+    kind, name = entry[0], entry[1]
+    return f"format:{name}:{entry[2]}" if kind == "format" else f"{kind}:{name}"
+
+
 def build_constraints(spec: list, custom_predicates: dict | None = None) -> list:
     """Build Column predicates from a `constraint_spec` plan (the py4j
     half — each expression node is a JVM round trip, ~0.5 s for a typical
     table)."""
     out: list = []
-    nullsafe = lambda c, p: c.isNull() | p  # noqa: E731
     for entry in spec:
         kind, name = entry[0], entry[1]
+        cname = constraint_name(entry)
         col = F.col(name)
         if kind == "required":
-            out.append(
-                Constraint(f"required:{name}", name, "required", col.isNotNull())
-            )
-        elif kind == "format":
+            out.append(Constraint(cname, name, kind, col.isNotNull()))
+            continue
+        if kind == "format":
             fmt, temporal, known = entry[2], entry[3], entry[4]
             if known:
                 pred = F.lit(True) if temporal else format_predicate(col, fmt)
@@ -182,42 +188,18 @@ def build_constraints(spec: list, custom_predicates: dict | None = None) -> list
                 pred = custom_predicates[fmt](col)
             else:
                 pred = None
-            if pred is not None:
-                out.append(
-                    Constraint(
-                        f"format:{name}:{fmt}", name, "format", nullsafe(col, pred)
-                    )
-                )
         elif kind == "const":
-            out.append(
-                Constraint(
-                    f"const:{name}", name, "const",
-                    nullsafe(col, col == F.lit(entry[2])),
-                )
-            )
+            pred = col == F.lit(entry[2])
         elif kind == "enum":
-            out.append(
-                Constraint(
-                    f"enum:{name}", name, "enum",
-                    nullsafe(col, col.isin(list(entry[2]))),
-                )
-            )
+            pred = col.isin(list(entry[2]))
         elif kind == "range":
-            out.append(
-                Constraint(
-                    f"range:{name}", name, "range",
-                    nullsafe(col, col.between(entry[2], entry[3])),
-                )
-            )
+            pred = col.between(entry[2], entry[3])
         elif kind == "length":
-            out.append(
-                Constraint(
-                    f"length:{name}", name, "length",
-                    nullsafe(col, F.length(col).between(entry[2], entry[3])),
-                )
-            )
+            pred = F.length(col).between(entry[2], entry[3])
         else:  # pragma: no cover - spec is produced by constraint_spec
             raise ValueError(f"unknown constraint kind {kind!r}")
+        if pred is not None:  # NULL passes every check but required
+            out.append(Constraint(cname, name, kind, col.isNull() | pred))
     return out
 
 
@@ -335,9 +317,6 @@ def arrow_violation_counter(spec: list, arrow_schema):
 
             def fn(arr):
                 return arr.null_count
-
-            names.append(f"required:{name}")
-            checks.append((j, fn))
         elif kind == "format":
             fmt, temporal, known = entry[2], entry[3], entry[4]
             if not known:
@@ -364,8 +343,6 @@ def arrow_violation_counter(spec: list, arrow_schema):
                 raise UnsupportedArrowSpec(
                     f"format {fmt!r} on non-string column {name!r} ({typ})"
                 )
-            names.append(f"format:{name}:{fmt}")
-            checks.append((j, fn))
         elif kind in ("const", "enum"):
             vals = [entry[2]] if kind == "const" else list(entry[2])
             ok = (
@@ -400,9 +377,6 @@ def arrow_violation_counter(spec: list, arrow_schema):
                     return 0
                 hit = pc.sum(pc.is_in(arr, value_set=value_set)).as_py()
                 return len(arr) - int(hit or 0)
-
-            names.append(f"{kind}:{name}")
-            checks.append((j, fn))
         elif kind == "range":
             lo, hi = entry[2], entry[3]
             if not (
@@ -415,9 +389,6 @@ def arrow_violation_counter(spec: list, arrow_schema):
                 if len(v) == 0:
                     return 0
                 return int((~((v >= lo) & (v <= hi))).sum())
-
-            names.append(f"range:{name}")
-            checks.append((j, fn))
         elif kind == "length":
             lo, hi = entry[2], entry[3]
             if not _is_str(typ):
@@ -432,11 +403,10 @@ def arrow_violation_counter(spec: list, arrow_schema):
                     pc.greater_equal(lens, lo), pc.less_equal(lens, hi)
                 )
                 return len(s) - int(pc.sum(ok).as_py() or 0)
-
-            names.append(f"length:{name}")
-            checks.append((j, fn))
         else:
             raise UnsupportedArrowSpec(f"unknown constraint kind {kind!r}")
+        names.append(constraint_name(entry))
+        checks.append((j, fn))
 
     def count_batch(batch) -> "np.ndarray":
         decoded: dict = {}

@@ -2,8 +2,9 @@
 Spark and, when an oracle_sql() twin exists, must match DuckDB on row count,
 column names and order-insensitive values (floats rounded to 6).
 
-Runs at sf0.001 for speed; the driver runs the same contract at sf0.01
-(verified manually in the dev loop as well)."""
+Runs at sf0.001 for speed. The driver runs the same contract at sf0.01;
+the pre-flight at its scale is this file with ``SPARK_GRAFT_ORACLE_SF``
+pointing at the sf0.01 data directory."""
 
 import glob
 import math
@@ -15,10 +16,9 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF = "/root/testdata/sf0.001"
 # signature/mapping oracle parquets must be built from the SAME sf the
 # queries run on (the driver uses the default, sf0.01)
-os.environ["SPARK_GRAFT_ORACLE_SF"] = SF
+SF = os.environ.setdefault("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.001")
 
 import __spark_entry__ as E  # noqa: E402
 

@@ -1,7 +1,7 @@
 """Fused one-pass pipeline == the standalone operators, value-identical.
 
 The fused scan (pipeline.infer_and_integrity_parquet) must return exactly
-the InferResult of infer_parquet AND the integrity counts of
+the InferResult of infer_dataframe AND the integrity counts of
 transcript_integrity_summary / duplicate_keys / turn_ordering_violations
 on the same files — the folds are shared code, so any divergence is a
 wiring bug in the tee or the spill reduce. A checkpointed run resumes
@@ -14,8 +14,9 @@ import pytest
 
 from jsonschema_infer_spark.config import default_config
 from jsonschema_infer_spark.operators import validate as V
-from jsonschema_infer_spark.operators.infer_spark import infer_parquet
+from jsonschema_infer_spark.operators.infer_spark import infer_dataframe
 from jsonschema_infer_spark.operators.pipeline import infer_and_integrity_parquet
+from test_spark_infer import _norm_state
 
 
 def _operator_counts(df) -> dict:
@@ -31,25 +32,27 @@ def _operator_counts(df) -> dict:
 
 
 def test_fused_matches_standalone_on_violated(spark, tx_paths):
-    want_infer = infer_parquet(spark, tx_paths["viol"], rg_per_task=1)
+    viol = spark.read.parquet(tx_paths["viol"])
+    want_infer = infer_dataframe(viol)
     res, integ = infer_and_integrity_parquet(
         spark, tx_paths["viol"], rg_per_task=1
     )
     assert res.schema_json == want_infer.schema_json
     assert res.total_rows == want_infer.total_rows
-    viol = spark.read.parquet(tx_paths["viol"])
+    assert _norm_state(res.state) == _norm_state(want_infer.state)
     assert integ == V.transcript_integrity_summary(viol)
     assert integ == _operator_counts(viol)
     assert integ["dup_rows_excess"] > 0 and integ["ordering_violations"] > 0
 
 
 def test_fused_matches_standalone_on_clean(spark, tx_paths):
-    want_infer = infer_parquet(spark, tx_paths["clean"], rg_per_task=2)
+    want_infer = infer_dataframe(spark.read.parquet(tx_paths["clean"]))
     res, integ = infer_and_integrity_parquet(
         spark, tx_paths["clean"], rg_per_task=2
     )
     assert res.schema_json == want_infer.schema_json
     assert res.total_rows == want_infer.total_rows
+    assert _norm_state(res.state) == _norm_state(want_infer.state)
     assert integ == {"dup_rows_excess": 0, "ordering_violations": 0}
 
 
@@ -77,35 +80,11 @@ def test_fused_lineage_one_entry_per_task(spark, tx_paths, tmp_path):
     assert all(secs > 0 for _, _, secs in res.partitions)
 
 
-def test_infer_parquet_lineage_one_entry_per_task(spark, tx_paths, tmp_path):
-    import pyarrow.parquet as pq
-
-    path = str(tmp_path / "viol5.parquet")
-    table = pq.read_table(tx_paths["viol"])
-    pq.write_table(table, path, row_group_size=-(-table.num_rows // 5))
-    res = infer_parquet(spark, path, rg_per_task=1)
-    assert sorted(i for i, _, _ in res.partitions) == list(range(5))
-    assert sum(rows for _, rows, _ in res.partitions) == res.total_rows > 0
-    assert all(secs > 0 for _, _, secs in res.partitions)
-
-    # a row budget drops the tasks past the cap; the lineage follows it
-    cap = table.num_rows // 3
-    capped = infer_parquet(
-        spark, path, config=default_config(max_samples=cap), rg_per_task=1
-    )
-    assert capped.total_rows == cap
-    assert len(capped.partitions) == 2
-    assert sum(rows for _, rows, _ in capped.partitions) == cap
-    assert all(secs > 0 for _, _, secs in capped.partitions)
-
-
 def test_fused_examples_capture_matches(spark, tx_paths):
     cfg = default_config(examples=True)
-    want = infer_parquet(
-        spark,
-        tx_paths["viol"],
+    want = infer_dataframe(
+        spark.read.parquet(tx_paths["viol"]),
         config=cfg,
-        rg_per_task=1,
         order_cols=["conv_id", "turn_idx"],
     )
     res, _ = infer_and_integrity_parquet(
@@ -139,7 +118,7 @@ def _multi_rg_copy(tx_paths, tmp_path, name="viol_multi_rg.parquet"):
 def _clean_contract(spark, tx_paths) -> list:
     """The constraint spec of a contract inferred from the clean fixture,
     for validating the violated one."""
-    clean = infer_parquet(spark, tx_paths["clean"], rg_per_task=2)
+    clean = infer_dataframe(spark.read.parquet(tx_paths["clean"]))
     temporal = V.temporal_columns(spark.read.parquet(tx_paths["viol"]))
     return V.constraint_spec(clean.schema, state=clean.state, temporal_cols=temporal)
 
@@ -319,8 +298,6 @@ def test_fused_checkpoint_fingerprint_written_before_scan(
     and per-constraint counts equal a fresh run and the injection log."""
     import pyarrow.parquet as pq
 
-    from jsonschema_infer_spark.operators.infer_spark import infer_dataframe
-
     spec = _clean_contract(spark, tx_paths)
     src = pq.read_table(tx_paths["viol"])
     data = tmp_path / "data"
@@ -470,18 +447,6 @@ def test_tree_reduce_fused_lineage(spark, tx_paths, tmp_path, request):
         infer_and_integrity_parquet(spark, path, **run)
 
 
-def test_tree_reduce_infer_parquet_lineage(spark, tx_paths, tmp_path, request):
-    path = _multi_rg_copy(tx_paths, tmp_path)
-    want = infer_parquet(spark, path, rg_per_task=1)
-    depths = request.getfixturevalue("tree_reduce")
-    res = infer_parquet(spark, path, rg_per_task=1)
-    assert depths == [2]
-    assert res.schema_json == want.schema_json
-    assert res.total_rows == want.total_rows
-    assert [i for i, _, _ in res.partitions] == list(range(7))
-    assert sum(rows for _, rows, _ in res.partitions) == res.total_rows
-
-
 @pytest.fixture
 def seven_file_df(spark, tx_paths, tmp_path):
     """The violated fixture as 7 files of ~equal size, read with a 1-byte
@@ -503,8 +468,6 @@ def seven_file_df(spark, tx_paths, tmp_path):
 
 def test_tree_reduce_infer_dataframe_lineage(seven_file_df, tmp_path, request):
     """infer_dataframe on the tree branch, repartitioned and checkpointed."""
-    from jsonschema_infer_spark.operators.infer_spark import infer_dataframe
-
     df, table = seven_file_df
     want = infer_dataframe(df)
     depths = request.getfixturevalue("tree_reduce")
@@ -528,12 +491,24 @@ def test_tree_reduce_infer_dataframe_lineage(seven_file_df, tmp_path, request):
         infer_dataframe(df, checkpoint_dir=ckpt)
 
 
-def test_infer_parquet_empty_directory(spark, tmp_path):
-    """An empty input reduces to the zero value, not an error."""
+def test_infer_parquet_empty_directory(spark, tx_paths, tmp_path):
+    """The fused scan over an empty directory reduces to the zero value,
+    not an error. With a contract, every constraint counts 0: an empty
+    table violates nothing."""
     empty = tmp_path / "empty"
     empty.mkdir()
-    res = infer_parquet(spark, str(empty))
+    zero = {"dup_rows_excess": 0, "ordering_violations": 0}
+    res, integ = infer_and_integrity_parquet(spark, str(empty))
     assert res.total_rows == 0 and res.partitions == []
+    assert integ == zero
+    spec = _clean_contract(spark, tx_paths)
+    res, integ, counts = infer_and_integrity_parquet(
+        spark, str(empty), violation_spec=spec
+    )
+    assert res.total_rows == 0 and res.partitions == []
+    assert integ == zero
+    names = [c.name for c in V.build_constraints(spec)]
+    assert counts == dict.fromkeys(names, 0) and counts
 
 
 def test_integrity_null_keys_embedded_uniqueness(spark, tmp_path, monkeypatch):
@@ -597,7 +572,6 @@ def test_integrity_null_keys_embedded_uniqueness(spark, tmp_path, monkeypatch):
 def test_constraint_spec_build_equals_compile(spark, tx_paths):
     """constraint_spec + build_constraints is compile_constraints."""
     from jsonschema_infer_spark.operators import validate as V
-    from jsonschema_infer_spark.operators.infer_spark import infer_dataframe
 
     viol = spark.read.parquet(tx_paths["viol"])
     res = infer_dataframe(viol, num_partitions=4)
@@ -635,7 +609,7 @@ def test_fused_violation_counts_match_spark(spark, tx_paths):
     temporal = V.temporal_columns(viol_df)
 
     # case 1: self-spec -> all zeros, and integrity unchanged by counting
-    own = infer_parquet(spark, tx_paths["viol"], rg_per_task=1)
+    own = infer_dataframe(viol_df)
     self_spec = V.constraint_spec(
         own.schema, state=own.state, temporal_cols=temporal
     )

@@ -49,6 +49,18 @@ def test_report_against_reference_schema(spark, tx_paths, tmp_path):
     assert metrics["constraints"]["required:role"] == len(log["null_role_rows"])
     assert metrics["constraints"]["enum:role"] == len(log["bad_role_rows"])
     assert metrics["rows"] == viol.count()
+    from jsonschema_infer_spark.operators import validate as V
+
+    cons = V.compile_constraints(ref.schema, state=ref.state, df=viol)
+    assert metrics["constraints"] == {
+        r.constraint: r.violation_count
+        for r in V.violation_counts(viol, cons).collect()
+    }
+
+    # a table with no rows: no verdict rows, every total 0
+    empty = run_validation_report(viol.limit(0), str(tmp_path / "empty"), reference=ref)
+    assert empty["rows"] == 0 and empty["violation_total"] == 0
+    assert empty["constraints"] == dict.fromkeys(metrics["constraints"], 0)
 
 
 def test_report_schema_drift_and_fk_checks(spark, tx_paths, tmp_path):

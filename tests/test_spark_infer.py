@@ -91,20 +91,6 @@ def test_max_samples_limit(spark):
     assert res.total_rows == 100
 
 
-def test_max_samples_native_reader(spark):
-    from jsonschema_infer_spark.config import default_config
-    from jsonschema_infer_spark.operators.infer_spark import infer_parquet
-
-    src = f"{SF}/events.parquet"
-    res = infer_parquet(
-        spark, src, config=default_config(max_samples=137), rg_per_task=1
-    )
-    assert res.total_rows == 137
-    # the native reader's total order IS (file, row-group, row): the capped
-    # result equals a sequential fold over the parquet head
-    assert res.schema_json == local_oracle_rows(pq.read_table(src).slice(0, 137))
-
-
 def test_examples_need_order_cols_in_distributed_mode(spark):
     from jsonschema_infer_spark.config import default_config
 
@@ -201,19 +187,6 @@ def test_examples_nested_hostile_partitioning(spark):
     assert props["tags"]["items"]["example"] == "go"
     assert props["user"]["example"] == {"name": "John", "email": "john@example.com"}
     assert props["extra"]["example"] == 1.5  # first OBSERVED (non-null) value
-
-
-def test_examples_parquet_native_matches(spark, tmp_path):
-    from jsonschema_infer_spark.config import default_config
-    from jsonschema_infer_spark.operators.infer_spark import infer_parquet
-
-    src = f"{SF}/events.parquet"
-    res = infer_parquet(
-        spark, src, config=default_config(examples=True),
-        order_cols=["event_id"], rg_per_task=1,
-    )
-    expected = local_oracle_sorted_examples(pq.read_table(src), ["event_id"])
-    assert res.schema_json == expected
 
 
 def test_checkpoint_resume(spark, tx_paths, tmp_path):
@@ -343,18 +316,6 @@ def _assert_partition_invariant(df):
     assert four.schema_json == one.schema_json
     assert four.total_rows == one.total_rows
     assert _norm_state(four.state) == _norm_state(one.state)
-
-
-def test_infer_parquet_matches_mapinarrow(spark, tx_paths):
-    from jsonschema_infer_spark.operators.infer_spark import infer_parquet
-
-    for key in ("clean", "viol"):
-        path = tx_paths[key]
-        a = infer_parquet(spark, path, rg_per_task=1)
-        b = infer_dataframe(spark.read.parquet(path), num_partitions=4)
-        assert a.schema_json == b.schema_json
-        assert a.total_rows == b.total_rows
-        assert _norm_state(a.state) == _norm_state(b.state)
 
 
 def test_edge_columns(spark):
