@@ -112,15 +112,6 @@ def _track_range(st: dict, lo, hi) -> None:
         st["num_max"] = float(hi)
 
 
-def _track_lens(st: dict, lo, hi) -> None:
-    if lo is None:
-        return
-    if st["len_min"] is None or lo < st["len_min"]:
-        st["len_min"] = int(lo)
-    if st["len_max"] is None or hi > st["len_max"]:
-        st["len_max"] = int(hi)
-
-
 def _bounded_unique(arr: pa.Array):
     """Unique values if they fit the distinct budget, else None."""
     try:
@@ -431,9 +422,9 @@ def observe_arrow_column(
         st["n"] += n
         st["types"]["string"] = st["types"].get("string", 0) + n
         st["str_n"] += n
+        if st["const_differ"] and st["distinct"] is None and st["fmts"] == []:
+            return  # nothing left to learn from the values: skip the copy
         vals = arr.drop_null()
-        lens = pc.min_max(pc.utf8_length(vals))
-        _track_lens(st, lens["min"].as_py(), lens["max"].as_py())
         if not st["const_differ"]:
             # string min_max only feeds the const latch; once it has
             # permanently differed the whole-batch byte compare is wasted
@@ -459,18 +450,6 @@ def observe_arrow_column(
         st["str_n"] += n
         us = arr.cast(pa.timestamp("us")).cast(pa.int64()).drop_null()
         v = us.to_numpy(zero_copy_only=False)
-        frac = v % 1_000_000
-        # rendered length: 20 + 1('.') + (6 - trailing zeros) when frac>0,
-        # e.g. frac=500000 renders ".5" -> extra 2 (asserted against
-        # _render_ts_us in tests/test_render.py)
-        fl = np.zeros(len(v), dtype=np.int64)
-        nonzero = frac > 0
-        fl[nonzero] = 7  # '.' + 6 digits, no trailing zeros
-        for p, extra in ((10, 6), (100, 5), (1000, 4), (10000, 3), (100000, 2)):
-            fl[nonzero & (frac % p == 0)] = extra
-        lens = 20 + fl
-        if len(lens):
-            _track_lens(st, int(lens.min()), int(lens.max()))
         mn, mx = int(v.min()), int(v.max())
         if mn == mx:
             _latch_const(st, "string", _render_ts_us(mn))
@@ -506,7 +485,6 @@ def observe_arrow_column(
         days = arr.cast(pa.date32()).cast(pa.int32()).drop_null().to_numpy(
             zero_copy_only=False
         )
-        _track_lens(st, 10, 10)
         mn, mx = int(days.min()), int(days.max())
 
         def _d(x):

@@ -14,8 +14,8 @@ a serializable value supporting two operations:
   except ``first_value`` which carries an explicit total-order key.
 
 Beyond reference parity, the state also tracks the constraint-mining
-extensions mandated by the north_rule (numeric min/max, string length
-min/max, bounded distinct set for enum detection) — the same merge algebra,
+extensions mandated by the north_rule (numeric min/max, bounded distinct
+set for enum detection) — the same merge algebra,
 per the reference's own roadmap sketch (`/root/reference/ARCHITECTURE.md:646-691`,
 `/root/reference/FEATURES.md:72-94,177-186`).
 """
@@ -92,8 +92,6 @@ def new_state() -> dict:
         # constraint-mining extensions (north_rule; not in reference output)
         "num_min": None,
         "num_max": None,
-        "len_min": None,
-        "len_max": None,
         "distinct": [],  # list of (tag, value); None = overflowed
     }
 
@@ -127,14 +125,6 @@ def _track_numeric(state: dict, value) -> None:
         state["num_min"] = v
     if state["num_max"] is None or v > state["num_max"]:
         state["num_max"] = v
-
-
-def _track_strlen(state: dict, value: str) -> None:
-    n = len(value)
-    if state["len_min"] is None or n < state["len_min"]:
-        state["len_min"] = n
-    if state["len_max"] is None or n > state["len_max"]:
-        state["len_max"] = n
 
 
 def observe_value(state: dict, value, config, order_key=None) -> None:
@@ -175,7 +165,6 @@ def observe_value(state: dict, value, config, order_key=None) -> None:
 
     if tag == "string" and isinstance(value, str):
         state["str_n"] += 1
-        _track_strlen(state, value)
         if state["fmts"] is None:
             state["fmts"] = list(config.format_names())
         if state["fmts"]:
@@ -265,12 +254,10 @@ def merge(a: dict | None, b: dict | None) -> dict | None:
         out["props"][k] = merge(a["props"].get(k), b["props"].get(k))
 
     # extensions
-    for lo in ("num_min", "len_min"):
-        vals = [v for v in (a[lo], b[lo]) if v is not None]
-        out[lo] = min(vals) if vals else None
-    for hi in ("num_max", "len_max"):
-        vals = [v for v in (a[hi], b[hi]) if v is not None]
-        out[hi] = max(vals) if vals else None
+    lo = [v for v in (a["num_min"], b["num_min"]) if v is not None]
+    out["num_min"] = min(lo) if lo else None
+    hi = [v for v in (a["num_max"], b["num_max"]) if v is not None]
+    out["num_max"] = max(hi) if hi else None
     if a["distinct"] is None or b["distinct"] is None:
         out["distinct"] = None
     else:
@@ -303,8 +290,7 @@ def state_to_jsonable(s: dict | None):
     if s is None:
         return None
     out = {k: s[k] for k in ("types", "n", "str_n", "fmts", "locked_fmts",
-                             "const_set", "const_differ", "num_min", "num_max",
-                             "len_min", "len_max")}
+                             "const_set", "const_differ", "num_min", "num_max")}
     out["const"] = list(s["const"]) if s["const"] is not None else None
     out["first"] = (
         [list(s["first"][0]) if isinstance(s["first"][0], tuple) else s["first"][0],
@@ -334,7 +320,7 @@ def state_from_jsonable(d) -> dict | None:
         return None
     s = new_state()
     for k in ("types", "n", "str_n", "fmts", "locked_fmts", "const_set",
-              "const_differ", "num_min", "num_max", "len_min", "len_max"):
+              "const_differ", "num_min", "num_max"):
         s[k] = d[k]
     s["const"] = tuple(d["const"]) if d["const"] is not None else None
     if d["first"] is not None:

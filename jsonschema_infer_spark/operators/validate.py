@@ -9,7 +9,7 @@ whole-stage codegen, predicate pushdown and column pruning.
 
 Check taxonomy (SURVEY.md §2.5):
 - row checks: required non-null, format regex, const equality, enum
-  membership, numeric range, string length — compiled per column;
+  membership, numeric range — compiled per column;
 - key checks: uniqueness on (conv_id, turn_idx) — groupBy partial-agg
   (map-side combine; skew-tolerant) + semi-join for violating rows;
 - ordering checks: dense turn_idx 0..n-1 per conv via pure aggregation
@@ -97,20 +97,21 @@ def format_predicate(col: Column, fmt: str, dtype=None) -> Column | None:
 class Constraint:
     name: str  # e.g. "required:role", "format:ts:date-time"
     column: str
-    kind: str  # required | format | const | enum | range | length
+    kind: str  # required | format | const | enum | range
     predicate: Column  # True = row conforms (nulls pass unless required)
 
 
 _KNOWN_FORMATS = {"date-time", "email", "uuid", "ipv4", "ipv6", "uri"}
+
+# A column with at most this many distinct values gets an enum constraint.
+ENUM_MAX = 16
 
 
 def constraint_spec(
     schema: dict,
     state: dict | None = None,
     temporal_cols: set | None = None,
-    enum_max: int = 16,
     with_ranges: bool = False,
-    with_lengths: bool = False,
 ) -> list:
     """PURE-PYTHON constraint plan: what compile_constraints will build,
     as plain tuples (no py4j, no Spark session). One spec feeds both
@@ -147,7 +148,7 @@ def constraint_spec(
         if st is not None:
             if (
                 st["distinct"] is not None
-                and 0 < len(st["distinct"]) <= enum_max
+                and 0 < len(st["distinct"]) <= ENUM_MAX
                 and "const" not in prop
                 and prop.get("type") in ("string", "integer", "boolean")
             ):
@@ -156,8 +157,6 @@ def constraint_spec(
                 )
             if with_ranges and st["num_min"] is not None:
                 out.append(("range", name, st["num_min"], st["num_max"]))
-            if with_lengths and st["len_min"] is not None:
-                out.append(("length", name, st["len_min"], st["len_max"]))
     return out
 
 
@@ -168,10 +167,10 @@ def constraint_name(entry: tuple) -> str:
     return f"format:{name}:{entry[2]}" if kind == "format" else f"{kind}:{name}"
 
 
-def build_constraints(spec: list, custom_predicates: dict | None = None) -> list:
+def build_constraints(spec: list) -> list:
     """Build Column predicates from a `constraint_spec` plan (the py4j
     half — each expression node is a JVM round trip, ~0.5 s for a typical
-    table)."""
+    table). A format with no Spark-side check is skipped."""
     out: list = []
     for entry in spec:
         kind, name = entry[0], entry[1]
@@ -182,24 +181,19 @@ def build_constraints(spec: list, custom_predicates: dict | None = None) -> list
             continue
         if kind == "format":
             fmt, temporal, known = entry[2], entry[3], entry[4]
-            if known:
-                pred = F.lit(True) if temporal else format_predicate(col, fmt)
-            elif custom_predicates and fmt in custom_predicates:
-                pred = custom_predicates[fmt](col)
-            else:
-                pred = None
+            if not known:
+                continue
+            pred = F.lit(True) if temporal else format_predicate(col, fmt)
         elif kind == "const":
             pred = col == F.lit(entry[2])
         elif kind == "enum":
             pred = col.isin(list(entry[2]))
         elif kind == "range":
             pred = col.between(entry[2], entry[3])
-        elif kind == "length":
-            pred = F.length(col).between(entry[2], entry[3])
         else:  # pragma: no cover - spec is produced by constraint_spec
             raise ValueError(f"unknown constraint kind {kind!r}")
-        if pred is not None:  # NULL passes every check but required
-            out.append(Constraint(cname, name, kind, col.isNull() | pred))
+        # NULL passes every check but required
+        out.append(Constraint(cname, name, kind, col.isNull() | pred))
     return out
 
 
@@ -215,10 +209,13 @@ def _spark_datetime_fields_ok(s: str) -> bool:
     real calendar dates in the proleptic calendar — year 0000 is a leap
     year; hour<=23, no leap second; zone offset a valid java.time
     ZoneOffset, i.e. within +/-18:00 with minutes<=59; ANY number of
-    fractional digits accepted)."""
+    fractional digits accepted). The regex admits one final line
+    terminator; try_to_timestamp accepts only LF, CR and CRLF."""
     import calendar
 
-    s = s.rstrip("\n")  # '$' admits one trailing newline in both engines
+    s = s.rstrip("\r\n")
+    if s[-1] in "\u0085\u2028\u2029":
+        return False
     y, mo, d = int(s[0:4]), int(s[5:7]), int(s[8:10])
     h, mi, sec = int(s[11:13]), int(s[14:16]), int(s[17:19])
     if not (1 <= mo <= 12) or not (1 <= d <= calendar.monthrange(y, mo)[1]):
@@ -232,6 +229,19 @@ def _spark_datetime_fields_ok(s: str) -> bool:
     return om <= 59 and (oh < 18 or (oh == 18 and om == 0))
 
 
+# Java's line terminators: its '.' stops at each, and its '$' also
+# matches before one final one
+_JAVA_EOL = r"\n\r\u0085\u2028\u2029"
+
+
+def _java_rx(rx: str):
+    """Compile a Spark-side regex (``^...$``) with Java's semantics: '\\d'
+    and '\\s' are ASCII-only (re.ASCII), '.' (only RX_URI's '.*') and '$'
+    handle line terminators as above."""
+    body = rx[:-1].replace(".*", f"[^{_JAVA_EOL}]*")
+    return re.compile(body + rf"(?:\r\n|[{_JAVA_EOL}])?\Z", re.ASCII)
+
+
 def _spark_format_vec(fmt: str):
     """Vectorized (pd.Series[str] -> pd.Series[bool]) mirror of the SPARK
     format predicate (format_predicate's rlike regex, plus the
@@ -239,8 +249,6 @@ def _spark_format_vec(fmt: str):
     functions/formats (those define inference survivorship; validation
     compares against what the Spark violations pass would say, and the
     two acceptance sets differ outside the detector-accepted subset)."""
-    import re as _re
-
     rx_by_fmt = {
         "email": RX_EMAIL,
         "uuid": RX_UUID,
@@ -249,7 +257,7 @@ def _spark_format_vec(fmt: str):
         "uri": RX_URI,
     }
     if fmt == "date-time":
-        rx = _re.compile(RX_DATETIME)
+        rx = _java_rx(RX_DATETIME)
 
         def vec(series):
             ok = series.str.match(rx).fillna(False)
@@ -259,7 +267,7 @@ def _spark_format_vec(fmt: str):
             return ok
 
         return vec
-    rx = _re.compile(rx_by_fmt[fmt])
+    rx = _java_rx(rx_by_fmt[fmt])
     return lambda series: series.str.match(rx).fillna(False)
 
 
@@ -285,11 +293,10 @@ def arrow_violation_counter(spec: list, arrow_schema):
       non-null string;
     - const/enum: NULL passes; non-null must equal / be a member;
     - range: NULL passes; numpy evaluates NOT(lo <= v <= hi) so NaN
-      counts as a violation exactly like Spark's three-valued between;
-    - length: NULL passes; utf8 character length bounds like F.length.
+      counts as a violation exactly like Spark's three-valued between.
 
     Raises UnsupportedArrowSpec for anything whose Spark/arrow semantics
-    could diverge (missing column, custom format, const/enum on a column
+    could diverge (missing column, unknown format, const/enum on a column
     type where lit() coercion isn't the identity)."""
     import numpy as np
     import pyarrow as pa
@@ -320,10 +327,8 @@ def arrow_violation_counter(spec: list, arrow_schema):
         elif kind == "format":
             fmt, temporal, known = entry[2], entry[3], entry[4]
             if not known:
-                # build_constraints skips unknown formats without a custom
-                # predicate; custom predicates are Column-land — can't
-                # guarantee bit-equality here
-                raise UnsupportedArrowSpec(f"custom/unknown format {fmt!r}")
+                # build_constraints skips it: no count to be bit-equal to
+                raise UnsupportedArrowSpec(f"unknown format {fmt!r}")
             if temporal:
 
                 def fn(arr):
@@ -389,20 +394,6 @@ def arrow_violation_counter(spec: list, arrow_schema):
                 if len(v) == 0:
                     return 0
                 return int((~((v >= lo) & (v <= hi))).sum())
-        elif kind == "length":
-            lo, hi = entry[2], entry[3]
-            if not _is_str(typ):
-                raise UnsupportedArrowSpec(f"length on non-string {name!r}")
-
-            def fn(arr, lo=lo, hi=hi):
-                s = arr.drop_null()
-                if len(s) == 0:
-                    return 0
-                lens = pc.utf8_length(s)
-                ok = pc.and_(
-                    pc.greater_equal(lens, lo), pc.less_equal(lens, hi)
-                )
-                return len(s) - int(pc.sum(ok).as_py() or 0)
         else:
             raise UnsupportedArrowSpec(f"unknown constraint kind {kind!r}")
         names.append(constraint_name(entry))
@@ -441,17 +432,14 @@ def compile_constraints(
     schema: dict,
     state: dict | None = None,
     df: DataFrame | None = None,
-    enum_max: int = 16,
     with_ranges: bool = False,
-    with_lengths: bool = False,
-    custom_predicates: dict | None = None,
 ) -> list:
     """Compile a root object schema (finalize() output) into row constraints.
 
-    ``state`` supplies the mined extensions (enum candidates, numeric and
-    length ranges — reference roadmap FEATURES.md:72-94). Range/length checks
-    default off: inferred bounds describe the sample, future rows may
-    legitimately exceed them; enable explicitly for frozen snapshots.
+    ``state`` supplies the mined extensions (enum candidates and numeric
+    ranges — reference roadmap FEATURES.md:72-94). Range checks default
+    off: inferred bounds describe the sample, future rows may legitimately
+    exceed them; enable explicitly for frozen snapshots.
 
     Thin wrapper over ``constraint_spec`` (pure plan) + ``build_constraints``
     (py4j expression building); the fused scan's arrow counter takes the
@@ -462,11 +450,8 @@ def compile_constraints(
             schema,
             state=state,
             temporal_cols=temporal_columns(df),
-            enum_max=enum_max,
             with_ranges=with_ranges,
-            with_lengths=with_lengths,
-        ),
-        custom_predicates=custom_predicates,
+        )
     )
 
 
@@ -842,17 +827,15 @@ def _merge_partials_local(table) -> dict:
     task-boundary stragglers + hot convs straddle tasks); only that
     small remainder pays dictionary encoding and the exact turn-set
     union (`_judge_multi_subset`).
-    Multi-task detection is keyed on the spilled ``ch`` int64 conv hash
-    when present (one hash pass; hash collisions only route extra rows
-    into the exact path, which unions by the true conv strings — results
-    are collision-proof). Tables without ``ch`` (hand-built partials)
-    fall back to two string hash passes (value_counts + is_in). The
-    string and list columns are never chunk-combined for the single-task
-    majority — only the multi subset is gathered."""
+    Multi-task detection is keyed on the spilled ``ch`` int64 conv hash,
+    which ``_integrity_fold`` writes null-free (one hash pass; hash
+    collisions only route extra rows into the exact path, which unions by
+    the true conv strings — results are collision-proof). The string and
+    list columns are never chunk-combined for the single-task majority —
+    only the multi subset is gathered."""
     import numpy as np
-
+    import pandas as pd
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     if table.num_rows == 0:
         return {"dup_rows_excess": 0, "ordering_violations": 0}
@@ -864,30 +847,11 @@ def _merge_partials_local(table) -> dict:
     mx_r = table.column("mx").to_numpy(zero_copy_only=False)
     ndl = table.column("ndl").to_numpy(zero_copy_only=False)
 
-    # ch fast path only when the column is null-free: a ch column with
-    # nulls gives float64 NaNs from to_numpy, and pandas duplicated()
-    # treats all NaNs as duplicates, silently routing every such row
-    # through the slow exact-multi path. null_count is a metadata read.
-    if "ch" in table.schema.names and table.column("ch").null_count == 0:
-        import pandas as _pd
-
-        ch = table.column("ch").to_numpy(zero_copy_only=False)
-        # one C hash pass marks every row whose conv hash repeats
-        # (Series, not Index: Index.duplicated pays a second full
-        # is_unique hash pass; np.sort+searchsorted measured 0.76 s)
-        multi = _pd.Series(ch).duplicated(keep=False).to_numpy()
-    else:
-        conv_all = table.column("conv").combine_chunks()
-        vc = pc.value_counts(conv_all)
-        dup_vals = vc.field("values").filter(
-            pc.greater(vc.field("counts"), 1)
-        )
-        if len(dup_vals):
-            multi = pc.is_in(conv_all, value_set=dup_vals).to_numpy(
-                zero_copy_only=False
-            )
-        else:
-            multi = np.zeros(len(n), dtype=bool)
+    ch = table.column("ch").to_numpy(zero_copy_only=False)
+    # one C hash pass marks every row whose conv hash repeats
+    # (Series, not Index: Index.duplicated pays a second full
+    # is_unique hash pass; np.sort+searchsorted measured 0.76 s)
+    multi = pd.Series(ch).duplicated(keep=False).to_numpy()
 
     # Single-part convs: the row is the conv. Dense 0..n-1 ordering holds
     # iff mn == 0, mx == distinct-1, and no duplicate turn values.

@@ -394,6 +394,62 @@ def test_fused_checkpoint_reruns_file_rewritten_in_place(spark, tx_paths, tmp_pa
     assert not any(r["resumed"] for r in man["per_task"])
 
 
+def _add_string_length_keys(ckpt):
+    """Give every state node of every marker the ``len_min``/``len_max``
+    keys that markers carried before the string-length state was dropped
+    (engine rev 14). Their values do not matter: the reader ignores them."""
+
+    def add(node):
+        if node is not None:
+            node.update(len_min=0, len_max=9)
+            add(node["items"])
+            for child in node["props"].values():
+                add(child)
+
+    states = os.path.join(ckpt, "states")
+    for fn in os.listdir(states):
+        with open(os.path.join(states, fn)) as f:
+            marker = json.load(f)
+        add(marker["state"])
+        with open(os.path.join(states, fn), "w") as f:
+            json.dump(marker, f)
+
+
+def _all_resumed(ckpt) -> bool:
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        return all(r["resumed"] for r in json.load(f)["per_task"])
+
+
+def test_rev14_checkpoints_resume(spark, tx_paths, tmp_path):
+    """Markers whose states carry the old string-length keys still load:
+    a resume from them reuses every task and equals a fresh run, for the
+    fused scan with a contract and for infer_dataframe."""
+    path = _multi_rg_copy(tx_paths, tmp_path)
+    run = dict(rg_per_task=1, violation_spec=_clean_contract(spark, tx_paths))
+    ckpt = str(tmp_path / "fused")
+    infer_and_integrity_parquet(spark, path, checkpoint_dir=ckpt, **run)
+    _add_string_length_keys(ckpt)
+    res, integ, counts = infer_and_integrity_parquet(
+        spark, path, checkpoint_dir=ckpt, **run
+    )
+    res_d, integ_d, counts_d = infer_and_integrity_parquet(spark, path, **run)
+    assert _all_resumed(ckpt)
+    assert res.schema_json == res_d.schema_json
+    assert res.total_rows == res_d.total_rows
+    assert _norm_state(res.state) == _norm_state(res_d.state)
+    assert integ == integ_d and counts == counts_d
+
+    df = spark.read.parquet(path)
+    ckpt = str(tmp_path / "infer")
+    infer_dataframe(df, checkpoint_dir=ckpt)
+    _add_string_length_keys(ckpt)
+    got, want = infer_dataframe(df, checkpoint_dir=ckpt), infer_dataframe(df)
+    assert _all_resumed(ckpt)
+    assert got.schema_json == want.schema_json
+    assert got.total_rows == want.total_rows
+    assert _norm_state(got.state) == _norm_state(want.state)
+
+
 @pytest.fixture
 def tree_reduce(monkeypatch):
     """Force the tree branch of checkpoint.reduce_tasks (a driver-side
@@ -635,14 +691,17 @@ def test_fused_violation_counts_match_spark(spark, tx_paths):
 def test_arrow_violation_counter_kinds_match_spark(spark, tmp_path):
     """Per-kind equality fuzz: every constraint kind (required, all six
     known formats on strings, temporal fold, const, enum, range incl.
-    NaN, length) over a hand-built table with edge values — arrow counter
-    totals == Spark violation_counts."""
+    NaN) over a hand-built table with edge values — arrow counter totals
+    == Spark violation_counts. The ``*_java`` columns pin Java regex
+    semantics: '$' also matches before one final line terminator (CR,
+    CRLF, NEL, LS, PS), '.' stops at each, and '\\d' is ASCII-only."""
     import datetime as dt
     import math
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    uuid = "123e4567-e89b-12d3-a456-426614174000"
     rows = {
         "s_dt": [
             "2026-01-01T00:00:00Z",        # ok
@@ -664,8 +723,34 @@ def test_arrow_violation_counter_kinds_match_spark(spark, tmp_path):
         "s_const": ["k"] * 8 + ["j", None],
         "n_range": [1.0, 2.5, float("nan"), -3.0, None, 99.0, 2.0, 2.0, 2.0, 2.0],
         "n_enum": [1, 2, 1, 7, None, 1, 2, 2, 1, 9],
-        "s_len": ["ab", "abc", "a", "abcd", None, "ab", "ab", "ab", "ab", ""],
         "ts": [dt.datetime(2026, 1, 1)] * 9 + [None],
+        "s_dt_java": [
+            "2026-01-01T00:00:00Z\r",          # ok: CR is trimmed too
+            "2026-01-01T00:00:00+01:00\r\n",   # ok
+            "2026-01-01T00:00:00.5Z\r",        # ok
+            "2026-01-01T00:00:00Z\n",          # ok
+            "2026-01-01T00:00:00Z\u0085",      # regex ok, parse rejects
+            "2026-01-01T00:00:00Z\u2028",      # regex ok, parse rejects
+            "2026-01-01T00:00:00Z\u2029",      # regex ok, parse rejects
+            "\uff12\uff10\uff12\uff16-01-01T00:00:00Z",  # fullwidth digits
+            "\u0662\u0660\u0662\u0666-01-01T00:00:00Z",  # Arabic-Indic
+            "2026-01-01T00:00:00Z\r\r",        # two terminators
+        ],
+        "s_email_java": [
+            "a@b.co\r", "a@b.co\r\n", "a@b.co\u0085", "a@b.co\u2028",
+            "a@b.co\u2029", "a@b.co\n", "a@b.co\r\r", "a\u00e9@b.co",
+            None, "a@b.co",
+        ],
+        "s_uuid_java": [uuid + "\r", uuid + "\u2028", uuid + "\r\n", uuid,
+                        uuid + "\n\n", None, uuid, uuid, uuid, uuid],
+        "s_ipv4_java": ["1.2.3.4\r", "1.2.3.4\u0085", "\u0661.2.3.4",
+                        "1.2.3.4", None, "1.2.3.4", "1.2.3.4", "1.2.3.4",
+                        "1.2.3.4 ", "1.2.3.4"],
+        "s_ipv6_java": ["::1\r", "::1\u2029", "2001:db8::1.2.3.4\r\n",
+                        "::1\r\r", None, "::1", "::1", "::1", "::1", "::1"],
+        "s_uri_java": ["http://a.b/c\r", "http://a/b\rc", "http://a/b\u0085c",
+                       "http://a/b\u2028c", "https://x\r\r", "http://a/b c",
+                       "http://a/b\nc", "http://a.b/c", None, "https://x"],
     }
     table = pa.table(
         {
@@ -675,8 +760,11 @@ def test_arrow_violation_counter_kinds_match_spark(spark, tmp_path):
             "s_const": pa.array(rows["s_const"], pa.string()),
             "n_range": pa.array(rows["n_range"], pa.float64()),
             "n_enum": pa.array(rows["n_enum"], pa.int64()),
-            "s_len": pa.array(rows["s_len"], pa.string()),
             "ts": pa.array(rows["ts"], pa.timestamp("us")),
+            **{
+                c: pa.array(v, pa.string())
+                for c, v in rows.items() if c.endswith("_java")
+            },
         }
     )
     path = str(tmp_path / "kinds.parquet")
@@ -692,7 +780,12 @@ def test_arrow_violation_counter_kinds_match_spark(spark, tmp_path):
         ("enum", "s_enum", ("u", "a")),
         ("enum", "n_enum", (1, 2)),
         ("range", "n_range", 0.0, 10.0),
-        ("length", "s_len", 2, 3),
+        ("format", "s_dt_java", "date-time", False, True),
+        ("format", "s_email_java", "email", False, True),
+        ("format", "s_uuid_java", "uuid", False, True),
+        ("format", "s_ipv4_java", "ipv4", False, True),
+        ("format", "s_ipv6_java", "ipv6", False, True),
+        ("format", "s_uri_java", "uri", False, True),
     ]
     names, counter = V.arrow_violation_counter(spec, table.schema)
     import numpy as np
@@ -710,7 +803,14 @@ def test_arrow_violation_counter_kinds_match_spark(spark, tmp_path):
     assert got["required:ts"] == 1
     assert got["enum:s_enum"] == 2  # 'x', 'z'
     assert got["range:n_range"] == 3  # nan, -3, 99
-    assert got["length:s_len"] == 3  # 'a', 'abcd', ''
+    # NEL/LS/PS (regex ok, parse rejects), 2 non-ASCII years, CR CR
+    assert got["format:s_dt_java:date-time"] == 6
+    assert got["format:s_email_java:email"] == 2  # CR CR, non-ASCII local
+    assert got["format:s_uuid_java:uuid"] == 1  # LF LF
+    assert got["format:s_ipv4_java:ipv4"] == 2  # Arabic-Indic 1, space
+    assert got["format:s_ipv6_java:ipv6"] == 1  # CR CR
+    # '.' stops at CR, NEL, LS and LF mid-value; CR CR
+    assert got["format:s_uri_java:uri"] == 5
 
 
 def test_arrow_violation_counter_unsupported_raises(spark, tmp_path):

@@ -124,6 +124,19 @@ def test_partition_verdicts_deterministic(compiled):
     assert v1 == v2  # buckets are content-hash based, not physical partitions
 
 
+def _conv_hash(convs):
+    """The spilled ``ch`` column of these conv ids, as _integrity_fold
+    writes it."""
+    import pyarrow as pa
+
+    import pandas as pd
+
+    ch = pd.util.hash_array(
+        pa.array(convs).to_numpy(zero_copy_only=False).astype(object)
+    )
+    return pa.array(ch.view("int64"), type=pa.int64())
+
+
 def test_merge_partials_local_negative_turns():
     """Driver merge handles negative int32 turn indices in multi-part convs:
     the composite-key bias keeps the >>32 code recovery exact (an unbiased
@@ -136,6 +149,7 @@ def test_merge_partials_local_negative_turns():
     partials = pa.table(
         {
             "conv": ["a", "a", "b"],
+            "ch": _conv_hash(["a", "a", "b"]),
             "n": pa.array([3, 2, 2], type=pa.int64()),
             "mn": pa.array([-2, 0, 0], type=pa.int32()),
             "mx": pa.array([0, 1, 1], type=pa.int32()),
@@ -178,6 +192,7 @@ def test_merge_partials_local_two_tier_vs_bruteforce():
     partials = pa.table(
         {
             "conv": rows["conv"],
+            "ch": _conv_hash(rows["conv"]),
             "n": pa.array(rows["n"], type=pa.int64()),
             "mn": pa.array(rows["mn"], type=pa.int32()),
             "mx": pa.array(rows["mx"], type=pa.int32()),
@@ -268,17 +283,15 @@ def test_violation_examples_bounded_and_deterministic(spark):
 
 
 def test_merge_partials_local_hash_path_and_collisions():
-    """The ``ch`` fast path equals the string fallback, and a hash
-    COLLISION between two different convs only routes both through the
-    exact string-keyed path — results unchanged (collision-proof by
-    construction, not by hash quality)."""
+    """A hash COLLISION between two different convs only routes both
+    through the exact string-keyed path — results unchanged
+    (collision-proof by construction, not by hash quality)."""
     import pyarrow as pa
-
-    import pandas as pd
 
     # clean single-part conv "a"; dup single "b"; 2-part clean "c"
     data = {
         "conv": ["a", "b", "c", "c"],
+        "ch": _conv_hash(["a", "b", "c", "c"]),
         "n": pa.array([3, 4, 3, 3], type=pa.int64()),
         "mn": pa.array([0, 0, 0, 3], type=pa.int32()),
         "mx": pa.array([2, 2, 2, 5], type=pa.int32()),
@@ -288,33 +301,13 @@ def test_merge_partials_local_hash_path_and_collisions():
             type=pa.list_(pa.int32()),
         ),
     }
-    no_ch = pa.table(data)
-    want = V._merge_partials_local(no_ch)
+    want = V._merge_partials_local(pa.table(data))
     assert want == {"dup_rows_excess": 1, "ordering_violations": 1}
-
-    real = pd.util.hash_array(
-        pa.array(data["conv"]).to_numpy(zero_copy_only=False).astype(object)
-    ).view("int64")
-    with_ch = no_ch.add_column(1, "ch", pa.array(real, type=pa.int64()))
-    assert V._merge_partials_local(with_ch) == want
 
     # force a collision: single-part convs "a" and "b" share a hash ->
     # both take the exact path, keyed by their true conv strings
     collided = pa.table({**data, "ch": pa.array([7, 7, 9, 9], type=pa.int64())})
-    collided = collided.select(
-        ["conv", "ch", "n", "mn", "mx", "ndl", "turns"]
-    )
     assert V._merge_partials_local(collided) == want
-
-    # a resumed checkpoint mixing pre-ch part files with new ones unifies
-    # to a ch column WITH NULLS; the fast path must be skipped (float64
-    # NaNs make pandas duplicated() mark every legacy row a duplicate) and
-    # the string fallback must give identical counts
-    mixed = pa.table(
-        {**data, "ch": pa.array([real[0], None, real[2], real[3]],
-                                type=pa.int64())}
-    ).select(["conv", "ch", "n", "mn", "mx", "ndl", "turns"])
-    assert V._merge_partials_local(mixed) == want
 
 
 def _spill_tables():
@@ -323,16 +316,11 @@ def _spill_tables():
     everything else is clean."""
     import pyarrow as pa
 
-    import pandas as pd
-
     def tbl(convs, ns, mns, mxs, turns):
-        ch = pd.util.hash_array(
-            pa.array(convs).to_numpy(zero_copy_only=False).astype(object)
-        ).view("int64")
         return pa.table(
             {
                 "conv": pa.array(convs, type=pa.string()),
-                "ch": pa.array(ch, type=pa.int64()),
+                "ch": _conv_hash(convs),
                 "n": pa.array(ns, type=pa.int64()),
                 "mn": pa.array(mns, type=pa.int32()),
                 "mx": pa.array(mxs, type=pa.int32()),
