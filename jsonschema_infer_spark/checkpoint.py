@@ -111,9 +111,10 @@ def _open_manifest(checkpoint_dir: str, identity: dict) -> str:
     return mpath
 
 
-def recorded(ckpt: str, i: int, key: dict):
+def recorded(ckpt: str, i: int, key: dict, extra=()):
     """Task ``i``'s committed result as a ``reduce_tasks`` element, or None
-    when it has no marker or one committed under another task key. A
+    when it has no marker, one committed under another task key, or one
+    that lacks a lineage field named in ``extra`` (an older engine's). A
     writer killed before its rename leaves only ``state_<i>.json.tmp.*``,
     which is never read."""
     path = _state_path(ckpt, i)
@@ -121,7 +122,7 @@ def recorded(ckpt: str, i: int, key: dict):
         return None
     with open(path) as f:
         rec = json.load(f)
-    if any(rec.get(k) != v for k, v in key.items()):
+    if any(rec.get(k) != v for k, v in key.items()) or None in map(rec.get, extra):
         return None
     state, vec = S.state_from_jsonable(rec.pop("state")), rec.pop("violations")
     vec = None if vec is None else np.asarray(vec, dtype=np.int64)
@@ -136,12 +137,14 @@ def commit(ckpt: str, i: int, rec: dict, state: dict, vec) -> None:
     _atomic_write(_state_path(ckpt, i), json.dumps(marker))
 
 
-def run_task(ckpt: str | None, i: int, key: dict, body) -> tuple:
+def run_task(ckpt: str | None, i: int, key: dict, body, extra=None) -> tuple:
     """Task ``i``'s recorded result if ``ckpt`` holds a marker for ``key``,
     else ``body() -> (state, rows[, violation vector])`` and its commit
     (none with ``ckpt=None``). Returns the ``reduce_tasks`` element
-    (state, rows, vector or None, [lineage])."""
-    got = recorded(ckpt, i, key) if ckpt is not None else None
+    (state, rows, vector or None, [lineage]). The body fills in the
+    lineage fields named in ``extra``."""
+    extra = extra or {}
+    got = recorded(ckpt, i, key, extra) if ckpt is not None else None
     if got is not None:
         return got
     from pyspark import TaskContext
@@ -156,6 +159,7 @@ def run_task(ckpt: str | None, i: int, key: dict, body) -> tuple:
         "rows": out[1],
         "secs": time.perf_counter() - t,
         "attempt": ctx.attemptNumber() if ctx is not None else 0,
+        **extra,
     }
     if ckpt is not None:
         commit(ckpt, i, rec, out[0], vec)

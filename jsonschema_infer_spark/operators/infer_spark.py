@@ -112,6 +112,24 @@ def _track_range(st: dict, lo, hi) -> None:
         st["num_max"] = float(hi)
 
 
+def _is_str(typ) -> bool:
+    return pa.types.is_string(typ) or pa.types.is_large_string(typ)
+
+
+def saturated(st: dict) -> bool:
+    """A string node's values can teach it nothing more (for good: all
+    three are monotone): const has differed, distinct is gone, no format
+    is left. Only its counts still grow (``credit_strings``)."""
+    return st["const_differ"] and st["distinct"] is None and st["fmts"] == []
+
+
+def credit_strings(st: dict, n: int) -> None:
+    """Count ``n`` non-null string values into a node."""
+    st["n"] += n
+    st["types"]["string"] = st["types"].get("string", 0) + n
+    st["str_n"] += n
+
+
 def _bounded_unique(arr: pa.Array):
     """Unique values if they fit the distinct budget, else None."""
     try:
@@ -320,9 +338,13 @@ def observe_arrow_column(
     semantics (nulls skipped, node.go:136-149). ``ok`` carries per-row
     order keys when examples capture is on (see the _OrderKeys block)."""
     typ = arr.type
-    if pa.types.is_dictionary(typ):
+    if pa.types.is_dictionary(typ) and not (
+        ok is None and _is_str(typ.value_type) and saturated(st)
+        and arr.dictionary.null_count == 0
+    ):
         # direct parquet reads restore dictionary encoding from the
         # embedded arrow schema; observation semantics are value-level
+        # (a saturated string column only counts, so it skips the cast)
         observe_arrow_column(st, arr.cast(typ.value_type), config, count_nulls, ok)
         return
     if ok is not None:
@@ -418,11 +440,9 @@ def observe_arrow_column(
                     tag = "integer" if S.is_go_integral(val) else "number"
                     _add_distinct(st, tag, [int(val) if tag == "integer" else val])
 
-    elif pa.types.is_string(typ) or pa.types.is_large_string(typ):
-        st["n"] += n
-        st["types"]["string"] = st["types"].get("string", 0) + n
-        st["str_n"] += n
-        if st["const_differ"] and st["distinct"] is None and st["fmts"] == []:
+    elif _is_str(typ) or pa.types.is_dictionary(typ):
+        credit_strings(st, n)
+        if saturated(st):
             return  # nothing left to learn from the values: skip the copy
         vals = arr.drop_null()
         if not st["const_differ"]:
@@ -445,9 +465,7 @@ def observe_arrow_column(
 
     elif pa.types.is_timestamp(typ):
         # semantically a string column rendered as RFC 3339 (see module doc)
-        st["n"] += n
-        st["types"]["string"] = st["types"].get("string", 0) + n
-        st["str_n"] += n
+        credit_strings(st, n)
         us = arr.cast(pa.timestamp("us")).cast(pa.int64()).drop_null()
         v = us.to_numpy(zero_copy_only=False)
         mn, mx = int(v.min()), int(v.max())
@@ -479,9 +497,7 @@ def observe_arrow_column(
 
     elif pa.types.is_date(typ):
         # dates render as "YYYY-MM-DD" strings (too short for RFC 3339)
-        st["n"] += n
-        st["types"]["string"] = st["types"].get("string", 0) + n
-        st["str_n"] += n
+        credit_strings(st, n)
         days = arr.cast(pa.date32()).cast(pa.int32()).drop_null().to_numpy(
             zero_copy_only=False
         )
@@ -555,14 +571,15 @@ def observe_arrow_column(
 
 
 def fold_batches_columnar(
-    batches, config: InferConfig, order_cols: list | None = None
+    batches, config: InferConfig, order_cols: list | None = None, root=None
 ) -> tuple:
     """Partial fold: iterate Arrow batches, observe each column vectorized.
     Returns (root_state, rows). ``order_cols`` (required when
     config.examples) names the total-order columns for example capture;
     the root's example is the full row dict at the minimal key, exactly
-    what a sequential fold over order-sorted row-documents records."""
-    root = S.new_state()
+    what a sequential fold over order-sorted row-documents records.
+    ``root``: a caller-owned state to fold into, read between batches."""
+    root = S.new_state() if root is None else root
     rows = 0
     capture = bool(config.examples and order_cols)
     for batch in batches:

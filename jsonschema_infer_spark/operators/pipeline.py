@@ -11,16 +11,17 @@ second scan is the same IO all over again.
 
 Here each (file, row-group-range) task iterates its Arrow batches ONCE:
 
-    pyarrow row-group scan (memory-mapped, no Spark row pipeline)
+    pyarrow row-group scan (no Spark row pipeline); a string column stops
+    decoding once its state is saturated, the footer credits the rest
       -> vectorized inference fold (observe every column)   \\ same
       -> per-conversation integrity pre-aggregation          | batch
       -> contract violation counter (given a violation_spec) / stream
     inference partial  -> returned, merged by checkpoint.reduce_tasks (one
                           treeAggregate, lineage checked at any task count)
-    integrity partials -> spilled to parquet (a few % of input bytes),
-                          one part file per task, reduced by
-                          validate.reduce_spilled_partials (driver merge or
-                          distributed, picked from the measured spill size)
+    integrity partials -> one partial per conversation run (or hash group),
+                          spilled plain, one part file per task, checked
+                          against the task's keyed rows and reduced by
+                          validate.reduce_spilled_partials
     completion marker  -> the task's state, rows, violation vector and
                           lineage, written last (checkpoint.run_task): the
                           checkpoint a rerun over the same directory
@@ -46,8 +47,11 @@ import shutil
 import tempfile
 import time
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
+from . import state as S
 from .._worker import release_zip_finders
 from ..checkpoint import (
     _open_manifest, config_fingerprint, file_fingerprint, reduce_tasks,
@@ -56,15 +60,39 @@ from ..checkpoint import (
 from ..config import InferConfig, default_config
 from .infer_spark import (
     _infer_result,
+    _is_str,
     _list_rg_tasks,
+    credit_strings,
     fold_batches_columnar,
     list_parquet_files,
+    saturated,
 )
 from .validate import (
     _integrity_fold,
     _partial_schema,
     reduce_spilled_partials,
 )
+
+
+def _credited_columns(pf, lo: int, hi: int, config: InferConfig, keys: set, spec) -> list:
+    """(name, parquet leaf index) of the columns a task over row groups
+    [lo, hi) of ``pf`` decodes only until their state is ``saturated``:
+    top-level string or dictionary<string> columns, not a key or order
+    column, that ``spec`` checks for ``required`` at most, whose footer
+    has a null count in every row group. None with examples capture, or
+    when a nested column makes leaf and field indexes differ."""
+    sch, md = pf.schema_arrow, pf.metadata
+    if config.examples or len(set(sch.names)) != len(sch) or md.num_columns != len(sch):
+        return []
+    out = []
+    for k, fld in enumerate(sch):
+        typ = fld.type.value_type if pa.types.is_dictionary(fld.type) else fld.type
+        if (_is_str(typ) and fld.name not in keys
+                and all(e[0] == "required" for e in spec or () if e[1] == fld.name)):
+            stats = [md.row_group(r).column(k).statistics for r in range(lo, hi)]
+            if all(s is not None and s.has_null_count for s in stats):
+                out.append((fld.name, k))
+    return out
 
 
 def _fused_task(
@@ -78,6 +106,7 @@ def _fused_task(
     i: int,
     order_cols: list | None = None,
     violation_spec: list | None = None,
+    lineage: dict | None = None,
 ) -> tuple:
     """One fused task: fold row-groups [lo, hi) of ``f`` through the
     inference observer while teeing (conv, turn) into the integrity
@@ -87,9 +116,14 @@ def _fused_task(
     ``violation_spec`` is given — the same batch stream then ALSO feeds
     the arrow violation counter (validate.arrow_violation_counter), so a
     contract's constraint spec is validated in this one pass instead of a
-    second whole-table scan. Run by ``infer_and_integrity_parquet`` (with or
-    without a checkpoint directory) and, one task at a time without Spark,
-    by contractbench's layer replay."""
+    second whole-table scan. ``lineage`` receives ``keyed_rows`` (rows
+    with a non-null conv and turn), which the reduce checks the part file
+    against. Run by ``infer_and_integrity_parquet`` and, one task at a
+    time without Spark, by contractbench's layer replay.
+
+    The ``_credited_columns`` come from a second, aligned reader, which is
+    closed once all of them are ``saturated``; the footer then credits the
+    rest: rows less nulls as strings, nulls as ``required`` violations."""
     import os
 
     import pyarrow.parquet as pq
@@ -98,41 +132,90 @@ def _fused_task(
 
     integrity_fold = _integrity_fold(conv_col, idx_col)
     pf = pq.ParquetFile(f)
+    ns = pf.schema_arrow.names
     counter = None
     vcounts = None
     vnames: list = []
     if violation_spec is not None:
         vnames, counter = arrow_violation_counter(violation_spec, pf.schema_arrow)
-    batches = pf.iter_batches(batch_size=10_000, row_groups=list(range(lo, hi)))
+    rgs = list(range(lo, hi))
+    credit = _credited_columns(
+        pf, lo, hi, config, {conv_col, idx_col, *(order_cols or ())}, violation_spec
+    )
+    cnames = [c for c, _ in credit]
+
+    def read(cols):
+        return pf.iter_batches(batch_size=10_000, row_groups=rgs, columns=cols)
+
+    batches = read([c for c in ns if c not in cnames] if credit else None)
+    side = read(cnames) if credit else None
+    root = S.new_state()
     kept: list = []
-    ns = pf.schema_arrow.names
-    idxs = (ns.index(conv_col), ns.index(idx_col))
+    seen = dict.fromkeys(cnames, 0)  # nulls of the decoded credited rows
+    decoded = keyed = 0
+
+    def aligned(bs):
+        # slices of both readers up to their common boundaries (a
+        # dictionary column's batches also end at row-group ends)
+        nonlocal side, decoded
+        sb = None
+        for b in bs:
+            while b.num_rows:
+                if side is not None and all(
+                    c in root["props"] and saturated(root["props"][c]) for c in cnames
+                ):
+                    side.close()
+                    side = None
+                if side is None:
+                    yield b
+                    break
+                sb = sb if sb is not None and sb.num_rows else next(side)
+                k = min(b.num_rows, sb.num_rows)
+                cols = dict(zip(b.schema.names, b.slice(0, k).columns))
+                cols.update(zip(cnames, sb.slice(0, k).columns))
+                decoded += k
+                for c in cnames:
+                    seen[c] += cols[c].null_count
+                yield pa.RecordBatch.from_arrays([cols[c] for c in ns], names=ns)
+                b, sb = b.slice(k), sb.slice(k)
+        if side is not None and (sb is not None and sb.num_rows or next(side, None)):
+            raise RuntimeError(f"{f}: misaligned column readers")
 
     def tee(bs):
-        nonlocal vcounts
+        nonlocal vcounts, keyed
         for b in bs:
             cols = []
-            for j in idxs:
-                a = b.column(j)
+            for c in (conv_col, idx_col):
+                a = b.column(c)
                 if pa.types.is_dictionary(a.type):
                     a = a.cast(a.type.value_type)
                 cols.append(a)
-            kept.append(
-                pa.RecordBatch.from_arrays(cols, names=[conv_col, idx_col])
-            )
+            keyed += pc.and_(pc.is_valid(cols[0]), pc.is_valid(cols[1])).true_count
+            kept.append(pa.RecordBatch.from_arrays(cols, names=[conv_col, idx_col]))
             if counter is not None:
                 c = counter(b)
                 vcounts = c if vcounts is None else vcounts + c
             yield b
 
-    st, rows = fold_batches_columnar(tee(batches), config, order_cols)
+    st, rows = fold_batches_columnar(
+        tee(aligned(batches) if credit else batches), config, order_cols, root
+    )
+    if credit and side is None:  # the credited reader was closed early
+        groups = [pf.metadata.row_group(r) for r in rgs]
+        rest = sum(g.num_rows for g in groups) - decoded
+        for c, k in credit:
+            nulls = sum(g.column(k).statistics.null_count for g in groups) - seen[c]
+            credit_strings(st["props"][c], rest - nulls)
+            if f"required:{c}" in vnames:
+                vcounts[vnames.index(f"required:{c}")] += nulls
     # every task writes its part file, an empty one too, so the driver
     # can check the spill holds exactly one file per task
-    # (_check_spill_parts). Write-then-rename: a part file appears under
+    # (reduce_spilled_partials). Write-then-rename: a part file appears under
     # its final name only when complete; the leading dot keeps a torn tmp
     # (writer killed mid-write) invisible to the part-* glob, pyarrow
     # dataset discovery and Spark, and the pid suffix keeps concurrent
-    # attempts from sharing a temp file
+    # attempts from sharing a temp file. Written plain: the driver reads
+    # it once, right after the scan
     final = os.path.join(out_dir, f"part-{i:05d}.parquet")
     tmp = os.path.join(out_dir, f".part-{i:05d}.parquet.inprogress-{os.getpid()}")
     pq.write_table(
@@ -140,41 +223,19 @@ def _fused_task(
             list(integrity_fold(iter(kept))), schema=_partial_schema()
         ),
         tmp,
+        compression="none",
+        use_dictionary=False,
+        write_statistics=False,
     )
     os.replace(tmp, final)
-    if violation_spec is not None:
-        import numpy as np
-
-        if vcounts is None:  # zero batches in this task's range
-            vcounts = np.zeros(len(vnames), dtype=np.int64)
+    if lineage is not None:
+        lineage["keyed_rows"] = keyed
     # last step: the worker's next task then re-reads no zip directory
     release_zip_finders()
-    if violation_spec is not None:
-        return st, rows, vcounts
-    return st, rows
-
-
-def _check_spill_parts(out_dir: str, task_ids) -> None:
-    """Raise unless ``out_dir`` holds exactly one ``part-<i>`` file per
-    task in ``task_ids``. A lost part file would silently drop that
-    task's conversations from the integrity counts; a stale one (a reused
-    spill directory, or a resumed run with another task layout) would
-    silently add rows the scan never read."""
-    import glob
-    import os
-
-    got = {
-        os.path.basename(p)
-        for p in glob.glob(os.path.join(out_dir, "part-*.parquet"))
-    }
-    want = {f"part-{i:05d}.parquet" for i in task_ids}
-    if got != want:
-        raise ValueError(
-            f"integrity spill {out_dir!r} does not match the run's tasks: "
-            f"missing {sorted(want - got)[:5]}, "
-            f"unexpected {sorted(got - want)[:5]}; "
-            "use a fresh spill/checkpoint directory"
-        )
+    if violation_spec is None:
+        return st, rows
+    # zero batches in this task's range count no violations
+    return st, rows, np.zeros(len(vnames), np.int64) if vcounts is None else vcounts
 
 
 def infer_and_integrity_parquet(
@@ -263,10 +324,11 @@ def infer_and_integrity_parquet(
     def run(item):
         i, (f, lo, hi) = item
         key = {"file": f, "row_groups": [lo, hi], "fingerprint": fingerprints[f]}
+        extra = {"keyed_rows": None}
         return run_task(ckpt, i, key, lambda: _fused_task(
             f, lo, hi, config, conv_col, idx_col, out_dir, i, order_cols,
-            violation_spec,
-        ))
+            violation_spec, extra,
+        ), extra)
 
     try:
         mpath = _open_manifest(ckpt, identity)
@@ -275,8 +337,9 @@ def infer_and_integrity_parquet(
         ).map(run)
         merged, total_rows, vtotals, lineage = reduce_tasks(rdd, len(tasks))
         res = _infer_result(merged, total_rows, lineage, config, t0)
-        _check_spill_parts(out_dir, range(len(tasks)))
-        integ = reduce_spilled_partials(spark, out_dir)
+        integ = reduce_spilled_partials(
+            spark, out_dir, {r["pid"]: r["keyed_rows"] for r in lineage}
+        )
         counts = None
         if violation_spec is not None:
             # no tasks leave no violation vector: every count is 0

@@ -302,28 +302,19 @@ def arrow_violation_counter(spec: list, arrow_schema):
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    from .infer_spark import _is_str
+
     names: list = []
     checks: list = []
-    schema_names = arrow_schema.names
-
-    def _col_index(name: str) -> int:
-        if name not in schema_names:
-            raise UnsupportedArrowSpec(f"column {name!r} not in scan schema")
-        return schema_names.index(name)
-
-    def _is_str(typ) -> bool:
-        return pa.types.is_string(typ) or pa.types.is_large_string(typ)
-
     for entry in spec:
         kind, name = entry[0], entry[1]
-        j = _col_index(name)
+        if name not in arrow_schema.names:
+            raise UnsupportedArrowSpec(f"column {name!r} not in scan schema")
         typ = arrow_schema.field(name).type
         if pa.types.is_dictionary(typ):  # parquet dict-encoded columns
             typ = typ.value_type
         if kind == "required":
-
-            def fn(arr):
-                return arr.null_count
+            fn = None  # the raw column's null_count: no dictionary cast
         elif kind == "format":
             fmt, temporal, known = entry[2], entry[3], entry[4]
             if not known:
@@ -397,22 +388,28 @@ def arrow_violation_counter(spec: list, arrow_schema):
         else:
             raise UnsupportedArrowSpec(f"unknown constraint kind {kind!r}")
         names.append(constraint_name(entry))
-        checks.append((j, fn))
+        checks.append((name, fn))
 
     def count_batch(batch) -> "np.ndarray":
+        # columns are found by name: a batch may lack a column whose
+        # counts the caller credits from the parquet footer instead
+        present = set(batch.schema.names)
         decoded: dict = {}
 
-        def col(j):
-            if j not in decoded:
-                a = batch.column(j)
+        def col(name):
+            if name not in decoded:
+                a = batch.column(name)
                 if pa.types.is_dictionary(a.type):
                     a = a.cast(a.type.value_type)
-                decoded[j] = a
-            return decoded[j]
+                decoded[name] = a
+            return decoded[name]
 
-        return np.array(
-            [fn(col(j)) for j, fn in checks], dtype=np.int64
-        )
+        def count(name, fn):
+            if name not in present:
+                return 0
+            return batch.column(name).null_count if fn is None else fn(col(name))
+
+        return np.array([count(name, fn) for name, fn in checks], dtype=np.int64)
 
     return names, count_batch
 
@@ -634,7 +631,8 @@ def turn_ordering_violations(
 def _partial_schema():
     """Arrow schema of the per-conv integrity partials: what
     `_integrity_fold` yields and what `pipeline._fused_task` spills (an
-    empty task spills an empty table of this schema)."""
+    empty task spills an empty table of this schema). A null ``turns`` is
+    the dense range ``mn..mx`` (``ndl == mx - mn + 1``), not spilled."""
     import pyarrow as pa
 
     return pa.schema(
@@ -650,13 +648,39 @@ def _partial_schema():
     )
 
 
+def _run_partials(conv, idx):
+    """Partials without a hash table, one per run (adjacent rows with one
+    conv), when runs are at most half the rows and the turn strictly
+    increases inside each: count = distinct = run length, min/max = first/
+    last turn. Else None. A conv in two runs gets two partials with one
+    ``ch``, which the reduces union."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rows = len(conv)
+    step = pc.not_equal(conv.slice(1), conv.slice(0, rows - 1)).to_numpy(False)
+    starts = np.flatnonzero(np.concatenate([[True], step]))
+    if 2 * len(starts) > rows:
+        return None
+    t = idx.to_numpy(zero_copy_only=False)
+    if not ((np.diff(t.astype(np.int64)) > 0) | step).all():
+        return None
+    offsets = np.append(starts, rows)
+    n, turns = pa.array(np.diff(offsets)), pa.ListArray.from_arrays(offsets, idx)
+    return (conv.take(pa.array(starts)), n, pa.array(t[starts]),
+            pa.array(t[offsets[1:] - 1]), n, turns)
+
 
 def _integrity_fold(conv_col: str, idx_col: str):
     """Per-partition pre-aggregation of (conv, turn) batches: one output
     row per (conv, partition) with local count/min/max and the local
     UNIQUE turn list — exact cross-partition merge material at a fraction
     of the raw rows. Rows with a NULL conv or turn are dropped (the
-    embedded-uniqueness semantics; see transcript_integrity_summary)."""
+    embedded-uniqueness semantics; see transcript_integrity_summary).
+    Conv-clustered rows take `_run_partials`, any others one arrow
+    ``group_by``; either way a dense partial spills a null ``turns``."""
+    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -670,44 +694,50 @@ def _integrity_fold(conv_col: str, idx_col: str):
         bs = list(batches)
         if not bs:
             return
-        t = pa.Table.from_batches(bs)
-        t = t.drop_null()
+        t = pa.Table.from_batches(bs).drop_null()
         if t.num_rows == 0:
             return
-        # C++ hash aggregation, including the per-group distinct-value list
-        g = t.group_by([conv_col]).aggregate(
-            [
-                (idx_col, "count"),
-                (idx_col, "min"),
-                (idx_col, "max"),
-                (idx_col, "distinct"),
-            ]
+        parts = _run_partials(
+            t.column(conv_col).combine_chunks(),
+            t.column(idx_col).combine_chunks().cast(pa.int32()),
         )
-        turns = g[f"{idx_col}_distinct"].cast(pa.list_(pa.int32()))
-        conv_str = g[conv_col].cast(pa.string())
+        if parts is None:  # C++ hash aggregation, with the distinct lists
+            g = t.group_by([conv_col]).aggregate(
+                [(idx_col, a) for a in ("count", "min", "max", "distinct")]
+            )
+            turns = g[f"{idx_col}_distinct"].combine_chunks().cast(pa.list_(pa.int32()))
+            parts = [g[f"{idx_col}_{a}"] for a in ("count", "min", "max")]
+            parts = [g[conv_col], *parts, pc.list_value_length(turns), turns]
+        conv, n, mn, mx, ndl, turns = parts
+        conv_str = conv.cast(pa.string())
+        span = mx.to_numpy().astype(np.int64) - mn.to_numpy() + 1
+        dense = pa.array(ndl.to_numpy() == span)
+        turns = pc.if_else(dense, pa.scalar(None, turns.type), turns)
         # int64 conv hash, computed HERE (distributed, ~10 ms per task):
         # the driver merge finds multi-task convs by sorting these ints
         # instead of hash-aggregating millions of strings twice (measured
         # 3.4 s of a 6 s serial merge at 5M partials). Deterministic
         # (siphash, fixed key) and collision-safe by construction: a
         # collision only routes extra rows into the exact string-keyed
-        # union path, never changes a result.
+        # union path, never changes a result. categorize=False gives the
+        # same hashes without factorizing convs first.
         import pandas as _pd
 
         ch = _pd.util.hash_array(
-            conv_str.to_numpy(zero_copy_only=False).astype(object)
+            conv_str.to_numpy(zero_copy_only=False).astype(object),
+            categorize=False,
         ).view("int64")  # same bits; Spark's Arrow bridge lacks uint64
         out = pa.Table.from_arrays(
             [
                 conv_str,
                 pa.array(ch, type=pa.int64()),
-                g[f"{idx_col}_count"].cast(pa.int64()),
-                g[f"{idx_col}_min"].cast(pa.int32()),
-                g[f"{idx_col}_max"].cast(pa.int32()),
+                n.cast(pa.int64()),
+                mn.cast(pa.int32()),
+                mx.cast(pa.int32()),
                 # local distinct count (``ndl``) as its own column: the
                 # reduce's main path then never decodes the list column
                 # (parquet column pruning skips it on the spill scan)
-                pc.list_value_length(turns).cast(pa.int64()),
+                ndl.cast(pa.int64()),
                 turns,
             ],
             schema=_partial_schema(),
@@ -775,11 +805,16 @@ def _integrity_reduce_collect(partials: DataFrame) -> dict:
         F.sum("n").alias("n_turns"),
         F.min("mn").alias("min_idx"),
         F.max("mx").alias("max_idx"),
-        F.size(F.array_distinct(F.flatten(F.collect_list("turns")))).alias(
+        F.size(F.array_distinct(F.flatten(F.collect_list(_turns())))).alias(
             "n_distinct"
         ),
     )
     return _integrity_finalize(g)
+
+
+def _turns() -> Column:
+    """A partial's turn list, a null one expanded to its range mn..mx."""
+    return F.coalesce("turns", F.sequence("mn", "mx"))
 
 
 def _integrity_reduce_split(partials: DataFrame) -> dict:
@@ -799,7 +834,7 @@ def _integrity_reduce_split(partials: DataFrame) -> dict:
     )
     multi = g1.filter(F.col("parts") > 1).select("conv")
     exact = (
-        partials.select("conv", "turns")
+        partials.select("conv", _turns().alias("turns"))
         .join(multi, "conv")
         .groupBy("conv")
         .agg(
@@ -882,7 +917,8 @@ def _judge_multi_subset(sub) -> tuple:
     """Exact per-conv judgment of partial rows whose conv may span map
     tasks (arrow table with conv/n/mn/mx/turns): groups by the TRUE conv
     string, unions the turn sets via one composite-key unique, and returns
-    this subset's (dup_rows_excess, ordering_violations) contribution."""
+    this subset's (dup_rows_excess, ordering_violations) contribution. A
+    null turn list stands for the range mn..mx."""
     import numpy as np
 
     import pyarrow as pa
@@ -897,15 +933,23 @@ def _judge_multi_subset(sub) -> tuple:
     G = int(codes.max()) + 1
     n_sub = sub.column("n").to_numpy(zero_copy_only=False)
     n_turns = np.bincount(codes, weights=n_sub, minlength=G).astype(np.int64)
+    mn_r = sub.column("mn").to_numpy(zero_copy_only=False).astype(np.int64)
+    mx_r = sub.column("mx").to_numpy(zero_copy_only=False).astype(np.int64)
     mn = np.full(G, np.iinfo(np.int64).max)
-    np.minimum.at(mn, codes, sub.column("mn").to_numpy(zero_copy_only=False))
+    np.minimum.at(mn, codes, mn_r)
     mx = np.full(G, np.iinfo(np.int64).min)
-    np.maximum.at(mx, codes, sub.column("mx").to_numpy(zero_copy_only=False))
+    np.maximum.at(mx, codes, mx_r)
     turns = sub.column("turns")
     if isinstance(turns, pa.ChunkedArray):
         turns = turns.combine_chunks()
-    lens = np.diff(turns.offsets.to_numpy())
-    flat = turns.flatten().to_numpy(zero_copy_only=False)
+    listed = turns.is_valid().to_numpy(zero_copy_only=False)
+    lens = np.where(
+        listed, pc.list_value_length(turns).fill_null(0).to_numpy(), mx_r - mn_r + 1
+    )
+    # every row as its range, then the listed rows' own turns over theirs
+    starts = np.cumsum(lens) - lens
+    flat = np.repeat(mn_r - starts, lens) + np.arange(int(lens.sum()))
+    flat[np.repeat(listed, lens)] = turns.flatten().to_numpy(zero_copy_only=False)
     rep = np.repeat(codes.astype(np.int64, copy=False), lens)
     # exact distinct per conv via one composite-key unique. The +2^31
     # bias maps any int32 turn value into [0, 2^32), so the >>32 code
@@ -924,11 +968,13 @@ def _judge_multi_subset(sub) -> tuple:
 
 
 # Spills up to this many bytes are merged on the driver; larger ones go
-# through the distributed _integrity_reduce_split.
+# through the distributed _integrity_reduce_split. The spill is written
+# plain (no compression, dictionary or statistics), so its file size is
+# about the bytes the driver loads.
 _DRIVER_MERGE_MAX_BYTES = 256 << 20
 
 
-def reduce_spilled_partials(spark, out_dir: str) -> dict:
+def reduce_spilled_partials(spark, out_dir: str, keyed_rows: dict | None = None) -> dict:
     """Merge a directory of spilled per-conv integrity partials (the
     ``part-*.parquet`` files `pipeline._fused_task` writes) into the final
     {dup_rows_excess, ordering_violations} dict.
@@ -940,20 +986,43 @@ def reduce_spilled_partials(spark, out_dir: str) -> dict:
     `_integrity_reduce_split`, whose main aggregation carries five longs
     per conv. Only the final ``part-*`` names are read: a torn
     ``.part-*.inprogress-<pid>`` file from a killed writer never reaches
-    either reader."""
+    either reader.
+
+    ``keyed_rows`` maps each task id to the rows with a non-null conv and
+    turn it read; the spill must then hold one ``part-<i>`` per task with
+    that Σ ``n``. A part file lost, stale, truncated or swapped for
+    another would otherwise change the counts silently."""
     import glob
     import os
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     spilled = sorted(glob.glob(os.path.join(out_dir, "part-*.parquet")))
+    if keyed_rows is not None:
+        ids = {f"part-{i:05d}.parquet": i for i in keyed_rows}
+        got, want = {os.path.basename(p) for p in spilled}, set(ids)
+        if got != want:
+            raise ValueError(
+                f"integrity spill {out_dir!r} does not match the run's tasks: "
+                f"missing {sorted(want - got)[:5]}, unexpected {sorted(got - want)[:5]}"
+                "; use a fresh spill/checkpoint directory"
+            )
     if not spilled:
         return {"dup_rows_excess": 0, "ordering_violations": 0}
-    if sum(os.path.getsize(p) for p in spilled) <= _DRIVER_MERGE_MAX_BYTES:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        return _merge_partials_local(
-            pa.concat_tables([pq.read_table(p) for p in spilled])
-        )
+    local = sum(os.path.getsize(p) for p in spilled) <= _DRIVER_MERGE_MAX_BYTES
+    if local or keyed_rows is not None:  # the distributed path reads only n
+        tables = [pq.read_table(p, columns=None if local else ["n"]) for p in spilled]
+    for p, t in zip(spilled, tables) if keyed_rows is not None else ():
+        got = int(t.column("n").to_numpy().sum())
+        want = keyed_rows[ids[os.path.basename(p)]]
+        if got != want:
+            raise ValueError(
+                f"integrity spill {p!r} holds {got} keyed rows, but its "
+                f"task read {want}; use a fresh spill/checkpoint directory"
+            )
+    if local:
+        return _merge_partials_local(pa.concat_tables(tables))
     return _integrity_reduce_split(spark.read.parquet(*spilled))
 
 

@@ -826,3 +826,244 @@ def test_arrow_violation_counter_unsupported_raises(spark, tmp_path):
         V.arrow_violation_counter([("const", "t", "2026-01-01")], schema)
     with pytest.raises(V.UnsupportedArrowSpec):
         V.arrow_violation_counter([("enum", "a", (1, 2))], schema)
+
+
+# --- footer-credited string columns ---------------------------------------------
+
+from contextlib import contextmanager  # noqa: E402
+from unittest import mock  # noqa: E402
+
+from hypothesis import given, settings, strategies as hst  # noqa: E402
+
+_CREDIT_SPEC = [
+    ("required", "conv_id"), ("required", "s_late"), ("required", "s_const"),
+    ("required", "s_nulls"),
+]
+_TS = ["2024-01-02T03:04:05Z", "2024-05-06T07:08:09Z"]
+
+
+def _credit_table(rows, late, rg_rows, dict_cols, late_nulls):
+    """conv-clustered keys plus three string columns the fused task may
+    credit from the footer: ``s_late`` saturates only after row ``late``
+    (date-times before it, unique values after), ``s_const`` is const in
+    the first row group, and ``s_nulls`` has nulls only in the row groups
+    after the first two, at the positions ``late_nulls``."""
+    import pyarrow as pa
+
+    k = range(rows)
+    nulls = {p for p in late_nulls if p >= 2 * rg_rows}
+    cols = {
+        "conv_id": pa.array([f"c{i // 5}" for i in k]),
+        "turn_idx": pa.array([i % 5 for i in k], pa.int32()),
+        "s_late": pa.array([_TS[i % 2] if i < late else f"v{i}" for i in k]),
+        "s_const": pa.array(["x" if i < rg_rows else f"y{i % 100}" for i in k]),
+        "s_nulls": pa.array([None if i in nulls else f"n{i}" for i in k]),
+    }
+    for c in dict_cols:
+        cols[c] = cols[c].dictionary_encode()
+    return pa.table(cols)
+
+
+def _norm_latch(st):
+    """``_norm_state``, and a differed const latch's ``const_set`` dropped:
+    whether the latch was set before it differed depends on where the
+    batches end, and nothing reads it once it has differed."""
+    out = _norm_state(st)
+    if out["const_differ"]:
+        out["const_set"] = None
+    out["props"] = {k: _norm_latch(v) for k, v in st["props"].items()}
+    return out
+
+
+@contextmanager
+def _reader_spy():
+    """Records (columns, rows yielded) of every ParquetFile.iter_batches."""
+    import pyarrow.parquet as pq
+
+    calls = []
+    real = pq.ParquetFile.iter_batches
+
+    def spy(self, *args, columns=None, **kwargs):
+        rec = [columns, 0]
+        calls.append(rec)
+        for b in real(self, *args, columns=columns, **kwargs):
+            rec[1] += b.num_rows
+            yield b
+
+    with mock.patch.object(pq.ParquetFile, "iter_batches", spy):
+        yield calls
+
+
+def _full_decode(path, spec):
+    """The task's outputs from one reader of every column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from jsonschema_infer_spark.operators.infer_spark import fold_batches_columnar
+
+    pf = pq.ParquetFile(path)
+    batches = list(pf.iter_batches(batch_size=10_000))
+    st, rows = fold_batches_columnar(iter(batches), default_config())
+    _, counter = V.arrow_violation_counter(spec, pf.schema_arrow)
+    counts = sum(counter(b) for b in batches).tolist()
+    keys = [b.select(["conv_id", "turn_idx"]) for b in batches]
+    parts = pa.Table.from_batches(
+        list(V._integrity_fold("conv_id", "turn_idx")(keys)), schema=V._partial_schema()
+    )
+    return st, rows, counts, V._merge_partials_local(parts)
+
+
+def _fused_once(path, out_dir, spec):
+    import pyarrow.parquet as pq
+
+    from jsonschema_infer_spark.operators.pipeline import _fused_task
+
+    n_rg = pq.ParquetFile(path).metadata.num_row_groups
+    os.makedirs(out_dir, exist_ok=True)
+    lineage = {}
+    st, rows, vec = _fused_task(
+        path, 0, n_rg, default_config(), "conv_id", "turn_idx", str(out_dir), 0,
+        None, spec, lineage,
+    )
+    part = pq.read_table(str(out_dir / "part-00000.parquet"))
+    assert sum(part.column("n").to_pylist()) == lineage["keyed_rows"] == rows
+    return st, rows, vec.tolist(), V._merge_partials_local(part)
+
+
+@given(
+    rows=hst.integers(12_000, 32_000),
+    late_frac=hst.floats(0.0, 0.9),
+    rg_rows=hst.sampled_from([3_000, 7_000, 16_384]),
+    dict_cols=hst.sets(hst.sampled_from(["s_late", "s_const", "s_nulls"])),
+    late_nulls=hst.lists(hst.integers(0, 31_999), max_size=40),
+    stats=hst.booleans(),
+    fmt_on_late=hst.booleans(),
+)
+@settings(max_examples=25, deadline=None)
+def test_fused_task_credit_equals_full_decode(
+    tmp_path_factory, rows, late_frac, rg_rows, dict_cols, late_nulls, stats,
+    fmt_on_late,
+):
+    """With or without footer statistics, and whether or not a format
+    entry keeps ``s_late`` decoded, the fused task's state, rows,
+    violation vector and integrity equal one full decode's."""
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("credit")
+    path = str(d / "t.parquet")
+    table = _credit_table(rows, int(rows * late_frac), rg_rows, dict_cols, late_nulls)
+    pq.write_table(table, path, row_group_size=rg_rows, write_statistics=stats)
+    spec = _CREDIT_SPEC + (
+        [("format", "s_late", "date-time", False, True)] if fmt_on_late else []
+    )
+    with _reader_spy() as calls:
+        st, n, vec, integ = _fused_once(path, d, spec)
+    want_st, want_n, want_vec, want_integ = _full_decode(path, spec)
+    assert _norm_latch(st) == _norm_latch(want_st)
+    assert (n, vec, integ) == (want_n, want_vec, want_integ)
+    credited = ["s_const", "s_nulls"] + ([] if fmt_on_late else ["s_late"])
+    if stats:
+        assert sorted(calls[1][0]) == sorted(credited)
+    else:  # no null counts in the footer: one reader of every column
+        assert [c for c, _ in calls] == [None]
+
+
+def test_fused_credited_columns_match_spark(spark, tmp_path):
+    """The contract-first scan of a table whose string columns saturate
+    late, are const in the first row group, or have nulls only late: with
+    footer statistics the credited reader stops early, without them every
+    value is decoded; both equal infer_dataframe and Spark's counts."""
+    import pyarrow.parquet as pq
+
+    table = _credit_table(40_000, 15_000, 8_192, {"s_late"}, range(20_000, 40_000, 7))
+    for stats in (True, False):
+        path = str(tmp_path / f"credit_{stats}.parquet")
+        pq.write_table(table, path, row_group_size=8_192, write_statistics=stats)
+        want = infer_dataframe(spark.read.parquet(path))
+        res, _, counts = infer_and_integrity_parquet(
+            spark, path, rg_per_task=5, violation_spec=_CREDIT_SPEC
+        )
+        assert res.schema_json == want.schema_json
+        assert res.total_rows == want.total_rows == 40_000
+        assert _norm_latch(res.state) == _norm_latch(want.state)
+        assert counts == _spark_truth(spark, path, _CREDIT_SPEC)
+        assert counts["required:s_nulls"] == len(range(20_000, 40_000, 7))
+        # the scan's task ran in a Python worker: run it here to see
+        # which readers it opens
+        with _reader_spy() as calls:
+            _fused_once(path, tmp_path / f"t{stats}", _CREDIT_SPEC)
+        if stats:
+            _, (cols, pulled) = calls
+            assert sorted(cols) == ["s_const", "s_late", "s_nulls"]
+            assert pulled < 40_000
+        else:
+            assert [c for c, _ in calls] == [None]
+
+
+def test_required_counts_on_dictionary_columns_match_spark(spark, tx_paths, tmp_path):
+    """``required`` reads a dictionary column's null count without the
+    cast: on the violated fixture with dictionary ``text`` and ``role``,
+    the arrow counter over full batches equals Spark's violation_counts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(tx_paths["viol"])
+    for c in ("text", "role"):
+        col = t.column(c)
+        if not pa.types.is_dictionary(col.type):
+            col = col.dictionary_encode()
+        t = t.set_column(t.schema.get_field_index(c), c, col)
+    path = str(tmp_path / "dict.parquet")
+    pq.write_table(t, path)
+    pf = pq.ParquetFile(path)
+    assert pa.types.is_dictionary(pf.schema_arrow.field("text").type)
+    spec = _clean_contract(spark, tx_paths)
+    names, counter = V.arrow_violation_counter(spec, pf.schema_arrow)
+    got = dict(zip(names, sum(counter(b) for b in pf.iter_batches()).tolist()))
+    assert got == _spark_truth(spark, path, spec)
+    assert got["required:text"] == len(tx_paths["log"]["null_text_rows"]) > 0
+
+
+def test_fused_resume_refuses_short_part_file(spark, tx_paths, tmp_path):
+    """Spill conservation: each marker records its task's keyed rows, and
+    the reduce checks every part file's Σn against it. A part file swapped
+    for a valid one that is one row short fails the resume."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = _multi_rg_copy(tx_paths, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    infer_and_integrity_parquet(spark, path, rg_per_task=1, checkpoint_dir=ckpt)
+    with open(os.path.join(ckpt, "states", "state_000002.json")) as f:
+        assert json.load(f)["keyed_rows"] > 0
+    part = os.path.join(ckpt, "integrity", "part-00002.parquet")
+    t = pq.read_table(part)
+    n = t.column("n").to_pylist()
+    j = next(i for i, v in enumerate(n) if v > 1)
+    n[j] -= 1
+    pq.write_table(t.set_column(2, "n", pa.array(n, pa.int64())), part)
+    with pytest.raises(ValueError, match="part-00002.*keyed rows"):
+        infer_and_integrity_parquet(spark, path, rg_per_task=1, checkpoint_dir=ckpt)
+
+
+def test_rev15_markers_are_rerun(spark, tx_paths, tmp_path):
+    """A marker without ``keyed_rows`` (engine rev 15) is not a result:
+    the resume reruns its task and equals a fresh run."""
+    path = _multi_rg_copy(tx_paths, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    want = infer_and_integrity_parquet(spark, path, rg_per_task=1, checkpoint_dir=ckpt)
+    marker = os.path.join(ckpt, "states", "state_000004.json")
+    with open(marker) as f:
+        rec = json.load(f)
+    del rec["keyed_rows"]
+    with open(marker, "w") as f:
+        json.dump(rec, f)
+    res, integ = infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, checkpoint_dir=ckpt
+    )
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        resumed = {r["pid"]: r["resumed"] for r in json.load(f)["per_task"]}
+    assert resumed == {i: i != 4 for i in range(7)}
+    assert (res.schema_json, res.total_rows, integ) == (
+        want[0].schema_json, want[0].total_rows, want[1]
+    )

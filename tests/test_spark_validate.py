@@ -446,3 +446,129 @@ def test_integrity_fold_emits_deterministic_ch(spark, tx_paths):
     # hash is a pure function of conv: equal convs share it
     df = out1.select(["conv", "ch"]).to_pandas()
     assert (df.groupby("conv")["ch"].nunique() == 1).all()
+
+
+# --- the run-length integrity fold ----------------------------------------------
+
+from hypothesis import given, settings, strategies as hst  # noqa: E402
+
+
+def _groupby_partials(rows):
+    """The hash-only fold as engine rev 15 wrote it: one group_by per task,
+    every partial with its full distinct turn list (no null ``turns``)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = pa.table(
+        {"conv": pa.array([r[0] for r in rows], pa.string()),
+         "turn": pa.array([r[1] for r in rows], pa.int32())}
+    ).drop_null()
+    g = t.group_by(["conv"]).aggregate(
+        [("turn", "count"), ("turn", "min"), ("turn", "max"), ("turn", "distinct")]
+    )
+    turns = g["turn_distinct"].cast(pa.list_(pa.int32()))
+    return pa.Table.from_arrays(
+        [g["conv"], _conv_hash(g["conv"].to_pylist()), g["turn_count"],
+         g["turn_min"], g["turn_max"],
+         pc.list_value_length(turns).cast(pa.int64()), turns],
+        schema=V._partial_schema(),
+    )
+
+
+def _fold_partials(rows):
+    import pyarrow as pa
+
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([r[0] for r in rows], pa.string()),
+         pa.array([r[1] for r in rows], pa.int32())],
+        names=["conv", "turn"],
+    )
+    return pa.Table.from_batches(
+        list(V._integrity_fold("conv", "turn")([batch])), schema=V._partial_schema()
+    )
+
+
+@hst.composite
+def _task_rows(draw):
+    """Tasks of (conv, turn) rows: conversation runs (clean, gapped,
+    negative, with a duplicate inside the run), hot convs, a conv in two
+    runs of one task, NULL keys; optionally shuffled within each task."""
+    runs = []
+    for _ in range(draw(hst.integers(0, 12))):
+        conv = draw(hst.sampled_from(["a", "b", "c", "d", "hot"]))
+        start = draw(hst.sampled_from([0, 0, 0, 1, -3]))
+        length = draw(hst.integers(1, 40 if conv == "hot" else 6))
+        turns = list(range(start, start + length))
+        kind = draw(hst.sampled_from(["clean", "clean", "gap", "dup"]))
+        if kind == "gap" and length > 1:
+            turns = turns[:1] + [t + 2 for t in turns[1:]]
+        if kind == "dup":
+            k = draw(hst.integers(0, length - 1))
+            turns.insert(k, turns[k])
+        runs.append([(conv, t) for t in turns])
+    rows = [r for run in runs for r in run]
+    for _ in range(draw(hst.integers(0, 3))):
+        pos = draw(hst.integers(0, len(rows)))
+        rows.insert(pos, draw(hst.sampled_from([(None, 0), ("a", None), (None, None)])))
+    n_tasks = draw(hst.integers(1, 3))
+    cuts = sorted(draw(hst.lists(hst.integers(0, len(rows)), min_size=n_tasks - 1,
+                                 max_size=n_tasks - 1)))
+    tasks = [rows[a:b] for a, b in zip([0] + cuts, cuts + [len(rows)])]
+    if draw(hst.booleans()):
+        tasks = [draw(hst.permutations(t)) for t in tasks]
+    return tasks
+
+
+def _brute_force(tasks) -> dict:
+    keyed = [(c, t) for task in tasks for c, t in task if c is not None and t is not None]
+    return _judge_partials([(c, 1, [t]) for c, t in keyed])
+
+
+@given(_task_rows(), hst.data())
+@settings(max_examples=300, deadline=None)
+def test_run_fold_equals_groupby_fold_and_bruteforce(tasks, data):
+    import pyarrow as pa
+
+    tasks = [t for t in tasks if t]
+    want = _brute_force(tasks)
+    new = [_fold_partials(t) for t in tasks]
+    old = [_groupby_partials(t) for t in tasks]
+    for task, part in zip(tasks, new):
+        keyed = sum(c is not None and t is not None for c, t in task)
+        assert sum(part.column("n").to_pylist()) == keyed
+    if not tasks:
+        return
+    assert V._merge_partials_local(pa.concat_tables(new)) == want
+    assert V._merge_partials_local(pa.concat_tables(old)) == want
+    # part files of both engine revisions side by side
+    mixed = [data.draw(hst.sampled_from([a, b])) for a, b in zip(new, old)]
+    assert V._merge_partials_local(pa.concat_tables(mixed)) == want
+
+
+def test_run_fold_takes_the_run_path_on_clustered_rows():
+    rows = [("a", 0), ("a", 1), ("a", 2), ("b", 0), ("b", 2), ("a", 3)]
+    got = _fold_partials(rows).to_pylist()
+    # three runs, in row order: a dense "a" (null list), a gapped "b", and
+    # "a" again; the merge unions the two "a" partials by their shared ch
+    assert [(r["conv"], r["n"], r["mn"], r["mx"], r["ndl"], r["turns"]) for r in got] == [
+        ("a", 3, 0, 2, 3, None), ("b", 2, 0, 2, 2, [0, 2]), ("a", 1, 3, 3, 1, None),
+    ]
+    assert got[0]["ch"] == got[2]["ch"]
+
+
+def test_spark_reduces_expand_null_turns(spark, tmp_path, monkeypatch):
+    """The collect and split reduces read a null ``turns`` as mn..mx."""
+    import pyarrow.parquet as pq
+
+    tasks = [[("a", 0), ("a", 1), ("b", 0), ("b", 1)], [("a", 1), ("a", 2), ("c", 1)],
+             [("c", 0), ("b", 3), ("b", 2)]]
+    want = _brute_force(tasks)
+    for i, t in enumerate(tasks):
+        part = _fold_partials(t) if i != 2 else _groupby_partials(t)
+        pq.write_table(part, str(tmp_path / f"part-{i:05d}.parquet"))
+    assert pq.read_table(str(tmp_path)).column("turns").null_count > 0
+    partials = spark.read.parquet(str(tmp_path))
+    assert V._integrity_reduce_collect(partials) == want
+    assert V._integrity_reduce_split(partials) == want
+    monkeypatch.setattr(V, "_DRIVER_MERGE_MAX_BYTES", 0)
+    assert V.reduce_spilled_partials(spark, str(tmp_path), {0: 4, 1: 3, 2: 3}) == want

@@ -78,10 +78,12 @@ def _spec_for(path: str, out_dir) -> list:
 
 def _partials(path) -> list:
     """A spilled part file's rows in a canonical order: arrow's threaded
-    group_by emits groups and distinct turns in no fixed order."""
+    group_by emits groups and distinct turns in no fixed order. A null
+    ``turns`` is the range mn..mx."""
     rows = pq.read_table(path).to_pylist()
     for r in rows:
-        r["turns"] = sorted(r["turns"])
+        t = r["turns"]
+        r["turns"] = list(range(r["mn"], r["mx"] + 1)) if t is None else sorted(t)
     return sorted(rows, key=lambda r: r["conv"])
 
 
