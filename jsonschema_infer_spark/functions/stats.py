@@ -136,23 +136,3 @@ def ks_two_sample_p(d: float, n1: int, n2: int) -> float:
     ne = n1 * n2 / float(n1 + n2)
     sq = math.sqrt(ne)
     return kolmogorov_sf((sq + 0.12 + 0.11 / sq) * d)
-
-
-def psi(ref_counts: dict, obs_counts: dict, eps: float = 1e-6) -> float:
-    """Population Stability Index between two count dicts (category or
-    bucket keyed): sum over the key union of (p_obs - p_ref) * ln(p_obs /
-    p_ref) with proportions clamped to ``eps`` — finite for one-sided
-    keys. Driver-side twin of operators/drift.psi_categorical /
-    psi_numeric (same formula; those run it as Column expressions over
-    pre-aggregated counts). Common reading: < 0.1 stable, 0.1-0.25
-    shifting, > 0.25 drifted."""
-    n_ref = sum(ref_counts.values())
-    n_obs = sum(obs_counts.values())
-    if n_ref <= 0 or n_obs <= 0:
-        raise ValueError("both count sets must be non-empty")
-    total = 0.0
-    for k in set(ref_counts) | set(obs_counts):
-        pr = max(ref_counts.get(k, 0) / n_ref, eps)
-        po = max(obs_counts.get(k, 0) / n_obs, eps)
-        total += (po - pr) * math.log(po / pr)
-    return total

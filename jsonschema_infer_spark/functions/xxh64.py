@@ -103,9 +103,3 @@ def to_signed(h: int) -> int:
 def spark_xxhash64_str(s: str, seed: int = SPARK_SEED) -> int:
     """``F.xxhash64(string_col)`` — signed 64-bit, like Spark returns."""
     return to_signed(xxh64_bytes(s.encode("utf-8"), seed))
-
-
-def spark_xxhash64_str_int(s: str, i: int, seed: int = SPARK_SEED) -> int:
-    """``F.xxhash64(string_col, F.lit(i))`` with 32-bit ``i``: each column's
-    hash seeds the next (Spark chains columns left to right)."""
-    return to_signed(xxh64_int32(i, xxh64_bytes(s.encode("utf-8"), seed)))

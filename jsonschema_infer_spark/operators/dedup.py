@@ -41,18 +41,6 @@ def exact_duplicate_groups(
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep exactly one row (min id) per normalized-content group.
-    Window-free: min-id per fingerprint then semi-join back."""
-    keep = (
-        df.select(fingerprint(F.col(text_col)).alias("fp"), F.col(id_col))
-        .groupBy("fp")
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
-    )
-    return df.join(keep, on=id_col, how="left_semi")
-
-
 # --- n-gram Jaccard ------------------------------------------------------------
 
 

@@ -309,37 +309,3 @@ def psi_numeric(
     pb = F.greatest(F.col("n_b") / F.col("tb"), F.lit(eps))
     term = (pa - pb) * F.log(pa / pb)
     return j.select("bucket", "n_a", "n_b", F.round(term, 6).alias("psi_term"))
-
-
-def ts_deltas(df: DataFrame, conv_col="conv_id", idx_col="turn_idx", ts_col="ts"):
-    """Per-turn inter-arrival seconds (bounded per-conversation window)."""
-    w = Window.partitionBy(conv_col).orderBy(idx_col)
-    # TIMESTAMP_NTZ has no direct double cast; go through TIMESTAMP
-    secs = F.col(ts_col).cast("timestamp").cast("double")
-    delta = secs - F.lag(secs).over(w)
-    return df.select(delta.alias("delta")).where(F.col("delta").isNotNull())
-
-
-def transcript_drift_report(
-    snap_a: DataFrame, snap_b: DataFrame, alpha: float = 0.01, ks_mode: str = "exact"
-) -> dict:
-    """The transcript table's drift suite (FIXTURES.md §C): chi-square on
-    role and tool, KS on text length and per-turn ts deltas."""
-    checks = {
-        "role_chi2": categorical_drift(snap_a, snap_b, "role"),
-        "tool_chi2": categorical_drift(
-            snap_a.where(F.col("tool").isNotNull()),
-            snap_b.where(F.col("tool").isNotNull()),
-            "tool",
-        ),
-        "text_len_ks": numeric_drift(
-            snap_a, snap_b, F.length("text"), mode=ks_mode
-        ),
-        "ts_delta_ks": numeric_drift(
-            ts_deltas(snap_a), ts_deltas(snap_b), "delta", mode=ks_mode
-        ),
-    }
-    for name, c in checks.items():
-        c["drifted"] = c["p_value"] < alpha
-    checks["alpha"] = alpha
-    return checks

@@ -82,11 +82,13 @@ def _latch_const(st: dict, tag: str, value) -> None:
     if not st["const_set"]:
         st["const"], st["const_set"] = cv, True
     elif not (st["const"][0] == tag and st["const"][1] == value):
-        st["const_differ"], st["const"] = True, None
+        _const_differs(st)
 
 
 def _const_differs(st: dict) -> None:
-    st["const_differ"], st["const"] = True, None
+    # canonical differed latch (state.merge's too): const_set is False, so
+    # the state does not depend on where the batches ended
+    st["const_differ"], st["const"], st["const_set"] = True, None, False
 
 
 def _add_distinct(st: dict, tag: str, values) -> None:
@@ -291,20 +293,30 @@ def _eliminate_formats(st: dict, values: pa.Array, config: InferConfig) -> None:
     """Candidate elimination on a batch of non-null strings (node.go:94-121),
     vectorized: candidate survives iff it matches EVERY string in the batch.
 
-    Short-circuit: run the detectors on a small prefix first — on real data
-    most candidates die within a few values, and only prefix survivors pay
-    for the rest of the batch. Elimination is an intersection over all
-    values, so prefix-then-remainder yields exactly the same survivor set."""
+    Short-circuits: the scalar detectors on the first value, then the
+    vectorized ones on a small prefix — on real data most candidates die
+    within a few values (a column with no format, on the first), and only
+    survivors pay for the pandas copy of the rest of the batch.
+    Elimination is an intersection over all values and the scalar detector
+    is the reference semantics, so probe-then-prefix-then-remainder yields
+    exactly the same survivor set."""
     if st["fmts"] is None:
         st["fmts"] = list(config.format_names())
     if not st["fmts"] or len(values) == 0:
+        return
+    dm = config.detector_map()
+    first = values[0].as_py()
+    st["fmts"] = [
+        f for f in st["fmts"]
+        if f in st["locked_fmts"] or (f in dm and dm[f].detector(first))
+    ]
+    if not st["fmts"]:
         return
     if len(values) > _FMT_PREFIX:
         _eliminate_formats(st, values.slice(0, _FMT_PREFIX), config)
         if not st["fmts"]:
             return
         values = values.slice(_FMT_PREFIX)
-    dm = config.detector_map()
     pds = None
     survivors = []
     for name in st["fmts"]:

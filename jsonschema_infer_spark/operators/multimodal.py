@@ -90,11 +90,6 @@ def synthesize_media_rows(n: int = 256, seed: int = 42) -> list:
     return rows
 
 
-def synthesize_media(spark, n: int = 256, seed: int = 42) -> DataFrame:
-    """Deterministic fake media table (see synthesize_media_rows)."""
-    return spark.createDataFrame(synthesize_media_rows(n, seed), MEDIA_SCHEMA)
-
-
 def write_media_parquet(path: str, n: int = 256, seed: int = 42) -> str:
     """Materialize the synthetic media table to one parquet file (atomic
     rename), Spark-free — the driver's DuckDB oracle reads the same file."""

@@ -11,8 +11,9 @@ second scan is the same IO all over again.
 
 Here each (file, row-group-range) task iterates its Arrow batches ONCE:
 
-    pyarrow row-group scan (no Spark row pipeline); a string column stops
-    decoding once its state is saturated, the footer credits the rest
+    pyarrow row-group scan (no Spark row pipeline); each credited string
+    column has its own reader, closed once that column's state is
+    saturated, and the footer credits the rest
       -> vectorized inference fold (observe every column)   \\ same
       -> per-conversation integrity pre-aggregation          | batch
       -> contract violation counter (given a violation_spec) / stream
@@ -79,8 +80,11 @@ def _credited_columns(pf, lo: int, hi: int, config: InferConfig, keys: set, spec
     [lo, hi) of ``pf`` decodes only until their state is ``saturated``:
     top-level string or dictionary<string> columns, not a key or order
     column, that ``spec`` checks for ``required`` at most, whose footer
-    has a null count in every row group. None with examples capture, or
-    when a nested column makes leaf and field indexes differ."""
+    has a null count in every row group. On the infer side (no ``spec``)
+    that is every such string column; each gets its own reader, so one
+    that never saturates stops none of the others. None with examples
+    capture, or when a nested column makes leaf and field indexes
+    differ."""
     sch, md = pf.schema_arrow, pf.metadata
     if config.examples or len(set(sch.names)) != len(sch) or md.num_columns != len(sch):
         return []
@@ -121,9 +125,12 @@ def _fused_task(
     against. Run by ``infer_and_integrity_parquet`` and, one task at a
     time without Spark, by contractbench's layer replay.
 
-    The ``_credited_columns`` come from a second, aligned reader, which is
-    closed once all of them are ``saturated``; the footer then credits the
-    rest: rows less nulls as strings, nulls as ``required`` violations."""
+    Each of the ``_credited_columns`` comes from its own reader, aligned
+    with the main one and closed as soon as that column is ``saturated``,
+    so a never-saturating column (a low-cardinality ``role``) keeps no
+    other column decoding. The footer then credits a closed column's rest:
+    rows less nulls as strings, nulls as ``required`` violations.
+    ``lineage`` also receives ``decoded``: {credited column: rows read}."""
     import os
 
     import pyarrow.parquet as pq
@@ -148,38 +155,43 @@ def _fused_task(
         return pf.iter_batches(batch_size=10_000, row_groups=rgs, columns=cols)
 
     batches = read([c for c in ns if c not in cnames] if credit else None)
-    side = read(cnames) if credit else None
+    side = {c: read([c]) for c in cnames}  # the live credited readers
     root = S.new_state()
     kept: list = []
-    seen = dict.fromkeys(cnames, 0)  # nulls of the decoded credited rows
-    decoded = keyed = 0
+    decoded = dict.fromkeys(cnames, 0)  # rows each credited reader yielded
+    seen = dict.fromkeys(cnames, 0)  # and the nulls among them
+    keyed = 0
 
     def aligned(bs):
-        # slices of both readers up to their common boundaries (a
-        # dictionary column's batches also end at row-group ends)
-        nonlocal side, decoded
-        sb = None
+        # slices of the main reader and every live credited reader up to
+        # their common boundary (a dictionary column's batches also end at
+        # row-group ends), rebuilt in file-schema order
+        pend: dict = {}
         for b in bs:
             while b.num_rows:
-                if side is not None and all(
-                    c in root["props"] and saturated(root["props"][c]) for c in cnames
-                ):
-                    side.close()
-                    side = None
-                if side is None:
+                props = root["props"]
+                for c in [c for c in side if c in props and saturated(props[c])]:
+                    side.pop(c).close()
+                    pend.pop(c, None)
+                if not side:
                     yield b
                     break
-                sb = sb if sb is not None and sb.num_rows else next(side)
-                k = min(b.num_rows, sb.num_rows)
+                for c, r in side.items():
+                    if c not in pend or not pend[c].num_rows:
+                        pend[c] = next(r)
+                k = min(b.num_rows, *(p.num_rows for p in pend.values()))
                 cols = dict(zip(b.schema.names, b.slice(0, k).columns))
-                cols.update(zip(cnames, sb.slice(0, k).columns))
-                decoded += k
-                for c in cnames:
+                for c, p in pend.items():
+                    cols[c] = p.column(0).slice(0, k)
+                    decoded[c] += k
                     seen[c] += cols[c].null_count
-                yield pa.RecordBatch.from_arrays([cols[c] for c in ns], names=ns)
-                b, sb = b.slice(k), sb.slice(k)
-        if side is not None and (sb is not None and sb.num_rows or next(side, None)):
-            raise RuntimeError(f"{f}: misaligned column readers")
+                    pend[c] = p.slice(k)
+                names = [c for c in ns if c in cols]
+                yield pa.RecordBatch.from_arrays([cols[c] for c in names], names=names)
+                b = b.slice(k)
+        for c, r in side.items():
+            if c in pend and pend[c].num_rows or next(r, None):
+                raise RuntimeError(f"{f}: misaligned column readers")
 
     def tee(bs):
         nonlocal vcounts, keyed
@@ -198,16 +210,16 @@ def _fused_task(
             yield b
 
     st, rows = fold_batches_columnar(
-        tee(aligned(batches) if credit else batches), config, order_cols, root
+        tee(aligned(batches)), config, order_cols, root
     )
-    if credit and side is None:  # the credited reader was closed early
-        groups = [pf.metadata.row_group(r) for r in rgs]
-        rest = sum(g.num_rows for g in groups) - decoded
-        for c, k in credit:
-            nulls = sum(g.column(k).statistics.null_count for g in groups) - seen[c]
-            credit_strings(st["props"][c], rest - nulls)
-            if f"required:{c}" in vnames:
-                vcounts[vnames.index(f"required:{c}")] += nulls
+    groups = [pf.metadata.row_group(r) for r in rgs]
+    for c, k in credit:
+        if c in side:  # decoded to the end
+            continue
+        nulls = sum(g.column(k).statistics.null_count for g in groups) - seen[c]
+        credit_strings(st["props"][c], rows - decoded[c] - nulls)
+        if f"required:{c}" in vnames:
+            vcounts[vnames.index(f"required:{c}")] += nulls
     # every task writes its part file, an empty one too, so the driver
     # can check the spill holds exactly one file per task
     # (reduce_spilled_partials). Write-then-rename: a part file appears under
@@ -229,7 +241,7 @@ def _fused_task(
     )
     os.replace(tmp, final)
     if lineage is not None:
-        lineage["keyed_rows"] = keyed
+        lineage.update(keyed_rows=keyed, decoded=decoded)
     # last step: the worker's next task then re-reads no zip directory
     release_zip_finders()
     if violation_spec is None:
@@ -324,7 +336,7 @@ def infer_and_integrity_parquet(
     def run(item):
         i, (f, lo, hi) = item
         key = {"file": f, "row_groups": [lo, hi], "fingerprint": fingerprints[f]}
-        extra = {"keyed_rows": None}
+        extra = {"keyed_rows": None, "decoded": None}
         return run_task(ckpt, i, key, lambda: _fused_task(
             f, lo, hi, config, conv_col, idx_col, out_dir, i, order_cols,
             violation_spec, extra,

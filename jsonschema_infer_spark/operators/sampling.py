@@ -103,17 +103,3 @@ def stratified_cap(
         df.withColumn(rank_col, F.row_number().over(w))
         .filter(F.col(rank_col) <= k)
     )
-
-
-def downsample(
-    df: DataFrame,
-    key_col: str,
-    fraction: float,
-    salt: str = "sample",
-) -> DataFrame:
-    """Keep a deterministic ``fraction`` of keys (0 < fraction <= 1) — the
-    reproducible twin of ``df.sample``: re-runs and other engines keep
-    exactly the same rows. Zero-shuffle projection + filter."""
-    if not 0 < fraction <= 1:
-        raise ValueError("fraction must be in (0, 1]")
-    return df.filter(_unit_hash(F.col(key_col), salt) < F.lit(fraction))

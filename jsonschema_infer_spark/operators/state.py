@@ -152,13 +152,15 @@ def observe_value(state: dict, value, config, order_key=None) -> None:
     # const latch for primitives only (node.go:79-90)
     if tag in ("string", "integer", "number", "boolean"):
         if not state["const_differ"]:
-            cv = (tag, value)
+            # a zero latches as 0, as the columnar fold's int(-0.0) does:
+            # 0 == -0.0, so a kept sign would depend on which came first
+            cv = (tag, 0 if tag == "integer" and value == 0 else value)
             if not state["const_set"]:
                 state["const"] = cv
                 state["const_set"] = True
             elif not _const_eq(state["const"], cv):
                 state["const_differ"] = True
-                state["const"] = None
+                state["const"], state["const_set"] = None, False
         _track_distinct(state, tag, value)
         if tag in ("integer", "number") and not isinstance(value, bool):
             _track_numeric(state, value)
@@ -323,6 +325,8 @@ def state_from_jsonable(d) -> dict | None:
               "const_differ", "num_min", "num_max"):
         s[k] = d[k]
     s["const"] = tuple(d["const"]) if d["const"] is not None else None
+    # older markers may hold a differed latch with const_set True
+    s["const_set"] = s["const_set"] and not s["const_differ"]
     if d["first"] is not None:
         s["first"] = (_deep_tuple(d["first"][0]), d["first"][1])
     s["distinct"] = (

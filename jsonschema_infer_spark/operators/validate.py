@@ -533,13 +533,6 @@ def duplicate_keys(df: DataFrame, keys: list) -> DataFrame:
     )
 
 
-def duplicate_rows(df: DataFrame, keys: list) -> DataFrame:
-    """Full violating rows via LEFT SEMI join against the duplicate keys —
-    the small side is duplicates-only, so Spark broadcasts it."""
-    dups = duplicate_keys(df, keys).select(*keys)
-    return df.join(F.broadcast(dups), on=keys, how="left_semi")
-
-
 def referential_violations(
     child: DataFrame,
     parent: DataFrame,

@@ -121,3 +121,63 @@ def test_format_priority_order():
     g.add_sample('{"ip": "::ffff:192.168.0.1"}')
     s = json.loads(g.generate())
     assert s["properties"]["ip"]["format"] == "ipv6"
+
+
+# --- first-value probe and prefix short-circuit ------------------------------
+
+from hypothesis import given, settings, strategies as st  # noqa: E402
+
+_NEAR = st.sampled_from(
+    DATETIME_ACCEPT + EMAIL_ACCEPT + UUID_ACCEPT + IPV4_ACCEPT + IPV6_ACCEPT
+    + URL_ACCEPT + DATETIME_REJECT + URL_REJECT + ["", "x", "7"]
+)
+
+
+@st.composite
+def _near_format(draw):
+    """A string at or near a built-in format: a fixture value, maybe with
+    one character deleted, replaced or inserted."""
+    v = draw(_NEAR)
+    if v and draw(st.booleans()):
+        i = draw(st.integers(0, len(v) - 1))
+        c = draw(st.sampled_from("0aZ:.-@/ T%"))
+        v = draw(st.sampled_from([v[:i] + v[i + 1:], v[:i] + c + v[i + 1:], v[:i] + c + v[i:]]))
+    return v
+
+
+def _has_digit(v: str) -> bool:
+    return any(ch.isdigit() for ch in v)
+
+
+@given(
+    st.lists(_near_format(), min_size=1, max_size=12),
+    st.integers(1, 60),
+    st.lists(_near_format(), max_size=3),
+    st.sets(st.sampled_from(["uuid", "has-digit"])),
+)
+@settings(max_examples=200, deadline=None)
+def test_eliminate_formats_equals_scalar_fold(head, reps, tail, locked):
+    """``_eliminate_formats`` (first-value probe, 256-value prefix, pandas
+    remainder) keeps exactly the candidates a scalar fold over every value
+    keeps, with a custom format that has only a scalar detector and
+    locked formats that always survive; the vectorized detectors agree
+    with the scalar ones on every drawn value."""
+    import pyarrow as pa
+
+    from jsonschema_infer_spark.config import CustomFormat, default_config
+    from jsonschema_infer_spark.operators import state as S
+    from jsonschema_infer_spark.operators.infer_spark import _eliminate_formats
+
+    config = default_config(custom_formats=[CustomFormat("has-digit", _has_digit)])
+    values = head * reps + tail
+    st_ = S.new_state()
+    st_["locked_fmts"] = sorted(locked)
+    _eliminate_formats(st_, pa.array(values), config)
+    want = [
+        f.name for f in config.formats
+        if f.name in locked or all(f.detector(v) for v in values)
+    ]
+    assert st_["fmts"] == want
+    s = pd.Series(head + tail)
+    for scalar, vec, _, _ in CASES:
+        assert list(vec(s)) == [scalar(v) for v in s]

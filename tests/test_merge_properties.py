@@ -149,3 +149,68 @@ def _jsonable(s):
     out["first"] = repr(s["first"])
     out["distinct"] = repr(s["distinct"])
     return out
+
+
+# --- canonical const latch ------------------------------------------------------
+
+_columns = st.fixed_dictionaries({
+    "s": st.lists(st.one_of(st.none(), st.sampled_from(["a", "b", "2023-01-15T10:30:00Z"])),
+                  min_size=1, max_size=40),
+    "i": st.lists(st.one_of(st.none(), st.integers(-3, 3)), min_size=1, max_size=40),
+    "f": st.lists(st.one_of(st.none(), st.sampled_from([0.5, 1.0, -2.0, 0.0, -0.0])),
+                  min_size=1, max_size=40),
+    "b": st.lists(st.one_of(st.none(), st.booleans()), min_size=1, max_size=40),
+})
+
+
+def _distinct_sorted(s):
+    """The raw state with only its distinct list sorted: a float column's
+    per-batch uniques come sorted, so their order follows the batches."""
+    out = dict(s, props={k: _distinct_sorted(v) for k, v in s["props"].items()})
+    if s["distinct"] is not None:
+        out["distinct"] = sorted(s["distinct"], key=repr)
+    return out
+
+
+@given(_columns, st.lists(st.integers(0, 40), max_size=6),
+       st.lists(st.integers(0, 40), max_size=6))
+@settings(max_examples=150, deadline=None)
+def test_const_latch_independent_of_batch_boundaries(cols, cuts_a, cuts_b):
+    """The same rows folded columnar with different batch boundaries, or
+    as a merge of per-batch states, give equal raw states (up to distinct
+    order), and the row-by-row fold the same const latch: a latch that has
+    differed is one value (const_set False) however it got there, a zero
+    latches as 0 whatever its sign, and a marker that still holds the old
+    form loads as it."""
+    import pyarrow as pa
+
+    from jsonschema_infer_spark.operators.infer_spark import fold_batches_columnar
+
+    n = min(len(v) for v in cols.values())
+    table = pa.table({k: pa.array(v[:n]) for k, v in cols.items()})
+
+    def batches(cuts):
+        edges = sorted({0, n, *(c for c in cuts if c < n)})
+        return [table.slice(a, b - a).to_batches()[0] for a, b in zip(edges, edges[1:])]
+
+    states = [
+        _distinct_sorted(fold_batches_columnar(iter(batches(c)), CFG)[0])
+        for c in (cuts_a, cuts_b)
+    ]
+    rows = fold(table.to_pylist())
+    per_batch = [fold_batches_columnar(iter([b]), CFG)[0] for b in batches(cuts_a)]
+    merged = None
+    for p in per_batch:
+        merged = S.merge(merged, p)
+    assert states[1] == _distinct_sorted(merged) == states[0]
+
+    def latch(node):
+        return node["const"], node["const_set"], node["const_differ"]
+
+    for k in cols:
+        assert latch(rows["props"][k]) == latch(states[0]["props"][k])
+    legacy = S.state_to_jsonable(states[0])
+    for k, node in legacy["props"].items():
+        if node["const_differ"]:
+            node["const_set"] = True  # how a rev-16 marker could hold it
+    assert _distinct_sorted(S.state_from_jsonable(legacy)) == states[0]

@@ -843,11 +843,12 @@ _TS = ["2024-01-02T03:04:05Z", "2024-05-06T07:08:09Z"]
 
 
 def _credit_table(rows, late, rg_rows, dict_cols, late_nulls):
-    """conv-clustered keys plus three string columns the fused task may
+    """conv-clustered keys plus four string columns the fused task may
     credit from the footer: ``s_late`` saturates only after row ``late``
     (date-times before it, unique values after), ``s_const`` is const in
-    the first row group, and ``s_nulls`` has nulls only in the row groups
-    after the first two, at the positions ``late_nulls``."""
+    the first row group, ``s_nulls`` has nulls only in the row groups
+    after the first two, at the positions ``late_nulls``, and ``s_low``
+    has three values, so it never saturates."""
     import pyarrow as pa
 
     k = range(rows)
@@ -858,21 +859,11 @@ def _credit_table(rows, late, rg_rows, dict_cols, late_nulls):
         "s_late": pa.array([_TS[i % 2] if i < late else f"v{i}" for i in k]),
         "s_const": pa.array(["x" if i < rg_rows else f"y{i % 100}" for i in k]),
         "s_nulls": pa.array([None if i in nulls else f"n{i}" for i in k]),
+        "s_low": pa.array(["lo", "mid", "hi"][i % 3] for i in k),
     }
     for c in dict_cols:
         cols[c] = cols[c].dictionary_encode()
     return pa.table(cols)
-
-
-def _norm_latch(st):
-    """``_norm_state``, and a differed const latch's ``const_set`` dropped:
-    whether the latch was set before it differed depends on where the
-    batches end, and nothing reads it once it has differed."""
-    out = _norm_state(st)
-    if out["const_differ"]:
-        out["const_set"] = None
-    out["props"] = {k: _norm_latch(v) for k, v in st["props"].items()}
-    return out
 
 
 @contextmanager
@@ -934,7 +925,7 @@ def _fused_once(path, out_dir, spec):
     rows=hst.integers(12_000, 32_000),
     late_frac=hst.floats(0.0, 0.9),
     rg_rows=hst.sampled_from([3_000, 7_000, 16_384]),
-    dict_cols=hst.sets(hst.sampled_from(["s_late", "s_const", "s_nulls"])),
+    dict_cols=hst.sets(hst.sampled_from(["s_late", "s_const", "s_nulls", "s_low"])),
     late_nulls=hst.lists(hst.integers(0, 31_999), max_size=40),
     stats=hst.booleans(),
     fmt_on_late=hst.booleans(),
@@ -959,11 +950,12 @@ def test_fused_task_credit_equals_full_decode(
     with _reader_spy() as calls:
         st, n, vec, integ = _fused_once(path, d, spec)
     want_st, want_n, want_vec, want_integ = _full_decode(path, spec)
-    assert _norm_latch(st) == _norm_latch(want_st)
+    assert _norm_state(st) == _norm_state(want_st)
     assert (n, vec, integ) == (want_n, want_vec, want_integ)
-    credited = ["s_const", "s_nulls"] + ([] if fmt_on_late else ["s_late"])
-    if stats:
-        assert sorted(calls[1][0]) == sorted(credited)
+    credited = ["s_const", "s_nulls", "s_low"] + ([] if fmt_on_late else ["s_late"])
+    if stats:  # one reader per credited column; s_low's reads to the end
+        assert sorted(cols for cols, _ in calls[1:]) == sorted([c] for c in credited)
+        assert {cols[0]: pulled for cols, pulled in calls[1:]}["s_low"] == rows
     else:  # no null counts in the footer: one reader of every column
         assert [c for c, _ in calls] == [None]
 
@@ -972,7 +964,8 @@ def test_fused_credited_columns_match_spark(spark, tmp_path):
     """The contract-first scan of a table whose string columns saturate
     late, are const in the first row group, or have nulls only late: with
     footer statistics the credited reader stops early, without them every
-    value is decoded; both equal infer_dataframe and Spark's counts."""
+    value is decoded; both equal infer_dataframe and Spark's counts. The
+    never-saturating ``s_low`` keeps only its own reader going."""
     import pyarrow.parquet as pq
 
     table = _credit_table(40_000, 15_000, 8_192, {"s_late"}, range(20_000, 40_000, 7))
@@ -985,7 +978,7 @@ def test_fused_credited_columns_match_spark(spark, tmp_path):
         )
         assert res.schema_json == want.schema_json
         assert res.total_rows == want.total_rows == 40_000
-        assert _norm_latch(res.state) == _norm_latch(want.state)
+        assert _norm_state(res.state) == _norm_state(want.state)
         assert counts == _spark_truth(spark, path, _CREDIT_SPEC)
         assert counts["required:s_nulls"] == len(range(20_000, 40_000, 7))
         # the scan's task ran in a Python worker: run it here to see
@@ -993,9 +986,10 @@ def test_fused_credited_columns_match_spark(spark, tmp_path):
         with _reader_spy() as calls:
             _fused_once(path, tmp_path / f"t{stats}", _CREDIT_SPEC)
         if stats:
-            _, (cols, pulled) = calls
-            assert sorted(cols) == ["s_const", "s_late", "s_nulls"]
-            assert pulled < 40_000
+            pulled = {cols[0]: n for cols, n in calls[1:]}
+            assert sorted(pulled) == ["s_const", "s_late", "s_low", "s_nulls"]
+            assert pulled.pop("s_low") == 40_000
+            assert max(pulled.values()) < 40_000
         else:
             assert [c for c, _ in calls] == [None]
 
@@ -1067,3 +1061,54 @@ def test_rev15_markers_are_rerun(spark, tx_paths, tmp_path):
     assert (res.schema_json, res.total_rows, integ) == (
         want[0].schema_json, want[0].total_rows, want[1]
     )
+
+
+def test_rev16_markers_are_rerun(spark, tx_paths, tmp_path):
+    """A marker without ``decoded`` (engine rev 16) is not a result: the
+    resume reruns its task and equals a fresh run."""
+    path = _multi_rg_copy(tx_paths, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    want = infer_and_integrity_parquet(spark, path, rg_per_task=1, checkpoint_dir=ckpt)
+    marker = os.path.join(ckpt, "states", "state_000002.json")
+    with open(marker) as f:
+        rec = json.load(f)
+    del rec["decoded"]
+    with open(marker, "w") as f:
+        json.dump(rec, f)
+    res, integ = infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, checkpoint_dir=ckpt
+    )
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        resumed = {r["pid"]: r["resumed"] for r in json.load(f)["per_task"]}
+    assert resumed == {i: i != 2 for i in range(7)}
+    assert (res.schema_json, res.total_rows, integ) == (
+        want[0].schema_json, want[0].total_rows, want[1]
+    )
+    assert _norm_state(res.state) == _norm_state(want[0].state)
+
+
+def test_infer_scan_stops_decoding_text(spark, tmp_path):
+    """The infer-side scan (no contract) gives each credited string column
+    its own reader: ``text`` stops after its first batch in every task,
+    while ``role`` and ``tool``, which never saturate, decode in full.
+    Read from the manifest's per-task ``decoded`` lineage; the result still
+    equals infer_dataframe."""
+    from jsonschema_infer_spark.sources.transcripts import (
+        generate_transcripts, write_parquet,
+    )
+
+    table = generate_transcripts(12_000, seed=7)
+    assert table.num_rows >= 4 * 16_384
+    path = write_parquet(table.slice(0, 4 * 16_384), str(tmp_path / "t.parquet"), 16_384)
+    ckpt = str(tmp_path / "ckpt")
+    res, _ = infer_and_integrity_parquet(spark, path, rg_per_task=1, checkpoint_dir=ckpt)
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        tasks = json.load(f)["per_task"]
+    assert len(tasks) == 4
+    for t in tasks:
+        assert sorted(t["decoded"]) == ["role", "text", "tool"]
+        assert t["decoded"]["text"] < t["rows"] == 16_384
+        assert t["decoded"]["role"] == t["decoded"]["tool"] == t["rows"]
+    want = infer_dataframe(spark.read.parquet(path))
+    assert res.schema_json == want.schema_json
+    assert _norm_state(res.state) == _norm_state(want.state)

@@ -5,7 +5,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from jsonschema_infer_spark.operators.sampling import (
-    downsample,
     hash_split,
     stratified_cap,
 )
@@ -69,19 +68,6 @@ def test_stratified_cap_plan_window_group_limit(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "WindowGroupLimit" in plan
-
-
-def test_downsample_deterministic_subset(spark):
-    df = spark.range(0, 4000).withColumnRenamed("id", "k")
-    kept = {r.k for r in downsample(df, "k", 0.25).collect()}
-    again = {r.k for r in downsample(df.repartition(9), "k", 0.25).collect()}
-    assert kept == again
-    assert abs(len(kept) / 4000 - 0.25) < 0.03
-    # smaller fraction with same salt is a SUBSET (nested samples)
-    smaller = {r.k for r in downsample(df, "k", 0.1).collect()}
-    assert smaller <= kept
-    with pytest.raises(ValueError):
-        downsample(df, "k", 0.0)
 
 
 def test_hash_split_rejects_over_unit_fractions(spark):

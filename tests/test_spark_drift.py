@@ -8,7 +8,6 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from jsonschema_infer_spark.operators.drift import (
     categorical_drift,
     numeric_drift,
-    transcript_drift_report,
 )
 from jsonschema_infer_spark.sources.transcripts import generate_transcripts, write_parquet
 
@@ -22,23 +21,6 @@ def snaps(spark, tmp_path_factory):
     write_parquet(base, pa_)
     write_parquet(shifted, pb_)
     return spark.read.parquet(pa_), spark.read.parquet(pb_)
-
-
-def test_transcript_drift_contract(snaps):
-    a, b = snaps
-    rep = transcript_drift_report(a, b, alpha=0.01)
-    assert rep["role_chi2"]["drifted"], rep["role_chi2"]
-    assert rep["text_len_ks"]["drifted"], rep["text_len_ks"]
-    assert rep["ts_delta_ks"]["drifted"], rep["ts_delta_ks"]
-    assert not rep["tool_chi2"]["drifted"], rep["tool_chi2"]  # FP guard
-
-
-def test_no_drift_between_identical_seeds(spark, snaps):
-    a, _ = snaps
-    rep = transcript_drift_report(a, a, alpha=0.01)
-    for k in ("role_chi2", "tool_chi2", "text_len_ks", "ts_delta_ks"):
-        assert not rep[k]["drifted"], (k, rep[k])
-        assert rep[k]["p_value"] == pytest.approx(1.0, abs=1e-6)
 
 
 def test_hist_mode_agrees_with_exact(snaps):

@@ -54,8 +54,6 @@ def test_duplicate_keys_match_injections(compiled):
         for r in V.duplicate_keys(viol, ["conv_id", "turn_idx"]).collect()
     }
     assert dups == set(map(tuple, log["dup_keys"]))
-    # duplicate_rows returns 2 rows per duplicated key
-    assert V.duplicate_rows(viol, ["conv_id", "turn_idx"]).count() == 2 * len(dups)
     assert V.duplicate_keys(clean, ["conv_id", "turn_idx"]).count() == 0
 
 

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from jsonschema_infer_spark.functions.xxh64 import (
     spark_xxhash64_str,
-    spark_xxhash64_str_int,
     to_signed,
     xxh64_bytes,
 )
@@ -50,21 +49,6 @@ def test_matches_spark_string_hash(spark):
     got = {r.s: r.h for r in df.select("s", F.xxhash64("s").alias("h")).collect()}
     for s in STRINGS:
         assert got[s] == spark_xxhash64_str(s), repr(s)
-
-
-def test_matches_spark_chained_int(spark):
-    # xxhash64(string, lit(i)) — each column's hash seeds the next; i is a
-    # 32-bit literal, hashed through the 4-byte finalizer
-    df = spark.createDataFrame([(s,) for s in STRINGS[:6]], "s string")
-    for i in (0, 1, 7, 31, 2**31 - 1):
-        got = {
-            r.s: r.h
-            for r in df.select(
-                "s", F.xxhash64("s", F.lit(i)).alias("h")
-            ).collect()
-        }
-        for s in STRINGS[:6]:
-            assert got[s] == spark_xxhash64_str_int(s, i), (repr(s), i)
 
 
 def test_seed_propagates():
