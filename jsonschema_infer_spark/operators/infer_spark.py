@@ -57,6 +57,7 @@ class InferResult:
     total_rows: int
     partitions: list = field(default_factory=list)  # (pid, rows, secs)
     wall_secs: float = 0.0
+    stage_secs: dict = field(default_factory=dict)  # the fused scan's driver stages
 
     def render(self) -> str:
         return self.schema_json
@@ -327,8 +328,6 @@ def _eliminate_formats(st: dict, values: pa.Array, config: InferConfig) -> None:
         if f is None:
             continue
         if pds is None:
-            import pandas as pd
-
             pds = values.to_pandas().astype(object)
         vec = f.vectorized
         ok = vec(pds) if vec is not None else pds.map(f.detector)

@@ -69,6 +69,7 @@ from .infer_spark import (
     saturated,
 )
 from .validate import (
+    CONV_HASH,
     _integrity_fold,
     _partial_schema,
     reduce_spilled_partials,
@@ -286,6 +287,10 @@ def infer_and_integrity_parquet(
     complete results or raises, and finished work stays on disk. ``None``
     uses a temp directory, deleted afterwards.
 
+    ``InferResult.stage_secs`` (also in the manifest) times ``scan``, the
+    task job from launch to its last result, apart from the driver's
+    ``integrity_merge`` (`reduce_spilled_partials`).
+
     ``max_samples`` is not supported here (a row budget caps inference but
     integrity must still see every row — the two folds would need
     different scans, defeating the fusion); use infer_dataframe and
@@ -335,7 +340,8 @@ def infer_and_integrity_parquet(
 
     def run(item):
         i, (f, lo, hi) = item
-        key = {"file": f, "row_groups": [lo, hi], "fingerprint": fingerprints[f]}
+        key = {"file": f, "row_groups": [lo, hi], "fingerprint": fingerprints[f],
+               "conv_hash": CONV_HASH}
         extra = {"keyed_rows": None, "decoded": None}
         return run_task(ckpt, i, key, lambda: _fused_task(
             f, lo, hi, config, conv_col, idx_col, out_dir, i, order_cols,
@@ -347,18 +353,23 @@ def infer_and_integrity_parquet(
         rdd = spark.sparkContext.parallelize(
             list(enumerate(tasks)), max(len(tasks), 1)
         ).map(run)
+        t1 = time.perf_counter()
         merged, total_rows, vtotals, lineage = reduce_tasks(rdd, len(tasks))
+        t2 = time.perf_counter()
         res = _infer_result(merged, total_rows, lineage, config, t0)
+        t3 = time.perf_counter()
         integ = reduce_spilled_partials(
             spark, out_dir, {r["pid"]: r["keyed_rows"] for r in lineage}
         )
+        res.stage_secs = {"scan": t2 - t1, "integrity_merge": time.perf_counter() - t3}
         counts = None
         if violation_spec is not None:
             # no tasks leave no violation vector: every count is 0
             counts = dict.fromkeys(vnames, 0)
             if vtotals is not None:
                 counts.update(zip(vnames, (int(v) for v in vtotals)))
-        write_manifest(mpath, identity, lineage, res, integrity=integ, violations=counts)
+        write_manifest(mpath, identity, lineage, res, integrity=integ,
+                       violations=counts, stage_secs=res.stage_secs)
         return (res, integ) if counts is None else (res, integ, counts)
     finally:
         if checkpoint_dir is None:

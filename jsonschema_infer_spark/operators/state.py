@@ -251,8 +251,10 @@ def merge(a: dict | None, b: dict | None) -> dict | None:
         out["first"] = fa if fa is not None else fb
 
     out["items"] = merge(a["items"], b["items"])
+    # a's keys in a's order, then b's new ones: the merged order (and the
+    # constraint spec built from it) must not depend on PYTHONHASHSEED
     out["props"] = {}
-    for k in a["props"].keys() | b["props"].keys():
+    for k in [*a["props"], *(k for k in b["props"] if k not in a["props"])]:
         out["props"][k] = merge(a["props"].get(k), b["props"].get(k))
 
     # extensions

@@ -27,6 +27,7 @@ Check taxonomy (SURVEY.md §2.5):
 
 from __future__ import annotations
 
+import hashlib
 import re
 from dataclasses import dataclass
 
@@ -646,7 +647,8 @@ def _run_partials(conv, idx):
     conv), when runs are at most half the rows and the turn strictly
     increases inside each: count = distinct = run length, min/max = first/
     last turn. Else None. A conv in two runs gets two partials with one
-    ``ch``, which the reduces union."""
+    ``ch``, which the reduces union. Returns (conv, n, mn, mx, ndl, the
+    distinct turns of each partial, one after the other)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -659,10 +661,65 @@ def _run_partials(conv, idx):
     t = idx.to_numpy(zero_copy_only=False)
     if not ((np.diff(t.astype(np.int64)) > 0) | step).all():
         return None
-    offsets = np.append(starts, rows)
-    n, turns = pa.array(np.diff(offsets)), pa.ListArray.from_arrays(offsets, idx)
-    return (conv.take(pa.array(starts)), n, pa.array(t[starts]),
-            pa.array(t[offsets[1:] - 1]), n, turns)
+    n = np.diff(np.append(starts, rows))
+    return conv.take(pa.array(starts)), n, t[starts], t[starts + n - 1], n, t
+
+
+def _sorted_partials(conv, idx):
+    """`_run_partials`' output for rows in any order, from one sort of the
+    int64 keys ``(dictionary code << 32) | (turn + 2^31)`` (the bias keeps
+    a negative turn inside its conv's range): group starts give n/mn/mx,
+    adjacent unequal keys ``ndl`` and the sorted distinct turns."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    enc = pc.dictionary_encode(conv)
+    key = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64) << 32
+    key |= idx.to_numpy(zero_copy_only=False).astype(np.int64) + (1 << 31)
+    key.sort()
+    turn = ((key & 0xFFFFFFFF) - (1 << 31)).astype(np.int32)
+    code = key >> 32
+    ends = np.append(np.flatnonzero(code[1:] != code[:-1]) + 1, len(key))
+    starts = ends - np.diff(ends, prepend=0)
+    first = np.concatenate([[True], key[1:] != key[:-1]])  # of each key
+    ndl = np.diff(np.cumsum(first)[ends - 1], prepend=0)
+    return (enc.dictionary.take(pa.array(code[starts])), ends - starts,
+            turn[starts], turn[ends - 1], ndl, turn[first])
+
+
+# FNV-1a-64; a conv id longer than _FNV_MAX_BYTES hashes with an 8-byte
+# blake2b, so the vectorized loop makes at most that many passes.
+_FNV_OFFSET, _FNV_PRIME, _FNV_MAX_BYTES = 0xCBF29CE484222325, 0x100000001B3, 64
+# `_conv_hash`'s name in the fused scan's task markers: a part file spilled
+# under another hash would split its convs from the rest, so it is rerun.
+CONV_HASH = "fnv1a64/blake2b64"
+
+
+def _conv_hash(conv) -> "np.ndarray":
+    """The int64 ``ch`` of each string of a null-free arrow string array:
+    FNV-1a-64 of its UTF-8 bytes, one vectorized pass per byte position
+    over the offsets and values buffers. A pure function of the bytes, so
+    equal convs share it in every task and process; a collision only
+    routes rows to the exact string-keyed path of the merge."""
+    import numpy as np
+
+    _, obuf, vbuf = conv.buffers()
+    o = np.frombuffer(obuf, np.int32)[conv.offset:conv.offset + len(conv) + 1]
+    lens, pos = np.diff(o), (o[:-1] - o[0]).astype(np.intp)
+    width = int(lens[lens <= _FNV_MAX_BYTES].max(initial=0))
+    vals = np.zeros(o[-1] - o[0] + width, np.uint8)  # zero-padded past the end
+    vals[:o[-1] - o[0]] = np.frombuffer(vbuf or b"", np.uint8)[o[0]:o[-1]]
+    h, at = np.full(len(conv), _FNV_OFFSET, np.uint64), pos.copy()
+    for j in range(width):
+        live = lens > j
+        np.bitwise_xor(h, vals[at], out=h, where=live)
+        np.multiply(h, np.uint64(_FNV_PRIME), out=h, where=live)
+        at += 1
+    for i in np.flatnonzero(lens > _FNV_MAX_BYTES):
+        b = hashlib.blake2b(vals[pos[i]:pos[i] + lens[i]], digest_size=8)
+        h[i] = int.from_bytes(b.digest(), "little")
+    return h.view(np.int64)  # Spark's Arrow bridge lacks uint64
 
 
 def _integrity_fold(conv_col: str, idx_col: str):
@@ -671,11 +728,12 @@ def _integrity_fold(conv_col: str, idx_col: str):
     UNIQUE turn list — exact cross-partition merge material at a fraction
     of the raw rows. Rows with a NULL conv or turn are dropped (the
     embedded-uniqueness semantics; see transcript_integrity_summary).
-    Conv-clustered rows take `_run_partials`, any others one arrow
-    ``group_by``; either way a dense partial spills a null ``turns``."""
+    Conv-clustered rows take `_run_partials`, any others one sort of
+    packed keys (`_sorted_partials`); either way a dense partial spills a
+    null ``turns``. Each partial carries ``ch``, the `_conv_hash` of its
+    conv, so the driver merge finds multi-task convs among integers."""
     import numpy as np
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     def fold(batches):
         try:
@@ -690,52 +748,21 @@ def _integrity_fold(conv_col: str, idx_col: str):
         t = pa.Table.from_batches(bs).drop_null()
         if t.num_rows == 0:
             return
-        parts = _run_partials(
-            t.column(conv_col).combine_chunks(),
-            t.column(idx_col).combine_chunks().cast(pa.int32()),
+        conv = t.column(conv_col).combine_chunks()
+        idx = t.column(idx_col).combine_chunks().cast(pa.int32())
+        conv, n, mn, mx, ndl, vals = _run_partials(conv, idx) or _sorted_partials(conv, idx)
+        conv = conv.cast(pa.string())
+        # a dense partial's list is null (and empty: parquet refuses more)
+        dense = ndl == mx.astype(np.int64) - mn + 1
+        off = np.append(0, np.cumsum(np.where(dense, 0, ndl)))
+        turns = pa.ListArray.from_arrays(
+            pa.array(off, pa.int32()), pa.array(vals[np.repeat(~dense, ndl)]),
+            mask=pa.array(dense),
         )
-        if parts is None:  # C++ hash aggregation, with the distinct lists
-            g = t.group_by([conv_col]).aggregate(
-                [(idx_col, a) for a in ("count", "min", "max", "distinct")]
-            )
-            turns = g[f"{idx_col}_distinct"].combine_chunks().cast(pa.list_(pa.int32()))
-            parts = [g[f"{idx_col}_{a}"] for a in ("count", "min", "max")]
-            parts = [g[conv_col], *parts, pc.list_value_length(turns), turns]
-        conv, n, mn, mx, ndl, turns = parts
-        conv_str = conv.cast(pa.string())
-        span = mx.to_numpy().astype(np.int64) - mn.to_numpy() + 1
-        dense = pa.array(ndl.to_numpy() == span)
-        turns = pc.if_else(dense, pa.scalar(None, turns.type), turns)
-        # int64 conv hash, computed HERE (distributed, ~10 ms per task):
-        # the driver merge finds multi-task convs by sorting these ints
-        # instead of hash-aggregating millions of strings twice (measured
-        # 3.4 s of a 6 s serial merge at 5M partials). Deterministic
-        # (siphash, fixed key) and collision-safe by construction: a
-        # collision only routes extra rows into the exact string-keyed
-        # union path, never changes a result. categorize=False gives the
-        # same hashes without factorizing convs first.
-        import pandas as _pd
-
-        ch = _pd.util.hash_array(
-            conv_str.to_numpy(zero_copy_only=False).astype(object),
-            categorize=False,
-        ).view("int64")  # same bits; Spark's Arrow bridge lacks uint64
-        out = pa.Table.from_arrays(
-            [
-                conv_str,
-                pa.array(ch, type=pa.int64()),
-                n.cast(pa.int64()),
-                mn.cast(pa.int32()),
-                mx.cast(pa.int32()),
-                # local distinct count (``ndl``) as its own column: the
-                # reduce's main path then never decodes the list column
-                # (parquet column pruning skips it on the spill scan)
-                ndl.cast(pa.int64()),
-                turns,
-            ],
-            schema=_partial_schema(),
-        )
-        yield from out.to_batches()
+        # ``ndl`` apart: the reduce's main path never decodes the list column
+        yield from pa.Table.from_arrays(
+            [conv, _conv_hash(conv), n, mn, mx, ndl, turns], schema=_partial_schema()
+        ).to_batches()
 
     return fold
 
@@ -843,24 +870,18 @@ def _integrity_reduce_split(partials: DataFrame) -> dict:
 
 
 def _merge_partials_local(table) -> dict:
-    """Vectorized driver-side merge of per-conv partials: numpy/arrow
-    C-paths instead of a 5M-group Spark ObjectHashAggregate. Partials are
-    ~2% of input rows, so this is MBs even for 10^8-turn inputs; beyond
-    that, reduce_spilled_partials uses _integrity_reduce_split instead.
+    """Vectorized driver-side merge of per-conv partials (numpy/arrow C
+    paths, no Spark aggregate), run by `_merge_buckets` once per ``ch``
+    bucket of the spill.
 
     Two-tier: a conv whose partials all came from ONE map task needs no
-    grouping at all — its per-row (n, mn, mx, ndl) stats ARE the final
-    per-conv stats, so singles are judged with plain row-wise numpy.
-    Under a conv-clustered layout that is ~99% of the rows (only
-    task-boundary stragglers + hot convs straddle tasks); only that
-    small remainder pays dictionary encoding and the exact turn-set
-    union (`_judge_multi_subset`).
-    Multi-task detection is keyed on the spilled ``ch`` int64 conv hash,
-    which ``_integrity_fold`` writes null-free (one hash pass; hash
-    collisions only route extra rows into the exact path, which unions by
-    the true conv strings — results are collision-proof). The string and
-    list columns are never chunk-combined for the single-task majority —
-    only the multi subset is gathered."""
+    grouping — its row's (n, mn, mx, ndl) ARE the final per-conv stats,
+    judged with row-wise numpy. That is ~99% of the rows under a
+    conv-clustered layout and ~1% on shuffled input. Only the rest pays
+    the exact turn-set union by the true conv strings
+    (`_judge_multi_subset`), found by a repeated ``ch``, so a hash
+    collision only routes extra rows there and never changes a result.
+    The string and list columns are gathered for that subset only."""
     import numpy as np
     import pandas as pd
     import pyarrow as pa
@@ -960,11 +981,34 @@ def _judge_multi_subset(sub) -> tuple:
     return dup_excess, bad
 
 
-# Spills up to this many bytes are merged on the driver; larger ones go
-# through the distributed _integrity_reduce_split. The spill is written
-# plain (no compression, dictionary or statistics), so its file size is
-# about the bytes the driver loads.
+# Spills up to this many bytes are merged on the driver (`_merge_buckets`),
+# larger ones by the distributed _integrity_reduce_split. The spill is
+# plain (no compression, dictionary or statistics): file size ≈ bytes loaded.
 _DRIVER_MERGE_MAX_BYTES = 256 << 20
+
+# The driver merge splits a spill into ``ch`` buckets of _MERGE_BUCKET_ROWS
+# or more partials, judged on up to _MERGE_THREADS threads; a smaller spill
+# stays one bucket on the calling thread (sweep: CHANGES.md).
+_MERGE_THREADS, _MERGE_BUCKET_ROWS = 4, 48 << 10
+
+
+def _merge_buckets(table) -> dict:
+    """`_merge_partials_local` per bucket of ``ch`` high bits, the buckets
+    spread over a thread pool. Equal convs share a ``ch``, so the buckets
+    are independent and a collision stays inside one."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import numpy as np
+
+    k = table.num_rows // _MERGE_BUCKET_ROWS
+    if k <= 1:
+        return _merge_partials_local(table)
+    ch = table.column("ch").to_numpy().view(np.uint64)
+    bucket = ((ch >> np.uint64(32)) % np.uint64(k)).astype(np.intp)
+    rows = np.split(np.argsort(bucket), np.cumsum(np.bincount(bucket, minlength=k))[:-1])
+    with ThreadPoolExecutor(min(k, _MERGE_THREADS)) as pool:
+        out = list(pool.map(lambda r: _merge_partials_local(table.take(r)), rows))
+    return {key: sum(o[key] for o in out) for key in out[0]}
 
 
 def reduce_spilled_partials(spark, out_dir: str, keyed_rows: dict | None = None) -> dict:
@@ -973,13 +1017,12 @@ def reduce_spilled_partials(spark, out_dir: str, keyed_rows: dict | None = None)
     {dup_rows_excess, ordering_violations} dict.
 
     The reduce is picked from the measured spill size, the way AQE
-    re-plans from shuffle statistics: up to ``_DRIVER_MERGE_MAX_BYTES``
-    the vectorized driver merge (`_merge_partials_local` — no shuffle,
-    sub-second at bench scale), above it the distributed
-    `_integrity_reduce_split`, whose main aggregation carries five longs
-    per conv. Only the final ``part-*`` names are read: a torn
-    ``.part-*.inprogress-<pid>`` file from a killed writer never reaches
-    either reader.
+    re-plans from shuffle statistics: up to ``_DRIVER_MERGE_MAX_BYTES`` the
+    vectorized driver merge in ``ch`` buckets (`_merge_buckets`, no
+    shuffle), above it the distributed `_integrity_reduce_split`, whose
+    main aggregation carries five longs per conv. Only the final
+    ``part-*`` names are read: a torn ``.part-*.inprogress-<pid>`` file
+    from a killed writer never reaches either reader.
 
     ``keyed_rows`` maps each task id to the rows with a non-null conv and
     turn it read; the spill must then hold one ``part-<i>`` per task with
@@ -1015,7 +1058,7 @@ def reduce_spilled_partials(spark, out_dir: str, keyed_rows: dict | None = None)
                 f"task read {want}; use a fresh spill/checkpoint directory"
             )
     if local:
-        return _merge_partials_local(pa.concat_tables(tables))
+        return _merge_buckets(pa.concat_tables(tables))
     return _integrity_reduce_split(spark.read.parquet(*spilled))
 
 

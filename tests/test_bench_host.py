@@ -63,7 +63,7 @@ def test_transcript_pipeline_checks_counts_against_log(spark, tx_paths, tmp_path
     p = bench.run_transcript_pipeline(spark, snaps)
     assert p["violations"]["enum:role"] == len(tx_paths["log"]["bad_role_rows"]) > 0
     assert p["row_violations"] == sum(p["violations"].values())
-    assert set(p["stage_secs"]) == {"spec", "fused_scan"}
+    assert set(p["stage_secs"]) == {"spec", "scan", "integrity_merge"}
 
     short = dict(tx_paths["log"], bad_role_rows=tx_paths["log"]["bad_role_rows"][1:])
     log.write_text(json.dumps(short, default=int))

@@ -214,3 +214,64 @@ def test_const_latch_independent_of_batch_boundaries(cols, cuts_a, cuts_b):
         if node["const_differ"]:
             node["const_set"] = True  # how a rev-16 marker could hold it
     assert _distinct_sorted(S.state_from_jsonable(legacy)) == states[0]
+
+
+_MERGE_IN_A_FRESH_INTERPRETER = r"""
+import json, sys
+from jsonschema_infer_spark.checkpoint import config_fingerprint
+from jsonschema_infer_spark.config import default_config
+from jsonschema_infer_spark.operators import state as S, validate as V
+from jsonschema_infer_spark.plans.render import render_schema
+
+with open(sys.argv[1]) as f:
+    states = [S.state_from_jsonable(s) for s in json.load(f)]
+merged = None
+for st in states:
+    merged = S.merge(merged, st)
+config = default_config()
+schema = S.finalize(merged, config)
+spec = V.constraint_spec(schema, state=merged)
+layout = {"fused": ["conv_id", "turn_idx", 1], "violation_spec": spec}
+print(json.dumps({
+    "props": list(merged["props"]),
+    "spec": spec,
+    "fingerprint": config_fingerprint(config, layout, None),
+    "schema": render_schema(schema, config.indent),
+}))
+"""
+
+
+def test_merged_property_order_independent_of_hash_seed(tmp_path):
+    """The same task states merged in two interpreters, under
+    PYTHONHASHSEED=1 and =2, give one property order, so one
+    constraint_spec, one fused-scan config_fingerprint and one rendered
+    schema. The merge keeps the left state's order and appends the right
+    one's new keys; the last task lists its columns in another order."""
+    import os
+    import subprocess
+    import sys
+
+    from jsonschema_infer_spark.operators.infer_spark import fold_batches_columnar
+    from jsonschema_infer_spark.sources.transcripts import generate_transcripts
+
+    table = generate_transcripts(300, seed=3)
+    cut = table.num_rows // 4
+    tasks = [table.slice(i * cut, cut) for i in range(3)]
+    tasks.append(table.slice(3 * cut).select(table.column_names[::-1]))
+    states = [
+        S.state_to_jsonable(fold_batches_columnar(iter(t.to_batches()), CFG)[0])
+        for t in tasks
+    ]
+    path = tmp_path / "states.json"
+    path.write_text(json.dumps(states))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    outs = [
+        json.loads(subprocess.run(
+            [sys.executable, "-c", _MERGE_IN_A_FRESH_INTERPRETER, str(path)],
+            cwd=root, capture_output=True, text=True, check=True,
+            env={**os.environ, "PYTHONHASHSEED": seed},
+        ).stdout)
+        for seed in ("1", "2")
+    ]
+    assert outs[0] == outs[1]
+    assert outs[0]["props"] == table.column_names

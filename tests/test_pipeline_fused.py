@@ -1087,6 +1087,51 @@ def test_rev16_markers_are_rerun(spark, tx_paths, tmp_path):
     assert _norm_state(res.state) == _norm_state(want[0].state)
 
 
+def test_rev17_markers_are_rerun(spark, tx_paths, tmp_path):
+    """A checkpoint written by the rev-17 fold (siphash ``ch`` in every
+    part file, markers without ``conv_hash``) is rerun task by task, and
+    the resume equals a fresh run. Resuming any of it would be wrong: one
+    rev-17 part file among rev-18 ones splits each conv they share into
+    two single-task convs, and the counts change silently."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = _multi_rg_copy(tx_paths, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    want = infer_and_integrity_parquet(spark, path, rg_per_task=1, checkpoint_dir=ckpt)
+    fresh, old = [], []
+    for i in range(7):
+        marker = os.path.join(ckpt, "states", f"state_{i:06d}.json")
+        with open(marker) as f:
+            rec = json.load(f)
+        del rec["conv_hash"]
+        with open(marker, "w") as f:
+            json.dump(rec, f)
+        part = os.path.join(ckpt, "integrity", f"part-{i:05d}.parquet")
+        fresh.append(pq.read_table(part))
+        conv = fresh[-1].column("conv").to_numpy(zero_copy_only=False).astype(object)
+        sip = pd.util.hash_array(conv, categorize=False).view("int64")
+        old.append(fresh[-1].set_column(1, "ch", pa.array(sip, pa.int64())))
+        pq.write_table(old[-1], part)
+    assert V._merge_partials_local(pa.concat_tables(old)) == want[1]
+    mixed = [o if i % 2 else f for i, (o, f) in enumerate(zip(old, fresh))]
+    assert V._merge_partials_local(pa.concat_tables(mixed)) != want[1]
+    res, integ = infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, checkpoint_dir=ckpt
+    )
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        manifest = json.load(f)
+    assert {r["pid"]: r["resumed"] for r in manifest["per_task"]} == {
+        i: False for i in range(7)
+    }
+    assert {r["conv_hash"] for r in manifest["per_task"]} == {V.CONV_HASH}
+    assert (res.schema_json, res.total_rows, integ) == (
+        want[0].schema_json, want[0].total_rows, want[1]
+    )
+    assert set(manifest["stage_secs"]) == set(res.stage_secs) == {"scan", "integrity_merge"}
+
+
 def test_infer_scan_stops_decoding_text(spark, tmp_path):
     """The infer-side scan (no contract) gives each credited string column
     its own reader: ``text`` stops after its first batch in every task,

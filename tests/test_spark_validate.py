@@ -123,16 +123,11 @@ def test_partition_verdicts_deterministic(compiled):
 
 
 def _conv_hash(convs):
-    """The spilled ``ch`` column of these conv ids, as _integrity_fold
-    writes it."""
+    """The spilled ``ch`` column of these conv ids: the engine's own hash,
+    as _integrity_fold writes it."""
     import pyarrow as pa
 
-    import pandas as pd
-
-    ch = pd.util.hash_array(
-        pa.array(convs).to_numpy(zero_copy_only=False).astype(object)
-    )
-    return pa.array(ch.view("int64"), type=pa.int64())
+    return pa.array(V._conv_hash(pa.array(convs, pa.string())), type=pa.int64())
 
 
 def test_merge_partials_local_negative_turns():
@@ -428,9 +423,9 @@ def test_reduce_spilled_partials_fuzz(spark, tmp_path, monkeypatch):
 
 
 def test_integrity_fold_emits_deterministic_ch(spark, tx_paths):
-    """Spilled partials carry the uint64 conv hash, identical across
-    independent fold invocations (siphash with a fixed key, no
-    PYTHONHASHSEED dependence)."""
+    """Spilled partials carry the 64-bit conv hash (FNV-1a-64 of the conv's
+    bytes, stored as int64), identical across independent fold
+    invocations and equal for equal convs."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -452,7 +447,7 @@ from hypothesis import given, settings, strategies as hst  # noqa: E402
 
 
 def _groupby_partials(rows):
-    """The hash-only fold as engine rev 15 wrote it: one group_by per task,
+    """The hash-only fold as engine revs 15-17 wrote it: one group_by per task,
     every partial with its full distinct turn list (no null ``turns``)."""
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -489,12 +484,13 @@ def _fold_partials(rows):
 @hst.composite
 def _task_rows(draw):
     """Tasks of (conv, turn) rows: conversation runs (clean, gapped,
-    negative, with a duplicate inside the run), hot convs, a conv in two
-    runs of one task, NULL keys; optionally shuffled within each task."""
+    negative, int32-extreme, with a duplicate inside the run), hot convs,
+    a conv in two runs of one task, NULL keys; optionally shuffled within
+    each task."""
     runs = []
     for _ in range(draw(hst.integers(0, 12))):
         conv = draw(hst.sampled_from(["a", "b", "c", "d", "hot"]))
-        start = draw(hst.sampled_from([0, 0, 0, 1, -3]))
+        start = draw(hst.sampled_from([0, 0, 0, 1, -3, -(2**31), 2**31 - 50]))
         length = draw(hst.integers(1, 40 if conv == "hot" else 6))
         turns = list(range(start, start + length))
         kind = draw(hst.sampled_from(["clean", "clean", "gap", "dup"]))
@@ -522,25 +518,175 @@ def _brute_force(tasks) -> dict:
     return _judge_partials([(c, 1, [t]) for c, t in keyed])
 
 
+def _partial_rows(t):
+    """A part table's partials as comparable tuples: a null turn list
+    expanded to mn..mx, every list as a set."""
+    return sorted(
+        (r["conv"], r["ch"], r["n"], r["mn"], r["mx"], r["ndl"],
+         tuple(sorted(set(r["turns"] if r["turns"] is not None
+                          else range(r["mn"], r["mx"] + 1)))))
+        for r in t.to_pylist()
+    )
+
+
 @given(_task_rows(), hst.data())
 @settings(max_examples=300, deadline=None)
 def test_run_fold_equals_groupby_fold_and_bruteforce(tasks, data):
+    """The fold (run path where it applies), the fold with the sort path
+    forced, and the rev-17 ``group_by`` fold give equal partials per task,
+    and each merge, of one kind or of part files of all three mixed,
+    equals a brute force over the rows."""
+    from unittest import mock
+
     import pyarrow as pa
 
     tasks = [t for t in tasks if t]
     want = _brute_force(tasks)
     new = [_fold_partials(t) for t in tasks]
+    with mock.patch.object(V, "_run_partials", lambda conv, idx: None):
+        srt = [_fold_partials(t) for t in tasks]
     old = [_groupby_partials(t) for t in tasks]
-    for task, part in zip(tasks, new):
+    for task, part, s, o in zip(tasks, new, srt, old):
         keyed = sum(c is not None and t is not None for c, t in task)
         assert sum(part.column("n").to_pylist()) == keyed
+        assert _partial_rows(s) == _partial_rows(o)
+        # a dense partial spills a null list, any other its distinct turns
+        for r in s.to_pylist():
+            dense = r["ndl"] == r["mx"] - r["mn"] + 1
+            assert (r["turns"] is None) == dense
+            assert dense or r["turns"] == sorted(set(r["turns"]))
     if not tasks:
         return
-    assert V._merge_partials_local(pa.concat_tables(new)) == want
-    assert V._merge_partials_local(pa.concat_tables(old)) == want
-    # part files of both engine revisions side by side
-    mixed = [data.draw(hst.sampled_from([a, b])) for a, b in zip(new, old)]
+    for parts in (new, srt, old):
+        assert V._merge_partials_local(pa.concat_tables(parts)) == want
+    # part files of the three folds side by side
+    mixed = [data.draw(hst.sampled_from(trio)) for trio in zip(new, srt, old)]
     assert V._merge_partials_local(pa.concat_tables(mixed)) == want
+
+
+def _fnv1a64(b: bytes) -> int:
+    h = 0xCBF29CE484222325
+    for x in b:
+        h = ((h ^ x) * 0x100000001B3) % 2**64
+    return h
+
+
+def _ref_hash(s: str) -> int:
+    """The conv hash of one string, one byte at a time."""
+    import hashlib
+
+    b = s.encode()
+    if len(b) > V._FNV_MAX_BYTES:
+        return int.from_bytes(hashlib.blake2b(b, digest_size=8).digest(), "little")
+    return _fnv1a64(b)
+
+
+@given(hst.lists(hst.one_of(hst.text(max_size=8), hst.text(min_size=60, max_size=70),
+                            hst.sampled_from(["", "é", "日本語", "conv-0001234"])),
+                 max_size=30),
+       hst.integers(0, 5))
+@settings(max_examples=200, deadline=None)
+def test_conv_hash_is_fnv1a_of_the_bytes(convs, cut):
+    """FNV-1a-64 of each string's UTF-8 bytes, blake2b past
+    ``_FNV_MAX_BYTES`` (empty and non-ASCII strings included), as int64;
+    a slice of the array hashes like the same strings unsliced."""
+    import numpy as np
+    import pyarrow as pa
+
+    arr = pa.array(convs, pa.string())
+    got = V._conv_hash(arr)
+    assert got.dtype == np.int64
+    assert got.view(np.uint64).tolist() == [_ref_hash(c) for c in convs]
+    cut = min(cut, len(convs))
+    assert V._conv_hash(arr.slice(cut)).tolist() == got[cut:].tolist()
+    assert V._conv_hash(arr.slice(0, cut)).tolist() == got[:cut].tolist()
+
+
+def test_conv_hash_equal_across_processes():
+    """The hash is a pure function of the bytes: two interpreters with
+    different PYTHONHASHSEEDs give this process's values."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+
+    convs = ["", "a", "conv-0001234", "日本語", "x" * 200]
+    code = (
+        "import pyarrow as pa; from jsonschema_infer_spark.operators import validate as V; "
+        f"print(V._conv_hash(pa.array({convs!r})).tolist())"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    want = V._conv_hash(pa.array(convs)).tolist()
+    for seed in ("1", "2"):
+        out = subprocess.run(
+            [sys.executable, "-c", code], cwd=root, capture_output=True, text=True,
+            check=True, env={**os.environ, "PYTHONHASHSEED": seed},
+        ).stdout
+        assert json.loads(out) == want
+
+
+def test_conv_hash_of_a_1mb_conv_id_is_linear():
+    """A 1 MB conv id costs its bytes once (blake2b), not one vectorized
+    pass per byte over every string: well under a second."""
+    import time
+
+    import pyarrow as pa
+
+    convs = pa.array(["z" * (1 << 20)] + [f"conv-{i}" for i in range(20_000)])
+    t = time.perf_counter()
+    got = V._conv_hash(convs)
+    assert time.perf_counter() - t < 1.0
+    assert int(got.view("uint64")[0]) == _ref_hash("z" * (1 << 20))
+    assert int(got.view("uint64")[7]) == _fnv1a64(b"conv-6")
+
+
+@hst.composite
+def _spill_partials(draw):
+    """Partial rows (conv, ch, n, turns) of convs split over tasks, with
+    ``ch`` the real hash or forced to collide across convs."""
+    import pyarrow as pa
+
+    collide = draw(hst.booleans())
+    rows = []
+    for c in range(draw(hst.integers(0, 30))):
+        conv = f"conv{c}"
+        for _ in range(draw(hst.integers(1, 4))):
+            turns = sorted(draw(hst.sets(hst.integers(-2, 8), min_size=1, max_size=5)))
+            rows.append((conv, len(turns) + draw(hst.sampled_from([0, 0, 1])), turns))
+    rows = draw(hst.permutations(rows))
+    ch = V._conv_hash(pa.array([r[0] for r in rows], pa.string()))
+    if collide:
+        ch = ch % 3
+    return rows, ch
+
+
+@given(_spill_partials())
+@settings(max_examples=150, deadline=None)
+def test_bucketed_merge_equals_one_bucket(drawn):
+    """``_merge_buckets`` with one bucket and with four (a bucket per
+    ``_MERGE_BUCKET_ROWS`` = 1 row) agree with a brute force, forced
+    ``ch`` collisions included."""
+    from unittest import mock
+
+    import pyarrow as pa
+
+    rows, ch = drawn
+    table = pa.table(
+        {"conv": pa.array([r[0] for r in rows], pa.string()),
+         "ch": pa.array(ch, pa.int64()),
+         "n": pa.array([r[1] for r in rows], pa.int64()),
+         "mn": pa.array([r[2][0] for r in rows], pa.int32()),
+         "mx": pa.array([r[2][-1] for r in rows], pa.int32()),
+         "ndl": pa.array([len(r[2]) for r in rows], pa.int64()),
+         "turns": pa.array([r[2] for r in rows], pa.list_(pa.int32()))},
+        schema=V._partial_schema(),
+    )
+    want = _judge_partials(rows)
+    for k in (1, 4):
+        with mock.patch.multiple(V, _MERGE_THREADS=k, _MERGE_BUCKET_ROWS=1):
+            assert V._merge_buckets(table) == want, k
 
 
 def test_run_fold_takes_the_run_path_on_clustered_rows():
