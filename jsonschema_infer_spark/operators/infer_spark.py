@@ -349,13 +349,9 @@ def observe_arrow_column(
     semantics (nulls skipped, node.go:136-149). ``ok`` carries per-row
     order keys when examples capture is on (see the _OrderKeys block)."""
     typ = arr.type
-    if pa.types.is_dictionary(typ) and not (
-        ok is None and _is_str(typ.value_type) and saturated(st)
-        and arr.dictionary.null_count == 0
-    ):
+    if pa.types.is_dictionary(typ):
         # direct parquet reads restore dictionary encoding from the
         # embedded arrow schema; observation semantics are value-level
-        # (a saturated string column only counts, so it skips the cast)
         observe_arrow_column(st, arr.cast(typ.value_type), config, count_nulls, ok)
         return
     if ok is not None:
@@ -451,7 +447,7 @@ def observe_arrow_column(
                     tag = "integer" if S.is_go_integral(val) else "number"
                     _add_distinct(st, tag, [int(val) if tag == "integer" else val])
 
-    elif _is_str(typ) or pa.types.is_dictionary(typ):
+    elif _is_str(typ):
         credit_strings(st, n)
         if saturated(st):
             return  # nothing left to learn from the values: skip the copy
@@ -582,15 +578,14 @@ def observe_arrow_column(
 
 
 def fold_batches_columnar(
-    batches, config: InferConfig, order_cols: list | None = None, root=None
+    batches, config: InferConfig, order_cols: list | None = None
 ) -> tuple:
     """Partial fold: iterate Arrow batches, observe each column vectorized.
     Returns (root_state, rows). ``order_cols`` (required when
     config.examples) names the total-order columns for example capture;
     the root's example is the full row dict at the minimal key, exactly
-    what a sequential fold over order-sorted row-documents records.
-    ``root``: a caller-owned state to fold into, read between batches."""
-    root = S.new_state() if root is None else root
+    what a sequential fold over order-sorted row-documents records."""
+    root = S.new_state()
     rows = 0
     capture = bool(config.examples and order_cols)
     for batch in batches:

@@ -11,12 +11,14 @@ second scan is the same IO all over again.
 
 Here each (file, row-group-range) task iterates its Arrow batches ONCE:
 
-    pyarrow row-group scan (no Spark row pipeline); each credited string
-    column has its own reader, closed once that column's state is
-    saturated, and the footer credits the rest
+    pyarrow row-group scan (no Spark row pipeline) of every column but
+    the credited strings
       -> vectorized inference fold (observe every column)   \\ same
       -> per-conversation integrity pre-aggregation          | batch
       -> contract violation counter (given a violation_spec) / stream
+    then each credited string column on its own reader
+      -> inference fold until the column's state is saturated; the
+         footer credits the rest, and its null total to ``required``
     inference partial  -> returned, merged by checkpoint.reduce_tasks (one
                           treeAggregate, lineage checked at any task count)
     integrity partials -> one partial per conversation run (or hash group),
@@ -47,10 +49,12 @@ import os
 import shutil
 import tempfile
 import time
+from contextlib import closing
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from . import state as S
 from .._worker import release_zip_finders
@@ -66,12 +70,15 @@ from .infer_spark import (
     credit_strings,
     fold_batches_columnar,
     list_parquet_files,
+    observe_arrow_column,
     saturated,
 )
 from .validate import (
     CONV_HASH,
     _integrity_fold,
     _partial_schema,
+    arrow_violation_counter,
+    constraint_name,
     reduce_spilled_partials,
 )
 
@@ -82,10 +89,10 @@ def _credited_columns(pf, lo: int, hi: int, config: InferConfig, keys: set, spec
     top-level string or dictionary<string> columns, not a key or order
     column, that ``spec`` checks for ``required`` at most, whose footer
     has a null count in every row group. On the infer side (no ``spec``)
-    that is every such string column; each gets its own reader, so one
-    that never saturates stops none of the others. None with examples
-    capture, or when a nested column makes leaf and field indexes
-    differ."""
+    that is every such string column. Each is folded on its own reader,
+    after the main one, so one that never saturates stops none of the
+    others. None with examples capture, or when a nested column makes
+    leaf and field indexes differ."""
     sch, md = pf.schema_arrow, pf.metadata
     if config.examples or len(set(sch.names)) != len(sch) or md.num_columns != len(sch):
         return []
@@ -126,26 +133,22 @@ def _fused_task(
     against. Run by ``infer_and_integrity_parquet`` and, one task at a
     time without Spark, by contractbench's layer replay.
 
-    Each of the ``_credited_columns`` comes from its own reader, aligned
-    with the main one and closed as soon as that column is ``saturated``,
-    so a never-saturating column (a low-cardinality ``role``) keeps no
-    other column decoding. The footer then credits a closed column's rest:
-    rows less nulls as strings, nulls as ``required`` violations.
-    ``lineage`` also receives ``decoded``: {credited column: rows read}."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from .validate import arrow_violation_counter
-
+    The main reader folds every column but the ``_credited_columns``.
+    Then each credited column is folded on its own reader, closed as soon
+    as that column is ``saturated``, so a never-saturating column (a
+    low-cardinality ``role``) keeps no other column decoding. The footer
+    credits what a reader did not read: rows less nulls as strings, and
+    its null total as ``required`` violations. ``lineage`` also receives
+    ``decoded``: {credited column: rows read}."""
     integrity_fold = _integrity_fold(conv_col, idx_col)
     pf = pq.ParquetFile(f)
     ns = pf.schema_arrow.names
     counter = None
-    vcounts = None
     vnames: list = []
     if violation_spec is not None:
         vnames, counter = arrow_violation_counter(violation_spec, pf.schema_arrow)
+    # zero batches in this task's range count no violations
+    vcounts = np.zeros(len(vnames), np.int64)
     rgs = list(range(lo, hi))
     credit = _credited_columns(
         pf, lo, hi, config, {conv_col, idx_col, *(order_cols or ())}, violation_spec
@@ -155,44 +158,8 @@ def _fused_task(
     def read(cols):
         return pf.iter_batches(batch_size=10_000, row_groups=rgs, columns=cols)
 
-    batches = read([c for c in ns if c not in cnames] if credit else None)
-    side = {c: read([c]) for c in cnames}  # the live credited readers
-    root = S.new_state()
     kept: list = []
-    decoded = dict.fromkeys(cnames, 0)  # rows each credited reader yielded
-    seen = dict.fromkeys(cnames, 0)  # and the nulls among them
     keyed = 0
-
-    def aligned(bs):
-        # slices of the main reader and every live credited reader up to
-        # their common boundary (a dictionary column's batches also end at
-        # row-group ends), rebuilt in file-schema order
-        pend: dict = {}
-        for b in bs:
-            while b.num_rows:
-                props = root["props"]
-                for c in [c for c in side if c in props and saturated(props[c])]:
-                    side.pop(c).close()
-                    pend.pop(c, None)
-                if not side:
-                    yield b
-                    break
-                for c, r in side.items():
-                    if c not in pend or not pend[c].num_rows:
-                        pend[c] = next(r)
-                k = min(b.num_rows, *(p.num_rows for p in pend.values()))
-                cols = dict(zip(b.schema.names, b.slice(0, k).columns))
-                for c, p in pend.items():
-                    cols[c] = p.column(0).slice(0, k)
-                    decoded[c] += k
-                    seen[c] += cols[c].null_count
-                    pend[c] = p.slice(k)
-                names = [c for c in ns if c in cols]
-                yield pa.RecordBatch.from_arrays([cols[c] for c in names], names=names)
-                b = b.slice(k)
-        for c, r in side.items():
-            if c in pend and pend[c].num_rows or next(r, None):
-                raise RuntimeError(f"{f}: misaligned column readers")
 
     def tee(bs):
         nonlocal vcounts, keyed
@@ -206,21 +173,35 @@ def _fused_task(
             keyed += pc.and_(pc.is_valid(cols[0]), pc.is_valid(cols[1])).true_count
             kept.append(pa.RecordBatch.from_arrays(cols, names=[conv_col, idx_col]))
             if counter is not None:
-                c = counter(b)
-                vcounts = c if vcounts is None else vcounts + c
+                vcounts += counter(b)
             yield b
 
     st, rows = fold_batches_columnar(
-        tee(aligned(batches)), config, order_cols, root
+        tee(read([c for c in ns if c not in cnames] if credit else None)),
+        config, order_cols,
     )
     groups = [pf.metadata.row_group(r) for r in rgs]
+    decoded = dict.fromkeys(cnames, 0)  # rows each credited reader yielded
     for c, k in credit:
-        if c in side:  # decoded to the end
-            continue
-        nulls = sum(g.column(k).statistics.null_count for g in groups) - seen[c]
-        credit_strings(st["props"][c], rows - decoded[c] - nulls)
+        seen = 0  # nulls among the rows read
+        with closing(read([c])) as reader:
+            for b in reader:
+                a = b.column(0)
+                node = st["props"].setdefault(c, S.new_state())
+                observe_arrow_column(node, a, config)
+                decoded[c] += len(a)
+                seen += a.null_count
+                if saturated(node):
+                    break
+        nulls = sum(g.column(k).statistics.null_count for g in groups)
+        rest = rows - decoded[c] - (nulls - seen)  # non-null rows not read
+        if rest:  # a zero credit would type an all-null column "string"
+            credit_strings(st["props"][c], rest)
         if f"required:{c}" in vnames:
             vcounts[vnames.index(f"required:{c}")] += nulls
+    # file-schema order, as infer_dataframe lists them: the merged state
+    # and the constraint spec keep the first task's property order
+    st["props"] = {c: st["props"][c] for c in ns if c in st["props"]}
     # every task writes its part file, an empty one too, so the driver
     # can check the spill holds exactly one file per task
     # (reduce_spilled_partials). Write-then-rename: a part file appears under
@@ -247,8 +228,7 @@ def _fused_task(
     release_zip_finders()
     if violation_spec is None:
         return st, rows
-    # zero batches in this task's range count no violations
-    return st, rows, np.zeros(len(vnames), np.int64) if vcounts is None else vcounts
+    return st, rows, vcounts
 
 
 def infer_and_integrity_parquet(
@@ -289,7 +269,8 @@ def infer_and_integrity_parquet(
 
     ``InferResult.stage_secs`` (also in the manifest) times ``scan``, the
     task job from launch to its last result, apart from the driver's
-    ``integrity_merge`` (`reduce_spilled_partials`).
+    ``integrity_merge`` (`reduce_spilled_partials`); its ``wall_secs``
+    spans the whole call, that merge and the manifest write included.
 
     ``max_samples`` is not supported here (a row budget caps inference but
     integrity must still see every row — the two folds would need
@@ -312,15 +293,11 @@ def infer_and_integrity_parquet(
     tasks = _list_rg_tasks(files, rg_per_task)
 
     if violation_spec is not None:
-        import pyarrow.parquet as _pq
-
-        from .validate import arrow_violation_counter, constraint_name
-
         if tasks:
             # validate support up front (raises UnsupportedArrowSpec on the
             # driver, not inside 200 tasks) and capture the constraint names
             vnames, _ = arrow_violation_counter(
-                violation_spec, _pq.ParquetFile(tasks[0][0]).schema_arrow
+                violation_spec, pq.ParquetFile(tasks[0][0]).schema_arrow
             )
         else:  # an empty table violates nothing
             vnames = [constraint_name(e) for e in violation_spec]
@@ -370,6 +347,7 @@ def infer_and_integrity_parquet(
                 counts.update(zip(vnames, (int(v) for v in vtotals)))
         write_manifest(mpath, identity, lineage, res, integrity=integ,
                        violations=counts, stage_secs=res.stage_secs)
+        res.wall_secs = time.time() - t0
         return (res, integ) if counts is None else (res, integ, counts)
     finally:
         if checkpoint_dir is None:

@@ -833,7 +833,7 @@ def test_arrow_violation_counter_unsupported_raises(spark, tmp_path):
 from contextlib import contextmanager  # noqa: E402
 from unittest import mock  # noqa: E402
 
-from hypothesis import given, settings, strategies as hst  # noqa: E402
+from hypothesis import example, given, settings, strategies as hst  # noqa: E402
 
 _CREDIT_SPEC = [
     ("required", "conv_id"), ("required", "s_late"), ("required", "s_const"),
@@ -843,23 +843,25 @@ _TS = ["2024-01-02T03:04:05Z", "2024-05-06T07:08:09Z"]
 
 
 def _credit_table(rows, late, rg_rows, dict_cols, late_nulls):
-    """conv-clustered keys plus four string columns the fused task may
-    credit from the footer: ``s_late`` saturates only after row ``late``
-    (date-times before it, unique values after), ``s_const`` is const in
-    the first row group, ``s_nulls`` has nulls only in the row groups
-    after the first two, at the positions ``late_nulls``, and ``s_low``
-    has three values, so it never saturates."""
+    """conv-clustered keys around five string columns the fused task may
+    credit from the footer, so credited columns sit between main ones:
+    ``s_late`` saturates only after row ``late`` (date-times before it,
+    unique values after), ``s_const`` is const in the first row group,
+    ``s_nulls`` has nulls only in the row groups after the first two, at
+    the positions ``late_nulls``, ``s_low`` has three values, so it never
+    saturates, and ``s_void`` is all nulls (it renders ``"type":""``)."""
     import pyarrow as pa
 
     k = range(rows)
     nulls = {p for p in late_nulls if p >= 2 * rg_rows}
     cols = {
         "conv_id": pa.array([f"c{i // 5}" for i in k]),
-        "turn_idx": pa.array([i % 5 for i in k], pa.int32()),
         "s_late": pa.array([_TS[i % 2] if i < late else f"v{i}" for i in k]),
         "s_const": pa.array(["x" if i < rg_rows else f"y{i % 100}" for i in k]),
         "s_nulls": pa.array([None if i in nulls else f"n{i}" for i in k]),
         "s_low": pa.array(["lo", "mid", "hi"][i % 3] for i in k),
+        "s_void": pa.nulls(rows, pa.string()),
+        "turn_idx": pa.array([i % 5 for i in k], pa.int32()),
     }
     for c in dict_cols:
         cols[c] = cols[c].dictionary_encode()
@@ -883,6 +885,14 @@ def _reader_spy():
 
     with mock.patch.object(pq.ParquetFile, "iter_batches", spy):
         yield calls
+
+
+def _render(st) -> str:
+    from jsonschema_infer_spark.operators import state as S
+    from jsonschema_infer_spark.plans.render import render_schema
+
+    cfg = default_config()
+    return render_schema(S.finalize(st, cfg), cfg.indent)
 
 
 def _full_decode(path, spec):
@@ -925,10 +935,17 @@ def _fused_once(path, out_dir, spec):
     rows=hst.integers(12_000, 32_000),
     late_frac=hst.floats(0.0, 0.9),
     rg_rows=hst.sampled_from([3_000, 7_000, 16_384]),
-    dict_cols=hst.sets(hst.sampled_from(["s_late", "s_const", "s_nulls", "s_low"])),
+    dict_cols=hst.sets(
+        hst.sampled_from(["s_late", "s_const", "s_nulls", "s_low", "s_void"])
+    ),
     late_nulls=hst.lists(hst.integers(0, 31_999), max_size=40),
     stats=hst.booleans(),
     fmt_on_late=hst.booleans(),
+)
+# s_nulls saturates in its first batch: one null read in it, one left to the footer
+@example(
+    rows=20_000, late_frac=0.5, rg_rows=3_000, dict_cols=set(),
+    late_nulls=[7_000, 15_000], stats=True, fmt_on_late=False,
 )
 @settings(max_examples=25, deadline=None)
 def test_fused_task_credit_equals_full_decode(
@@ -936,8 +953,9 @@ def test_fused_task_credit_equals_full_decode(
     fmt_on_late,
 ):
     """With or without footer statistics, and whether or not a format
-    entry keeps ``s_late`` decoded, the fused task's state, rows,
-    violation vector and integrity equal one full decode's."""
+    entry keeps ``s_late`` decoded, the fused task's state, rendered
+    schema, rows, violation vector and integrity equal one full
+    decode's."""
     import pyarrow.parquet as pq
 
     d = tmp_path_factory.mktemp("credit")
@@ -951,11 +969,14 @@ def test_fused_task_credit_equals_full_decode(
         st, n, vec, integ = _fused_once(path, d, spec)
     want_st, want_n, want_vec, want_integ = _full_decode(path, spec)
     assert _norm_state(st) == _norm_state(want_st)
+    assert _render(st) == _render(want_st)
     assert (n, vec, integ) == (want_n, want_vec, want_integ)
-    credited = ["s_const", "s_nulls", "s_low"] + ([] if fmt_on_late else ["s_late"])
-    if stats:  # one reader per credited column; s_low's reads to the end
+    credited = ["s_const", "s_nulls", "s_low", "s_void"]
+    credited += [] if fmt_on_late else ["s_late"]
+    if stats:  # one reader per credited column; s_low's and s_void's read to the end
         assert sorted(cols for cols, _ in calls[1:]) == sorted([c] for c in credited)
-        assert {cols[0]: pulled for cols, pulled in calls[1:]}["s_low"] == rows
+        pulled = {cols[0]: k for cols, k in calls[1:]}
+        assert pulled["s_low"] == pulled["s_void"] == rows
     else:  # no null counts in the footer: one reader of every column
         assert [c for c, _ in calls] == [None]
 
@@ -965,7 +986,8 @@ def test_fused_credited_columns_match_spark(spark, tmp_path):
     late, are const in the first row group, or have nulls only late: with
     footer statistics the credited reader stops early, without them every
     value is decoded; both equal infer_dataframe and Spark's counts. The
-    never-saturating ``s_low`` keeps only its own reader going."""
+    never-saturating ``s_low`` and the all-null ``s_void`` keep only their
+    own readers going."""
     import pyarrow.parquet as pq
 
     table = _credit_table(40_000, 15_000, 8_192, {"s_late"}, range(20_000, 40_000, 7))
@@ -986,12 +1008,49 @@ def test_fused_credited_columns_match_spark(spark, tmp_path):
         with _reader_spy() as calls:
             _fused_once(path, tmp_path / f"t{stats}", _CREDIT_SPEC)
         if stats:
-            pulled = {cols[0]: n for cols, n in calls[1:]}
-            assert sorted(pulled) == ["s_const", "s_late", "s_low", "s_nulls"]
-            assert pulled.pop("s_low") == 40_000
+            pulled = {cols[0]: k for cols, k in calls[1:]}
+            assert sorted(pulled) == ["s_const", "s_late", "s_low", "s_nulls", "s_void"]
+            assert pulled.pop("s_low") == pulled.pop("s_void") == 40_000
             assert max(pulled.values()) < 40_000
         else:
             assert [c for c, _ in calls] == [None]
+
+
+def test_fused_property_order_matches_infer_dataframe(spark, tmp_path):
+    """The credited columns of ``_credit_table`` sit between main columns
+    and are folded after them, yet the fused scan lists its properties,
+    and the constraint spec built from them, in file-schema order, as
+    infer_dataframe does (render sorts keys, so only these show order)."""
+    import pyarrow.parquet as pq
+
+    table = _credit_table(20_000, 5_000, 4_096, set(), range(10_000, 20_000, 11))
+    path = str(tmp_path / "order.parquet")
+    pq.write_table(table, path, row_group_size=4_096)
+    want = infer_dataframe(spark.read.parquet(path))
+    res, _ = infer_and_integrity_parquet(spark, path, rg_per_task=2)
+    assert list(res.state["props"]) == list(want.state["props"]) == table.column_names
+    assert V.constraint_spec(res.schema, res.state) == V.constraint_spec(
+        want.schema, want.state
+    )
+
+
+def test_fused_wall_secs_spans_stages(spark, tx_paths, monkeypatch):
+    """``wall_secs`` covers the whole call, the driver's integrity merge
+    included, so it is at least the sum of the timed stages. The merge is
+    slowed by a second so that leaving it out would show."""
+    import time
+
+    from jsonschema_infer_spark.operators import pipeline
+
+    def slow_merge(*args, **kwargs):
+        time.sleep(1.0)
+        return merge(*args, **kwargs)
+
+    merge = pipeline.reduce_spilled_partials
+    monkeypatch.setattr(pipeline, "reduce_spilled_partials", slow_merge)
+    res, _ = infer_and_integrity_parquet(spark, tx_paths["viol"], rg_per_task=1)
+    assert res.stage_secs["integrity_merge"] >= 1.0
+    assert res.wall_secs >= sum(res.stage_secs.values())
 
 
 def test_required_counts_on_dictionary_columns_match_spark(spark, tx_paths, tmp_path):
