@@ -1,9 +1,10 @@
 """Explicit skew handling for hot conv_ids (north_rule mandate).
 
 Most checks in this engine are aggregation-shaped on purpose — partial
-aggregation combines map-side, so a hot conversation costs one reducer row,
-not a sorted shuffle of all its turns (see validate.turn_ordering_violations
-and validate.transcript_integrity_summary). The two places skew can still
+aggregation combines map-side, so a hot conversation costs one reducer row
+(validate.turn_ordering_violations), or one partial per map task for the
+integrity merge (validate.transcript_integrity_summary), not a sorted
+shuffle of all its turns. The two places skew can still
 bite are (a) per-conversation WINDOW operators, where one 10^7-turn
 conversation serializes on a single task, and (b) grouped counts whose key
 distribution is Zipf-hot. This module provides the salted two-phase forms:

@@ -16,11 +16,13 @@ Check taxonomy (SURVEY.md §2.5):
   (min/max/count/count_distinct — no window, no skew problem), plus ts
   monotonicity via a per-conv window (bounded group: a conversation's
   length is bounded, so the window never sees a pathological partition);
-- integrity counts (uniqueness + dense order as two totals): one reduce
-  per input kind over the same per-conv partials (`_integrity_fold`) —
-  parquet input spills them from the fused scan and
-  `reduce_spilled_partials` merges the spill; a DataFrame goes through
-  `transcript_integrity_summary`;
+- integrity counts (uniqueness + dense order as two totals): one merge,
+  `_merge_partials_local`, over the same per-conv partials
+  (`_integrity_fold`) — parquet input spills them from the fused scan and
+  `reduce_spilled_partials` merges the spill on the driver (or, above a
+  size cap, in Spark tasks); a DataFrame goes through
+  `transcript_integrity_summary`, whose partials the same merge judges in
+  Spark tasks after a shuffle by conv hash;
 - per-partition verdicts over a deterministic bucket of conv_id (stable
   lineage for the checkpoint manifest).
 """
@@ -647,7 +649,7 @@ def _run_partials(conv, idx):
     conv), when runs are at most half the rows and the turn strictly
     increases inside each: count = distinct = run length, min/max = first/
     last turn. Else None. A conv in two runs gets two partials with one
-    ``ch``, which the reduces union. Returns (conv, n, mn, mx, ndl, the
+    ``ch``, which the merge unions. Returns (conv, n, mn, mx, ndl, the
     distinct turns of each partial, one after the other)."""
     import numpy as np
     import pyarrow as pa
@@ -759,7 +761,7 @@ def _integrity_fold(conv_col: str, idx_col: str):
             pa.array(off, pa.int32()), pa.array(vals[np.repeat(~dense, ndl)]),
             mask=pa.array(dense),
         )
-        # ``ndl`` apart: the reduce's main path never decodes the list column
+        # ``ndl`` apart: the merge's single-task path never decodes the list column
         yield from pa.Table.from_arrays(
             [conv, _conv_hash(conv), n, mn, mx, ndl, turns], schema=_partial_schema()
         ).to_batches()
@@ -778,10 +780,9 @@ def transcript_integrity_summary(
 
     duplicate_keys and turn_ordering_violations each shuffle every raw
     (conv, turn) pair. Here each partition pre-aggregates to one row per
-    conversation — count, min, max, unique-turn list — in a vectorized
-    arrow fold, and only the per-conv partials shuffle. The merge is
-    exact: n_distinct is the size of the distinct union of the partials'
-    unique-turn arrays (JVM array functions, no explode).
+    conversation run — count, min, max, unique-turn list — in a vectorized
+    arrow fold, and only the per-conv partials shuffle, by their conv
+    hash, into the merge the spill reduce runs (`_merge_on_executors`).
 
     NULL keys: the check is an EMBEDDED uniqueness constraint — it holds
     on the rows whose conv AND turn are both non-null; rows with a NULL
@@ -796,83 +797,39 @@ def transcript_integrity_summary(
     ).mapInArrow(
         _integrity_fold(conv_col, idx_col), from_arrow_schema(_partial_schema())
     )
-    return _integrity_reduce_collect(partials)
+    return _merge_on_executors(partials)
 
 
-def _integrity_finalize(g: DataFrame) -> dict:
-    bad = (
-        (F.col("min_idx") != 0)
-        | (F.col("max_idx") != F.col("n_distinct") - 1)
-        | (F.col("n_distinct") != F.col("n_turns"))
-    )
-    row = g.agg(
-        F.sum(F.col("n_turns") - F.col("n_distinct")).alias("dup_rows_excess"),
-        F.sum(F.when(bad, 1).otherwise(0)).alias("ordering_violations"),
-    ).collect()[0]
-    return {
-        "dup_rows_excess": int(row.dup_rows_excess or 0),
-        "ordering_violations": int(row.ordering_violations or 0),
-    }
+def _merge_task(batches):
+    """Task body of `_merge_on_executors`: `_merge_partials_local` over
+    all of one shuffle partition's partials, as one row."""
+    import pyarrow as pa
+
+    try:
+        bs = list(batches)
+        table = pa.Table.from_batches(bs) if bs else _partial_schema().empty_table()
+        got = _merge_partials_local(table)
+        yield pa.RecordBatch.from_pydict({k: [v] for k, v in got.items()})
+    finally:
+        release_zip_finders()
 
 
-def _integrity_reduce_collect(partials: DataFrame) -> dict:
-    """One groupBy(conv) whose distinct union is
-    size(array_distinct(flatten(collect_list(turns)))): one shuffle, one
-    job — the fastest distributed form when partials come from a
-    mapInArrow fold (short conversations: conv-id strings dominate the
-    shuffle bytes, the arrays add little)."""
-    g = partials.groupBy("conv").agg(
-        F.sum("n").alias("n_turns"),
-        F.min("mn").alias("min_idx"),
-        F.max("mx").alias("max_idx"),
-        F.size(F.array_distinct(F.flatten(F.collect_list(_turns())))).alias(
-            "n_distinct"
-        ),
-    )
-    return _integrity_finalize(g)
-
-
-def _turns() -> Column:
-    """A partial's turn list, a null one expanded to its range mn..mx."""
-    return F.coalesce("turns", F.sequence("mn", "mx"))
-
-
-def _integrity_reduce_split(partials: DataFrame) -> dict:
-    """The distributed reduce for spills too large to merge on the driver.
-    A conv whose rows all landed in ONE map task (the clustered-layout
-    majority) needs no cross-task union — its local distinct count
-    (``ndl``) is exact — so the main aggregation carries five longs per
-    conv and never touches the arrays (parquet column pruning skips the
-    list column); only convs split across tasks pay the exact array
-    union, via a join AQE turns into a broadcast."""
-    g1 = partials.select("conv", "n", "mn", "mx", "ndl").groupBy("conv").agg(
-        F.sum("n").alias("n_turns"),
-        F.min("mn").alias("min_idx"),
-        F.max("mx").alias("max_idx"),
-        F.count(F.lit(1)).alias("parts"),
-        F.sum("ndl").alias("nd_sum"),
-    )
-    multi = g1.filter(F.col("parts") > 1).select("conv")
-    exact = (
-        partials.select("conv", _turns().alias("turns"))
-        .join(multi, "conv")
-        .groupBy("conv")
-        .agg(
-            F.size(F.array_distinct(F.flatten(F.collect_list("turns")))).alias(
-                "nd_exact"
-            )
-        )
-    )
-    g = g1.join(exact, "conv", "left").withColumn(
-        "n_distinct", F.coalesce("nd_exact", "nd_sum")
-    )
-    return _integrity_finalize(g)
+def _merge_on_executors(partials: DataFrame) -> dict:
+    """`_merge_partials_local` as Spark tasks: partials shuffled by ``ch``,
+    so every partial of a conv (and of a colliding one) meets in one task,
+    the way `_merge_buckets` splits them on the driver. The arrays cross a
+    plain exchange, not an aggregate; the driver sums one row per task."""
+    rows = partials.repartition("ch").mapInArrow(
+        _merge_task, "dup_rows_excess long, ordering_violations long"
+    ).collect()
+    return {k: sum(r[k] for r in rows) for k in ("dup_rows_excess", "ordering_violations")}
 
 
 def _merge_partials_local(table) -> dict:
-    """Vectorized driver-side merge of per-conv partials (numpy/arrow C
-    paths, no Spark aggregate), run by `_merge_buckets` once per ``ch``
-    bucket of the spill.
+    """Vectorized merge of per-conv partials (numpy/arrow C paths, no
+    Spark aggregate): the one judge of every partial. It runs once per
+    ``ch`` bucket of a spill on the driver (`_merge_buckets`), or once per
+    ``ch`` shuffle partition in a Spark task (`_merge_on_executors`).
 
     Two-tier: a conv whose partials all came from ONE map task needs no
     grouping — its row's (n, mn, mx, ndl) ARE the final per-conv stats,
@@ -982,8 +939,9 @@ def _judge_multi_subset(sub) -> tuple:
 
 
 # Spills up to this many bytes are merged on the driver (`_merge_buckets`),
-# larger ones by the distributed _integrity_reduce_split. The spill is
-# plain (no compression, dictionary or statistics): file size ≈ bytes loaded.
+# larger ones by the same merge in Spark tasks (`_merge_on_executors`). The
+# spill is plain (no compression, dictionary or statistics): file size ≈
+# bytes loaded.
 _DRIVER_MERGE_MAX_BYTES = 256 << 20
 
 # The driver merge splits a spill into ``ch`` buckets of _MERGE_BUCKET_ROWS
@@ -1016,13 +974,13 @@ def reduce_spilled_partials(spark, out_dir: str, keyed_rows: dict | None = None)
     ``part-*.parquet`` files `pipeline._fused_task` writes) into the final
     {dup_rows_excess, ordering_violations} dict.
 
-    The reduce is picked from the measured spill size, the way AQE
-    re-plans from shuffle statistics: up to ``_DRIVER_MERGE_MAX_BYTES`` the
-    vectorized driver merge in ``ch`` buckets (`_merge_buckets`, no
-    shuffle), above it the distributed `_integrity_reduce_split`, whose
-    main aggregation carries five longs per conv. Only the final
-    ``part-*`` names are read: a torn ``.part-*.inprogress-<pid>`` file
-    from a killed writer never reaches either reader.
+    Where `_merge_partials_local` runs is picked from the measured spill
+    size, the way AQE re-plans from shuffle statistics: up to
+    ``_DRIVER_MERGE_MAX_BYTES`` on the driver in ``ch`` buckets
+    (`_merge_buckets`, no shuffle), above it in Spark tasks after a
+    shuffle by ``ch`` (`_merge_on_executors`). Only the final ``part-*``
+    names are read: a torn ``.part-*.inprogress-<pid>`` file from a
+    killed writer never reaches either reader.
 
     ``keyed_rows`` maps each task id to the rows with a non-null conv and
     turn it read; the spill must then hold one ``part-<i>`` per task with
@@ -1047,7 +1005,7 @@ def reduce_spilled_partials(spark, out_dir: str, keyed_rows: dict | None = None)
     if not spilled:
         return {"dup_rows_excess": 0, "ordering_violations": 0}
     local = sum(os.path.getsize(p) for p in spilled) <= _DRIVER_MERGE_MAX_BYTES
-    if local or keyed_rows is not None:  # the distributed path reads only n
+    if local or keyed_rows is not None:  # the executor path reads only n
         tables = [pq.read_table(p, columns=None if local else ["n"]) for p in spilled]
     for p, t in zip(spilled, tables) if keyed_rows is not None else ():
         got = int(t.column("n").to_numpy().sum())
@@ -1059,7 +1017,7 @@ def reduce_spilled_partials(spark, out_dir: str, keyed_rows: dict | None = None)
             )
     if local:
         return _merge_buckets(pa.concat_tables(tables))
-    return _integrity_reduce_split(spark.read.parquet(*spilled))
+    return _merge_on_executors(spark.read.parquet(*spilled))
 
 
 def ts_regressions(

@@ -57,14 +57,18 @@ def test_fused_matches_standalone_on_clean(spark, tx_paths):
 
 
 def test_fused_distributed_reduce_matches(spark, tx_paths, monkeypatch):
-    # force the distributed split reduce (zero driver-merge budget)
+    # force the merge into Spark tasks (zero driver-merge budget); the
+    # oracle is the row-level SQL API, not the same merge again
     monkeypatch.setattr(V, "_DRIVER_MERGE_MAX_BYTES", 0)
     _, integ = infer_and_integrity_parquet(
         spark, tx_paths["viol"], rg_per_task=1
     )
-    assert integ == V.transcript_integrity_summary(
-        spark.read.parquet(tx_paths["viol"])
-    )
+    tov = V.turn_ordering_violations(spark.read.parquet(tx_paths["viol"])).collect()
+    assert integ == {
+        "dup_rows_excess": sum(r.n_turns - r.n_distinct for r in tov),
+        "ordering_violations": len(tov),
+    }
+    assert integ["dup_rows_excess"] > 0 and integ["ordering_violations"] > 0
 
 
 def test_fused_lineage_one_entry_per_task(spark, tx_paths, tmp_path):
@@ -686,6 +690,46 @@ def test_fused_violation_counts_match_spark(spark, tx_paths):
     logged = _logged_counts(tx_paths["log"])
     assert all(n > 0 for n in logged.values())
     assert vcross == {**dict.fromkeys(vcross, 0), **logged}
+
+
+def test_fused_range_counts_match_spark(spark, tmp_path):
+    """The opt-in range constraints: a contract inferred from a clean
+    table with ``with_ranges=True``, applied to a table with ints and
+    floats outside its bounds (NaN included), counts in the fused scan
+    what Spark's ``between`` predicates count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def write(name, n_int, x_float):
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(
+            pa.table({
+                "conv_id": [f"c{i // 10}" for i in range(40)],
+                "turn_idx": pa.array([i % 10 for i in range(40)], pa.int32()),
+                "n_int": pa.array(n_int, pa.int64()),
+                "x_float": pa.array(x_float, pa.float64()),
+            }),
+            path, row_group_size=16,
+        )
+        return path
+
+    n_int = [3 * i for i in range(40)]
+    x_float = [i / 4 + 0.5 for i in range(40)]
+    res, _ = infer_and_integrity_parquet(
+        spark, write("clean", n_int, x_float), rg_per_task=1
+    )
+    spec = V.constraint_spec(res.schema, state=res.state, with_ranges=True)
+    assert ("range", "n_int", 0.0, 117.0) in spec
+    assert ("range", "x_float", 0.5, 10.25) in spec
+
+    n_int[3], n_int[7], n_int[9] = -5, 1000, None
+    x_float[2], x_float[5], x_float[6], x_float[8] = -1.0, 1e9, float("nan"), None
+    viol = write("viol", n_int, x_float)
+    _, _, got = infer_and_integrity_parquet(
+        spark, viol, rg_per_task=1, violation_spec=spec
+    )
+    assert got == _spark_truth(spark, viol, spec)
+    assert got["range:n_int"] == 2 and got["range:x_float"] == 3
 
 
 def test_arrow_violation_counter_kinds_match_spark(spark, tmp_path):

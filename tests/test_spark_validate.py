@@ -86,6 +86,8 @@ def test_integrity_summary_matches_separate_operators(compiled):
     assert summ["dup_rows_excess"] == excess
     clean_summ = V.transcript_integrity_summary(clean)
     assert clean_summ == {"dup_rows_excess": 0, "ordering_violations": 0}
+    # a zero-row DataFrame: no partial reaches the merge
+    assert V.transcript_integrity_summary(viol.limit(0)) == clean_summ
 
 
 def test_ts_regressions_match_injections(compiled):
@@ -378,9 +380,9 @@ def test_reduce_spilled_partials_fuzz(spark, tmp_path, monkeypatch):
     over random part files (some empty), with negative turns, convs
     spanning many files, ``n`` above the turn-list length (duplicates
     inside one task) and FORCED ``ch`` collisions between different convs.
-    Both reduces — the driver merge under the size cap, and the
-    distributed split with the cap forced to 0 — must equal a pure-Python
-    judgment of the generated rows."""
+    The merge on the driver under the size cap, and in Spark tasks with
+    the cap forced to 0, must equal a pure-Python judgment of the
+    generated rows; so must a spill of only empty part files."""
     import random
 
     import pyarrow as pa
@@ -414,6 +416,11 @@ def test_reduce_spilled_partials_fuzz(spark, tmp_path, monkeypatch):
                 str(d / f"part-{i:05d}.parquet"),
             )
         trials.append((str(d), _judge_partials([(r[0], r[2], r[3]) for r in rows])))
+    d = tmp_path / "empty_parts"
+    d.mkdir()
+    for i in range(2):
+        pq.write_table(V._partial_schema().empty_table(), str(d / f"part-{i:05d}.parquet"))
+    trials.append((str(d), _judge_partials([])))
 
     for d, want in trials:
         assert V.reduce_spilled_partials(spark, d) == want, d
@@ -701,7 +708,7 @@ def test_run_fold_takes_the_run_path_on_clustered_rows():
 
 
 def test_spark_reduces_expand_null_turns(spark, tmp_path, monkeypatch):
-    """The collect and split reduces read a null ``turns`` as mn..mx."""
+    """The merge in Spark tasks reads a null ``turns`` as mn..mx."""
     import pyarrow.parquet as pq
 
     tasks = [[("a", 0), ("a", 1), ("b", 0), ("b", 1)], [("a", 1), ("a", 2), ("c", 1)],
@@ -712,7 +719,6 @@ def test_spark_reduces_expand_null_turns(spark, tmp_path, monkeypatch):
         pq.write_table(part, str(tmp_path / f"part-{i:05d}.parquet"))
     assert pq.read_table(str(tmp_path)).column("turns").null_count > 0
     partials = spark.read.parquet(str(tmp_path))
-    assert V._integrity_reduce_collect(partials) == want
-    assert V._integrity_reduce_split(partials) == want
+    assert V._merge_on_executors(partials) == want
     monkeypatch.setattr(V, "_DRIVER_MERGE_MAX_BYTES", 0)
     assert V.reduce_spilled_partials(spark, str(tmp_path), {0: 4, 1: 3, 2: 3}) == want

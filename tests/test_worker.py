@@ -119,6 +119,26 @@ def test_fused_task_releases_zip_finders(tx_paths, zip_on_path, tmp_path):
     assert _partials(tmp_path / "zip" / part) == _partials(tmp_path / "base" / part)
 
 
+def test_merge_task_releases_zip_finders(tx_paths, zip_on_path):
+    import pyarrow as pa
+
+    keys = pq.read_table(tx_paths["viol"], columns=["conv_id", "turn_idx"])
+    parts = list(V._integrity_fold("conv_id", "turn_idx")(keys.to_batches()))
+    want = V._merge_partials_local(pa.Table.from_batches(parts))
+    assert want["dup_rows_excess"] > 0
+
+    importlib.import_module(MODS[0])
+    assert zip_on_path in _zip_finders()
+
+    got = pa.Table.from_batches(list(V._merge_task(iter(parts)))).to_pylist()
+
+    assert _zip_finders() == []
+    assert got == [want]
+    # a shuffle partition with no partials still yields its zero row
+    empty = pa.Table.from_batches(list(V._merge_task(iter([])))).to_pylist()
+    assert empty == [{"dup_rows_excess": 0, "ordering_violations": 0}]
+
+
 def test_release_zip_finders_keeps_file_finders_and_is_idempotent(zip_on_path):
     importlib.import_module(MODS[0])
     file_finders = {
