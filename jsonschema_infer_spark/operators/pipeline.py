@@ -21,10 +21,11 @@ Here each (file, row-group-range) task iterates its Arrow batches ONCE:
          footer credits the rest, and its null total to ``required``
     inference partial  -> returned, merged by checkpoint.reduce_tasks (one
                           treeAggregate, lineage checked at any task count)
-    integrity partials -> one partial per conversation run (or hash group),
-                          spilled plain, one part file per task, checked
-                          against the task's keyed rows and reduced by
-                          validate.reduce_spilled_partials
+    integrity partials -> one partial per conversation run (or sort group),
+                          turn sets in [0, 64) as 64-bit masks, spilled
+                          plain in conv-hash order, one part file per
+                          task, checked against the task's keyed rows and
+                          reduced by validate.reduce_spilled_partials
     completion marker  -> the task's state, rows, violation vector and
                           lineage, written last (checkpoint.run_task): the
                           checkpoint a rerun over the same directory
@@ -75,6 +76,7 @@ from .infer_spark import (
 )
 from .validate import (
     CONV_HASH,
+    SPILL_LAYOUT,
     _integrity_fold,
     _partial_schema,
     arrow_violation_counter,
@@ -271,6 +273,9 @@ def infer_and_integrity_parquet(
     task job from launch to its last result, apart from the driver's
     ``integrity_merge`` (`reduce_spilled_partials`); its ``wall_secs``
     spans the whole call, that merge and the manifest write included.
+    The manifest's ``integrity_reduce`` says where that merge ran
+    (``path``: "driver" or "executors"), over how many ``spill_bytes``
+    and ``partials``, in how many ``ranges``.
 
     ``max_samples`` is not supported here (a row budget caps inference but
     integrity must still see every row — the two folds would need
@@ -318,7 +323,7 @@ def infer_and_integrity_parquet(
     def run(item):
         i, (f, lo, hi) = item
         key = {"file": f, "row_groups": [lo, hi], "fingerprint": fingerprints[f],
-               "conv_hash": CONV_HASH}
+               "conv_hash": CONV_HASH, "spill_layout": SPILL_LAYOUT}
         extra = {"keyed_rows": None, "decoded": None}
         return run_task(ckpt, i, key, lambda: _fused_task(
             f, lo, hi, config, conv_col, idx_col, out_dir, i, order_cols,
@@ -335,8 +340,9 @@ def infer_and_integrity_parquet(
         t2 = time.perf_counter()
         res = _infer_result(merged, total_rows, lineage, config, t0)
         t3 = time.perf_counter()
+        reduce_info: dict = {}
         integ = reduce_spilled_partials(
-            spark, out_dir, {r["pid"]: r["keyed_rows"] for r in lineage}
+            spark, out_dir, {r["pid"]: r["keyed_rows"] for r in lineage}, reduce_info
         )
         res.stage_secs = {"scan": t2 - t1, "integrity_merge": time.perf_counter() - t3}
         counts = None
@@ -346,7 +352,8 @@ def infer_and_integrity_parquet(
             if vtotals is not None:
                 counts.update(zip(vnames, (int(v) for v in vtotals)))
         write_manifest(mpath, identity, lineage, res, integrity=integ,
-                       violations=counts, stage_secs=res.stage_secs)
+                       violations=counts, stage_secs=res.stage_secs,
+                       integrity_reduce=reduce_info)
         res.wall_secs = time.time() - t0
         return (res, integ) if counts is None else (res, integ, counts)
     finally:

@@ -18,9 +18,10 @@ Check taxonomy (SURVEY.md §2.5):
   length is bounded, so the window never sees a pathological partition);
 - integrity counts (uniqueness + dense order as two totals): one merge,
   `_merge_partials_local`, over the same per-conv partials
-  (`_integrity_fold`) — parquet input spills them from the fused scan and
-  `reduce_spilled_partials` merges the spill on the driver (or, above a
-  size cap, in Spark tasks); a DataFrame goes through
+  (`_integrity_fold`: turn sets in [0, 64) as 64-bit masks) — parquet
+  input spills them from the fused scan in conv-hash order and
+  `reduce_spilled_partials` merges the spill on the driver in conv-hash
+  ranges (or, above a size cap, in Spark tasks); a DataFrame goes through
   `transcript_integrity_summary`, whose partials the same merge judges in
   Spark tasks after a shuffle by conv hash;
 - per-partition verdicts over a deterministic bucket of conv_id (stable
@@ -627,8 +628,11 @@ def turn_ordering_violations(
 def _partial_schema():
     """Arrow schema of the per-conv integrity partials: what
     `_integrity_fold` yields and what `pipeline._fused_task` spills (an
-    empty task spills an empty table of this schema). A null ``turns`` is
-    the dense range ``mn..mx`` (``ndl == mx - mn + 1``), not spilled."""
+    empty task spills an empty table of this schema), rows in ``ch``
+    order. A partial's distinct turns are its ``mask`` when that is not
+    null (bit t set for turn t, every turn in [0, 64)), else its
+    ``turns`` list, else (an empty or null list) the dense range
+    ``mn..mx`` (``ndl == mx - mn + 1``)."""
     import pyarrow as pa
 
     return pa.schema(
@@ -639,6 +643,7 @@ def _partial_schema():
             ("mn", pa.int32()),
             ("mx", pa.int32()),
             ("ndl", pa.int64()),
+            ("mask", pa.int64()),
             ("turns", pa.list_(pa.int32())),
         ]
     )
@@ -696,6 +701,10 @@ _FNV_OFFSET, _FNV_PRIME, _FNV_MAX_BYTES = 0xCBF29CE484222325, 0x100000001B3, 64
 # `_conv_hash`'s name in the fused scan's task markers: a part file spilled
 # under another hash would split its convs from the rest, so it is rerun.
 CONV_HASH = "fnv1a64/blake2b64"
+# The part files' layout in the same markers (`_partial_schema`: turn sets
+# as 64-bit masks, rows in ``ch`` order): a part file of an older layout is
+# rerun, never merged.
+SPILL_LAYOUT = "mask64/ch-sorted"
 
 
 def _conv_hash(conv) -> "np.ndarray":
@@ -731,9 +740,11 @@ def _integrity_fold(conv_col: str, idx_col: str):
     of the raw rows. Rows with a NULL conv or turn are dropped (the
     embedded-uniqueness semantics; see transcript_integrity_summary).
     Conv-clustered rows take `_run_partials`, any others one sort of
-    packed keys (`_sorted_partials`); either way a dense partial spills a
-    null ``turns``. Each partial carries ``ch``, the `_conv_hash` of its
-    conv, so the driver merge finds multi-task convs among integers."""
+    packed keys (`_sorted_partials`). A partial whose turns all lie in
+    [0, 64) spills them as the bits of ``mask``; any other spills its
+    list, or an empty one when dense. Each partial carries ``ch``, the
+    `_conv_hash` of its conv, and the partials leave in ``ch`` order, so
+    the driver merge cuts every part file into the same ``ch`` ranges."""
     import numpy as np
     import pyarrow as pa
 
@@ -754,16 +765,26 @@ def _integrity_fold(conv_col: str, idx_col: str):
         idx = t.column(idx_col).combine_chunks().cast(pa.int32())
         conv, n, mn, mx, ndl, vals = _run_partials(conv, idx) or _sorted_partials(conv, idx)
         conv = conv.cast(pa.string())
-        # a dense partial's list is null (and empty: parquet refuses more)
-        dense = ndl == mx.astype(np.int64) - mn + 1
-        off = np.append(0, np.cumsum(np.where(dense, 0, ndl)))
+        # each partial's turns OR'd as bits, kept where all lie in [0, 64)
+        small = (mn >= 0) & (mx < 64)
+        bits = np.uint64(1) << np.clip(vals, 0, 63).astype(np.uint64)
+        mask = np.bitwise_or.reduceat(bits, np.cumsum(ndl) - ndl).view(np.int64)
+        # the rest keep their list, empty when dense. Empty, not null: Spark's
+        # Arrow writer (the executor merge's input) is quadratic in a run of
+        # null lists
+        listed = ~small & (ndl != mx.astype(np.int64) - mn + 1)
+        off = np.append(0, np.cumsum(np.where(listed, ndl, 0)))
         turns = pa.ListArray.from_arrays(
-            pa.array(off, pa.int32()), pa.array(vals[np.repeat(~dense, ndl)]),
-            mask=pa.array(dense),
+            pa.array(off, pa.int32()),
+            pa.array(vals[np.repeat(listed, ndl)] if listed.any() else vals[:0]),
         )
+        ch = _conv_hash(conv)
+        o = np.argsort(ch)
         # ``ndl`` apart: the merge's single-task path never decodes the list column
         yield from pa.Table.from_arrays(
-            [conv, _conv_hash(conv), n, mn, mx, ndl, turns], schema=_partial_schema()
+            [conv.take(o), ch[o], n[o], mn[o], mx[o], ndl[o],
+             pa.array(mask[o], mask=~small[o]), turns.take(o)],
+            schema=_partial_schema(),
         ).to_batches()
 
     return fold
@@ -780,9 +801,10 @@ def transcript_integrity_summary(
 
     duplicate_keys and turn_ordering_violations each shuffle every raw
     (conv, turn) pair. Here each partition pre-aggregates to one row per
-    conversation run — count, min, max, unique-turn list — in a vectorized
-    arrow fold, and only the per-conv partials shuffle, by their conv
-    hash, into the merge the spill reduce runs (`_merge_on_executors`).
+    conversation run — count, min, max, unique turns as a bit mask or a
+    list — in a vectorized arrow fold, and only the per-conv partials
+    shuffle, by their conv hash, into the merge the spill reduce runs
+    (`_merge_on_executors`).
 
     NULL keys: the check is an EMBEDDED uniqueness constraint — it holds
     on the rows whose conv AND turn are both non-null; rows with a NULL
@@ -814,68 +836,104 @@ def _merge_task(batches):
         release_zip_finders()
 
 
-def _merge_on_executors(partials: DataFrame) -> dict:
+def _merge_on_executors(partials: DataFrame, info: dict | None = None) -> dict:
     """`_merge_partials_local` as Spark tasks: partials shuffled by ``ch``,
     so every partial of a conv (and of a colliding one) meets in one task,
-    the way `_merge_buckets` splits them on the driver. The arrays cross a
-    plain exchange, not an aggregate; the driver sums one row per task."""
+    the way `_merge_ranges` splits them on the driver. The arrays cross a
+    plain exchange, not an aggregate; the driver sums one row per task
+    (their number goes to ``info["ranges"]``)."""
     rows = partials.repartition("ch").mapInArrow(
         _merge_task, "dup_rows_excess long, ordering_violations long"
     ).collect()
+    if info is not None:
+        info["ranges"] = len(rows)
     return {k: sum(r[k] for r in rows) for k in ("dup_rows_excess", "ordering_violations")}
+
+
+def _popcount(x) -> "np.ndarray":
+    """Set bits of each 64-bit word (numpy 1.x has no bitwise_count)."""
+    import numpy as np
+
+    x = x.view(np.uint64)
+    x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
+    x = (x & np.uint64(0x3333333333333333)) + ((x >> np.uint64(2)) & np.uint64(0x3333333333333333))
+    x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
+    return ((x * np.uint64(0x0101010101010101)) >> np.uint64(56)).astype(np.int64)
 
 
 def _merge_partials_local(table) -> dict:
     """Vectorized merge of per-conv partials (numpy/arrow C paths, no
     Spark aggregate): the one judge of every partial. It runs once per
-    ``ch`` bucket of a spill on the driver (`_merge_buckets`), or once per
+    ``ch`` range of a spill on the driver (`_merge_ranges`), or once per
     ``ch`` shuffle partition in a Spark task (`_merge_on_executors`).
 
-    Two-tier: a conv whose partials all came from ONE map task needs no
-    grouping — its row's (n, mn, mx, ndl) ARE the final per-conv stats,
+    One stable sort of ``ch`` groups the partials (part files arrive in
+    ``ch`` order, so it merges sorted runs). A conv with ONE partial needs
+    no grouping: its row's (n, mn, mx, ndl) ARE the final per-conv stats,
     judged with row-wise numpy. That is ~99% of the rows under a
-    conv-clustered layout and ~1% on shuffled input. Only the rest pays
-    the exact turn-set union by the true conv strings
-    (`_judge_multi_subset`), found by a repeated ``ch``, so a hash
-    collision only routes extra rows there and never changes a result.
-    The string and list columns are gathered for that subset only."""
+    conv-clustered layout and few on shuffled input. A group of several
+    partials that all carry a ``mask`` and one conv string is judged from
+    its summed ``n`` and its ORed masks: their bit count is the distinct
+    turns, and they are dense from 0 iff they form a run of low bits. Only
+    the rest (a hash collision, or a partial with a null mask: a list, a
+    turn outside [0, 64)) pays the exact turn-set union by the true conv
+    strings (`_judge_multi_subset`), so a collision only routes rows there
+    and never changes a result. The string column is gathered for the
+    grouped rows only, the lists for the exact ones only."""
     import numpy as np
-    import pandas as pd
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     if table.num_rows == 0:
         return {"dup_rows_excess": 0, "ordering_violations": 0}
 
-    # Native widths throughout (mn/mx int32, n/ndl int64): to_numpy on
-    # null-free arrow arrays is zero-copy; numpy promotes in the ufuncs.
-    n = table.column("n").to_numpy(zero_copy_only=False)
-    mn_r = table.column("mn").to_numpy(zero_copy_only=False)
-    mx_r = table.column("mx").to_numpy(zero_copy_only=False)
-    ndl = table.column("ndl").to_numpy(zero_copy_only=False)
+    # Native widths throughout (mn/mx int32, n/ndl int64): numpy promotes
+    # in the ufuncs.
+    def col(name):
+        return table.column(name).to_numpy()
 
-    ch = table.column("ch").to_numpy(zero_copy_only=False)
-    # one C hash pass marks every row whose conv hash repeats
-    # (Series, not Index: Index.duplicated pays a second full
-    # is_unique hash pass; np.sort+searchsorted measured 0.76 s)
-    multi = pd.Series(ch).duplicated(keep=False).to_numpy()
+    n, mn_r, mx_r, ndl, ch = (col(c) for c in ("n", "mn", "mx", "ndl", "ch"))
 
     # Single-part convs: the row is the conv. Dense 0..n-1 ordering holds
     # iff mn == 0, mx == distinct-1, and no duplicate turn values.
-    # Computed as ALL-rows totals minus the multi subset's contribution
-    # (a tiny fancy-index gather) — boolean-mask gathers over 5M rows
-    # cost more than the arithmetic they feed.
+    # Computed as ALL-rows totals minus the grouped rows' contribution
+    # (a fancy-index gather) — boolean-mask gathers cost more than the
+    # arithmetic they feed.
     dup_all = n - ndl
     bad_all = (mn_r != 0) | (mx_r != ndl - 1) | (ndl != n)
     dup_excess = int(dup_all.sum())
     bad = int(bad_all.sum())
 
-    if multi.any():
-        rows = np.flatnonzero(multi)
-        dup_excess -= int(dup_all[rows].sum())
-        bad -= int(bad_all[rows].sum())
+    order = np.argsort(ch, kind="stable")
+    cont = ch[order[1:]] == ch[order[:-1]]  # sorted row i+1 joins row i's group
+    grouped = np.append(cont, False)
+    grouped[1:] |= cont
+    if not grouped.any():
+        return {"dup_rows_excess": dup_excess, "ordering_violations": bad}
+    rows = order[grouped]
+    dup_excess -= int(dup_all[rows].sum())
+    bad -= int(bad_all[rows].sum())
+    starts = np.flatnonzero(np.append(True, ~cont)[grouped])
+
+    conv, mask = table.column("conv").take(pa.array(rows)), table.column("mask")
+    # a group goes exact on a null mask or on a conv string that differs
+    # from the row before it in the group
+    differs = np.append(False, pc.not_equal(conv[1:], conv[:-1]).to_numpy())
+    differs[starts] = False
+    exact = np.logical_or.reduceat(differs | ~mask.is_valid().to_numpy()[rows], starts)
+    nt = np.add.reduceat(n[rows], starts)
+    bits = np.bitwise_or.reduceat(mask.fill_null(0).to_numpy()[rows], starts).view(np.uint64)
+    nd = _popcount(bits)
+    ok = ~exact
+    dup_excess += int((nt - nd)[ok].sum())
+    # dense from 0 iff the ORed mask is a run of low bits: M & (M + 1) == 0
+    bad += int((((bits & (bits + np.uint64(1))) != 0) | (nd != nt))[ok].sum())
+
+    if exact.any():
+        sizes = np.diff(np.append(starts, len(rows)))
         d2, b2 = _judge_multi_subset(
-            table.select(["conv", "n", "mn", "mx", "turns"]).take(
-                pa.array(rows)
+            table.select(["conv", "n", "mn", "mx", "mask", "turns"]).take(
+                pa.array(rows[np.repeat(exact, sizes)])
             )
         )
         dup_excess += d2
@@ -886,19 +944,21 @@ def _merge_partials_local(table) -> dict:
 
 def _judge_multi_subset(sub) -> tuple:
     """Exact per-conv judgment of partial rows whose conv may span map
-    tasks (arrow table with conv/n/mn/mx/turns): groups by the TRUE conv
-    string, unions the turn sets via one composite-key unique, and returns
-    this subset's (dup_rows_excess, ordering_violations) contribution. A
-    null turn list stands for the range mn..mx."""
+    tasks (arrow table with conv/n/mn/mx/mask/turns): groups by the TRUE
+    conv string, unions the turn sets via one composite-key unique, and
+    returns this subset's (dup_rows_excess, ordering_violations)
+    contribution. A row's turns are the bits of its mask, else its list,
+    else (an empty or null list) the range mn..mx."""
     import numpy as np
 
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    conv_sub = sub.column("conv")
-    if isinstance(conv_sub, pa.ChunkedArray):
-        conv_sub = conv_sub.combine_chunks()
-    codes = pc.dictionary_encode(conv_sub).indices.to_numpy(
+    def col(name):
+        c = sub.column(name)
+        return c.combine_chunks() if isinstance(c, pa.ChunkedArray) else c
+
+    codes = pc.dictionary_encode(col("conv")).indices.to_numpy(
         zero_copy_only=False
     )
     G = int(codes.max()) + 1
@@ -910,17 +970,20 @@ def _judge_multi_subset(sub) -> tuple:
     np.minimum.at(mn, codes, mn_r)
     mx = np.full(G, np.iinfo(np.int64).min)
     np.maximum.at(mx, codes, mx_r)
-    turns = sub.column("turns")
-    if isinstance(turns, pa.ChunkedArray):
-        turns = turns.combine_chunks()
-    listed = turns.is_valid().to_numpy(zero_copy_only=False)
-    lens = np.where(
-        listed, pc.list_value_length(turns).fill_null(0).to_numpy(), mx_r - mn_r + 1
-    )
-    # every row as its range, then the listed rows' own turns over theirs
+    mask, turns = col("mask"), col("turns")
+    masked = mask.is_valid().to_numpy(zero_copy_only=False)
+    bits = (mask.fill_null(0).to_numpy()[:, None].view(np.uint64)
+            >> np.arange(64, dtype=np.uint64)) & np.uint64(1) != 0
+    listed_lens = pc.list_value_length(turns).fill_null(0).to_numpy()
+    listed = (listed_lens > 0) & ~masked
+    lens = np.where(masked, bits.sum(1), np.where(listed, listed_lens, mx_r - mn_r + 1))
+    # every row as its range, then the masked and listed rows' own turns
     starts = np.cumsum(lens) - lens
     flat = np.repeat(mn_r - starts, lens) + np.arange(int(lens.sum()))
-    flat[np.repeat(listed, lens)] = turns.flatten().to_numpy(zero_copy_only=False)
+    flat[np.repeat(masked, lens)] = np.nonzero(bits)[1]
+    flat[np.repeat(listed, lens)] = turns.filter(pa.array(listed)).flatten().to_numpy(
+        zero_copy_only=False
+    )
     rep = np.repeat(codes.astype(np.int64, copy=False), lens)
     # exact distinct per conv via one composite-key unique. The +2^31
     # bias maps any int32 turn value into [0, 2^32), so the >>32 code
@@ -938,60 +1001,77 @@ def _judge_multi_subset(sub) -> tuple:
     return dup_excess, bad
 
 
-# Spills up to this many bytes are merged on the driver (`_merge_buckets`),
+# Spills up to this many bytes are merged on the driver (`_merge_ranges`),
 # larger ones by the same merge in Spark tasks (`_merge_on_executors`). The
 # spill is plain (no compression, dictionary or statistics): file size ≈
 # bytes loaded.
 _DRIVER_MERGE_MAX_BYTES = 256 << 20
 
-# The driver merge splits a spill into ``ch`` buckets of _MERGE_BUCKET_ROWS
-# or more partials, judged on up to _MERGE_THREADS threads; a smaller spill
-# stays one bucket on the calling thread (sweep: CHANGES.md).
-_MERGE_THREADS, _MERGE_BUCKET_ROWS = 4, 48 << 10
+# The driver reads the part files and merges their ``ch`` ranges on this
+# many threads.
+_MERGE_THREADS = 4
 
 
-def _merge_buckets(table) -> dict:
-    """`_merge_partials_local` per bucket of ``ch`` high bits, the buckets
-    spread over a thread pool. Equal convs share a ``ch``, so the buckets
-    are independent and a collision stays inside one."""
-    from concurrent.futures import ThreadPoolExecutor
-
+def _merge_ranges(tables, pool) -> tuple:
+    """`_merge_partials_local` per ``ch`` range of a spill's part files,
+    the ranges judged on ``pool``. The cuts are ``ch`` values at the
+    quantiles of the largest file, and every file is sliced at them, so a
+    run of equal ``ch`` (one conv's partials, or colliding convs') never
+    straddles a cut and the ranges are independent. A file out of ``ch``
+    order (the engine writes none) is sorted first. Returns (result
+    dict, number of ranges)."""
     import numpy as np
+    import pyarrow as pa
 
-    k = table.num_rows // _MERGE_BUCKET_ROWS
-    if k <= 1:
-        return _merge_partials_local(table)
-    ch = table.column("ch").to_numpy().view(np.uint64)
-    bucket = ((ch >> np.uint64(32)) % np.uint64(k)).astype(np.intp)
-    rows = np.split(np.argsort(bucket), np.cumsum(np.bincount(bucket, minlength=k))[:-1])
-    with ThreadPoolExecutor(min(k, _MERGE_THREADS)) as pool:
-        out = list(pool.map(lambda r: _merge_partials_local(table.take(r)), rows))
-    return {key: sum(o[key] for o in out) for key in out[0]}
+    tables, chs = list(tables), []
+    for k, t in enumerate(tables):
+        ch = t.column("ch").to_numpy()
+        if (ch[1:] < ch[:-1]).any():
+            order = np.argsort(ch, kind="stable")
+            tables[k], ch = t.take(pa.array(order)), ch[order]
+        chs.append(ch)
+    big = max(chs, key=len)
+    cuts = np.unique(big[np.arange(1, _MERGE_THREADS) * len(big) // _MERGE_THREADS]
+                     if len(big) else big)
+    bounds = [np.concatenate([[0], np.searchsorted(ch, cuts), [len(ch)]]) for ch in chs]
+
+    def judge(r):
+        return _merge_partials_local(pa.concat_tables(
+            [t.slice(b[r], b[r + 1] - b[r]) for t, b in zip(tables, bounds)]
+        ))
+
+    out = list(pool.map(judge, range(len(cuts) + 1)))
+    return {key: sum(o[key] for o in out) for key in out[0]}, len(out)
 
 
-def reduce_spilled_partials(spark, out_dir: str, keyed_rows: dict | None = None) -> dict:
+def reduce_spilled_partials(spark, out_dir: str, keyed_rows: dict | None = None,
+                            info: dict | None = None) -> dict:
     """Merge a directory of spilled per-conv integrity partials (the
     ``part-*.parquet`` files `pipeline._fused_task` writes) into the final
     {dup_rows_excess, ordering_violations} dict.
 
     Where `_merge_partials_local` runs is picked from the measured spill
     size, the way AQE re-plans from shuffle statistics: up to
-    ``_DRIVER_MERGE_MAX_BYTES`` on the driver in ``ch`` buckets
-    (`_merge_buckets`, no shuffle), above it in Spark tasks after a
-    shuffle by ``ch`` (`_merge_on_executors`). Only the final ``part-*``
-    names are read: a torn ``.part-*.inprogress-<pid>`` file from a
-    killed writer never reaches either reader.
+    ``_DRIVER_MERGE_MAX_BYTES`` on the driver, the part files read and
+    their ``ch`` ranges merged on a thread pool (`_merge_ranges`, no
+    shuffle), above it in Spark tasks after a shuffle by ``ch``
+    (`_merge_on_executors`). Only the final ``part-*`` names are read: a
+    torn ``.part-*.inprogress-<pid>`` file from a killed writer never
+    reaches either reader.
 
     ``keyed_rows`` maps each task id to the rows with a non-null conv and
     turn it read; the spill must then hold one ``part-<i>`` per task with
     that Σ ``n``. A part file lost, stale, truncated or swapped for
-    another would otherwise change the counts silently."""
+    another would otherwise change the counts silently. ``info`` receives
+    the reduce's ``path`` ("driver" or "executors"), ``spill_bytes``,
+    ``partials`` and ``ranges`` (merge tasks on the executors)."""
     import glob
     import os
+    from concurrent.futures import ThreadPoolExecutor
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
+    info = {} if info is None else info
     spilled = sorted(glob.glob(os.path.join(out_dir, "part-*.parquet")))
     if keyed_rows is not None:
         ids = {f"part-{i:05d}.parquet": i for i in keyed_rows}
@@ -1002,22 +1082,30 @@ def reduce_spilled_partials(spark, out_dir: str, keyed_rows: dict | None = None)
                 f"missing {sorted(want - got)[:5]}, unexpected {sorted(got - want)[:5]}"
                 "; use a fresh spill/checkpoint directory"
             )
+    spill_bytes = sum(os.path.getsize(p) for p in spilled)
+    local = spill_bytes <= _DRIVER_MERGE_MAX_BYTES
+    info.update(path="driver" if local else "executors", spill_bytes=spill_bytes,
+                partials=0, ranges=0)
     if not spilled:
         return {"dup_rows_excess": 0, "ordering_violations": 0}
-    local = sum(os.path.getsize(p) for p in spilled) <= _DRIVER_MERGE_MAX_BYTES
-    if local or keyed_rows is not None:  # the executor path reads only n
-        tables = [pq.read_table(p, columns=None if local else ["n"]) for p in spilled]
-    for p, t in zip(spilled, tables) if keyed_rows is not None else ():
-        got = int(t.column("n").to_numpy().sum())
-        want = keyed_rows[ids[os.path.basename(p)]]
-        if got != want:
-            raise ValueError(
-                f"integrity spill {p!r} holds {got} keyed rows, but its "
-                f"task read {want}; use a fresh spill/checkpoint directory"
-            )
-    if local:
-        return _merge_buckets(pa.concat_tables(tables))
-    return _merge_on_executors(spark.read.parquet(*spilled))
+    with ThreadPoolExecutor(_MERGE_THREADS) as pool:
+        # the executor path reads only n, for the checks and the count
+        tables = list(pool.map(
+            lambda p: pq.read_table(p, columns=None if local else ["n"]), spilled
+        ))
+        info["partials"] = sum(t.num_rows for t in tables)
+        for p, t in zip(spilled, tables) if keyed_rows is not None else ():
+            got = int(t.column("n").to_numpy().sum())
+            want = keyed_rows[ids[os.path.basename(p)]]
+            if got != want:
+                raise ValueError(
+                    f"integrity spill {p!r} holds {got} keyed rows, but its "
+                    f"task read {want}; use a fresh spill/checkpoint directory"
+                )
+        if local:
+            out, info["ranges"] = _merge_ranges(tables, pool)
+            return out
+    return _merge_on_executors(spark.read.parquet(*spilled), info)
 
 
 def ts_regressions(

@@ -1235,6 +1235,80 @@ def test_rev17_markers_are_rerun(spark, tx_paths, tmp_path):
     assert set(manifest["stage_secs"]) == set(res.stage_secs) == {"scan", "integrity_merge"}
 
 
+def test_rev18_markers_are_rerun(spark, tx_paths, tmp_path):
+    """A checkpoint written by the rev-18 fold (part files without
+    ``mask``, every partial's turns a list or, dense, a null list for the
+    range mn..mx, rows in fold order; markers without ``spill_layout``) is
+    rerun task by task, and the resume equals a fresh run with every part
+    file in the current layout again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = _multi_rg_copy(tx_paths, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    want = infer_and_integrity_parquet(spark, path, rg_per_task=1, checkpoint_dir=ckpt)
+    rev18 = pa.schema([f for f in V._partial_schema() if f.name != "mask"])
+    parts = [os.path.join(ckpt, "integrity", f"part-{i:05d}.parquet") for i in range(7)]
+    for i, part in enumerate(parts):
+        marker = os.path.join(ckpt, "states", f"state_{i:06d}.json")
+        with open(marker) as f:
+            rec = json.load(f)
+        del rec["spill_layout"]
+        with open(marker, "w") as f:
+            json.dump(rec, f)
+        rows = pq.read_table(part).to_pylist()
+        for r in rows:
+            m = r.pop("mask")
+            turns = r["turns"] if m is None else [b for b in range(64) if m >> b & 1]
+            r["turns"] = turns if turns and len(turns) != r["mx"] - r["mn"] + 1 else None
+        pq.write_table(pa.Table.from_pylist(rows[::-1], schema=rev18), part)
+    res, integ = infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, checkpoint_dir=ckpt
+    )
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        manifest = json.load(f)
+    assert {r["pid"]: r["resumed"] for r in manifest["per_task"]} == {
+        i: False for i in range(7)
+    }
+    assert {r["spill_layout"] for r in manifest["per_task"]} == {V.SPILL_LAYOUT}
+    assert (res.schema_json, res.total_rows, integ) == (
+        want[0].schema_json, want[0].total_rows, want[1]
+    )
+    for part in parts:
+        t = pq.read_table(part)
+        assert t.schema == V._partial_schema()
+        ch = t.column("ch").to_pylist()
+        assert ch == sorted(ch)
+
+
+def test_manifest_records_the_integrity_reduce(spark, tx_paths, tmp_path, monkeypatch):
+    """The manifest's ``integrity_reduce`` names where the spill was merged,
+    its bytes, its partials and the ranges (driver) or merge tasks
+    (executors) it was judged in; both paths give one result."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    path = _multi_rg_copy(tx_paths, tmp_path)
+    got = {}
+    for cap, where in ((V._DRIVER_MERGE_MAX_BYTES, "driver"), (0, "executors")):
+        monkeypatch.setattr(V, "_DRIVER_MERGE_MAX_BYTES", cap)
+        ckpt = str(tmp_path / where)
+        got[where] = infer_and_integrity_parquet(
+            spark, path, rg_per_task=1, checkpoint_dir=ckpt
+        )[1]
+        with open(os.path.join(ckpt, "manifest.json")) as f:
+            red = json.load(f)["integrity_reduce"]
+        parts = glob.glob(os.path.join(ckpt, "integrity", "part-*.parquet"))
+        assert len(parts) == 7
+        assert red["path"] == where
+        assert red["spill_bytes"] == sum(os.path.getsize(p) for p in parts)
+        assert red["partials"] == sum(pq.read_metadata(p).num_rows for p in parts) > 0
+        assert 1 <= red["ranges"] <= (V._MERGE_THREADS if where == "driver" else 8)
+    assert got["driver"] == got["executors"]
+    assert got["driver"]["ordering_violations"] > 0
+
+
 def test_infer_scan_stops_decoding_text(spark, tmp_path):
     """The infer-side scan (no contract) gives each credited string column
     its own reader: ``text`` stops after its first batch in every task,

@@ -149,6 +149,7 @@ def test_merge_partials_local_negative_turns():
             "mn": pa.array([-2, 0, 0], type=pa.int32()),
             "mx": pa.array([0, 1, 1], type=pa.int32()),
             "ndl": pa.array([3, 2, 2], type=pa.int64()),
+            "mask": pa.nulls(3, pa.int64()),
             "turns": pa.array(
                 [[-2, -1, 0], [0, 1], [0, 1]], type=pa.list_(pa.int32())
             ),
@@ -192,6 +193,7 @@ def test_merge_partials_local_two_tier_vs_bruteforce():
             "mn": pa.array(rows["mn"], type=pa.int32()),
             "mx": pa.array(rows["mx"], type=pa.int32()),
             "ndl": pa.array(rows["ndl"], type=pa.int64()),
+            "mask": pa.nulls(len(rows["conv"]), pa.int64()),
             "turns": pa.array(rows["turns"], type=pa.list_(pa.int32())),
         }
     )
@@ -291,6 +293,7 @@ def test_merge_partials_local_hash_path_and_collisions():
         "mn": pa.array([0, 0, 0, 3], type=pa.int32()),
         "mx": pa.array([2, 2, 2, 5], type=pa.int32()),
         "ndl": pa.array([3, 3, 3, 3], type=pa.int64()),
+        "mask": pa.nulls(4, pa.int64()),
         "turns": pa.array(
             [[0, 1, 2], [0, 1, 2], [0, 1, 2], [3, 4, 5]],
             type=pa.list_(pa.int32()),
@@ -320,6 +323,7 @@ def _spill_tables():
                 "mn": pa.array(mns, type=pa.int32()),
                 "mx": pa.array(mxs, type=pa.int32()),
                 "ndl": pa.array([len(t) for t in turns], type=pa.int64()),
+                "mask": pa.nulls(len(convs), pa.int64()),
                 "turns": pa.array(turns, type=pa.list_(pa.int32())),
             }
         )
@@ -455,7 +459,8 @@ from hypothesis import given, settings, strategies as hst  # noqa: E402
 
 def _groupby_partials(rows):
     """The hash-only fold as engine revs 15-17 wrote it: one group_by per task,
-    every partial with its full distinct turn list (no null ``turns``)."""
+    every partial with its full distinct turn list (no null ``turns``, no
+    ``mask``)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -470,7 +475,7 @@ def _groupby_partials(rows):
     return pa.Table.from_arrays(
         [g["conv"], _conv_hash(g["conv"].to_pylist()), g["turn_count"],
          g["turn_min"], g["turn_max"],
-         pc.list_value_length(turns).cast(pa.int64()), turns],
+         pc.list_value_length(turns).cast(pa.int64()), pa.nulls(len(g), pa.int64()), turns],
         schema=V._partial_schema(),
     )
 
@@ -497,7 +502,7 @@ def _task_rows(draw):
     runs = []
     for _ in range(draw(hst.integers(0, 12))):
         conv = draw(hst.sampled_from(["a", "b", "c", "d", "hot"]))
-        start = draw(hst.sampled_from([0, 0, 0, 1, -3, -(2**31), 2**31 - 50]))
+        start = draw(hst.sampled_from([0, 0, 0, 1, -3, 60, -(2**31), 2**31 - 50]))
         length = draw(hst.integers(1, 40 if conv == "hot" else 6))
         turns = list(range(start, start + length))
         kind = draw(hst.sampled_from(["clean", "clean", "gap", "dup"]))
@@ -525,13 +530,18 @@ def _brute_force(tasks) -> dict:
     return _judge_partials([(c, 1, [t]) for c, t in keyed])
 
 
+def _turn_set(r) -> list:
+    """A partial's distinct turns: its mask bits, else its list, else (an
+    empty or null list) mn..mx."""
+    if r["mask"] is not None:
+        return [b for b in range(64) if r["mask"] >> b & 1]
+    return sorted(set(r["turns"] or range(r["mn"], r["mx"] + 1)))
+
+
 def _partial_rows(t):
-    """A part table's partials as comparable tuples: a null turn list
-    expanded to mn..mx, every list as a set."""
+    """A part table's partials as comparable tuples, each with its turn set."""
     return sorted(
-        (r["conv"], r["ch"], r["n"], r["mn"], r["mx"], r["ndl"],
-         tuple(sorted(set(r["turns"] if r["turns"] is not None
-                          else range(r["mn"], r["mx"] + 1)))))
+        (r["conv"], r["ch"], r["n"], r["mn"], r["mx"], r["ndl"], tuple(_turn_set(r)))
         for r in t.to_pylist()
     )
 
@@ -557,11 +567,18 @@ def test_run_fold_equals_groupby_fold_and_bruteforce(tasks, data):
         keyed = sum(c is not None and t is not None for c, t in task)
         assert sum(part.column("n").to_pylist()) == keyed
         assert _partial_rows(s) == _partial_rows(o)
-        # a dense partial spills a null list, any other its distinct turns
-        for r in s.to_pylist():
-            dense = r["ndl"] == r["mx"] - r["mn"] + 1
-            assert (r["turns"] is None) == dense
-            assert dense or r["turns"] == sorted(set(r["turns"]))
+        # turns in [0, 64) spill as a mask; any other partial spills an
+        # empty list when dense, else its distinct turns
+        for p in (part, s):
+            assert p.column("turns").null_count == 0
+            for r in p.to_pylist():
+                small = 0 <= r["mn"] and r["mx"] < 64
+                dense = r["ndl"] == r["mx"] - r["mn"] + 1
+                assert (r["mask"] is not None) == small
+                assert (not r["turns"]) == (small or dense)
+                assert r["turns"] == sorted(set(r["turns"]))
+            ch = p.column("ch").to_pylist()
+            assert ch == sorted(ch)
     if not tasks:
         return
     for parts in (new, srt, old):
@@ -649,13 +666,62 @@ def test_conv_hash_of_a_1mb_conv_id_is_linear():
     assert int(got.view("uint64")[7]) == _fnv1a64(b"conv-6")
 
 
-@hst.composite
-def _spill_partials(draw):
-    """Partial rows (conv, ch, n, turns) of convs split over tasks, with
-    ``ch`` the real hash or forced to collide across convs."""
+def _mask_of(turns) -> int:
+    """The int64 ``mask`` of a set of turns in [0, 64)."""
+    m = sum(1 << t for t in set(turns))
+    return m - (1 << 64) if m >> 63 else m
+
+
+def _partials_table(rows, ch, masked=True):
+    """Hand-built partials from ``(conv, n, turns)`` rows and their ``ch``:
+    a row whose turns lie in [0, 64) carries them as its mask when
+    ``masked``, any other as its list."""
     import pyarrow as pa
 
-    collide = draw(hst.booleans())
+    return pa.Table.from_pylist(
+        [{"conv": conv, "ch": int(h), "n": n, "mn": min(t), "mx": max(t),
+          "ndl": len(set(t)),
+          "mask": _mask_of(t) if masked and 0 <= min(t) and max(t) < 64 else None,
+          "turns": None if masked and 0 <= min(t) and max(t) < 64 else sorted(set(t))}
+         for (conv, n, t), h in zip(rows, ch)],
+        schema=V._partial_schema(),
+    )
+
+
+def _as_null_mask(t, pick):
+    """``t`` with the partials ``pick`` marks rewritten the way a hand-built
+    partial may carry its turns: a null mask and its list (null when
+    dense)."""
+    import pyarrow as pa
+
+    rows = t.to_pylist()
+    for r, p in zip(rows, pick):
+        if p and r["mask"] is not None:
+            turns = _turn_set(r)
+            r["mask"] = None
+            r["turns"] = None if len(turns) == r["mx"] - r["mn"] + 1 else turns
+    return pa.Table.from_pylist(rows, schema=V._partial_schema())
+
+
+def _merge_in_ranges(tables, k, ranges=None) -> dict:
+    """``_merge_ranges`` with ``_MERGE_THREADS`` = k."""
+    from concurrent.futures import ThreadPoolExecutor
+    from unittest import mock
+
+    with ThreadPoolExecutor(k) as pool, mock.patch.object(V, "_MERGE_THREADS", k):
+        got, used = V._merge_ranges(tables, pool)
+    assert 1 <= used <= k and used == (ranges or used)
+    return got
+
+
+@hst.composite
+def _spill_partials(draw):
+    """Part tables of hand-built partials of convs split over tasks, with
+    ``ch`` the real hash or forced to collide across convs, masks set or
+    all null, each table in ``ch`` order or not. Returns (rows, tables)."""
+    import numpy as np
+    import pyarrow as pa
+
     rows = []
     for c in range(draw(hst.integers(0, 30))):
         conv = f"conv{c}"
@@ -664,61 +730,187 @@ def _spill_partials(draw):
             rows.append((conv, len(turns) + draw(hst.sampled_from([0, 0, 1])), turns))
     rows = draw(hst.permutations(rows))
     ch = V._conv_hash(pa.array([r[0] for r in rows], pa.string()))
-    if collide:
+    if draw(hst.booleans()):
         ch = ch % 3
-    return rows, ch
+    masked, k = draw(hst.booleans()), draw(hst.integers(1, 4))
+    tables = [_partials_table(rows[i::k], ch[i::k], masked) for i in range(k)]
+    if draw(hst.booleans()):
+        tables = [t.take(np.argsort(t.column("ch").to_numpy(), kind="stable")) for t in tables]
+    return rows, tables
 
 
 @given(_spill_partials())
 @settings(max_examples=150, deadline=None)
-def test_bucketed_merge_equals_one_bucket(drawn):
-    """``_merge_buckets`` with one bucket and with four (a bucket per
-    ``_MERGE_BUCKET_ROWS`` = 1 row) agree with a brute force, forced
-    ``ch`` collisions included."""
-    from unittest import mock
-
-    import pyarrow as pa
-
-    rows, ch = drawn
-    table = pa.table(
-        {"conv": pa.array([r[0] for r in rows], pa.string()),
-         "ch": pa.array(ch, pa.int64()),
-         "n": pa.array([r[1] for r in rows], pa.int64()),
-         "mn": pa.array([r[2][0] for r in rows], pa.int32()),
-         "mx": pa.array([r[2][-1] for r in rows], pa.int32()),
-         "ndl": pa.array([len(r[2]) for r in rows], pa.int64()),
-         "turns": pa.array([r[2] for r in rows], pa.list_(pa.int32()))},
-        schema=V._partial_schema(),
-    )
+def test_one_range_equals_four_ranges(drawn):
+    """``_merge_ranges`` over one ``ch`` range and over up to four agree
+    with a brute force: forced ``ch`` collisions, masks and lists, and
+    part files out of ``ch`` order included."""
+    rows, tables = drawn
     want = _judge_partials(rows)
     for k in (1, 4):
-        with mock.patch.multiple(V, _MERGE_THREADS=k, _MERGE_BUCKET_ROWS=1):
-            assert V._merge_buckets(table) == want, k
+        assert _merge_in_ranges(tables, k) == want, k
+
+
+def test_range_cut_never_splits_a_ch_run():
+    """The cuts of four ranges fall on the runs of ``ch`` 5 and 9 of the
+    largest part file. Each run spans three files and holds a violating
+    conv next to colliding ones: judged in one range, four ranges equal
+    one and the brute force."""
+    files = [
+        [("a0", 0, 1, [0]), ("a1", 0, 2, [0, 1]), ("a2", 0, 1, [0]), ("a3", 0, 1, [1]),
+         ("x", 5, 2, [0, 1]), ("x", 5, 1, [5]), ("y", 5, 1, [0]), ("v", 5, 1, [0]),
+         ("v", 5, 1, [1]), ("u", 5, 3, [0, 1, 2]),
+         ("z", 9, 2, [0, 1]), ("z", 9, 1, [2]), ("w", 9, 1, [0]), ("w", 9, 1, [2]),
+         ("t", 9, 1, [0]), ("t", 9, 1, [1])],
+        [("x", 5, 2, [1, 2]), ("z", 9, 1, [3]), ("q", 12, 1, [0])],
+        [("x", 5, 2, [3, 4]), ("y", 5, 2, [1, 2]), ("w", 9, 2, [1, 70])],
+    ]
+    tables = [_partials_table([(c, n, t) for c, _, n, t in f], [r[1] for r in f])
+              for f in files]
+    rows = [(conv, n, t) for f in files for conv, _, n, t in f]
+    want = _judge_partials(rows)
+    # x: 7 rows over turns 0..5; a3 starts at 1; w: 4 rows over 0, 1, 2, 70
+    assert want == {"dup_rows_excess": 1, "ordering_violations": 3}
+    assert _merge_in_ranges(tables, 4, ranges=3) == _merge_in_ranges(tables, 1) == want
+
+
+def test_mask_path_checks_conv_strings():
+    """Two convs forced to one ``ch``, each in two masked partials, are
+    told apart by their strings: OR-ing their masks would hide the
+    duplicate turn of "a" and the gap of "b"."""
+    import pyarrow as pa
+
+    rows = [("a", 2, [0, 1]), ("b", 1, [0]), ("a", 1, [1]), ("b", 1, [2])]
+    table = _partials_table(rows, [7] * 4)
+    assert table.column("mask").null_count == 0
+    want = _judge_partials(rows)
+    assert want == {"dup_rows_excess": 1, "ordering_violations": 2}
+    assert V._merge_partials_local(table) == want
+    assert V._merge_partials_local(pa.concat_tables([table, table.slice(0, 0)])) == want
+
+
+def test_merge_reads_null_masks_as_list_or_range():
+    """Hand-built partials with a null mask: a conv's turns are the union
+    of one partial's mask, another's list and a third's range mn..mx."""
+    import pyarrow as pa
+
+    t = pa.Table.from_pylist(
+        [{"conv": "c", "ch": 1, "n": 2, "mn": 0, "mx": 1, "ndl": 2, "mask": 0b11, "turns": None},
+         {"conv": "c", "ch": 1, "n": 2, "mn": 2, "mx": 4, "ndl": 2, "mask": None, "turns": [2, 4]},
+         {"conv": "c", "ch": 1, "n": 2, "mn": 5, "mx": 6, "ndl": 2, "mask": None, "turns": None},
+         {"conv": "d", "ch": 2, "n": 1, "mn": 3, "mx": 3, "ndl": 1, "mask": None, "turns": None},
+         {"conv": "d", "ch": 2, "n": 3, "mn": 0, "mx": 2, "ndl": 3, "mask": None, "turns": None}],
+        schema=V._partial_schema(),
+    )
+    # c: turns 0, 1, 2, 4, 5, 6 over 6 rows -> a gap; d: 0..3, clean
+    assert V._merge_partials_local(t) == {"dup_rows_excess": 0, "ordering_violations": 1}
+    assert _merge_in_ranges([t.slice(0, 2), t.slice(2)], 4) == {
+        "dup_rows_excess": 0, "ordering_violations": 1,
+    }
+
+
+@hst.composite
+def _mask_spills(draw):
+    """Tasks of (conv, turn) rows around the mask's width (turns at -2..5
+    and 61..65, duplicates inside one task, a conv with turns both in and
+    out of [0, 64) in one task, in any row order), folded into part
+    tables; then ``ch`` optionally forced to collide across tasks (few
+    values, so the range cuts fall on collisions), and some partials
+    rewritten with a null mask. Returns (tasks, part tables)."""
+    import numpy as np
+    import pyarrow as pa
+
+    turn = hst.sampled_from([-2, -1, 0, 1, 2, 3, 4, 5, 61, 62, 63, 64, 65])
+    tasks = []
+    for _ in range(draw(hst.integers(1, 4))):
+        rows = []
+        for _ in range(draw(hst.integers(1, 8))):
+            conv = draw(hst.sampled_from(["a", "b", "c", "d", "e"]))
+            rows += [(conv, t) for t in draw(hst.lists(turn, min_size=1, max_size=6))]
+        tasks.append(draw(hst.permutations(rows)) if draw(hst.booleans()) else rows)
+    parts = [_fold_partials(t) for t in tasks]
+    modulus = draw(hst.sampled_from([None, 1, 2, 3]))
+    if modulus:
+        parts = [p.set_column(1, "ch", pa.array(p.column("ch").to_numpy() % modulus))
+                 for p in parts]
+        if draw(hst.booleans()):
+            parts = [p.take(np.argsort(p.column("ch").to_numpy(), kind="stable"))
+                     for p in parts]
+    parts = [_as_null_mask(p, draw(hst.lists(hst.booleans(), min_size=p.num_rows,
+                                             max_size=p.num_rows)))
+             for p in parts]
+    return tasks, parts
+
+
+@given(_mask_spills())
+@settings(max_examples=300, deadline=None)
+def test_mask_merge_equals_bruteforce(drawn):
+    """Fold + merge against a brute force over the rows, around the mask's
+    width: the merge of one table, and of the part tables in one range
+    and in up to four."""
+    import pyarrow as pa
+
+    tasks, parts = drawn
+    want = _brute_force(tasks)
+    assert V._merge_partials_local(pa.concat_tables(parts)) == want
+    for k in (1, 4):
+        assert _merge_in_ranges(parts, k) == want, k
+
+
+@given(_mask_spills())
+@settings(max_examples=12, deadline=None)
+def test_mask_merge_equals_bruteforce_in_spark_tasks(spark, drawn):
+    """The inputs of ``test_mask_merge_equals_bruteforce`` as part files,
+    reduced on the driver and, with the size cap at 0, in Spark tasks
+    (`_merge_on_executors`)."""
+    import tempfile
+    from unittest import mock
+
+    import pyarrow.parquet as pq
+
+    tasks, parts = drawn
+    want = _brute_force(tasks)
+    with tempfile.TemporaryDirectory() as d:
+        for i, p in enumerate(parts):
+            pq.write_table(p, f"{d}/part-{i:05d}.parquet")
+        assert V.reduce_spilled_partials(spark, d) == want
+        with mock.patch.object(V, "_DRIVER_MERGE_MAX_BYTES", 0):
+            assert V.reduce_spilled_partials(spark, d) == want
 
 
 def test_run_fold_takes_the_run_path_on_clustered_rows():
     rows = [("a", 0), ("a", 1), ("a", 2), ("b", 0), ("b", 2), ("a", 3)]
     got = _fold_partials(rows).to_pylist()
-    # three runs, in row order: a dense "a" (null list), a gapped "b", and
-    # "a" again; the merge unions the two "a" partials by their shared ch
-    assert [(r["conv"], r["n"], r["mn"], r["mx"], r["ndl"], r["turns"]) for r in got] == [
-        ("a", 3, 0, 2, 3, None), ("b", 2, 0, 2, 2, [0, 2]), ("a", 1, 3, 3, 1, None),
+    # three runs: a dense "a", a gapped "b" and "a" again, each with its
+    # turns as mask bits and an empty list. They leave in ch order, so the
+    # two "a" partials, which the merge unions, are adjacent
+    assert sorted((r["conv"], r["n"], r["mn"], r["mx"], r["ndl"], r["mask"], r["turns"])
+                  for r in got) == [
+        ("a", 1, 3, 3, 1, 0b1000, []), ("a", 3, 0, 2, 3, 0b111, []),
+        ("b", 2, 0, 2, 2, 0b101, []),
     ]
-    assert got[0]["ch"] == got[2]["ch"]
+    assert [r["ch"] for r in got] == sorted(r["ch"] for r in got)
+    assert [r["conv"] for r in got] in (["a", "a", "b"], ["b", "a", "a"])
 
 
 def test_spark_reduces_expand_null_turns(spark, tmp_path, monkeypatch):
-    """The merge in Spark tasks reads a null ``turns`` as mn..mx."""
+    """The merge in Spark tasks reads a mask as its bits and, with a null
+    mask, an empty or null ``turns`` as mn..mx."""
     import pyarrow.parquet as pq
 
     tasks = [[("a", 0), ("a", 1), ("b", 0), ("b", 1)], [("a", 1), ("a", 2), ("c", 1)],
-             [("c", 0), ("b", 3), ("b", 2)]]
+             [("c", 0), ("b", 3), ("b", 2)], [("d", 70), ("d", 71), ("d", 72)],
+             [("a", 3), ("e", 0), ("e", 1)]]
     want = _brute_force(tasks)
     for i, t in enumerate(tasks):
-        part = _fold_partials(t) if i != 2 else _groupby_partials(t)
+        part = _groupby_partials(t) if i == 2 else _fold_partials(t)
+        if i == 4:
+            part = _as_null_mask(part, [True] * part.num_rows)
         pq.write_table(part, str(tmp_path / f"part-{i:05d}.parquet"))
-    assert pq.read_table(str(tmp_path)).column("turns").null_count > 0
+    spill = pq.read_table(str(tmp_path))
+    assert spill.column("turns").null_count > 0 and spill.column("mask").null_count > 0
+    assert spill.column("mask").null_count < spill.num_rows
     partials = spark.read.parquet(str(tmp_path))
     assert V._merge_on_executors(partials) == want
     monkeypatch.setattr(V, "_DRIVER_MERGE_MAX_BYTES", 0)
-    assert V.reduce_spilled_partials(spark, str(tmp_path), {0: 4, 1: 3, 2: 3}) == want
+    assert V.reduce_spilled_partials(spark, str(tmp_path), {0: 4, 1: 3, 2: 3, 3: 3, 4: 3}) == want

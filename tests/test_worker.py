@@ -78,12 +78,15 @@ def _spec_for(path: str, out_dir) -> list:
 
 def _partials(path) -> list:
     """A spilled part file's rows in a canonical order: arrow's threaded
-    group_by emits groups and distinct turns in no fixed order. A null
-    ``turns`` is the range mn..mx."""
+    group_by emits groups and distinct turns in no fixed order. A
+    partial's turns are its mask bits, else its list, else (an empty
+    list) mn..mx."""
     rows = pq.read_table(path).to_pylist()
     for r in rows:
-        t = r["turns"]
-        r["turns"] = list(range(r["mn"], r["mx"] + 1)) if t is None else sorted(t)
+        m, t = r.pop("mask"), r["turns"]
+        if m is not None:
+            t = [b for b in range(64) if m >> b & 1]
+        r["turns"] = sorted(t) if t else list(range(r["mn"], r["mx"] + 1))
     return sorted(rows, key=lambda r: r["conv"])
 
 
