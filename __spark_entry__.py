@@ -528,9 +528,9 @@ FROM lineitem GROUP BY l_returnflag
 
 
 def q_events_value_hist(spark, sf_dir):
-    """Fixed-width histogram of events.value — the same bucketing the
-    KS-drift scale path (drift._hist_ks_d) uses, exposed as a query with
-    an explicit floor-based bucket so both engines bin identically."""
+    """Fixed-width histogram of events.value over a pinned layout: 20
+    buckets of width 50 on [0, 1000), with -1 below and 20 at or above it,
+    floor-based so both engines bin identically."""
     df = _load(spark, sf_dir, "events")
     v = F.col("value")
     lo, hi, nb = 0.0, 1000.0, 20
@@ -686,35 +686,25 @@ JOIN region ON n_regionkey = r_regionkey GROUP BY n_name, r_name
 """
 
 
-# --- drift checks (operators/drift.py semantics, declarative twin) -------------
+# --- drift checks (operators/drift.py over the user_id%2 halves) -------------
+
+
+def _user_halves(spark, sf_dir):
+    """events split into the two deterministic halves every drift query
+    compares: user_id%2 == 0 against == 1 (NULL user_id in neither)."""
+    df = _load(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
+    half = F.pmod(F.col("user_id"), F.lit(2))
+    return df.where(half == 0), df.where(half == 1)
 
 
 def q_events_type_drift(spark, sf_dir):
-    """Chi-square homogeneity contributions of event_type between the two
-    deterministic halves user_id%2==0 vs ==1 — the declarative twin of
-    operators/drift.categorical_drift (same contingency-table math; the
-    driver-side p-value lives in functions/stats.py)."""
-    df = _load(spark, sf_dir, "events")
-    side_a = F.when(F.pmod(F.col("user_id"), F.lit(2)) == 0, 1).otherwise(0)
-    g = df.groupBy("event_type").agg(
-        F.sum(side_a).alias("n_a"),
-        F.sum(F.lit(1) - side_a).alias("n_b"),
-    )
-    tot = g.agg(
-        F.sum("n_a").cast("double").alias("ta"),
-        F.sum("n_b").cast("double").alias("tb"),
-    )
-    j = g.crossJoin(F.broadcast(tot))
-    row = (F.col("n_a") + F.col("n_b")).cast("double")
-    grand = F.col("ta") + F.col("tb")
-    ea = row * F.col("ta") / grand
-    eb = row * F.col("tb") / grand
-    contrib = (
-        F.pow(F.col("n_a") - ea, F.lit(2)) / ea
-        + F.pow(F.col("n_b") - eb, F.lit(2)) / eb
-    )
-    return j.select(
-        "event_type", "n_a", "n_b", F.round(contrib, 4).alias("chi2_contrib")
+    """Chi-square homogeneity terms of event_type between the user_id%2
+    halves (operators/drift.chi2_terms; categorical_drift sums them and
+    adds the driver-side p-value from functions/stats.py)."""
+    from jsonschema_infer_spark.operators.drift import chi2_terms
+
+    return chi2_terms(*_user_halves(spark, sf_dir), "event_type").select(
+        "event_type", "n_a", "n_b", F.round("chi2_term", 4).alias("chi2_contrib")
     )
 
 
@@ -723,7 +713,8 @@ WITH g AS (
   SELECT event_type,
          CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
          CAST(sum(CASE WHEN user_id % 2 = 0 THEN 0 ELSE 1 END) AS BIGINT) AS n_b
-  FROM events GROUP BY event_type),
+  FROM events WHERE user_id IS NOT NULL AND event_type IS NOT NULL
+  GROUP BY event_type),
 t AS (SELECT CAST(sum(n_a) AS DOUBLE) AS ta, CAST(sum(n_b) AS DOUBLE) AS tb FROM g)
 SELECT event_type, n_a, n_b,
   round(pow(n_a - (n_a + n_b) * ta / (ta + tb), 2) / ((n_a + n_b) * ta / (ta + tb))
@@ -792,10 +783,7 @@ def q_events_type_psi(spark, sf_dir):
     check next to chi-square and KS; one (category,count) shuffle total."""
     from jsonschema_infer_spark.operators.drift import psi_categorical
 
-    df = _load(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    df_a = df.where(F.pmod(F.col("user_id"), F.lit(2)) == 0)
-    df_b = df.where(F.pmod(F.col("user_id"), F.lit(2)) == 1)
-    return psi_categorical(df_a, df_b, "event_type")
+    return psi_categorical(*_user_halves(spark, sf_dir), "event_type")
 
 
 SQL_EVENTS_TYPE_PSI = """
@@ -820,10 +808,7 @@ def q_events_value_psi(spark, sf_dir):
     (contrast events_value_ks's exact-but-sorted form)."""
     from jsonschema_infer_spark.operators.drift import psi_numeric
 
-    df = _load(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    df_a = df.where(F.pmod(F.col("user_id"), F.lit(2)) == 0)
-    df_b = df.where(F.pmod(F.col("user_id"), F.lit(2)) == 1)
-    return psi_numeric(df_a, df_b, "value", bins=32)
+    return psi_numeric(*_user_halves(spark, sf_dir), "value", bins=32)
 
 
 SQL_EVENTS_VALUE_PSI = """
@@ -844,96 +829,38 @@ FROM g, t
 """
 
 
+def _ks_query(spark, sf_dir, bins=None):
+    from jsonschema_infer_spark.operators.drift import ks_statistic
+
+    return ks_statistic(*_user_halves(spark, sf_dir), "value", bins=bins).select(
+        F.round("d", 4).alias("ks_d"), "n_a", "n_b"
+    )
+
+
 def q_events_value_ks(spark, sf_dir):
     """Exact two-sample KS D statistic on `value` between the user_id%2
-    halves — declarative twin of operators/drift._exact_ks_d: groupBy on the
-    distinct values (map-side combined) then one cumulative window over the
-    distinct-value relation.
-
-    SCALE NOTE: the cumulative window has no partition key — a single task
-    sorts the distinct values, which is fine at test scale (and required
-    for the exact statistic) but a scale-killer on high-cardinality
-    columns. The 100 TB path is operators/drift._hist_ks_d (fixed-width
-    histogram CDFs, no global sort, bounded error); events_value_hist
-    exercises exactly that bucketing under oracle compare."""
-    from pyspark.sql import Window
-
-    df = _load(spark, sf_dir, "events")
-    side_a = F.when(F.pmod(F.col("user_id"), F.lit(2)) == 0, 1).otherwise(0)
-    g = (
-        df.where(F.col("value").isNotNull())
-        .groupBy("value")
-        .agg(
-            F.sum(side_a).alias("ca"),
-            F.sum(F.lit(1) - side_a).alias("cb"),
-        )
-    )
-    w = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.partitionBy()
-    diff = F.abs(
-        F.sum("ca").over(w) / F.sum("ca").over(wall)
-        - F.sum("cb").over(w) / F.sum("cb").over(wall)
-    )
-    return g.select(
-        diff.alias("diff"),
-        F.sum("ca").over(wall).alias("n_a"),
-        F.sum("cb").over(wall).alias("n_b"),
-    ).agg(
-        F.round(F.max("diff"), 4).alias("ks_d"),
-        F.max("n_a").alias("n_a"),
-        F.max("n_b").alias("n_b"),
-    )
+    halves (operators/drift.ks_statistic): paired counts per distinct value
+    (map-side combined), then one cumulative window over them. That window
+    has no partition key — a single task sorts the distinct values, fine
+    at test scale but serial on a high-cardinality column; the 100 TB
+    shape is events_value_ks_hist."""
+    return _ks_query(spark, sf_dir)
 
 
 def q_events_value_ks_hist(spark, sf_dir):
-    """Histogram-KS — the 100 TB shape of events_value_ks, declarative twin
-    of operators/drift._hist_ks_d: min/max bounds broadcast back onto the
-    scan, fixed 64-bucket assignment with explicit double arithmetic
-    (identical expression mirrored in DuckDB — no width_bucket there), one
-    groupBy on the bucket (map-side combined), then the cumulative window
-    runs over AT MOST 64 rows instead of every distinct value. No global
-    sort of data ever happens; error is bounded by 1/bins in ECDF space."""
-    from pyspark.sql import Window
-
-    bins = 64
-    df = _load(spark, sf_dir, "events")
-    side_a = F.when(F.pmod(F.col("user_id"), F.lit(2)) == 0, 1).otherwise(0)
-    v = df.where(F.col("value").isNotNull()).select(
-        F.col("value").cast("double").alias("v"), side_a.alias("sa")
-    )
-    bounds = v.agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-    raw = F.floor((F.col("v") - F.col("lo")) / (F.col("hi") - F.col("lo")) * bins)
-    bucket = F.when(F.col("hi") <= F.col("lo"), F.lit(1)).otherwise(
-        F.least(F.lit(bins), F.greatest(F.lit(1), raw.cast("int") + 1))
-    )
-    g = (
-        v.crossJoin(F.broadcast(bounds))
-        .select(bucket.alias("bucket"), "sa")
-        .groupBy("bucket")
-        .agg(F.sum("sa").alias("ca"), F.sum(F.lit(1) - F.col("sa")).alias("cb"))
-    )
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.partitionBy()
-    diff = F.abs(
-        F.sum("ca").over(w) / F.sum("ca").over(wall)
-        - F.sum("cb").over(w) / F.sum("cb").over(wall)
-    )
-    return g.select(
-        diff.alias("diff"),
-        F.sum("ca").over(wall).alias("n_a"),
-        F.sum("cb").over(wall).alias("n_b"),
-    ).agg(
-        F.round(F.max("diff"), 4).alias("ks_d"),
-        F.max("n_a").alias("n_a"),
-        F.max("n_b").alias("n_b"),
-    )
+    """Histogram KS — the 100 TB shape of events_value_ks: the same
+    cumulative window over the 64-bucket shared fixed-width histogram
+    psi_numeric reads (operators/drift.ks_statistic with bins), so the
+    window sees at most 64 rows and no data is globally sorted; the ECDF
+    error is bounded by the bucket width."""
+    return _ks_query(spark, sf_dir, bins=64)
 
 
 SQL_EVENTS_VALUE_KS_HIST = """
 WITH v AS (
   SELECT CAST(value AS DOUBLE) AS v,
          CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS sa
-  FROM events WHERE value IS NOT NULL),
+  FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL),
 b AS (SELECT min(v) AS lo, max(v) AS hi FROM v),
 g AS (
   SELECT CASE WHEN b.hi <= b.lo THEN 1
@@ -960,7 +887,7 @@ WITH g AS (
   SELECT value,
          sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS ca,
          sum(CASE WHEN user_id % 2 = 0 THEN 0 ELSE 1 END) AS cb
-  FROM events WHERE value IS NOT NULL GROUP BY value),
+  FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL GROUP BY value),
 c AS (
   SELECT
     abs(sum(ca) OVER (ORDER BY value ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) * 1.0
@@ -2488,7 +2415,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # pipeline, both inference folds, schema drift, and the xxhash64 fast
     # paths — comes first. The tail (after entry 50) holds redundant
     # relational twins whose operator families are each already covered by
-    # an in-window sibling (cube ⊃ rollup, value_psi ~ type_psi, etc.);
+    # an in-window sibling (cube ⊃ rollup; value_psi is type_psi's terms
+    # over ks_hist's histogram, etc.);
     # every tail entry still has an oracle_sql() twin and is compared by
     # tests/test_entry_oracle.py at sf0.001 on every pytest run.
     return {
@@ -2513,10 +2441,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_type_profile": q_events_type_profile,
         "events_props_json": q_events_props_json,
         "events_user_sessions": q_events_user_sessions,
-        # drift family (events_type_psi rotated in for r5; ks_hist demoted)
+        # drift family: each runs operators/drift.py (ks_hist in the window,
+        # value_psi in the tail: it reads ks_hist's histogram)
         "events_type_drift": q_events_type_drift,
         "events_type_psi": q_events_type_psi,
-        "events_value_psi": q_events_value_psi,
+        "events_value_ks_hist": q_events_value_ks_hist,
         "events_violation_examples": q_events_violation_examples,
         "events_value_ks": q_events_value_ks,
         # relational coverage (r5 rotation: top_customers, orders_rollup,
@@ -2563,7 +2492,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # all 57 entries across r04+r05) ----
         "region_revenue": q_region_revenue,
         "orders_cube": q_orders_cube,
-        "events_value_ks_hist": q_events_value_ks_hist,
+        "events_value_psi": q_events_value_psi,
         "docs_langid": q_docs_langid,
         "docs_pii_scan": q_docs_pii_scan,
         "embeddings_ivf_exact": q_embeddings_ivf_exact,

@@ -101,8 +101,6 @@ def run_transcript_pipeline(spark, snaps: tuple) -> dict:
     constraint spec plus ONE fused scan of the violated table: inference,
     row violations against the spec, uniqueness and turn ordering. Raises
     when the per-constraint counts disagree with the injection log."""
-    import pyarrow.parquet as pq
-
     # the contract benchmark's oracle: constraint -> injection-log list
     # whose length is its count; every other constraint counts 0
     from contractbench.snapshots import LOGGED_CONSTRAINTS
@@ -112,11 +110,6 @@ def run_transcript_pipeline(spark, snaps: tuple) -> dict:
     clean, violated, log_path = snaps
     contract, _ = infer_and_integrity_parquet(spark, clean)
     temporal = V.temporal_columns(spark.read.parquet(violated))
-    # task granularity scaled to the cluster: aim for >=6 waves of fused
-    # scan tasks per core so the last wave can't strand most of the cluster
-    cores = spark.sparkContext.defaultParallelism
-    n_rg = pq.ParquetFile(violated).num_row_groups
-    rg_per_task = max(1, min(4, n_rg // (cores * 6)))
 
     t0 = time.perf_counter()
     spec = V.constraint_spec(
@@ -124,7 +117,7 @@ def run_transcript_pipeline(spark, snaps: tuple) -> dict:
     )
     t1 = time.perf_counter()
     res, integ, counts = infer_and_integrity_parquet(
-        spark, violated, rg_per_task=rg_per_task, violation_spec=spec
+        spark, violated, violation_spec=spec
     )
     t2 = time.perf_counter()
 

@@ -203,8 +203,9 @@ def build_constraints(spec: list) -> list:
 
 class UnsupportedArrowSpec(ValueError):
     """Raised when `arrow_violation_counter` cannot replicate a constraint
-    spec entry bit-exactly — the caller must fall back to the Spark
-    (Column-predicate) violations pass."""
+    spec entry bit-exactly. `pipeline.infer_and_integrity_parquet` builds
+    the counter on the driver before any task runs, so such a spec fails
+    the call up front; nothing falls back to another violations pass."""
 
 
 def _spark_datetime_fields_ok(s: str) -> bool:
@@ -1133,58 +1134,6 @@ def ts_regressions(
 # --- column stats (reference roadmap FEATURES.md:177-186) ----------------------
 
 
-def column_stats(df: DataFrame, columns: list | None = None) -> DataFrame:
-    """One-pass per-column profile: count, nulls, approx distinct, min/max
-    (as strings), mean/stddev for numerics, length min/max for strings.
-    Single agg job -> one tiny row, exploded into (column, ...) rows."""
-    cols = columns or df.columns
-    dtypes = dict(df.dtypes)
-    numeric = {
-        c
-        for c in cols
-        if dtypes[c] in ("tinyint", "smallint", "int", "bigint", "float", "double")
-        or dtypes[c].startswith("decimal")
-    }
-    stringy = {c for c in cols if dtypes[c] in ("string", "varchar")}
-    aggs = []
-    for c in cols:
-        col = F.col(c)
-        aggs += [
-            F.count(col).alias(f"{c}__n"),
-            F.count(F.when(col.isNull(), 1)).alias(f"{c}__nulls"),
-            F.approx_count_distinct(col).alias(f"{c}__approx_distinct"),
-            F.min(col).cast("string").alias(f"{c}__min"),
-            F.max(col).cast("string").alias(f"{c}__max"),
-            (F.avg(col) if c in numeric else F.lit(None)).alias(f"{c}__mean"),
-            (F.stddev(col) if c in numeric else F.lit(None)).alias(f"{c}__stddev"),
-            (F.min(F.length(col)) if c in stringy else F.lit(None)).alias(
-                f"{c}__len_min"
-            ),
-            (F.max(F.length(col)) if c in stringy else F.lit(None)).alias(
-                f"{c}__len_max"
-            ),
-        ]
-    wide = df.agg(*aggs)
-    fields = [
-        "n", "nulls", "approx_distinct", "min", "max", "mean", "stddev",
-        "len_min", "len_max",
-    ]
-    parts = []
-    for c in cols:
-        struct = ", ".join(
-            [f"'{c}'"]
-            + [
-                f"cast(`{c}__{fname}` as {'string' if fname in ('min', 'max') else 'double'})"
-                for fname in fields
-            ]
-        )
-        parts.append(f"({struct})")
-    stack = f"stack({len(cols)}, {', '.join(p[1:-1] for p in parts)})"
-    return wide.selectExpr(
-        f"{stack} as (column, n, nulls, approx_distinct, min, max, mean, stddev, len_min, len_max)"
-    )
-
-
 def column_distinct_stats(df: DataFrame, columns: list | None = None) -> DataFrame:
     """EXACT per-column (column, n, nulls, n_distinct) in the 100 TB shape.
 
@@ -1200,8 +1149,7 @@ def column_distinct_stats(df: DataFrame, columns: list | None = None) -> DataFra
     broadcast against one cheap no-distinct base agg for (n, nulls).
 
     Exactness matches count(DISTINCT c) bit-for-bit — this is the scale
-    twin of the Expand form, not an approximation (column_stats carries the
-    approx_count_distinct variant for profiles that tolerate ~2% error)."""
+    twin of the Expand form, not an approximation."""
     from functools import reduce
 
     cols = columns or df.columns

@@ -82,3 +82,34 @@ def test_entry_smoke(spark):
     assert set(df.columns) == {"constraint", "violation_count"}
     # testdata events are clean -> no violations anywhere
     assert all(r.violation_count == 0 for r in rows)
+
+
+def test_drift_library_runs_the_driver_queries(spark):
+    """The driver's KS and chi-square queries and the library's
+    numeric_drift / categorical_drift read the same drift.py operators:
+    on the user_id%2 halves the library's results round to the queries'
+    rows, and the chi-square statistic is the sum of chi2_terms."""
+    from pyspark.sql import functions as F
+
+    from jsonschema_infer_spark.operators.drift import (
+        categorical_drift,
+        chi2_terms,
+        numeric_drift,
+    )
+
+    df = spark.read.parquet(f"{SF}/events.parquet").where(F.col("user_id").isNotNull())
+    a = df.where(F.pmod(F.col("user_id"), F.lit(2)) == 0)
+    b = df.where(F.pmod(F.col("user_id"), F.lit(2)) == 1)
+    for name, kw in (
+        ("events_value_ks", {}),
+        ("events_value_ks_hist", {"mode": "hist", "bins": 64}),
+    ):
+        (q,) = E.queries()[name](spark, SF).collect()
+        lib = numeric_drift(a, b, "value", **kw)
+        assert lib["mode"] == kw.get("mode", "exact")
+        assert (round(lib["d"], 4), lib["n_a"], lib["n_b"]) == (q.ks_d, q.n_a, q.n_b), name
+
+    terms = chi2_terms(a, b, "event_type").collect()
+    stat = categorical_drift(a, b, "event_type")["statistic"]
+    assert stat == pytest.approx(sum(r.chi2_term for r in terms), rel=1e-12)
+    assert stat > 0

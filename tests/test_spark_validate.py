@@ -100,17 +100,6 @@ def test_ts_regressions_match_injections(compiled):
     assert V.ts_regressions(clean).count() == 0
 
 
-def test_column_stats(compiled):
-    res, cons, clean, viol, log = compiled
-    stats = {r.column: r for r in V.column_stats(clean).collect()}
-    n = clean.count()
-    assert stats["conv_id"].n == n and stats["conv_id"].nulls == 0
-    assert stats["turn_idx"].min == "0"
-    assert stats["tool"].nulls > 0
-    assert stats["text"].len_min == 0.0  # empty strings exist (p=0.01)
-    assert stats["turn_idx"].mean is not None
-
-
 def test_partition_verdicts_deterministic(compiled):
     res, cons, clean, viol, log = compiled
     v1 = sorted(
